@@ -19,8 +19,10 @@ column-name-sorted, order-insensitive value hash at sf0.01):
   equal values — the survival_km_reorder r12/r13 lesson), so every
   oracle output column must land in the driver-safe type set;
   tests/test_oracle_parity.py::test_oracle_output_types_driver_safe
-  guards the whole registry and tools/window_check.py flags it at
-  rehearsal time.
+  guards the whole registry.
+
+Every query registers through ``@query`` where it is defined; the
+registry holds them in import order, module by module.
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ from cdc_2025_spark.queries import (  # noqa: E402,F401
     pending_r13,
     pending_r14,
     pending_r15,
+    pending_r16,
     relational,
     resilience_star,
     similarity,
@@ -51,145 +54,5 @@ from cdc_2025_spark.queries import (  # noqa: E402,F401
     windows,
     windows2,
 )
-
-# Round-10 registrations: the seven kernels staged through r8/r9 with
-# oracle-parity tests but no driver surface (entity resolution,
-# k-anonymity, weighted reservoir, AUC + threshold sweep, late-data
-# audit, graph ANN) — see queries/pending_r10.py.
-pending_r10.register_all()
-
-# Round-11 registrations: the twelve drift & corpus-law diagnostics
-# staged through r10 with full DuckDB oracles and both-SF parity tests
-# (KS, PSI, CUSUM, Zipf, Heaps, calibration, SQ8 audit, JS divergence,
-# ACF, Benford, Mann-Kendall, HHI) — see queries/pending_r11.py.
-pending_r11.register_all()
-
-# Round-12 registrations: the twenty temporal-anomaly & structure
-# queries staged through r11 with full DuckDB oracles and both-SF
-# parity tests (EWMA, STL, binseg, label propagation, JL audit, runs
-# test, seasonal-naive backtest, bootstrap CI, Kaplan-Meier, Gini,
-# chi2, k-core, BH-FDR, isotonic, Fano, Theil, Spearman,
-# Kruskal-Wallis, IVM, conformal) — see queries/pending_r12.py.
-pending_r12.register_all()
-
-# Round-13 registrations: the twenty evaluation-depth & robust-
-# statistics queries staged through r12 with full DuckDB oracles and
-# both-SF parity tests (average precision, Brier/Murphy decomposition,
-# lift/gains, Theil-Sen, partial correlation, Welch t, winsorized/
-# trimmed means, Brown-Forsythe, periodogram, Brown DES backtest,
-# local clustering, link prediction, assortativity, Nelson-Aalen,
-# l-diversity, Simpson diversity, sentence stats, effect sizes, PPS
-# systematic, MCC/kappa) plus the round-13-built versioned_diff_audit
-# (the lakehouse layer's driver surface) — see queries/pending_r13.py.
-pending_r13.register_all()
-
-# Round-14 registrations: the twenty ranking-quality & long-memory
-# diagnostics staged through r13 with full DuckDB oracles and both-SF
-# parity tests (NDCG@100, ECE/MCE, KS score separation, Mann-Whitney
-# U, Kendall tau-b, OLS trend + t-test, Jarque-Bera, Grubbs ESD,
-# Ljung-Box, two-proportion z, Neyman allocation, t-closeness,
-# Yule's K, JS term drivers, conditional entropy, rich club, Cronbach
-# alpha, Hurst R/S, balanced downsample) plus versioned_skipping_audit
-# (the data-skipping layer's driver proof) — see
-# queries/pending_r14.py.
-pending_r14.register_all()
-
-# Round-15 registrations: the twenty-eight regression-diagnostic,
-# rank-agreement, lexical-estimator, link-analysis and lakehouse-
-# layer queries staged through r14 with full DuckDB oracles and
-# both-SF driver-strength parity tests (Durbin-Watson,
-# Breusch-Pagan, Chow, Cox-Stuart, Bartels-von Neumann, Mood's
-# median, Kendall's W, Friedman, Cochran's Q, MRR, RBO, Honore/
-# Sichel, Good-Turing/Chao1, readability, G2 keyness, Kish design
-# effect, Katz centrality, HITS, reciprocity, PACF, Theil's U,
-# Page-Hinkley, runs up/down, Markov stationary) plus the four
-# lakehouse DML-layer audits (optimize/DML/merge/constraints — the
-# r14-built copy-on-write layer's driver proof) — see
-# queries/pending_r15.py.
-pending_r15.register_all()
-
-# Round-16 window (the driver oracle-checks the FIRST 50 registry
-# entries per round, insertion order), composed mechanically from
-# tools/compose_window.py 20 (registry 279 -> derived horizon 6;
-# never-checked: 0; ALL 30 would-be-stale rows fill the tail):
-#
-#   1. _CHANGED_R16: the twenty queries whose physical plans this
-#      optimization round changed — the driver re-hashes exactly
-#      what moved.
-#   2. _FILL_R16: every query whose newest green row would expire
-#      under the derived horizon if left out, in the tool's
-#      oldest-green order.
-_CHANGED_R16 = [
-    # r16 (optimization round 2): every entry's PLAN changed this
-    # round — single-tokenize full ledger + split span kernel,
-    # shared-index pipeline accounting, rank-kernel probe fusion /
-    # bucketed pin / carry_cols, LSH plane-matrix signatures, media
-    # corpus union pin, spread-exchange fixes — so the driver
-    # re-hashes exactly what moved. (Three more d436ba6-touched
-    # text queries — pmi_collocations, vocab_coverage, ngram_novelty
-    # — did not fit the 50-slot window after the 30 expiring fills;
-    # they were oracle-verified in-session at sf0.001+sf0.01 and
-    # rotate in next round.)
-    "llm_prep_full_ledger",
-    "dedup_pipeline_accounting",
-    "dedup_remove_repeated_spans",
-    "stats_equidepth_histogram",
-    "stats_mann_whitney_u",
-    "stats_spearman_price_quantity",
-    "stats_kruskal_wallis_segments",
-    "stats_ks_drift_segments",
-    "sim_lsh_bucketed_pairs",
-    "sim_lsh_auto_pairs",
-    "dedup_embedding_neardup_lsh",
-    "multimodal_feature_rollup",
-    "multimodal_audio_neardup",
-    "multimodal_phash_neardup",
-    "multimodal_video_neardup",
-    "text_perplexity_buckets",
-    "text_bigram_perplexity",
-    "sample_dsir_importance",
-    "text_trigram_stupid_backoff",
-    "text_tfidf_top_terms",
-]
-
-_FILL_R16 = [
-    # compose_window.py: ALL 30 queries whose newest green row would
-    # expire under the derived horizon if left out of this window,
-    # in its emitted oldest-green order
-    "text_quality_scores", "text_lang_id_confusion",
-    "text_punct_and_bpe", "text_repetition_scores",
-    "text_doc_entropy", "text_pii_scrub",
-    "q4_order_priority", "q6_forecast_revenue",
-    "q7_nation_volume", "q8_market_share",
-    "q14_promo_revenue", "q15_top_supplier",
-    "q18_large_orders", "q19_bracketed_revenue",
-    "q9_product_profit", "q20_promo_heavy_suppliers",
-    "q21_sole_late_suppliers", "q11ish_part_value_share",
-    "q13_customer_order_distribution", "q17_small_quantity_revenue",
-    "range_join_event_windows", "text_url_canonical_dedup",
-    "cdc_scd2_user_state_history", "cdc_scd2_state_asof",
-    "er_customer_golden_records", "privacy_kanon_events",
-    "sample_weighted_reservoir_docs", "eval_quality_auc",
-    "eval_quality_threshold_sweep", "stream_late_data_audit",
-]
-
-_VERIFY_FIRST = [
-    *_CHANGED_R16,
-    *_FILL_R16,
-]
-
-
-def _rotate(front: list[str]) -> None:
-    seen = set(front)
-    order = [n for n in front if n in QUERIES] + [
-        n for n in QUERIES if n not in seen
-    ]
-    for d in (QUERIES, ORACLES):
-        snapshot = {n: d[n] for n in order if n in d}
-        d.clear()
-        d.update(snapshot)
-
-
-_rotate(_VERIFY_FIRST)
 
 __all__ = ["QUERIES", "ORACLES", "query"]

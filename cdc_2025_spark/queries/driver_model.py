@@ -3,12 +3,12 @@
 The round driver compares each registered query against its DuckDB
 oracle at sf0.01 with a column-name-sorted, order-insensitive,
 TYPE-SENSITIVE value hash.  Everything that models that comparison —
-the rehearsal tool (``tools/window_check.py``), the registry-wide
-oracle-type guard (``tests/test_oracle_parity.py``) and the staged-
-queue parity tests (``tests/test_pending_r15.py`` /
-``test_pending_r16.py``) — imports the model from HERE so a future
-tightening (e.g. allowing TIME, rejecting TIMESTAMP_NS) cannot drift
-between the tool and the guards (r14 ADVICE finding #2).
+the named-query checker (``tools/oracle_check.py``), the registry-wide
+oracle-type guard (``tests/test_oracle_parity.py``) and the
+per-module parity tests (``tests/test_pending_r1*.py``) — imports the
+model from HERE so a future tightening (e.g. allowing TIME, rejecting
+TIMESTAMP_NS) cannot drift between the tool and the guards (r14
+ADVICE finding #2).
 
 Two hard-won rules are encoded:
 
@@ -29,6 +29,10 @@ from __future__ import annotations
 
 import datetime
 import math
+
+from pyspark.sql.types import ArrayType, MapType, StructType
+
+from cdc_2025_spark.queries.registry import ORACLES, QUERIES
 
 # Oracle output types the driver's value-hash layer demonstrably
 # handles (every hash-green oracle across r7-r14 emits only these).
@@ -72,10 +76,19 @@ def unsafe_oracle_columns(columns, types) -> list[str]:
     ]
 
 
+def _sort_key(x):
+    # -0.0 == 0.0 (see same_value) but str() spells them apart, which
+    # would sort equal rows out of step between the two sides.
+    if isinstance(x, float) and x == 0.0:
+        x = 0.0
+    return (x is None, str(x))
+
+
 def normalize_rows(rows, columns):
     """Column-name-sorted, order-insensitive canonical form — the
     driver's pre-hash canonicalization (NaN spelled as a sentinel so
-    NaN == NaN row-wise)."""
+    NaN == NaN row-wise; float zero sorts as one value whatever its
+    sign, the values themselves are left as they are)."""
     order = sorted(range(len(columns)), key=lambda i: columns[i])
     out = []
     for row in rows:
@@ -86,7 +99,7 @@ def normalize_rows(rows, columns):
                 v = "NaN"
             vals.append(v)
         out.append(tuple(vals))
-    out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
+    out.sort(key=lambda t: tuple(_sort_key(x) for x in t))
     return out
 
 
@@ -147,3 +160,28 @@ def compare_frames(
     if bad:
         return f"value mismatches {bad}"
     return None
+
+
+def check_registered(spark, con, name: str, sf_dir: str) -> str | None:
+    """Driver-strength check of one registered query: run it at
+    ``sf_dir`` and its oracle on ``con`` (DuckDB views over the same
+    tables), then :func:`compare_frames`."""
+    sdf = QUERIES[name](spark, sf_dir)
+    rel = con.sql(ORACLES[name])
+    return compare_frames(
+        sdf.columns,
+        [tuple(r) for r in sdf.collect()],
+        list(rel.columns),
+        [str(t) for t in rel.types],
+        rel.fetchall(),
+    )
+
+
+def container_columns(df) -> list[str]:
+    """Top-level array/map/struct columns of ``df``: the driver sorts
+    every result with pandas ``sort_values``, which raises on them."""
+    return [
+        f.name
+        for f in df.schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]

@@ -1,19 +1,11 @@
-"""Round-10 registration queue: prepared driver queries + DuckDB
+"""Round-10 queries: driver queries + DuckDB
 oracles for the four kernels that landed in round 8 with tests but no
 driver surface (entity resolution, k-anonymity, weighted reservoir,
 classifier evaluation), plus the streaming late-data/watermark audit
 the round-8 verdict asked to stage.
 
-NOT imported by queries/__init__.py on purpose: the registry
-freshness guard requires never-checked queries to LEAD a verification
-window, and the round-9 window is fully owed to the re-check backlog.
-Registering is one call — add ``pending_r10`` to the import list in
-queries/__init__.py, call :func:`register_all` there, and front-load
-:data:`PENDING_ORDER` in the round-10 ``_VERIFY_FIRST``.
-
-Until then the queries are exercised by tests/test_pending_r10.py,
-which runs each one against its oracle with the same normalization
-the driver applies.
+Each query registers through ``@query``; tests/test_pending_r10.py
+runs each one against its oracle with the driver's comparison.
 
 Pre-registration sf0.1 wall times (min-of-3, idle local[32], for the
 round-10 bench.py HEADLINE additions): ER golden records 2.84 s and
@@ -38,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdc_2025_spark.io import read_table
+from cdc_2025_spark.queries.registry import query
 
 # ---------------------------------------------------------------------------
 # Entity resolution: customer golden records
@@ -58,82 +51,6 @@ ER_BAL_BLOCK = 100  # acctbal blocking bucket width
 # oversized blocks contribute O(m * window).
 ER_MAX_BLOCK = 1000
 ER_SNM_WINDOW = 10
-
-
-def er_customer_golden_records(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Entity resolution end-to-end (functions/er.py): blocking →
-    similarity gate → transitive closure → survivorship, over the
-    customer table. Two blocking keys union'd — (nation, segment) and
-    floor(acctbal/100) — then a |Δbal| <= ER_BAL_EPS gate, components
-    via the shared connected_components kernel, and the per-cluster
-    survivor picked by (acctbal desc, custkey).
-
-    Output: one row per customer (c_custkey, cluster_id, is_golden) —
-    the auditable merge map. The oracle replays blocking + gate in
-    SQL and the closure as a recursive CTE (the
-    dedup_jaccard_clusters pattern).
-
-    Scale shape: each blocking key is one key-grouped self-join over
-    (block key, id) pairs — never a cross product; blocks past
-    ER_MAX_BLOCK pair by sorted neighborhood instead of fully (the
-    quadratic-block guard — see blocked_candidate_pairs); the gate
-    thresholds the snm_order attribute, which rides the pair stream
-    (keep_order=True), so the pair stream never re-joins the entity
-    table and dedup is the closure's (distinct=False — duplicate
-    edges never change connectivity); the closure touches id pairs
-    only; survivorship is one window per cluster. Full records
-    shuffle exactly once (the final label join)."""
-    from cdc_2025_spark.functions.er import (
-        blocked_candidate_pairs,
-        golden_records,
-    )
-
-    cust = read_table(spark, sf_dir, "customer")
-    cand = blocked_candidate_pairs(
-        cust,
-        "c_custkey",
-        [
-            # F.concat (NULL-propagating), NOT concat_ws: a NULL
-            # nationkey must yield a NULL block key so the row never
-            # blocks on a partial key — blocked_candidate_pairs'
-            # documented rule, and what the oracle's IS NOT NULL
-            # guards express (r9 review fix)
-            F.concat(
-                F.col("c_nationkey").cast("string"),
-                F.lit("|"),
-                F.col("c_mktsegment"),
-            ),
-            F.floor(F.col("c_acctbal") / ER_BAL_BLOCK).cast("string"),
-        ],
-        max_block=ER_MAX_BLOCK,
-        snm_order=F.col("c_acctbal"),
-        snm_window=ER_SNM_WINDOW,
-        keep_order=True,
-        distinct=False,
-        # r16: the gate below thresholds |Δacctbal| at ER_BAL_EPS, so
-        # banding the block self-joins at that width prunes the
-        # candidate stream from O(block²) to the gated neighborhood
-        # (~2M -> ~50k pairs at sf0.1) with an IDENTICAL post-gate
-        # match set — see blocked_candidate_pairs' order_band
-        # contract (superset + exactly-once emission; NULL balances
-        # fail the abs() gate either way).
-        order_band=ER_BAL_EPS,
-    )
-    matched = cand.filter(
-        F.abs(F.col("ord_a") - F.col("ord_b")) <= ER_BAL_EPS
-    ).select("id_a", "id_b")
-    out = golden_records(
-        cust,
-        "c_custkey",
-        matched,
-        order_by=[F.col("c_acctbal").desc()],
-        # SNM match graphs chain along the sort attribute -> long
-        # diameters; star contraction closes them in O(log d) rounds
-        cc_fallback="star",
-    )
-    return out.select("c_custkey", "cluster_id", "is_golden")
 
 
 ER_ORACLE = f"""
@@ -212,6 +129,83 @@ FROM labeled
 """
 
 
+@query("er_customer_golden_records", oracle=ER_ORACLE)
+def er_customer_golden_records(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Entity resolution end-to-end (functions/er.py): blocking →
+    similarity gate → transitive closure → survivorship, over the
+    customer table. Two blocking keys union'd — (nation, segment) and
+    floor(acctbal/100) — then a |Δbal| <= ER_BAL_EPS gate, components
+    via the shared connected_components kernel, and the per-cluster
+    survivor picked by (acctbal desc, custkey).
+
+    Output: one row per customer (c_custkey, cluster_id, is_golden) —
+    the auditable merge map. The oracle replays blocking + gate in
+    SQL and the closure as a recursive CTE (the
+    dedup_jaccard_clusters pattern).
+
+    Scale shape: each blocking key is one key-grouped self-join over
+    (block key, id) pairs — never a cross product; blocks past
+    ER_MAX_BLOCK pair by sorted neighborhood instead of fully (the
+    quadratic-block guard — see blocked_candidate_pairs); the gate
+    thresholds the snm_order attribute, which rides the pair stream
+    (keep_order=True), so the pair stream never re-joins the entity
+    table and dedup is the closure's (distinct=False — duplicate
+    edges never change connectivity); the closure touches id pairs
+    only; survivorship is one window per cluster. Full records
+    shuffle exactly once (the final label join)."""
+    from cdc_2025_spark.functions.er import (
+        blocked_candidate_pairs,
+        golden_records,
+    )
+
+    cust = read_table(spark, sf_dir, "customer")
+    cand = blocked_candidate_pairs(
+        cust,
+        "c_custkey",
+        [
+            # F.concat (NULL-propagating), NOT concat_ws: a NULL
+            # nationkey must yield a NULL block key so the row never
+            # blocks on a partial key — blocked_candidate_pairs'
+            # documented rule, and what the oracle's IS NOT NULL
+            # guards express (r9 review fix)
+            F.concat(
+                F.col("c_nationkey").cast("string"),
+                F.lit("|"),
+                F.col("c_mktsegment"),
+            ),
+            F.floor(F.col("c_acctbal") / ER_BAL_BLOCK).cast("string"),
+        ],
+        max_block=ER_MAX_BLOCK,
+        snm_order=F.col("c_acctbal"),
+        snm_window=ER_SNM_WINDOW,
+        keep_order=True,
+        distinct=False,
+        # r16: the gate below thresholds |Δacctbal| at ER_BAL_EPS, so
+        # banding the block self-joins at that width prunes the
+        # candidate stream from O(block²) to the gated neighborhood
+        # (~2M -> ~50k pairs at sf0.1) with an IDENTICAL post-gate
+        # match set — see blocked_candidate_pairs' order_band
+        # contract (superset + exactly-once emission; NULL balances
+        # fail the abs() gate either way).
+        order_band=ER_BAL_EPS,
+    )
+    matched = cand.filter(
+        F.abs(F.col("ord_a") - F.col("ord_b")) <= ER_BAL_EPS
+    ).select("id_a", "id_b")
+    out = golden_records(
+        cust,
+        "c_custkey",
+        matched,
+        order_by=[F.col("c_acctbal").desc()],
+        # SNM match graphs chain along the sort attribute -> long
+        # diameters; star contraction closes them in O(log d) rounds
+        cc_fallback="star",
+    )
+    return out.select("c_custkey", "cluster_id", "is_golden")
+
+
 # ---------------------------------------------------------------------------
 # k-anonymity audit + suppression
 # ---------------------------------------------------------------------------
@@ -224,6 +218,40 @@ PRIVACY_K = 5
 PRIVACY_QI = ("event_type", "day", "val_bucket")
 
 
+PRIVACY_ORACLE = f"""
+WITH g AS (
+  SELECT event_type, CAST(ts AS DATE) AS day,
+         CAST(floor(value / 100) AS INTEGER) AS val_bucket,
+         COUNT(*) AS c
+  FROM events GROUP BY 1, 2, 3
+),
+raw AS (
+  SELECT 'raw' AS stage,
+         CAST(COUNT(*) AS BIGINT) AS n_groups,
+         CAST(COALESCE(SUM(c), 0) AS BIGINT) AS n_rows,
+         CAST(COALESCE(SUM(CASE WHEN c < {PRIVACY_K} THEN 1 ELSE 0 END),
+              0) AS BIGINT) AS n_violating_groups,
+         CAST(COALESCE(SUM(CASE WHEN c < {PRIVACY_K} THEN c END), 0)
+              AS BIGINT) AS n_at_risk_rows,
+         CAST(MIN(c) AS BIGINT) AS k_effective
+  FROM g
+),
+supp AS (
+  SELECT 'suppressed' AS stage,
+         CAST(COUNT(*) AS BIGINT) AS n_groups,
+         CAST(COALESCE(SUM(c), 0) AS BIGINT) AS n_rows,
+         CAST(COALESCE(SUM(CASE WHEN c < {PRIVACY_K} THEN 1 ELSE 0 END),
+              0) AS BIGINT) AS n_violating_groups,
+         CAST(COALESCE(SUM(CASE WHEN c < {PRIVACY_K} THEN c END), 0)
+              AS BIGINT) AS n_at_risk_rows,
+         CAST(MIN(c) AS BIGINT) AS k_effective
+  FROM g WHERE c >= {PRIVACY_K}
+)
+SELECT * FROM raw UNION ALL SELECT * FROM supp
+"""
+
+
+@query("privacy_kanon_events", oracle=PRIVACY_ORACLE)
 def privacy_kanon_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity over the events release with QI = (event_type,
     day, floor(value/100)): the 'raw' audit row, then the audit
@@ -261,39 +289,6 @@ def privacy_kanon_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PRIVACY_ORACLE = f"""
-WITH g AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(floor(value / 100) AS INTEGER) AS val_bucket,
-         COUNT(*) AS c
-  FROM events GROUP BY 1, 2, 3
-),
-raw AS (
-  SELECT 'raw' AS stage,
-         CAST(COUNT(*) AS BIGINT) AS n_groups,
-         CAST(COALESCE(SUM(c), 0) AS BIGINT) AS n_rows,
-         CAST(COALESCE(SUM(CASE WHEN c < {PRIVACY_K} THEN 1 ELSE 0 END),
-              0) AS BIGINT) AS n_violating_groups,
-         CAST(COALESCE(SUM(CASE WHEN c < {PRIVACY_K} THEN c END), 0)
-              AS BIGINT) AS n_at_risk_rows,
-         CAST(MIN(c) AS BIGINT) AS k_effective
-  FROM g
-),
-supp AS (
-  SELECT 'suppressed' AS stage,
-         CAST(COUNT(*) AS BIGINT) AS n_groups,
-         CAST(COALESCE(SUM(c), 0) AS BIGINT) AS n_rows,
-         CAST(COALESCE(SUM(CASE WHEN c < {PRIVACY_K} THEN 1 ELSE 0 END),
-              0) AS BIGINT) AS n_violating_groups,
-         CAST(COALESCE(SUM(CASE WHEN c < {PRIVACY_K} THEN c END), 0)
-              AS BIGINT) AS n_at_risk_rows,
-         CAST(MIN(c) AS BIGINT) AS k_effective
-  FROM g WHERE c >= {PRIVACY_K}
-)
-SELECT * FROM raw UNION ALL SELECT * FROM supp
-"""
-
-
 # ---------------------------------------------------------------------------
 # Weighted reservoir (Efraimidis-Spirakis exponential race)
 # ---------------------------------------------------------------------------
@@ -301,6 +296,28 @@ SELECT * FROM raw UNION ALL SELECT * FROM supp
 WEIGHTED_RESERVOIR_K = 100
 
 
+WEIGHTED_RESERVOIR_ORACLE = f"""
+WITH t AS (
+  SELECT doc_id,
+         CAST(n_chars AS DOUBLE) AS weight,
+         -ln((CAST(('0x' || substr(md5('wrs:' || CAST(doc_id AS VARCHAR)),
+                                   1, 8)) AS BIGINT) % 1000000 + 1)
+             / 1000000.0)
+         / CAST(n_chars AS DOUBLE) AS wprio
+  FROM documents
+  WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL AND n_chars > 0
+),
+rk AS (
+  SELECT doc_id, weight, wprio,
+         ROW_NUMBER() OVER (ORDER BY wprio, doc_id) AS rk
+  FROM t
+)
+SELECT doc_id, weight, ROUND(wprio, 4) AS wprio, CAST(rk AS BIGINT) AS rk
+FROM rk WHERE rk <= {WEIGHTED_RESERVOIR_K}
+"""
+
+
+@query("sample_weighted_reservoir_docs", oracle=WEIGHTED_RESERVOIR_ORACLE)
 def sample_weighted_reservoir_docs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -338,27 +355,6 @@ def sample_weighted_reservoir_docs(
     )
 
 
-WEIGHTED_RESERVOIR_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id,
-         CAST(n_chars AS DOUBLE) AS weight,
-         -ln((CAST(('0x' || substr(md5('wrs:' || CAST(doc_id AS VARCHAR)),
-                                   1, 8)) AS BIGINT) % 1000000 + 1)
-             / 1000000.0)
-         / CAST(n_chars AS DOUBLE) AS wprio
-  FROM documents
-  WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL AND n_chars > 0
-),
-rk AS (
-  SELECT doc_id, weight, wprio,
-         ROW_NUMBER() OVER (ORDER BY wprio, doc_id) AS rk
-  FROM t
-)
-SELECT doc_id, weight, ROUND(wprio, 4) AS wprio, CAST(rk AS BIGINT) AS rk
-FROM rk WHERE rk <= {WEIGHTED_RESERVOIR_K}
-"""
-
-
 # ---------------------------------------------------------------------------
 # Classifier evaluation: AUC + threshold sweep
 # ---------------------------------------------------------------------------
@@ -378,19 +374,6 @@ def _scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("score"),
         (F.col("lang") == "en").cast("int").alias("label"),
     )
-
-
-def eval_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tie-corrected ROC AUC (Mann-Whitney midrank identity) of the
-    deterministic quality score against the is-English label — one
-    row (n_pos, n_neg, auc) from functions/evalmetrics.py:auc_roc.
-
-    Scale shape: ONE grouped count collapses the corpus to the
-    distinct-score frame; the midrank window and the final fold run
-    over that bounded frame, never the corpus."""
-    from cdc_2025_spark.functions.evalmetrics import auc_roc
-
-    return auc_roc(_scored_docs(spark, sf_dir), "score", "label")
 
 
 EVAL_AUC_ORACLE = f"""
@@ -426,18 +409,18 @@ FROM tot
 """
 
 
-def eval_quality_threshold_sweep(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The full ROC/PR operating table: one row per distinct score
-    used as decision threshold (predict positive when score >=
-    threshold) with tp/fp/fn/tn and precision/recall —
-    functions/evalmetrics.py:threshold_sweep, computed without
-    re-scanning the corpus per threshold (cumulative window over the
-    distinct-score frame)."""
-    from cdc_2025_spark.functions.evalmetrics import threshold_sweep
+@query("eval_quality_auc", oracle=EVAL_AUC_ORACLE)
+def eval_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tie-corrected ROC AUC (Mann-Whitney midrank identity) of the
+    deterministic quality score against the is-English label — one
+    row (n_pos, n_neg, auc) from functions/evalmetrics.py:auc_roc.
 
-    return threshold_sweep(_scored_docs(spark, sf_dir), "score", "label")
+    Scale shape: ONE grouped count collapses the corpus to the
+    distinct-score frame; the midrank window and the final fold run
+    over that bounded frame, never the corpus."""
+    from cdc_2025_spark.functions.evalmetrics import auc_roc
+
+    return auc_roc(_scored_docs(spark, sf_dir), "score", "label")
 
 
 EVAL_SWEEP_ORACLE = f"""
@@ -468,6 +451,21 @@ SELECT threshold, tp, fp,
             THEN ROUND(tp * 1.0 / tot.tp_all, 6) END AS recall
 FROM cum CROSS JOIN tot
 """
+
+
+@query("eval_quality_threshold_sweep", oracle=EVAL_SWEEP_ORACLE)
+def eval_quality_threshold_sweep(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The full ROC/PR operating table: one row per distinct score
+    used as decision threshold (predict positive when score >=
+    threshold) with tp/fp/fn/tn and precision/recall —
+    functions/evalmetrics.py:threshold_sweep, computed without
+    re-scanning the corpus per threshold (cumulative window over the
+    distinct-score frame)."""
+    from cdc_2025_spark.functions.evalmetrics import threshold_sweep
+
+    return threshold_sweep(_scored_docs(spark, sf_dir), "score", "label")
 
 
 # ---------------------------------------------------------------------------
@@ -523,6 +521,39 @@ def late_flagged(
     )
 
 
+LATE_AUDIT_ORACLE = f"""
+WITH arr AS (
+  SELECT event_id, ts, event_type, value,
+         CASE WHEN CAST(('0x' || substr(md5('late:' ||
+                    CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT)
+                   % {LATE_STRAGGLER_MOD} = 0
+              THEN ts + INTERVAL {LATE_DELAY_MINUTES} MINUTE
+              ELSE ts END AS arrival_ts
+  FROM events
+),
+flagged AS (
+  SELECT ts, event_type, value,
+         COALESCE(
+           ts < MAX(ts) OVER (ORDER BY arrival_ts, event_id
+                              ROWS BETWEEN UNBOUNDED PRECEDING
+                              AND 1 PRECEDING)
+                - INTERVAL {LATE_WATERMARK_MINUTES} MINUTE,
+           FALSE) AS is_late
+  FROM arr
+)
+SELECT date_trunc('hour', ts) AS window_start, event_type,
+       CAST(SUM(CASE WHEN is_late THEN 0 ELSE 1 END) AS BIGINT)
+           AS n_accepted,
+       CAST(SUM(CASE WHEN is_late THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_late,
+       ROUND(COALESCE(SUM(CASE WHEN NOT is_late THEN value END), 0),
+             4) AS accepted_value
+FROM flagged
+GROUP BY 1, 2
+"""
+
+
+@query("stream_late_data_audit", oracle=LATE_AUDIT_ORACLE)
 def stream_late_data_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -603,38 +634,6 @@ def stream_late_data_audit(
     )
 
 
-LATE_AUDIT_ORACLE = f"""
-WITH arr AS (
-  SELECT event_id, ts, event_type, value,
-         CASE WHEN CAST(('0x' || substr(md5('late:' ||
-                    CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                   % {LATE_STRAGGLER_MOD} = 0
-              THEN ts + INTERVAL {LATE_DELAY_MINUTES} MINUTE
-              ELSE ts END AS arrival_ts
-  FROM events
-),
-flagged AS (
-  SELECT ts, event_type, value,
-         COALESCE(
-           ts < MAX(ts) OVER (ORDER BY arrival_ts, event_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND 1 PRECEDING)
-                - INTERVAL {LATE_WATERMARK_MINUTES} MINUTE,
-           FALSE) AS is_late
-  FROM arr
-)
-SELECT date_trunc('hour', ts) AS window_start, event_type,
-       CAST(SUM(CASE WHEN is_late THEN 0 ELSE 1 END) AS BIGINT)
-           AS n_accepted,
-       CAST(SUM(CASE WHEN is_late THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_late,
-       ROUND(COALESCE(SUM(CASE WHEN NOT is_late THEN value END), 0),
-             4) AS accepted_value
-FROM flagged
-GROUP BY 1, 2
-"""
-
-
 # ---------------------------------------------------------------------------
 # Graph-based ANN (NSW-style): k-NN graph + beam search
 # ---------------------------------------------------------------------------
@@ -659,6 +658,10 @@ _ANN_GRAPH_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
 ANN_CELL_TARGET = 128
 
 
+# rows-only: iterative graph traversal has no SQL twin; recall,
+# navigability, model equality and determinism pinned in
+# tests/test_graphann.py
+@query("sim_graph_ann_topk")
 def sim_graph_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph-based ANN top-k (functions/graphann.py — the NSW/HNSW
     family's navigable-graph idea in its distributable two-phase
@@ -740,54 +743,3 @@ def sim_graph_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # entry beam, never error
         entry_ids=list(range(ANN_N_QUERIES, ANN_N_QUERIES + ANN_BEAM)),
     )
-
-
-# ---------------------------------------------------------------------------
-# Registration hook for round 10
-# ---------------------------------------------------------------------------
-
-PENDING_ORDER = [
-    "er_customer_golden_records",
-    "privacy_kanon_events",
-    "sample_weighted_reservoir_docs",
-    "eval_quality_auc",
-    "eval_quality_threshold_sweep",
-    "stream_late_data_audit",
-    "sim_graph_ann_topk",
-]
-
-_PENDING = {
-    "er_customer_golden_records": (
-        er_customer_golden_records,
-        ER_ORACLE,
-    ),
-    "privacy_kanon_events": (privacy_kanon_events, PRIVACY_ORACLE),
-    "sample_weighted_reservoir_docs": (
-        sample_weighted_reservoir_docs,
-        WEIGHTED_RESERVOIR_ORACLE,
-    ),
-    "eval_quality_auc": (eval_quality_auc, EVAL_AUC_ORACLE),
-    "eval_quality_threshold_sweep": (
-        eval_quality_threshold_sweep,
-        EVAL_SWEEP_ORACLE,
-    ),
-    "stream_late_data_audit": (
-        stream_late_data_audit,
-        LATE_AUDIT_ORACLE,
-    ),
-    # rows-only: iterative graph traversal has no SQL twin; recall,
-    # navigability, model equality and determinism pinned in
-    # tests/test_graphann.py
-    "sim_graph_ann_topk": (sim_graph_ann_topk, None),
-}
-
-
-def register_all() -> None:
-    """Register every pending query (round-10 hook). Idempotent-
-    hostile on purpose: the registry's duplicate check fires on a
-    second call, matching the one-shot registration contract."""
-    from cdc_2025_spark.queries.registry import query
-
-    for name in PENDING_ORDER:
-        fn, oracle = _PENDING[name]
-        query(name, oracle=oracle)(fn)

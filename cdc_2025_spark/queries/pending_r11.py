@@ -1,4 +1,4 @@
-"""Round-11 registration queue: the DRIFT & CORPUS-LAW diagnostics
+"""Round-11 queries: the DRIFT & CORPUS-LAW diagnostics
 family — the statistical monitoring a training-data pipeline runs
 between ingests (distribution drift, changepoints) and the corpus
 sanity laws it checks after curation (Zipf rank-frequency, Heaps
@@ -10,16 +10,8 @@ percentiles over 4dp-rounded values for bin edges — the verified
 engine-parity construction — and 4-6dp rounding on float
 aggregates only).
 
-NOT imported by queries/__init__.py on purpose (the pending_r10
-posture): the freshness guard requires never-checked queries to LEAD
-a verification window, and the round-10 window is already composed.
-Registering is one call — add ``pending_r11`` to the import list,
-call :func:`register_all`, and front-load :data:`PENDING_ORDER` in
-the round-11 ``_VERIFY_FIRST``.
-
-Until then tests/test_pending_r11.py runs each query against its
-oracle with the same normalization the driver applies, at
-sf0.001 + sf0.01.
+Each query registers through ``@query``; tests/test_pending_r11.py
+runs each one against its oracle with the driver's comparison.
 
 Pre-registration sf0.1 wall times (min-of-2, idle local[32], for the
 round-11 bench.py HEADLINE additions): KS 0.64 s, PSI 0.73 s, CUSUM
@@ -40,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdc_2025_spark.io import read_table
+from cdc_2025_spark.queries.registry import query
 
 # ---------------------------------------------------------------------------
 # Two-sample Kolmogorov-Smirnov: order-value drift between segments
@@ -49,6 +42,45 @@ KS_SEG_A = "BUILDING"
 KS_SEG_B = "MACHINERY"
 
 
+KS_ORACLE = f"""
+WITH seg AS (
+  SELECT ROUND(o_totalprice, 4) AS v,
+         CASE WHEN c_mktsegment = '{KS_SEG_A}' THEN 1 ELSE 0 END AS is_a
+  FROM orders JOIN customer ON o_custkey = c_custkey
+  WHERE c_mktsegment IN ('{KS_SEG_A}', '{KS_SEG_B}')
+),
+per_v AS (
+  SELECT v, SUM(is_a) AS ca, SUM(1 - is_a) AS cb FROM seg GROUP BY v
+),
+ecdf AS (
+  SELECT SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
+         SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b
+  FROM per_v
+),
+tot AS (
+  SELECT CAST(MAX(cum_a) AS BIGINT) AS n_a,
+         CAST(MAX(cum_b) AS BIGINT) AS n_b,
+         MAX(ABS(cum_a * 1.0 / (SELECT MAX(cum_a) FROM ecdf)
+                 - cum_b * 1.0 / (SELECT MAX(cum_b) FROM ecdf))) AS d
+  FROM ecdf
+),
+lamt AS (
+  SELECT n_a, n_b, d,
+         SQRT(n_a * n_b * 1.0 / (n_a + n_b)) * d AS lam
+  FROM tot
+)
+SELECT n_a, n_b, ROUND(d, 6) AS ks_d,
+       ROUND(GREATEST(LEAST(
+         2.0 * exp(-2.0 * lam * lam)
+         - 2.0 * exp(-8.0 * lam * lam)
+         + 2.0 * exp(-18.0 * lam * lam)
+         - 2.0 * exp(-32.0 * lam * lam)
+         + 2.0 * exp(-50.0 * lam * lam), 1.0), 0.0), 6) AS p_value
+FROM lamt
+"""
+
+
+@query("stats_ks_drift_segments", oracle=KS_ORACLE)
 def stats_ks_drift_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov test between the order-value
     distributions of two customer segments: D = max_x |F_A(x) -
@@ -133,44 +165,6 @@ def stats_ks_drift_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KS_ORACLE = f"""
-WITH seg AS (
-  SELECT ROUND(o_totalprice, 4) AS v,
-         CASE WHEN c_mktsegment = '{KS_SEG_A}' THEN 1 ELSE 0 END AS is_a
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  WHERE c_mktsegment IN ('{KS_SEG_A}', '{KS_SEG_B}')
-),
-per_v AS (
-  SELECT v, SUM(is_a) AS ca, SUM(1 - is_a) AS cb FROM seg GROUP BY v
-),
-ecdf AS (
-  SELECT SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-         SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b
-  FROM per_v
-),
-tot AS (
-  SELECT CAST(MAX(cum_a) AS BIGINT) AS n_a,
-         CAST(MAX(cum_b) AS BIGINT) AS n_b,
-         MAX(ABS(cum_a * 1.0 / (SELECT MAX(cum_a) FROM ecdf)
-                 - cum_b * 1.0 / (SELECT MAX(cum_b) FROM ecdf))) AS d
-  FROM ecdf
-),
-lamt AS (
-  SELECT n_a, n_b, d,
-         SQRT(n_a * n_b * 1.0 / (n_a + n_b)) * d AS lam
-  FROM tot
-)
-SELECT n_a, n_b, ROUND(d, 6) AS ks_d,
-       ROUND(GREATEST(LEAST(
-         2.0 * exp(-2.0 * lam * lam)
-         - 2.0 * exp(-8.0 * lam * lam)
-         + 2.0 * exp(-18.0 * lam * lam)
-         - 2.0 * exp(-32.0 * lam * lam)
-         + 2.0 * exp(-50.0 * lam * lam), 1.0), 0.0), 6) AS p_value
-FROM lamt
-"""
-
-
 # ---------------------------------------------------------------------------
 # Population Stability Index: intra-month value drift over events
 # ---------------------------------------------------------------------------
@@ -179,6 +173,47 @@ PSI_N_BINS = 10
 PSI_FLOOR = 1e-4  # standard zero-proportion floor
 
 
+PSI_ORACLE = f"""
+WITH ev AS (
+  SELECT ROUND(value, 4) AS v,
+         (EXTRACT(day FROM ts) <= 15) AS is_ref
+  FROM events
+),
+edges AS (
+  SELECT {", ".join(
+      f"quantile_disc(v, {(i + 1) / PSI_N_BINS}) AS e{i}"
+      for i in range(PSI_N_BINS - 1)
+  )}
+  FROM ev WHERE is_ref
+),
+binned AS (
+  SELECT is_ref,
+         1 + {" + ".join(
+             f"CASE WHEN v > (SELECT e{i} FROM edges) THEN 1 ELSE 0 END"
+             for i in range(PSI_N_BINS - 1)
+         )} AS bin
+  FROM ev
+),
+counts AS (
+  SELECT bin,
+         CAST(SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
+         CAST(SUM(CASE WHEN is_ref THEN 0 ELSE 1 END) AS BIGINT) AS n_cur
+  FROM binned GROUP BY bin
+),
+props AS (
+  SELECT bin, n_ref, n_cur,
+         GREATEST(n_ref * 1.0 / SUM(n_ref) OVER (), {PSI_FLOOR}) AS pr,
+         GREATEST(n_cur * 1.0 / SUM(n_cur) OVER (), {PSI_FLOOR}) AS pc
+  FROM counts
+)
+SELECT bin, n_ref, n_cur,
+       ROUND(pr, 6) AS p_ref, ROUND(pc, 6) AS p_cur,
+       ROUND((pc - pr) * ln(pc / pr), 6) AS psi_contrib
+FROM props
+"""
+
+
+@query("stats_psi_value_drift", oracle=PSI_ORACLE)
 def stats_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index between the REFERENCE events
     (day-of-month <= 15) and the CURRENT events (day > 15), binned by
@@ -240,51 +275,34 @@ def stats_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PSI_ORACLE = f"""
-WITH ev AS (
-  SELECT ROUND(value, 4) AS v,
-         (EXTRACT(day FROM ts) <= 15) AS is_ref
-  FROM events
-),
-edges AS (
-  SELECT {", ".join(
-      f"quantile_disc(v, {(i + 1) / PSI_N_BINS}) AS e{i}"
-      for i in range(PSI_N_BINS - 1)
-  )}
-  FROM ev WHERE is_ref
-),
-binned AS (
-  SELECT is_ref,
-         1 + {" + ".join(
-             f"CASE WHEN v > (SELECT e{i} FROM edges) THEN 1 ELSE 0 END"
-             for i in range(PSI_N_BINS - 1)
-         )} AS bin
-  FROM ev
-),
-counts AS (
-  SELECT bin,
-         CAST(SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
-         CAST(SUM(CASE WHEN is_ref THEN 0 ELSE 1 END) AS BIGINT) AS n_cur
-  FROM binned GROUP BY bin
-),
-props AS (
-  SELECT bin, n_ref, n_cur,
-         GREATEST(n_ref * 1.0 / SUM(n_ref) OVER (), {PSI_FLOOR}) AS pr,
-         GREATEST(n_cur * 1.0 / SUM(n_cur) OVER (), {PSI_FLOOR}) AS pc
-  FROM counts
-)
-SELECT bin, n_ref, n_cur,
-       ROUND(pr, 6) AS p_ref, ROUND(pc, 6) AS p_cur,
-       ROUND((pc - pr) * ln(pc / pr), 6) AS psi_contrib
-FROM props
-"""
-
-
 # ---------------------------------------------------------------------------
 # CUSUM changepoint over the daily event-count series
 # ---------------------------------------------------------------------------
 
 
+CUSUM_ORACLE = """
+WITH daily AS (
+  SELECT CAST(ts AS DATE) AS day, COUNT(*) AS c
+  FROM events GROUP BY 1
+),
+stats AS (
+  SELECT AVG(c) AS mu, CAST(COUNT(*) AS BIGINT) AS n_days FROM daily
+),
+s AS (
+  SELECT day, n_days, mu,
+         SUM(c - mu) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS s
+  FROM daily CROSS JOIN stats
+),
+pick AS (
+  SELECT *, ROW_NUMBER() OVER (ORDER BY ABS(s) DESC, day) AS rn FROM s
+)
+SELECT day AS changepoint_day, ROUND(ABS(s), 4) AS max_abs_s,
+       ROUND(s, 4) AS s_signed, n_days, ROUND(mu, 4) AS daily_mean
+FROM pick WHERE rn = 1
+"""
+
+
+@query("events_cusum_changepoint", oracle=CUSUM_ORACLE)
 def events_cusum_changepoint(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -329,28 +347,6 @@ def events_cusum_changepoint(
     )
 
 
-CUSUM_ORACLE = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, COUNT(*) AS c
-  FROM events GROUP BY 1
-),
-stats AS (
-  SELECT AVG(c) AS mu, CAST(COUNT(*) AS BIGINT) AS n_days FROM daily
-),
-s AS (
-  SELECT day, n_days, mu,
-         SUM(c - mu) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS s
-  FROM daily CROSS JOIN stats
-),
-pick AS (
-  SELECT *, ROW_NUMBER() OVER (ORDER BY ABS(s) DESC, day) AS rn FROM s
-)
-SELECT day AS changepoint_day, ROUND(ABS(s), 4) AS max_abs_s,
-       ROUND(s, 4) AS s_signed, n_days, ROUND(mu, 4) AS daily_mean
-FROM pick WHERE rn = 1
-"""
-
-
 # ---------------------------------------------------------------------------
 # Zipf rank-frequency fit over the corpus term table
 # ---------------------------------------------------------------------------
@@ -358,6 +354,29 @@ FROM pick WHERE rn = 1
 ZIPF_TOP_RANKS = 1000
 
 
+ZIPF_ORACLE = f"""
+WITH toks AS (
+  SELECT tok FROM documents,
+       unnest(string_split_regex(trim(lower(text)), '\\s+')) AS u(tok)
+  WHERE tok <> ''
+),
+tf AS (SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok),
+ranked AS (
+  SELECT c, ROW_NUMBER() OVER (ORDER BY c DESC, tok) AS rank FROM tf
+),
+pts AS (
+  SELECT ln(CAST(c AS DOUBLE)) AS y, ln(CAST(rank AS DOUBLE)) AS x
+  FROM ranked WHERE rank <= {ZIPF_TOP_RANKS}
+)
+SELECT CAST(COUNT(*) AS BIGINT) AS n_ranks,
+       ROUND(regr_slope(y, x), 4) AS slope,
+       ROUND(regr_intercept(y, x), 4) AS intercept,
+       ROUND(regr_r2(y, x), 4) AS r2
+FROM pts
+"""
+
+
+@query("text_zipf_fit", oracle=ZIPF_ORACLE)
 def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law fit over the corpus: OLS regression of ln(freq) on
     ln(rank) for the top ZIPF_TOP_RANKS terms (rank by count desc,
@@ -402,28 +421,6 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ZIPF_ORACLE = f"""
-WITH toks AS (
-  SELECT tok FROM documents,
-       unnest(string_split_regex(trim(lower(text)), '\\s+')) AS u(tok)
-  WHERE tok <> ''
-),
-tf AS (SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok),
-ranked AS (
-  SELECT c, ROW_NUMBER() OVER (ORDER BY c DESC, tok) AS rank FROM tf
-),
-pts AS (
-  SELECT ln(CAST(c AS DOUBLE)) AS y, ln(CAST(rank AS DOUBLE)) AS x
-  FROM ranked WHERE rank <= {ZIPF_TOP_RANKS}
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_ranks,
-       ROUND(regr_slope(y, x), 4) AS slope,
-       ROUND(regr_intercept(y, x), 4) AS intercept,
-       ROUND(regr_r2(y, x), 4) AS r2
-FROM pts
-"""
-
-
 # ---------------------------------------------------------------------------
 # Heaps'-law vocabulary growth curve
 # ---------------------------------------------------------------------------
@@ -431,6 +428,33 @@ FROM pts
 HEAPS_DOC_STEP = 250
 
 
+HEAPS_ORACLE = f"""
+WITH toks AS (
+  SELECT doc_id, tok FROM documents,
+       unnest(string_split_regex(trim(lower(text)), '\\s+')) AS u(tok)
+  WHERE tok <> ''
+),
+tok_ck AS (
+  SELECT CAST(floor(doc_id / {HEAPS_DOC_STEP}) + 1 AS BIGINT) AS ckpt,
+         COUNT(*) AS toks
+  FROM toks GROUP BY 1
+),
+first AS (SELECT tok, MIN(doc_id) AS first_doc FROM toks GROUP BY tok),
+voc_ck AS (
+  SELECT CAST(floor(first_doc / {HEAPS_DOC_STEP}) + 1 AS BIGINT) AS ckpt,
+         COUNT(*) AS new_vocab
+  FROM first GROUP BY 1
+)
+SELECT t.ckpt AS checkpoint,
+       CAST(SUM(t.toks) OVER (ORDER BY t.ckpt
+            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens,
+       CAST(SUM(COALESCE(v.new_vocab, 0)) OVER (ORDER BY t.ckpt
+            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab
+FROM tok_ck t LEFT JOIN voc_ck v ON t.ckpt = v.ckpt
+"""
+
+
+@query("text_heaps_vocab_growth", oracle=HEAPS_ORACLE)
 def text_heaps_vocab_growth(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -478,32 +502,6 @@ def text_heaps_vocab_growth(
     )
 
 
-HEAPS_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, tok FROM documents,
-       unnest(string_split_regex(trim(lower(text)), '\\s+')) AS u(tok)
-  WHERE tok <> ''
-),
-tok_ck AS (
-  SELECT CAST(floor(doc_id / {HEAPS_DOC_STEP}) + 1 AS BIGINT) AS ckpt,
-         COUNT(*) AS toks
-  FROM toks GROUP BY 1
-),
-first AS (SELECT tok, MIN(doc_id) AS first_doc FROM toks GROUP BY tok),
-voc_ck AS (
-  SELECT CAST(floor(first_doc / {HEAPS_DOC_STEP}) + 1 AS BIGINT) AS ckpt,
-         COUNT(*) AS new_vocab
-  FROM first GROUP BY 1
-)
-SELECT t.ckpt AS checkpoint,
-       CAST(SUM(t.toks) OVER (ORDER BY t.ckpt
-            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens,
-       CAST(SUM(COALESCE(v.new_vocab, 0)) OVER (ORDER BY t.ckpt
-            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab
-FROM tok_ck t LEFT JOIN voc_ck v ON t.ckpt = v.ckpt
-"""
-
-
 # ---------------------------------------------------------------------------
 # Classifier calibration: reliability bins + ECE contributions
 # ---------------------------------------------------------------------------
@@ -511,6 +509,31 @@ FROM tok_ck t LEFT JOIN voc_ck v ON t.ckpt = v.ckpt
 CALIB_N_BINS = 10
 
 
+CALIB_ORACLE = f"""
+WITH binned AS (
+  SELECT CAST(floor((n_chars % 97) * {CALIB_N_BINS} / 97.0) AS BIGINT)
+           AS bin,
+         (n_chars % 97) / 97.0 AS score,
+         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
+  FROM documents
+  WHERE n_chars IS NOT NULL AND lang IS NOT NULL
+),
+g AS (
+  SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
+         AVG(score) AS conf, AVG(label * 1.0) AS acc
+  FROM binned GROUP BY bin
+)
+SELECT bin, n,
+       ROUND(conf, 6) AS mean_score,
+       ROUND(acc, 6) AS pos_rate,
+       ROUND(acc - conf, 6) AS gap,
+       ROUND(n * 1.0 / SUM(n) OVER () * ABS(acc - conf), 6)
+         AS ece_contrib
+FROM g
+"""
+
+
+@query("eval_calibration_bins", oracle=CALIB_ORACLE)
 def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram + Expected Calibration Error, the third
     leg of the eval family (AUC ranks, the sweep prices thresholds,
@@ -558,30 +581,6 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CALIB_ORACLE = f"""
-WITH binned AS (
-  SELECT CAST(floor((n_chars % 97) * {CALIB_N_BINS} / 97.0) AS BIGINT)
-           AS bin,
-         (n_chars % 97) / 97.0 AS score,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
-  FROM documents
-  WHERE n_chars IS NOT NULL AND lang IS NOT NULL
-),
-g AS (
-  SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
-         AVG(score) AS conf, AVG(label * 1.0) AS acc
-  FROM binned GROUP BY bin
-)
-SELECT bin, n,
-       ROUND(conf, 6) AS mean_score,
-       ROUND(acc, 6) AS pos_rate,
-       ROUND(acc - conf, 6) AS gap,
-       ROUND(n * 1.0 / SUM(n) OVER () * ABS(acc - conf), 6)
-         AS ece_contrib
-FROM g
-"""
-
-
 # ---------------------------------------------------------------------------
 # int8 scalar quantization: the compression-error audit
 # ---------------------------------------------------------------------------
@@ -589,6 +588,42 @@ FROM g
 SQ_LEVELS = 255
 
 
+SQ8_ORACLE = f"""
+WITH emb AS (
+  SELECT vec_id, label, CAST(dim - 1 AS BIGINT) AS dim,
+         CAST(embedding[dim] AS DOUBLE) AS x
+  FROM embeddings,
+       UNNEST(range(1, len(embedding) + 1)) AS u(dim)
+),
+ranges AS (
+  SELECT dim, MIN(x) AS mn, MAX(x) AS mx FROM emb GROUP BY dim
+),
+per_dim AS (
+  SELECT e.vec_id, e.label, e.x,
+         CASE WHEN r.mx = r.mn THEN r.mn
+              ELSE r.mn
+                + floor((e.x - r.mn) / (r.mx - r.mn) * {SQ_LEVELS} + 0.5)
+                * (r.mx - r.mn) / {SQ_LEVELS}
+         END AS xq
+  FROM emb e JOIN ranges r ON e.dim = r.dim
+),
+per_vec AS (
+  SELECT vec_id, label,
+         SUM(x * xq) / (SQRT(SUM(x * x)) * SQRT(SUM(xq * xq))) AS cos,
+         AVG(ABS(x - xq)) AS mae,
+         MAX(ABS(x - xq)) AS maxe
+  FROM per_dim GROUP BY vec_id, label
+)
+SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
+       ROUND(AVG(cos), 6) AS avg_cos,
+       ROUND(MIN(cos), 6) AS min_cos,
+       ROUND(AVG(mae), 6) AS avg_abs_err,
+       ROUND(MAX(maxe), 6) AS max_abs_err
+FROM per_vec GROUP BY label
+"""
+
+
+@query("embed_sq8_quantization_error", oracle=SQ8_ORACLE)
 def embed_sq8_quantization_error(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -665,46 +700,50 @@ def embed_sq8_quantization_error(
     )
 
 
-SQ8_ORACLE = f"""
-WITH emb AS (
-  SELECT vec_id, label, CAST(dim - 1 AS BIGINT) AS dim,
-         CAST(embedding[dim] AS DOUBLE) AS x
-  FROM embeddings,
-       UNNEST(range(1, len(embedding) + 1)) AS u(dim)
-),
-ranges AS (
-  SELECT dim, MIN(x) AS mn, MAX(x) AS mx FROM emb GROUP BY dim
-),
-per_dim AS (
-  SELECT e.vec_id, e.label, e.x,
-         CASE WHEN r.mx = r.mn THEN r.mn
-              ELSE r.mn
-                + floor((e.x - r.mn) / (r.mx - r.mn) * {SQ_LEVELS} + 0.5)
-                * (r.mx - r.mn) / {SQ_LEVELS}
-         END AS xq
-  FROM emb e JOIN ranges r ON e.dim = r.dim
-),
-per_vec AS (
-  SELECT vec_id, label,
-         SUM(x * xq) / (SQRT(SUM(x * x)) * SQRT(SUM(xq * xq))) AS cos,
-         AVG(ABS(x - xq)) AS mae,
-         MAX(ABS(x - xq)) AS maxe
-  FROM per_dim GROUP BY vec_id, label
-)
-SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-       ROUND(AVG(cos), 6) AS avg_cos,
-       ROUND(MIN(cos), 6) AS min_cos,
-       ROUND(AVG(mae), 6) AS avg_abs_err,
-       ROUND(MAX(maxe), 6) AS max_abs_err
-FROM per_vec GROUP BY label
-"""
-
-
 # ---------------------------------------------------------------------------
 # Jensen-Shannon divergence between per-source unigram distributions
 # ---------------------------------------------------------------------------
 
 
+JS_ORACLE = """
+WITH tf AS (
+  SELECT source, tok, COUNT(*) AS c
+  FROM documents,
+       unnest(string_split_regex(trim(lower(text)), '\\s+')) AS u(tok)
+  WHERE tok <> ''
+  GROUP BY source, tok
+),
+tot AS (SELECT source, SUM(c) AS n FROM tf GROUP BY source),
+probs AS (
+  SELECT tf.source, tf.tok, tf.c * 1.0 / tot.n AS p
+  FROM tf JOIN tot ON tf.source = tot.source
+),
+shared AS (
+  SELECT a.source AS src_a, b.source AS src_b,
+         CAST(COUNT(*) AS BIGINT) AS n_shared_terms,
+         SUM(0.5 * (a.p * ln(2.0 * a.p / (a.p + b.p))
+                    + b.p * ln(2.0 * b.p / (a.p + b.p)))) AS js_shared,
+         SUM(a.p) AS sa, SUM(b.p) AS sb
+  FROM probs a JOIN probs b
+    ON a.tok = b.tok AND a.source < b.source
+  GROUP BY 1, 2
+),
+all_pairs AS (
+  SELECT a.source AS src_a, b.source AS src_b
+  FROM tot a JOIN tot b ON a.source < b.source
+)
+SELECT p.src_a, p.src_b,
+       COALESCE(s.n_shared_terms, 0) AS n_shared_terms,
+       ROUND(COALESCE(s.js_shared, 0)
+             + 0.5 * (1.0 - COALESCE(s.sa, 0)) * ln(2.0)
+             + 0.5 * (1.0 - COALESCE(s.sb, 0)) * ln(2.0), 6)
+         AS js_divergence
+FROM all_pairs p LEFT JOIN shared s
+  ON p.src_a = s.src_a AND p.src_b = s.src_b
+"""
+
+
+@query("text_js_divergence_sources", oracle=JS_ORACLE)
 def text_js_divergence_sources(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -788,44 +827,6 @@ def text_js_divergence_sources(
     )
 
 
-JS_ORACLE = """
-WITH tf AS (
-  SELECT source, tok, COUNT(*) AS c
-  FROM documents,
-       unnest(string_split_regex(trim(lower(text)), '\\s+')) AS u(tok)
-  WHERE tok <> ''
-  GROUP BY source, tok
-),
-tot AS (SELECT source, SUM(c) AS n FROM tf GROUP BY source),
-probs AS (
-  SELECT tf.source, tf.tok, tf.c * 1.0 / tot.n AS p
-  FROM tf JOIN tot ON tf.source = tot.source
-),
-shared AS (
-  SELECT a.source AS src_a, b.source AS src_b,
-         CAST(COUNT(*) AS BIGINT) AS n_shared_terms,
-         SUM(0.5 * (a.p * ln(2.0 * a.p / (a.p + b.p))
-                    + b.p * ln(2.0 * b.p / (a.p + b.p)))) AS js_shared,
-         SUM(a.p) AS sa, SUM(b.p) AS sb
-  FROM probs a JOIN probs b
-    ON a.tok = b.tok AND a.source < b.source
-  GROUP BY 1, 2
-),
-all_pairs AS (
-  SELECT a.source AS src_a, b.source AS src_b
-  FROM tot a JOIN tot b ON a.source < b.source
-)
-SELECT p.src_a, p.src_b,
-       COALESCE(s.n_shared_terms, 0) AS n_shared_terms,
-       ROUND(COALESCE(s.js_shared, 0)
-             + 0.5 * (1.0 - COALESCE(s.sa, 0)) * ln(2.0)
-             + 0.5 * (1.0 - COALESCE(s.sb, 0)) * ln(2.0), 6)
-         AS js_divergence
-FROM all_pairs p LEFT JOIN shared s
-  ON p.src_a = s.src_a AND p.src_b = s.src_b
-"""
-
-
 # ---------------------------------------------------------------------------
 # Shared zero-filled daily event-count series (ACF + Mann-Kendall)
 # ---------------------------------------------------------------------------
@@ -889,6 +890,31 @@ series AS (
 ACF_MAX_LAG = 14
 
 
+ACF_ORACLE = f"""
+WITH {_DAILY_SERIES_SQL},
+centered AS (
+  SELECT day, y - AVG(y) OVER () AS dy FROM series
+),
+denom AS (
+  SELECT SUM(dy * dy) AS ss, CAST(COUNT(*) AS BIGINT) AS n_days
+  FROM centered
+),
+lags AS (SELECT UNNEST(range(1, {ACF_MAX_LAG} + 1)) AS lag),
+prods AS (
+  SELECT l.lag, SUM(a.dy * b.dy) AS num
+  FROM lags l
+  JOIN centered a ON TRUE
+  JOIN centered b ON b.day = a.day + CAST(l.lag AS INTEGER)
+  GROUP BY l.lag
+)
+SELECT CAST(l.lag AS INTEGER) AS lag, d.n_days,
+       ROUND(p.num / d.ss, 6) AS acf
+FROM lags l CROSS JOIN denom d
+LEFT JOIN prods p ON p.lag = l.lag
+"""
+
+
+@query("events_acf_daily", oracle=ACF_ORACLE)
 def events_acf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation function of the daily event-count series at
     lags 1..ACF_MAX_LAG — the standard seasonality/periodicity probe
@@ -942,35 +968,31 @@ def events_acf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ACF_ORACLE = f"""
-WITH {_DAILY_SERIES_SQL},
-centered AS (
-  SELECT day, y - AVG(y) OVER () AS dy FROM series
-),
-denom AS (
-  SELECT SUM(dy * dy) AS ss, CAST(COUNT(*) AS BIGINT) AS n_days
-  FROM centered
-),
-lags AS (SELECT UNNEST(range(1, {ACF_MAX_LAG} + 1)) AS lag),
-prods AS (
-  SELECT l.lag, SUM(a.dy * b.dy) AS num
-  FROM lags l
-  JOIN centered a ON TRUE
-  JOIN centered b ON b.day = a.day + CAST(l.lag AS INTEGER)
-  GROUP BY l.lag
-)
-SELECT CAST(l.lag AS INTEGER) AS lag, d.n_days,
-       ROUND(p.num / d.ss, 6) AS acf
-FROM lags l CROSS JOIN denom d
-LEFT JOIN prods p ON p.lag = l.lag
-"""
-
-
 # ---------------------------------------------------------------------------
 # Benford first-digit audit over order values (data-quality / fraud screen)
 # ---------------------------------------------------------------------------
 
 
+BENFORD_ORACLE = """
+WITH x AS (
+  SELECT CAST(FLOOR(o_totalprice
+               / POW(10.0, FLOOR(LOG10(o_totalprice)))) AS INTEGER)
+         AS digit
+  FROM orders WHERE o_totalprice > 0
+),
+per AS (SELECT digit, COUNT(*) AS n_obs FROM x GROUP BY digit)
+SELECT digit, n_obs,
+       ROUND(n_obs * 1.0 / SUM(n_obs) OVER (), 6) AS obs_share,
+       ROUND(LOG10(1.0 + 1.0 / digit), 6) AS exp_share,
+       ROUND(POW(n_obs - SUM(n_obs) OVER () * LOG10(1.0 + 1.0 / digit),
+                 2.0)
+             / (SUM(n_obs) OVER () * LOG10(1.0 + 1.0 / digit)),
+             6) AS chi2_part
+FROM per
+"""
+
+
+@query("stats_benford_first_digit", oracle=BENFORD_ORACLE)
 def stats_benford_first_digit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1017,30 +1039,57 @@ def stats_benford_first_digit(
     )
 
 
-BENFORD_ORACLE = """
-WITH x AS (
-  SELECT CAST(FLOOR(o_totalprice
-               / POW(10.0, FLOOR(LOG10(o_totalprice)))) AS INTEGER)
-         AS digit
-  FROM orders WHERE o_totalprice > 0
-),
-per AS (SELECT digit, COUNT(*) AS n_obs FROM x GROUP BY digit)
-SELECT digit, n_obs,
-       ROUND(n_obs * 1.0 / SUM(n_obs) OVER (), 6) AS obs_share,
-       ROUND(LOG10(1.0 + 1.0 / digit), 6) AS exp_share,
-       ROUND(POW(n_obs - SUM(n_obs) OVER () * LOG10(1.0 + 1.0 / digit),
-                 2.0)
-             / (SUM(n_obs) OVER () * LOG10(1.0 + 1.0 / digit)),
-             6) AS chi2_part
-FROM per
-"""
-
-
 # ---------------------------------------------------------------------------
 # Mann-Kendall trend test + Theil-Sen slope over the daily event series
 # ---------------------------------------------------------------------------
 
 
+MK_ORACLE = f"""
+WITH {_DAILY_SERIES_SQL},
+pair_stats AS (
+  SELECT CAST(SUM(SIGN(b.y - a.y)) AS BIGINT) AS s_stat,
+         QUANTILE_DISC((b.y - a.y) / (b.t - a.t), 0.5) AS sen_slope
+  FROM series a JOIN series b ON a.t < b.t
+),
+ties AS (
+  SELECT SUM(tc * (tc - 1) * (2 * tc + 5)) AS tie_corr,
+         CAST(SUM(tc) AS BIGINT) AS n_days
+  FROM (SELECT COUNT(*) AS tc FROM series GROUP BY y)
+),
+stats AS (
+  SELECT t.n_days, p.s_stat, p.sen_slope,
+         (t.n_days * (t.n_days - 1) * (2 * t.n_days + 5) - t.tie_corr)
+           / 18.0 AS var_s
+  FROM pair_stats p CROSS JOIN ties t
+),
+zc AS (
+  SELECT *,
+         (CASE WHEN s_stat > 0 THEN s_stat - 1
+               WHEN s_stat < 0 THEN s_stat + 1
+               ELSE 0.0 END) / SQRT(var_s) AS z
+  FROM stats
+),
+qc AS (
+  SELECT *, ABS(z) AS az,
+         1.0 / (1.0 + 0.2316419 * ABS(z)) AS tt
+  FROM zc
+)
+SELECT n_days, s_stat, ROUND(var_s, 6) AS var_s,
+       ROUND(z, 6) AS z_stat,
+       ROUND(LEAST(
+         2.0 * (EXP(-0.5 * az * az) / 2.5066282746310002)
+             * (0.319381530 * tt
+                - 0.356563782 * POW(tt, 2.0)
+                + 1.781477937 * POW(tt, 3.0)
+                - 1.821255978 * POW(tt, 4.0)
+                + 1.330274429 * POW(tt, 5.0)),
+         1.0), 6) AS p_value,
+       ROUND(sen_slope, 6) AS sen_slope
+FROM qc
+"""
+
+
+@query("events_trend_mann_kendall", oracle=MK_ORACLE)
 def events_trend_mann_kendall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1130,56 +1179,31 @@ def events_trend_mann_kendall(
     )
 
 
-MK_ORACLE = f"""
-WITH {_DAILY_SERIES_SQL},
-pair_stats AS (
-  SELECT CAST(SUM(SIGN(b.y - a.y)) AS BIGINT) AS s_stat,
-         QUANTILE_DISC((b.y - a.y) / (b.t - a.t), 0.5) AS sen_slope
-  FROM series a JOIN series b ON a.t < b.t
-),
-ties AS (
-  SELECT SUM(tc * (tc - 1) * (2 * tc + 5)) AS tie_corr,
-         CAST(SUM(tc) AS BIGINT) AS n_days
-  FROM (SELECT COUNT(*) AS tc FROM series GROUP BY y)
-),
-stats AS (
-  SELECT t.n_days, p.s_stat, p.sen_slope,
-         (t.n_days * (t.n_days - 1) * (2 * t.n_days + 5) - t.tie_corr)
-           / 18.0 AS var_s
-  FROM pair_stats p CROSS JOIN ties t
-),
-zc AS (
-  SELECT *,
-         (CASE WHEN s_stat > 0 THEN s_stat - 1
-               WHEN s_stat < 0 THEN s_stat + 1
-               ELSE 0.0 END) / SQRT(var_s) AS z
-  FROM stats
-),
-qc AS (
-  SELECT *, ABS(z) AS az,
-         1.0 / (1.0 + 0.2316419 * ABS(z)) AS tt
-  FROM zc
-)
-SELECT n_days, s_stat, ROUND(var_s, 6) AS var_s,
-       ROUND(z, 6) AS z_stat,
-       ROUND(LEAST(
-         2.0 * (EXP(-0.5 * az * az) / 2.5066282746310002)
-             * (0.319381530 * tt
-                - 0.356563782 * POW(tt, 2.0)
-                + 1.781477937 * POW(tt, 3.0)
-                - 1.821255978 * POW(tt, 4.0)
-                + 1.330274429 * POW(tt, 5.0)),
-         1.0), 6) AS p_value,
-       ROUND(sen_slope, 6) AS sen_slope
-FROM qc
-"""
-
-
 # ---------------------------------------------------------------------------
 # Herfindahl-Hirschman supplier-concentration index per nation
 # ---------------------------------------------------------------------------
 
 
+HHI_ORACLE = """
+WITH rev AS (
+  SELECT l_suppkey, SUM(l_extendedprice * (1 - l_discount)) AS rev
+  FROM lineitem GROUP BY l_suppkey
+),
+share AS (
+  SELECT n.n_name,
+         r.rev / SUM(r.rev) OVER (PARTITION BY n.n_name) AS share
+  FROM rev r
+  JOIN supplier s ON r.l_suppkey = s.s_suppkey
+  JOIN nation n ON s.s_nationkey = n.n_nationkey
+)
+SELECT n_name, CAST(COUNT(*) AS BIGINT) AS n_suppliers,
+       ROUND(10000.0 * SUM(share * share), 4) AS hhi,
+       ROUND(MAX(share), 6) AS cr1
+FROM share GROUP BY n_name
+"""
+
+
+@query("stats_hhi_supplier_concentration", oracle=HHI_ORACLE)
 def stats_hhi_supplier_concentration(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1229,88 +1253,3 @@ def stats_hhi_supplier_concentration(
         )
         .orderBy("n_name")
     )
-
-
-HHI_ORACLE = """
-WITH rev AS (
-  SELECT l_suppkey, SUM(l_extendedprice * (1 - l_discount)) AS rev
-  FROM lineitem GROUP BY l_suppkey
-),
-share AS (
-  SELECT n.n_name,
-         r.rev / SUM(r.rev) OVER (PARTITION BY n.n_name) AS share
-  FROM rev r
-  JOIN supplier s ON r.l_suppkey = s.s_suppkey
-  JOIN nation n ON s.s_nationkey = n.n_nationkey
-)
-SELECT n_name, CAST(COUNT(*) AS BIGINT) AS n_suppliers,
-       ROUND(10000.0 * SUM(share * share), 4) AS hhi,
-       ROUND(MAX(share), 6) AS cr1
-FROM share GROUP BY n_name
-"""
-
-
-# ---------------------------------------------------------------------------
-# Registration hook for round 11
-# ---------------------------------------------------------------------------
-
-PENDING_ORDER = [
-    "stats_ks_drift_segments",
-    "stats_psi_value_drift",
-    "events_cusum_changepoint",
-    "text_zipf_fit",
-    "text_heaps_vocab_growth",
-    "eval_calibration_bins",
-    "embed_sq8_quantization_error",
-    "text_js_divergence_sources",
-    "events_acf_daily",
-    "stats_benford_first_digit",
-    "events_trend_mann_kendall",
-    "stats_hhi_supplier_concentration",
-]
-
-_PENDING = {
-    "stats_ks_drift_segments": (stats_ks_drift_segments, KS_ORACLE),
-    "stats_psi_value_drift": (stats_psi_value_drift, PSI_ORACLE),
-    "events_cusum_changepoint": (
-        events_cusum_changepoint,
-        CUSUM_ORACLE,
-    ),
-    "text_zipf_fit": (text_zipf_fit, ZIPF_ORACLE),
-    "text_heaps_vocab_growth": (
-        text_heaps_vocab_growth,
-        HEAPS_ORACLE,
-    ),
-    "eval_calibration_bins": (eval_calibration_bins, CALIB_ORACLE),
-    "embed_sq8_quantization_error": (
-        embed_sq8_quantization_error,
-        SQ8_ORACLE,
-    ),
-    "text_js_divergence_sources": (
-        text_js_divergence_sources,
-        JS_ORACLE,
-    ),
-    "events_acf_daily": (events_acf_daily, ACF_ORACLE),
-    "stats_benford_first_digit": (
-        stats_benford_first_digit,
-        BENFORD_ORACLE,
-    ),
-    "events_trend_mann_kendall": (
-        events_trend_mann_kendall,
-        MK_ORACLE,
-    ),
-    "stats_hhi_supplier_concentration": (
-        stats_hhi_supplier_concentration,
-        HHI_ORACLE,
-    ),
-}
-
-
-def register_all() -> None:
-    """Register every pending query (round-11 hook). One-shot: the
-    registry's duplicate check fires on a second call."""
-    from cdc_2025_spark.queries.registry import query
-
-    for name in PENDING_ORDER:
-        fn, oracle = _PENDING[name]
-        query(name, oracle=oracle)(fn)

@@ -1,4 +1,4 @@
-"""Round-12 registration queue: the TEMPORAL ANOMALY & STRUCTURE
+"""Round-12 queries: the TEMPORAL ANOMALY & STRUCTURE
 family — the monitoring layer that sits one level above round 11's
 drift statistics: smoothed-deviation anomaly flags (EWMA), robust
 seasonal decomposition outliers (the STL idea in its windowed
@@ -36,16 +36,8 @@ residuals, rank-rule conformal quantile, held-out coverage — the
 uncertainty-quantification rung). Twenty queries, every one with a
 full DuckDB oracle.
 
-NOT imported by queries/__init__.py on purpose (the pending_r10/r11
-posture): the freshness guard requires never-checked queries to LEAD
-a verification window, and the round-11 window is already composed.
-Registering is one call — add ``pending_r12`` to the import list,
-call :func:`register_all`, and front-load :data:`PENDING_ORDER` in
-the round-12 ``_VERIFY_FIRST``.
-
-Until then tests/test_pending_r12.py runs each query against its
-oracle with the same normalization the driver applies, at
-sf0.001 + sf0.01.
+Each query registers through ``@query``; tests/test_pending_r12.py
+runs each one against its oracle with the driver's comparison.
 
 Pre-registration sf0.1 wall times (min-of-2, idle local[32], for the
 round-12 bench.py HEADLINE additions): EWMA 0.47 s, STL outliers
@@ -84,6 +76,7 @@ from pyspark.sql import functions as F
 from cdc_2025_spark.io import read_table
 from cdc_2025_spark.functions.ranks import bucketed_midranks
 from cdc_2025_spark.queries.pending_r10 import SCORE_MOD
+from cdc_2025_spark.queries.registry import query
 
 # ---------------------------------------------------------------------------
 # EWMA anomaly flags over per-type daily means
@@ -93,6 +86,52 @@ EWMA_ALPHA = 0.3
 EWMA_K = 2.5
 
 
+EWMA_ORACLE = f"""
+WITH daily AS (
+  SELECT event_type, CAST(ts AS DATE) AS day, AVG(value) AS x
+  FROM events WHERE value IS NOT NULL
+  GROUP BY 1, 2
+),
+idx AS (
+  SELECT event_type, day, x,
+         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i,
+         FIRST_VALUE(x) OVER (PARTITION BY event_type ORDER BY day) AS x1,
+         STDDEV_SAMP(x) OVER (PARTITION BY event_type) AS sd
+  FROM daily
+),
+ew AS (
+  SELECT event_type, day, x, i, x1, sd,
+         {EWMA_ALPHA} * POW({1.0 - EWMA_ALPHA}, i)
+           * SUM(CASE WHEN i >= 2
+                      THEN x * POW({1.0 - EWMA_ALPHA}, -i)
+                      ELSE 0 END)
+             OVER (PARTITION BY event_type ORDER BY day
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         + POW({1.0 - EWMA_ALPHA}, i - 1) * x1 AS ewma
+  FROM idx
+),
+fl AS (
+  SELECT event_type, sd, ewma,
+         CASE WHEN i >= 2 AND
+                   ROUND(ABS(x - LAG(ewma) OVER
+                     (PARTITION BY event_type ORDER BY day)), 4)
+                   > ROUND({EWMA_K} * sd, 4)
+              THEN 1 ELSE 0 END AS is_anom,
+         ROW_NUMBER() OVER (PARTITION BY event_type
+                            ORDER BY day DESC) AS rn_desc
+  FROM ew
+)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_days,
+       CAST(SUM(is_anom) AS BIGINT) AS n_anomalies,
+       ROUND(MAX(CASE WHEN rn_desc = 1 THEN ewma END), 4) AS final_ewma,
+       ROUND(MAX(sd), 4) AS series_sd
+FROM fl
+GROUP BY event_type
+"""
+
+
+@query("events_ewma_anomaly", oracle=EWMA_ORACLE)
 def events_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type EWMA anomaly audit over the daily mean value
     series: ewma_t = alpha*x_t + (1-alpha)*ewma_{t-1} (ewma_1 = x_1,
@@ -185,51 +224,6 @@ def events_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EWMA_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day, AVG(value) AS x
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1, 2
-),
-idx AS (
-  SELECT event_type, day, x,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i,
-         FIRST_VALUE(x) OVER (PARTITION BY event_type ORDER BY day) AS x1,
-         STDDEV_SAMP(x) OVER (PARTITION BY event_type) AS sd
-  FROM daily
-),
-ew AS (
-  SELECT event_type, day, x, i, x1, sd,
-         {EWMA_ALPHA} * POW({1.0 - EWMA_ALPHA}, i)
-           * SUM(CASE WHEN i >= 2
-                      THEN x * POW({1.0 - EWMA_ALPHA}, -i)
-                      ELSE 0 END)
-             OVER (PARTITION BY event_type ORDER BY day
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         + POW({1.0 - EWMA_ALPHA}, i - 1) * x1 AS ewma
-  FROM idx
-),
-fl AS (
-  SELECT event_type, sd, ewma,
-         CASE WHEN i >= 2 AND
-                   ROUND(ABS(x - LAG(ewma) OVER
-                     (PARTITION BY event_type ORDER BY day)), 4)
-                   > ROUND({EWMA_K} * sd, 4)
-              THEN 1 ELSE 0 END AS is_anom,
-         ROW_NUMBER() OVER (PARTITION BY event_type
-                            ORDER BY day DESC) AS rn_desc
-  FROM ew
-)
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_days,
-       CAST(SUM(is_anom) AS BIGINT) AS n_anomalies,
-       ROUND(MAX(CASE WHEN rn_desc = 1 THEN ewma END), 4) AS final_ewma,
-       ROUND(MAX(sd), 4) AS series_sd
-FROM fl
-GROUP BY event_type
-"""
-
-
 # ---------------------------------------------------------------------------
 # STL-lite: seasonal (day-of-week) + trend (centered MA) + MAD outliers
 # ---------------------------------------------------------------------------
@@ -238,6 +232,66 @@ STL_MAD_K = 3.0
 STL_MAD_CONSISTENCY = 1.4826  # normal-consistency constant
 
 
+STL_ORACLE = f"""
+WITH daily AS (
+  SELECT event_type, CAST(ts AS DATE) AS day,
+         ROUND(AVG(value), 4) AS x,
+         dayofweek(CAST(ts AS DATE)) + 1 AS dow
+  FROM events WHERE value IS NOT NULL
+  GROUP BY 1, 2
+),
+seas AS (
+  SELECT event_type, dow, quantile_disc(x, 0.5) AS s
+  FROM daily GROUP BY 1, 2
+),
+d AS (
+  SELECT daily.event_type, day, x, daily.dow, x - s AS deseas
+  FROM daily JOIN seas
+    ON daily.event_type = seas.event_type AND daily.dow = seas.dow
+),
+t AS (
+  SELECT *,
+         AVG(deseas) OVER (PARTITION BY event_type ORDER BY day
+                           ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
+           AS trend
+  FROM d
+),
+r AS (
+  SELECT *, ROUND(deseas - trend, 4) AS resid FROM t
+),
+med AS (
+  SELECT event_type, quantile_disc(resid, 0.5) AS med_r
+  FROM r GROUP BY 1
+),
+ad AS (
+  SELECT r.*, ROUND(ABS(resid - med_r), 4) AS absdev
+  FROM r JOIN med ON r.event_type = med.event_type
+),
+md AS (
+  SELECT event_type, quantile_disc(absdev, 0.5) AS mad
+  FROM ad GROUP BY 1
+),
+fl AS (
+  SELECT ad.*, md.mad,
+         CASE WHEN md.mad > 0 AND
+                   absdev > ROUND({STL_MAD_K * STL_MAD_CONSISTENCY}
+                                  * md.mad, 4)
+              THEN 1 ELSE 0 END AS is_out
+  FROM ad JOIN md ON ad.event_type = md.event_type
+)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_days,
+       CAST(SUM(is_out) AS BIGINT) AS n_outliers,
+       ROUND(MAX(mad), 4) AS resid_mad,
+       ROUND(GREATEST(0.0,
+             1.0 - VAR_SAMP(resid) / VAR_SAMP(deseas)), 4)
+         AS seasonal_strength
+FROM fl
+GROUP BY event_type
+"""
+
+
+@query("events_stl_residual_outliers", oracle=STL_ORACLE)
 def events_stl_residual_outliers(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -324,70 +378,82 @@ def events_stl_residual_outliers(
     )
 
 
-STL_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         ROUND(AVG(value), 4) AS x,
-         dayofweek(CAST(ts AS DATE)) + 1 AS dow
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1, 2
-),
-seas AS (
-  SELECT event_type, dow, quantile_disc(x, 0.5) AS s
-  FROM daily GROUP BY 1, 2
-),
-d AS (
-  SELECT daily.event_type, day, x, daily.dow, x - s AS deseas
-  FROM daily JOIN seas
-    ON daily.event_type = seas.event_type AND daily.dow = seas.dow
-),
-t AS (
-  SELECT *,
-         AVG(deseas) OVER (PARTITION BY event_type ORDER BY day
-                           ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-           AS trend
-  FROM d
-),
-r AS (
-  SELECT *, ROUND(deseas - trend, 4) AS resid FROM t
-),
-med AS (
-  SELECT event_type, quantile_disc(resid, 0.5) AS med_r
-  FROM r GROUP BY 1
-),
-ad AS (
-  SELECT r.*, ROUND(ABS(resid - med_r), 4) AS absdev
-  FROM r JOIN med ON r.event_type = med.event_type
-),
-md AS (
-  SELECT event_type, quantile_disc(absdev, 0.5) AS mad
-  FROM ad GROUP BY 1
-),
-fl AS (
-  SELECT ad.*, md.mad,
-         CASE WHEN md.mad > 0 AND
-                   absdev > ROUND({STL_MAD_K * STL_MAD_CONSISTENCY}
-                                  * md.mad, 4)
-              THEN 1 ELSE 0 END AS is_out
-  FROM ad JOIN md ON ad.event_type = md.event_type
-)
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_days,
-       CAST(SUM(is_out) AS BIGINT) AS n_outliers,
-       ROUND(MAX(mad), 4) AS resid_mad,
-       ROUND(GREATEST(0.0,
-             1.0 - VAR_SAMP(resid) / VAR_SAMP(deseas)), 4)
-         AS seasonal_strength
-FROM fl
-GROUP BY event_type
-"""
-
-
 # ---------------------------------------------------------------------------
 # Depth-2 binary segmentation over the daily event-count series
 # ---------------------------------------------------------------------------
 
 
+BINSEG_ORACLE = """
+WITH daily AS (
+  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS c
+  FROM events GROUP BY 1
+),
+g1 AS (
+  SELECT day,
+         ROW_NUMBER() OVER (ORDER BY day) AS k,
+         SUM(c) OVER (ORDER BY day
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sk,
+         COUNT(*) OVER () AS n,
+         SUM(c) OVER () AS sn
+  FROM daily
+),
+g1g AS (
+  SELECT *,
+         CASE WHEN k < n THEN
+           sk * sk * 1.0 / k
+           + (sn - sk) * (sn - sk) * 1.0 / (n - k)
+           - sn * sn * 1.0 / n END AS gain
+  FROM g1
+),
+b1 AS (
+  SELECT day AS split_day, ROUND(gain, 4) AS gain,
+         ROUND(sk * 1.0 / k, 4) AS mean_left,
+         ROUND((sn - sk) * 1.0 / (n - k), 4) AS mean_right,
+         CAST(1 AS BIGINT) AS level, 'all' AS segment
+  FROM g1g WHERE gain IS NOT NULL
+  ORDER BY ROUND(gain, 6) DESC, day LIMIT 1
+),
+sides AS (
+  SELECT d.day, d.c,
+         CASE WHEN d.day <= b1.split_day THEN 'left'
+              ELSE 'right' END AS segment
+  FROM daily d CROSS JOIN b1
+),
+g2 AS (
+  SELECT segment, day,
+         ROW_NUMBER() OVER (PARTITION BY segment ORDER BY day) AS k,
+         SUM(c) OVER (PARTITION BY segment ORDER BY day
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sk,
+         COUNT(*) OVER (PARTITION BY segment) AS n,
+         SUM(c) OVER (PARTITION BY segment) AS sn
+  FROM sides
+),
+g2g AS (
+  SELECT *,
+         CASE WHEN k < n THEN
+           sk * sk * 1.0 / k
+           + (sn - sk) * (sn - sk) * 1.0 / (n - k)
+           - sn * sn * 1.0 / n END AS gain
+  FROM g2
+),
+b2 AS (
+  SELECT CAST(2 AS BIGINT) AS level, segment, day AS split_day,
+         ROUND(gain, 4) AS gain,
+         ROUND(sk * 1.0 / k, 4) AS mean_left,
+         ROUND((sn - sk) * 1.0 / (n - k), 4) AS mean_right
+  FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY segment
+               ORDER BY ROUND(gain, 6) DESC, day) AS rn
+    FROM g2g WHERE gain IS NOT NULL
+  ) WHERE rn = 1
+)
+SELECT level, segment, split_day, gain, mean_left, mean_right FROM b1
+UNION ALL
+SELECT level, segment, split_day, gain, mean_left, mean_right FROM b2
+"""
+
+
+@query("events_binseg_changepoints", oracle=BINSEG_ORACLE)
 def events_binseg_changepoints(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -506,76 +572,6 @@ def events_binseg_changepoints(
     ).orderBy("level", "segment")
 
 
-BINSEG_ORACLE = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1
-),
-g1 AS (
-  SELECT day,
-         ROW_NUMBER() OVER (ORDER BY day) AS k,
-         SUM(c) OVER (ORDER BY day
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sk,
-         COUNT(*) OVER () AS n,
-         SUM(c) OVER () AS sn
-  FROM daily
-),
-g1g AS (
-  SELECT *,
-         CASE WHEN k < n THEN
-           sk * sk * 1.0 / k
-           + (sn - sk) * (sn - sk) * 1.0 / (n - k)
-           - sn * sn * 1.0 / n END AS gain
-  FROM g1
-),
-b1 AS (
-  SELECT day AS split_day, ROUND(gain, 4) AS gain,
-         ROUND(sk * 1.0 / k, 4) AS mean_left,
-         ROUND((sn - sk) * 1.0 / (n - k), 4) AS mean_right,
-         CAST(1 AS BIGINT) AS level, 'all' AS segment
-  FROM g1g WHERE gain IS NOT NULL
-  ORDER BY ROUND(gain, 6) DESC, day LIMIT 1
-),
-sides AS (
-  SELECT d.day, d.c,
-         CASE WHEN d.day <= b1.split_day THEN 'left'
-              ELSE 'right' END AS segment
-  FROM daily d CROSS JOIN b1
-),
-g2 AS (
-  SELECT segment, day,
-         ROW_NUMBER() OVER (PARTITION BY segment ORDER BY day) AS k,
-         SUM(c) OVER (PARTITION BY segment ORDER BY day
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sk,
-         COUNT(*) OVER (PARTITION BY segment) AS n,
-         SUM(c) OVER (PARTITION BY segment) AS sn
-  FROM sides
-),
-g2g AS (
-  SELECT *,
-         CASE WHEN k < n THEN
-           sk * sk * 1.0 / k
-           + (sn - sk) * (sn - sk) * 1.0 / (n - k)
-           - sn * sn * 1.0 / n END AS gain
-  FROM g2
-),
-b2 AS (
-  SELECT CAST(2 AS BIGINT) AS level, segment, day AS split_day,
-         ROUND(gain, 4) AS gain,
-         ROUND(sk * 1.0 / k, 4) AS mean_left,
-         ROUND((sn - sk) * 1.0 / (n - k), 4) AS mean_right
-  FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY segment
-               ORDER BY ROUND(gain, 6) DESC, day) AS rn
-    FROM g2g WHERE gain IS NOT NULL
-  ) WHERE rn = 1
-)
-SELECT level, segment, split_day, gain, mean_left, mean_right FROM b1
-UNION ALL
-SELECT level, segment, split_day, gain, mean_left, mean_right FROM b2
-"""
-
-
 # ---------------------------------------------------------------------------
 # Weighted label propagation communities over the trade graph
 # ---------------------------------------------------------------------------
@@ -583,6 +579,51 @@ SELECT level, segment, split_day, gain, mean_left, mean_right FROM b2
 LP_ITERS = 4
 
 
+def _lp_oracle() -> str:
+    it = """
+edges0 AS MATERIALIZED (
+  SELECT cn.src, sn.dst, CAST(COUNT(*) AS DOUBLE) AS w
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN (SELECT c_custkey, n_name AS src
+        FROM customer JOIN nation ON c_nationkey = n_nationkey) cn
+    ON o.o_custkey = cn.c_custkey
+  JOIN (SELECT s_suppkey, n_name AS dst
+        FROM supplier JOIN nation ON s_nationkey = n_nationkey) sn
+    ON l.l_suppkey = sn.s_suppkey
+  GROUP BY 1, 2
+),
+und AS MATERIALIZED (
+  SELECT src, dst, SUM(w) AS w FROM (
+    SELECT src, dst, w FROM edges0
+    UNION ALL
+    SELECT dst AS src, src AS dst, w FROM edges0
+  ) WHERE src <> dst GROUP BY 1, 2
+),
+l0 AS (SELECT DISTINCT src AS node, src AS label FROM und)"""
+    for k in range(1, LP_ITERS + 1):
+        it += f""",
+l{k} AS MATERIALIZED (
+  SELECT node, nl AS label FROM (
+    SELECT u.src AS node, p.label AS nl, SUM(u.w) AS vw,
+           ROW_NUMBER() OVER (PARTITION BY u.src
+                              ORDER BY SUM(u.w) DESC, p.label) AS rn
+    FROM und u JOIN l{k - 1} p ON u.dst = p.node
+    GROUP BY u.src, p.label
+  ) WHERE rn = 1
+)"""
+    return f"""
+WITH {it},
+sizes AS (
+  SELECT label, CAST(COUNT(*) AS BIGINT) AS community_size
+  FROM l{LP_ITERS} GROUP BY label
+)
+SELECT l.node AS n_name, l.label AS community, s.community_size
+FROM l{LP_ITERS} l JOIN sizes s ON l.label = s.label
+"""
+
+
+@query("graph_label_propagation_communities", oracle=_lp_oracle())
 def graph_label_propagation_communities(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -661,50 +702,6 @@ def graph_label_propagation_communities(
     )
 
 
-def _lp_oracle() -> str:
-    it = """
-edges0 AS MATERIALIZED (
-  SELECT cn.src, sn.dst, CAST(COUNT(*) AS DOUBLE) AS w
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN (SELECT c_custkey, n_name AS src
-        FROM customer JOIN nation ON c_nationkey = n_nationkey) cn
-    ON o.o_custkey = cn.c_custkey
-  JOIN (SELECT s_suppkey, n_name AS dst
-        FROM supplier JOIN nation ON s_nationkey = n_nationkey) sn
-    ON l.l_suppkey = sn.s_suppkey
-  GROUP BY 1, 2
-),
-und AS MATERIALIZED (
-  SELECT src, dst, SUM(w) AS w FROM (
-    SELECT src, dst, w FROM edges0
-    UNION ALL
-    SELECT dst AS src, src AS dst, w FROM edges0
-  ) WHERE src <> dst GROUP BY 1, 2
-),
-l0 AS (SELECT DISTINCT src AS node, src AS label FROM und)"""
-    for k in range(1, LP_ITERS + 1):
-        it += f""",
-l{k} AS MATERIALIZED (
-  SELECT node, nl AS label FROM (
-    SELECT u.src AS node, p.label AS nl, SUM(u.w) AS vw,
-           ROW_NUMBER() OVER (PARTITION BY u.src
-                              ORDER BY SUM(u.w) DESC, p.label) AS rn
-    FROM und u JOIN l{k - 1} p ON u.dst = p.node
-    GROUP BY u.src, p.label
-  ) WHERE rn = 1
-)"""
-    return f"""
-WITH {it},
-sizes AS (
-  SELECT label, CAST(COUNT(*) AS BIGINT) AS community_size
-  FROM l{LP_ITERS} GROUP BY label
-)
-SELECT l.node AS n_name, l.label AS community, s.community_size
-FROM l{LP_ITERS} l JOIN sizes s ON l.label = s.label
-"""
-
-
 # ---------------------------------------------------------------------------
 # Johnson-Lindenstrauss projection distortion audit
 # ---------------------------------------------------------------------------
@@ -713,6 +710,52 @@ JL_D_OUT = 16
 JL_SAMPLE_IDS = 40  # vec_id < 40: fixed bounded sample, both SFs
 
 
+JL_ORACLE = f"""
+WITH x AS (
+  SELECT vec_id, CAST(dim - 1 AS INTEGER) AS j,
+         CAST(embedding[dim] AS DOUBLE) AS xj
+  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS u(dim)
+  WHERE vec_id < {JL_SAMPLE_IDS}
+),
+ks AS (SELECT CAST(UNNEST(range({JL_D_OUT})) AS INTEGER) AS k),
+proj AS (
+  SELECT vec_id, k,
+         SUM(xj * CASE WHEN CAST(('0x' || substr(md5(
+                  'jl:' || CAST(j AS VARCHAR) || ':'
+                        || CAST(k AS VARCHAR)), 1, 8)) AS BIGINT)
+                  % 2 = 0 THEN 1.0 ELSE -1.0 END)
+           / SQRT({JL_D_OUT}) AS yk
+  FROM x CROSS JOIN ks
+  GROUP BY vec_id, k
+),
+d_orig AS (
+  SELECT xa.vec_id AS a, xb.vec_id AS b,
+         SUM((xa.xj - xb.xj) * (xa.xj - xb.xj)) AS d2
+  FROM x xa JOIN x xb ON xa.j = xb.j AND xa.vec_id < xb.vec_id
+  GROUP BY 1, 2
+),
+d_proj AS (
+  SELECT ya.vec_id AS a, yb.vec_id AS b,
+         SUM((ya.yk - yb.yk) * (ya.yk - yb.yk)) AS p2
+  FROM proj ya JOIN proj yb
+    ON ya.k = yb.k AND ya.vec_id < yb.vec_id
+  GROUP BY 1, 2
+),
+ratios AS (
+  SELECT p2 / d2 AS ratio
+  FROM d_orig JOIN d_proj USING (a, b)
+  WHERE d2 > 0
+)
+SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
+       ROUND(AVG(ratio), 4) AS avg_ratio,
+       ROUND(MIN(ratio), 4) AS min_ratio,
+       ROUND(MAX(ratio), 4) AS max_ratio,
+       ROUND(STDDEV_SAMP(ratio), 4) AS sd_ratio
+FROM ratios
+"""
+
+
+@query("embed_jl_distortion_audit", oracle=JL_ORACLE)
 def embed_jl_distortion_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -815,56 +858,53 @@ def embed_jl_distortion_audit(
     )
 
 
-JL_ORACLE = f"""
-WITH x AS (
-  SELECT vec_id, CAST(dim - 1 AS INTEGER) AS j,
-         CAST(embedding[dim] AS DOUBLE) AS xj
-  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS u(dim)
-  WHERE vec_id < {JL_SAMPLE_IDS}
-),
-ks AS (SELECT CAST(UNNEST(range({JL_D_OUT})) AS INTEGER) AS k),
-proj AS (
-  SELECT vec_id, k,
-         SUM(xj * CASE WHEN CAST(('0x' || substr(md5(
-                  'jl:' || CAST(j AS VARCHAR) || ':'
-                        || CAST(k AS VARCHAR)), 1, 8)) AS BIGINT)
-                  % 2 = 0 THEN 1.0 ELSE -1.0 END)
-           / SQRT({JL_D_OUT}) AS yk
-  FROM x CROSS JOIN ks
-  GROUP BY vec_id, k
-),
-d_orig AS (
-  SELECT xa.vec_id AS a, xb.vec_id AS b,
-         SUM((xa.xj - xb.xj) * (xa.xj - xb.xj)) AS d2
-  FROM x xa JOIN x xb ON xa.j = xb.j AND xa.vec_id < xb.vec_id
-  GROUP BY 1, 2
-),
-d_proj AS (
-  SELECT ya.vec_id AS a, yb.vec_id AS b,
-         SUM((ya.yk - yb.yk) * (ya.yk - yb.yk)) AS p2
-  FROM proj ya JOIN proj yb
-    ON ya.k = yb.k AND ya.vec_id < yb.vec_id
-  GROUP BY 1, 2
-),
-ratios AS (
-  SELECT p2 / d2 AS ratio
-  FROM d_orig JOIN d_proj USING (a, b)
-  WHERE d2 > 0
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       ROUND(AVG(ratio), 4) AS avg_ratio,
-       ROUND(MIN(ratio), 4) AS min_ratio,
-       ROUND(MAX(ratio), 4) AS max_ratio,
-       ROUND(STDDEV_SAMP(ratio), 4) AS sd_ratio
-FROM ratios
-"""
-
-
 # ---------------------------------------------------------------------------
 # Wald-Wolfowitz runs test on daily revenue changes
 # ---------------------------------------------------------------------------
 
 
+RUNS_ORACLE = """
+WITH daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS day,
+         ROUND(SUM(o_totalprice), 4) AS rev
+  FROM orders GROUP BY 1
+),
+signs AS (
+  SELECT day,
+         CASE WHEN rev > prev THEN 1
+              WHEN rev < prev THEN -1 END AS sgn
+  FROM (SELECT day, rev,
+               LAG(rev) OVER (ORDER BY day) AS prev FROM daily)
+  WHERE prev IS NOT NULL
+    AND rev <> prev
+),
+runs AS (
+  SELECT sgn,
+         CASE WHEN LAG(sgn) OVER (ORDER BY day) IS DISTINCT FROM sgn
+              THEN 1 ELSE 0 END AS new_run
+  FROM signs
+),
+agg AS (
+  SELECT CAST(SUM(new_run) AS BIGINT) AS n_runs,
+         CAST(SUM(CASE WHEN sgn = 1 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_up,
+         CAST(SUM(CASE WHEN sgn = -1 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_down
+  FROM runs
+)
+SELECT n_runs, n_up, n_down,
+       ROUND(1.0 + 2.0 * n_up * n_down / (n_up + n_down), 4)
+         AS expected_runs,
+       ROUND((n_runs - (1.0 + 2.0 * n_up * n_down / (n_up + n_down)))
+             / SQRT(2.0 * n_up * n_down
+                    * (2.0 * n_up * n_down - (n_up + n_down))
+                    / ((n_up + n_down) * (n_up + n_down)
+                       * (n_up + n_down - 1))), 4) AS z_score
+FROM agg
+"""
+
+
+@query("stats_runs_test_daily_revenue", oracle=RUNS_ORACLE)
 def stats_runs_test_daily_revenue(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -929,52 +969,37 @@ def stats_runs_test_daily_revenue(
     )
 
 
-RUNS_ORACLE = """
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         ROUND(SUM(o_totalprice), 4) AS rev
-  FROM orders GROUP BY 1
-),
-signs AS (
-  SELECT day,
-         CASE WHEN rev > prev THEN 1
-              WHEN rev < prev THEN -1 END AS sgn
-  FROM (SELECT day, rev,
-               LAG(rev) OVER (ORDER BY day) AS prev FROM daily)
-  WHERE prev IS NOT NULL
-    AND rev <> prev
-),
-runs AS (
-  SELECT sgn,
-         CASE WHEN LAG(sgn) OVER (ORDER BY day) IS DISTINCT FROM sgn
-              THEN 1 ELSE 0 END AS new_run
-  FROM signs
-),
-agg AS (
-  SELECT CAST(SUM(new_run) AS BIGINT) AS n_runs,
-         CAST(SUM(CASE WHEN sgn = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_up,
-         CAST(SUM(CASE WHEN sgn = -1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_down
-  FROM runs
-)
-SELECT n_runs, n_up, n_down,
-       ROUND(1.0 + 2.0 * n_up * n_down / (n_up + n_down), 4)
-         AS expected_runs,
-       ROUND((n_runs - (1.0 + 2.0 * n_up * n_down / (n_up + n_down)))
-             / SQRT(2.0 * n_up * n_down
-                    * (2.0 * n_up * n_down - (n_up + n_down))
-                    / ((n_up + n_down) * (n_up + n_down)
-                       * (n_up + n_down - 1))), 4) AS z_score
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # Seasonal-naive forecast backtest (the forecasting family's floor)
 # ---------------------------------------------------------------------------
 
 
+SEASONAL_NAIVE_ORACLE = """
+WITH daily AS (
+  SELECT event_type, CAST(ts AS DATE) AS day,
+         ROUND(AVG(value), 4) AS x
+  FROM events WHERE value IS NOT NULL
+  GROUP BY 1, 2
+),
+j AS (
+  SELECT c.event_type, c.x, a.x AS f
+  FROM daily c
+  JOIN daily a ON a.event_type = c.event_type
+             AND c.day = a.day + 7
+)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_eval,
+       ROUND(AVG(ABS(x - f)), 4) AS mae,
+       ROUND(AVG(COALESCE(2.0 * ABS(x - f)
+                          / NULLIF(ABS(x) + ABS(f), 0.0), 0.0)), 4)
+         AS smape,
+       ROUND(AVG(x - f), 4) AS bias
+FROM j
+GROUP BY event_type
+"""
+
+
+@query("forecast_seasonal_naive_backtest", oracle=SEASONAL_NAIVE_ORACLE)
 def forecast_seasonal_naive_backtest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1025,31 +1050,6 @@ def forecast_seasonal_naive_backtest(
     )
 
 
-SEASONAL_NAIVE_ORACLE = """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         ROUND(AVG(value), 4) AS x
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1, 2
-),
-j AS (
-  SELECT c.event_type, c.x, a.x AS f
-  FROM daily c
-  JOIN daily a ON a.event_type = c.event_type
-             AND c.day = a.day + 7
-)
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_eval,
-       ROUND(AVG(ABS(x - f)), 4) AS mae,
-       ROUND(AVG(COALESCE(2.0 * ABS(x - f)
-                          / NULLIF(ABS(x) + ABS(f), 0.0), 0.0)), 4)
-         AS smape,
-       ROUND(AVG(x - f), 4) AS bias
-FROM j
-GROUP BY event_type
-"""
-
-
 # ---------------------------------------------------------------------------
 # Poisson bootstrap CI for the mean — THE distributed bootstrap
 # ---------------------------------------------------------------------------
@@ -1063,6 +1063,37 @@ _POIS1_CDF = [
 ]
 
 
+def _bootstrap_oracle() -> str:
+    ladder = " + ".join(
+        f"CASE WHEN u > {c} THEN 1 ELSE 0 END" for c in _POIS1_CDF
+    )
+    return f"""
+WITH reps AS (
+  SELECT b,
+         ROUND(SUM(w * value) / SUM(w), 4) AS m
+  FROM (
+    SELECT b.b, e.value,
+           ({ladder}) AS w
+    FROM (SELECT event_id, value FROM events
+          WHERE value IS NOT NULL) e
+    CROSS JOIN (SELECT CAST(UNNEST(range({BOOT_B})) AS INTEGER) AS b) b,
+    LATERAL (SELECT CAST(('0x' || substr(md5(
+               'boot:' || CAST(e.event_id AS VARCHAR) || ':'
+                       || CAST(b.b AS VARCHAR)), 1, 8)) AS BIGINT)
+             / 4294967296.0 AS u) h
+  )
+  GROUP BY b
+)
+SELECT CAST({BOOT_B} AS BIGINT) AS n_replicates,
+       ROUND(AVG(m), 4) AS boot_mean,
+       ROUND(quantile_disc(m, 0.025), 4) AS ci_lo,
+       ROUND(quantile_disc(m, 0.975), 4) AS ci_hi,
+       ROUND(STDDEV_SAMP(m), 4) AS boot_se
+FROM reps
+"""
+
+
+@query("stats_bootstrap_ci_mean", oracle=_bootstrap_oracle())
 def stats_bootstrap_ci_mean(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1134,41 +1165,63 @@ def stats_bootstrap_ci_mean(
     )
 
 
-def _bootstrap_oracle() -> str:
-    ladder = " + ".join(
-        f"CASE WHEN u > {c} THEN 1 ELSE 0 END" for c in _POIS1_CDF
-    )
-    return f"""
-WITH reps AS (
-  SELECT b,
-         ROUND(SUM(w * value) / SUM(w), 4) AS m
-  FROM (
-    SELECT b.b, e.value,
-           ({ladder}) AS w
-    FROM (SELECT event_id, value FROM events
-          WHERE value IS NOT NULL) e
-    CROSS JOIN (SELECT CAST(UNNEST(range({BOOT_B})) AS INTEGER) AS b) b,
-    LATERAL (SELECT CAST(('0x' || substr(md5(
-               'boot:' || CAST(e.event_id AS VARCHAR) || ':'
-                       || CAST(b.b AS VARCHAR)), 1, 8)) AS BIGINT)
-             / 4294967296.0 AS u) h
-  )
-  GROUP BY b
-)
-SELECT CAST({BOOT_B} AS BIGINT) AS n_replicates,
-       ROUND(AVG(m), 4) AS boot_mean,
-       ROUND(quantile_disc(m, 0.025), 4) AS ci_lo,
-       ROUND(quantile_disc(m, 0.975), 4) AS ci_hi,
-       ROUND(STDDEV_SAMP(m), 4) AS boot_se
-FROM reps
-"""
-
-
 # ---------------------------------------------------------------------------
 # Kaplan-Meier survival curve of customer reorder delays
 # ---------------------------------------------------------------------------
 
 
+KM_ORACLE = """
+WITH o AS (
+  SELECT o_custkey, CAST(o_orderdate AS DATE) AS day FROM orders
+),
+base AS (
+  SELECT day,
+         LEAD(day) OVER (PARTITION BY o_custkey ORDER BY day) AS nxt
+  FROM o
+),
+obs AS (
+  SELECT nxt - day AS dur, 1 AS event FROM base WHERE nxt IS NOT NULL
+  UNION ALL
+  SELECT (SELECT MAX(day) FROM o) - day AS dur, 0 AS event
+  FROM base WHERE nxt IS NULL
+),
+g AS (
+  SELECT dur,
+         CAST(SUM(event) AS BIGINT) AS d,
+         CAST(SUM(1 - event) AS BIGINT) AS c,
+         CAST(COUNT(*) AS BIGINT) AS tot
+  FROM obs GROUP BY dur
+),
+km AS (
+  SELECT dur, d, c,
+         SUM(tot) OVER () - SUM(tot) OVER (ORDER BY dur
+           ROWS UNBOUNDED PRECEDING) + tot AS n_risk
+  FROM g
+),
+kf AS (
+  SELECT dur, d, c, n_risk,
+         1.0 - d / CAST(n_risk AS DOUBLE) AS factor
+  FROM km
+),
+surv AS (
+  SELECT dur, d, c, n_risk,
+         MAX(CASE WHEN factor <= 0.0 THEN 1 ELSE 0 END)
+           OVER (ORDER BY dur ROWS UNBOUNDED PRECEDING) AS dead,
+         SUM(CASE WHEN factor > 0.0 THEN LN(factor) END)
+           OVER (ORDER BY dur ROWS UNBOUNDED PRECEDING) AS lnsum
+  FROM kf
+)
+SELECT dur AS duration_days, CAST(n_risk AS BIGINT) AS n_risk,
+       d AS n_events, c AS n_censored,
+       CASE WHEN dead = 1 THEN 0.0
+            ELSE ROUND(EXP(lnsum), 4) END AS survival
+FROM surv
+WHERE d > 0
+ORDER BY duration_days
+"""
+
+
+@query("survival_km_reorder", oracle=KM_ORACLE)
 def survival_km_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier product-limit estimator (Kaplan & Meier 1958)
     over customer reorder delays: every consecutive order pair
@@ -1275,62 +1328,60 @@ def survival_km_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KM_ORACLE = """
-WITH o AS (
-  SELECT o_custkey, CAST(o_orderdate AS DATE) AS day FROM orders
-),
-base AS (
-  SELECT day,
-         LEAD(day) OVER (PARTITION BY o_custkey ORDER BY day) AS nxt
-  FROM o
-),
-obs AS (
-  SELECT nxt - day AS dur, 1 AS event FROM base WHERE nxt IS NOT NULL
-  UNION ALL
-  SELECT (SELECT MAX(day) FROM o) - day AS dur, 0 AS event
-  FROM base WHERE nxt IS NULL
-),
-g AS (
-  SELECT dur,
-         CAST(SUM(event) AS BIGINT) AS d,
-         CAST(SUM(1 - event) AS BIGINT) AS c,
-         CAST(COUNT(*) AS BIGINT) AS tot
-  FROM obs GROUP BY dur
-),
-km AS (
-  SELECT dur, d, c,
-         SUM(tot) OVER () - SUM(tot) OVER (ORDER BY dur
-           ROWS UNBOUNDED PRECEDING) + tot AS n_risk
-  FROM g
-),
-kf AS (
-  SELECT dur, d, c, n_risk,
-         1.0 - d / CAST(n_risk AS DOUBLE) AS factor
-  FROM km
-),
-surv AS (
-  SELECT dur, d, c, n_risk,
-         MAX(CASE WHEN factor <= 0.0 THEN 1 ELSE 0 END)
-           OVER (ORDER BY dur ROWS UNBOUNDED PRECEDING) AS dead,
-         SUM(CASE WHEN factor > 0.0 THEN LN(factor) END)
-           OVER (ORDER BY dur ROWS UNBOUNDED PRECEDING) AS lnsum
-  FROM kf
-)
-SELECT dur AS duration_days, CAST(n_risk AS BIGINT) AS n_risk,
-       d AS n_events, c AS n_censored,
-       CASE WHEN dead = 1 THEN 0.0
-            ELSE ROUND(EXP(lnsum), 4) END AS survival
-FROM surv
-WHERE d > 0
-ORDER BY duration_days
-"""
-
-
 # ---------------------------------------------------------------------------
 # Gini / Lorenz inequality audit of customer spend per nation
 # ---------------------------------------------------------------------------
 
 
+GINI_ORACLE = """
+WITH spend AS (
+  SELECT o_custkey, ROUND(SUM(o_totalprice), 4) AS sp
+  FROM orders GROUP BY o_custkey
+),
+per_cust AS (
+  SELECT n.n_name, c.c_custkey, COALESCE(s.sp, 0.0) AS x
+  FROM customer c
+  LEFT JOIN spend s ON c.c_custkey = s.o_custkey
+  JOIN nation n ON c.c_nationkey = n.n_nationkey
+),
+ranked AS (
+  SELECT n_name, c_custkey, x,
+         CAST(ROW_NUMBER() OVER (PARTITION BY n_name
+              ORDER BY x, c_custkey) AS BIGINT) AS i,
+         CAST(ROW_NUMBER() OVER (PARTITION BY n_name
+              ORDER BY x DESC, c_custkey DESC) AS BIGINT) AS j,
+         COUNT(*) OVER (PARTITION BY n_name) AS n
+  FROM per_cust
+),
+per_nat AS (
+  SELECT n_name,
+         CAST(COUNT(*) AS BIGINT) AS n_customers,
+         ROUND(SUM(x), 4) AS total_spend,
+         SUM(i * x) AS ix,
+         CAST(SUM(CASE WHEN x = 0.0 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_zero
+  FROM ranked GROUP BY n_name
+),
+top AS (
+  SELECT n_name, SUM(x) AS top_sum
+  FROM ranked WHERE j <= n // 10
+  GROUP BY n_name
+)
+SELECT p.n_name, p.n_customers, p.total_spend,
+       CASE WHEN p.total_spend > 0 THEN
+         ROUND(2.0 * p.ix / (p.n_customers * p.total_spend)
+               - (p.n_customers + 1.0) / p.n_customers, 6)
+       END AS gini,
+       CASE WHEN p.total_spend > 0 THEN
+         ROUND(COALESCE(t.top_sum, 0.0) / p.total_spend, 6)
+       END AS top_decile_share,
+       ROUND(CAST(p.n_zero AS DOUBLE) / p.n_customers, 6)
+         AS zero_spend_share
+FROM per_nat p LEFT JOIN top t ON p.n_name = t.n_name
+"""
+
+
+@query("stats_gini_customer_spend", oracle=GINI_ORACLE)
 def stats_gini_customer_spend(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1422,59 +1473,49 @@ def stats_gini_customer_spend(
     )
 
 
-GINI_ORACLE = """
-WITH spend AS (
-  SELECT o_custkey, ROUND(SUM(o_totalprice), 4) AS sp
-  FROM orders GROUP BY o_custkey
-),
-per_cust AS (
-  SELECT n.n_name, c.c_custkey, COALESCE(s.sp, 0.0) AS x
-  FROM customer c
-  LEFT JOIN spend s ON c.c_custkey = s.o_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-),
-ranked AS (
-  SELECT n_name, c_custkey, x,
-         CAST(ROW_NUMBER() OVER (PARTITION BY n_name
-              ORDER BY x, c_custkey) AS BIGINT) AS i,
-         CAST(ROW_NUMBER() OVER (PARTITION BY n_name
-              ORDER BY x DESC, c_custkey DESC) AS BIGINT) AS j,
-         COUNT(*) OVER (PARTITION BY n_name) AS n
-  FROM per_cust
-),
-per_nat AS (
-  SELECT n_name,
-         CAST(COUNT(*) AS BIGINT) AS n_customers,
-         ROUND(SUM(x), 4) AS total_spend,
-         SUM(i * x) AS ix,
-         CAST(SUM(CASE WHEN x = 0.0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_zero
-  FROM ranked GROUP BY n_name
-),
-top AS (
-  SELECT n_name, SUM(x) AS top_sum
-  FROM ranked WHERE j <= n // 10
-  GROUP BY n_name
-)
-SELECT p.n_name, p.n_customers, p.total_spend,
-       CASE WHEN p.total_spend > 0 THEN
-         ROUND(2.0 * p.ix / (p.n_customers * p.total_spend)
-               - (p.n_customers + 1.0) / p.n_customers, 6)
-       END AS gini,
-       CASE WHEN p.total_spend > 0 THEN
-         ROUND(COALESCE(t.top_sum, 0.0) / p.total_spend, 6)
-       END AS top_decile_share,
-       ROUND(CAST(p.n_zero AS DOUBLE) / p.n_customers, 6)
-         AS zero_spend_share
-FROM per_nat p LEFT JOIN top t ON p.n_name = t.n_name
-"""
-
-
 # ---------------------------------------------------------------------------
 # Chi-square independence + Cramér's V + mutual information
 # ---------------------------------------------------------------------------
 
 
+CHI2_ORACLE = """
+WITH cells AS (
+  SELECT event_type,
+         ((CAST(ts AS DATE) - DATE '1970-01-05') % 7 + 7) % 7 AS dow,
+         CAST(COUNT(*) AS DOUBLE) AS o
+  FROM events WHERE event_type IS NOT NULL
+  GROUP BY 1, 2
+),
+enriched AS (
+  SELECT o,
+         SUM(o) OVER (PARTITION BY event_type) AS rt,
+         SUM(o) OVER (PARTITION BY dow) AS ct,
+         SUM(o) OVER () AS n,
+         event_type, dow
+  FROM cells
+),
+agg AS (
+  SELECT MAX(n) AS n_d,
+         CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types,
+         CAST(COUNT(DISTINCT dow) AS BIGINT) AS n_dows,
+         SUM((o - rt * ct / n) * (o - rt * ct / n) / (rt * ct / n)
+             - rt * ct / n) AS chi2_obs,
+         SUM((o / n) * LN(o * n / (rt * ct))) AS mi
+  FROM enriched
+)
+SELECT CAST(n_d AS BIGINT) AS n_events, n_types, n_dows,
+       ROUND(chi2_obs + n_d, 4) AS chi2,
+       (n_types - 1) * (n_dows - 1) AS dof,
+       ROUND(SQRT((chi2_obs + n_d)
+                  / NULLIF(n_d * LEAST(n_types - 1, n_dows - 1),
+                           0)), 6)
+         AS cramers_v,
+       ROUND(mi, 6) AS mi_nats
+FROM agg
+"""
+
+
+@query("stats_chi2_type_dow", oracle=CHI2_ORACLE)
 def stats_chi2_type_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-square test of independence between event type and
     day-of-week, with Cramér's V effect size and the plug-in mutual
@@ -1547,43 +1588,6 @@ def stats_chi2_type_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CHI2_ORACLE = """
-WITH cells AS (
-  SELECT event_type,
-         ((CAST(ts AS DATE) - DATE '1970-01-05') % 7 + 7) % 7 AS dow,
-         CAST(COUNT(*) AS DOUBLE) AS o
-  FROM events WHERE event_type IS NOT NULL
-  GROUP BY 1, 2
-),
-enriched AS (
-  SELECT o,
-         SUM(o) OVER (PARTITION BY event_type) AS rt,
-         SUM(o) OVER (PARTITION BY dow) AS ct,
-         SUM(o) OVER () AS n,
-         event_type, dow
-  FROM cells
-),
-agg AS (
-  SELECT MAX(n) AS n_d,
-         CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types,
-         CAST(COUNT(DISTINCT dow) AS BIGINT) AS n_dows,
-         SUM((o - rt * ct / n) * (o - rt * ct / n) / (rt * ct / n)
-             - rt * ct / n) AS chi2_obs,
-         SUM((o / n) * LN(o * n / (rt * ct))) AS mi
-  FROM enriched
-)
-SELECT CAST(n_d AS BIGINT) AS n_events, n_types, n_dows,
-       ROUND(chi2_obs + n_d, 4) AS chi2,
-       (n_types - 1) * (n_dows - 1) AS dof,
-       ROUND(SQRT((chi2_obs + n_d)
-                  / NULLIF(n_d * LEAST(n_types - 1, n_dows - 1),
-                           0)), 6)
-         AS cramers_v,
-       ROUND(mi, 6) AS mi_nats
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # k-core decomposition of the trade network (h-index iteration)
 # ---------------------------------------------------------------------------
@@ -1591,6 +1595,47 @@ FROM agg
 KCORE_ITERS = 8
 
 
+def _kcore_oracle() -> str:
+    it = """
+edges0 AS MATERIALIZED (
+  SELECT cn.src, sn.dst
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN (SELECT c_custkey, n_name AS src
+        FROM customer JOIN nation ON c_nationkey = n_nationkey) cn
+    ON o.o_custkey = cn.c_custkey
+  JOIN (SELECT s_suppkey, n_name AS dst
+        FROM supplier JOIN nation ON s_nationkey = n_nationkey) sn
+    ON l.l_suppkey = sn.s_suppkey
+  GROUP BY 1, 2
+),
+und AS MATERIALIZED (
+  SELECT DISTINCT src, dst FROM (
+    SELECT src, dst FROM edges0
+    UNION ALL
+    SELECT dst AS src, src AS dst FROM edges0
+  ) WHERE src <> dst
+),
+c0 AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS val
+       FROM und GROUP BY src)"""
+    for k in range(1, KCORE_ITERS + 1):
+        it += f""",
+c{k} AS MATERIALIZED (
+  SELECT node, CAST(MAX(LEAST(rk, nv)) AS BIGINT) AS val FROM (
+    SELECT u.src AS node, p.val AS nv,
+           CAST(ROW_NUMBER() OVER (PARTITION BY u.src
+                ORDER BY p.val DESC, u.dst) AS BIGINT) AS rk
+    FROM und u JOIN c{k - 1} p ON u.dst = p.node
+  ) GROUP BY node
+)"""
+    return f"""
+WITH {it}
+SELECT c.node AS n_name, c.val AS coreness, d.val AS degree
+FROM c{KCORE_ITERS} c JOIN c0 d ON c.node = d.node
+"""
+
+
+@query("graph_kcore_trade_network", oracle=_kcore_oracle())
 def graph_kcore_trade_network(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1662,46 +1707,6 @@ def graph_kcore_trade_network(
     )
 
 
-def _kcore_oracle() -> str:
-    it = """
-edges0 AS MATERIALIZED (
-  SELECT cn.src, sn.dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN (SELECT c_custkey, n_name AS src
-        FROM customer JOIN nation ON c_nationkey = n_nationkey) cn
-    ON o.o_custkey = cn.c_custkey
-  JOIN (SELECT s_suppkey, n_name AS dst
-        FROM supplier JOIN nation ON s_nationkey = n_nationkey) sn
-    ON l.l_suppkey = sn.s_suppkey
-  GROUP BY 1, 2
-),
-und AS MATERIALIZED (
-  SELECT DISTINCT src, dst FROM (
-    SELECT src, dst FROM edges0
-    UNION ALL
-    SELECT dst AS src, src AS dst FROM edges0
-  ) WHERE src <> dst
-),
-c0 AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS val
-       FROM und GROUP BY src)"""
-    for k in range(1, KCORE_ITERS + 1):
-        it += f""",
-c{k} AS MATERIALIZED (
-  SELECT node, CAST(MAX(LEAST(rk, nv)) AS BIGINT) AS val FROM (
-    SELECT u.src AS node, p.val AS nv,
-           CAST(ROW_NUMBER() OVER (PARTITION BY u.src
-                ORDER BY p.val DESC, u.dst) AS BIGINT) AS rk
-    FROM und u JOIN c{k - 1} p ON u.dst = p.node
-  ) GROUP BY node
-)"""
-    return f"""
-WITH {it}
-SELECT c.node AS n_name, c.val AS coreness, d.val AS degree
-FROM c{KCORE_ITERS} c JOIN c0 d ON c.node = d.node
-"""
-
-
 # ---------------------------------------------------------------------------
 # Benjamini-Hochberg FDR screen over per-type Mann-Kendall trends
 # ---------------------------------------------------------------------------
@@ -1709,6 +1714,100 @@ FROM c{KCORE_ITERS} c JOIN c0 d ON c.node = d.node
 BH_Q = 0.10
 
 
+BH_ORACLE = f"""
+WITH ev AS (
+  SELECT event_type, CAST(ts AS DATE) AS day FROM events
+  WHERE event_type IS NOT NULL
+),
+span AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM ev),
+spine AS (
+  SELECT CAST(UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))
+              AS DATE) AS day
+  FROM span
+),
+series AS (
+  SELECT ty.event_type,
+         CAST(sp.day - (SELECT d0 FROM span) AS DOUBLE) AS t,
+         CAST(COALESCE(c.cnt, 0) AS DOUBLE) AS y
+  FROM (SELECT DISTINCT event_type FROM ev) ty
+  CROSS JOIN spine sp
+  LEFT JOIN (SELECT event_type, day, COUNT(*) AS cnt
+             FROM ev GROUP BY 1, 2) c
+    ON c.event_type = ty.event_type AND c.day = sp.day
+),
+pair_stats AS (
+  SELECT a.event_type,
+         CAST(SUM(SIGN(b.y - a.y)) AS BIGINT) AS s_stat
+  FROM series a JOIN series b
+    ON a.event_type = b.event_type AND a.t < b.t
+  GROUP BY a.event_type
+),
+ties AS (
+  SELECT event_type,
+         SUM(tc * (tc - 1) * (2 * tc + 5)) AS tie_corr,
+         CAST(SUM(tc) AS BIGINT) AS n_days
+  FROM (SELECT event_type, COUNT(*) AS tc
+        FROM series GROUP BY event_type, y)
+  GROUP BY event_type
+),
+stats AS (
+  SELECT p.event_type, t.n_days, p.s_stat,
+         (t.n_days * (t.n_days - 1) * (2 * t.n_days + 5) - t.tie_corr)
+           / 18.0 AS var_s
+  FROM pair_stats p JOIN ties t ON p.event_type = t.event_type
+),
+zc AS (
+  SELECT *,
+         CASE WHEN var_s > 0 THEN
+           (CASE WHEN s_stat > 0 THEN s_stat - 1
+                 WHEN s_stat < 0 THEN s_stat + 1
+                 ELSE 0.0 END) / SQRT(var_s)
+         ELSE 0.0 END AS z
+  FROM stats
+),
+qc AS (
+  SELECT *, ABS(z) AS az,
+         1.0 / (1.0 + 0.2316419 * ABS(z)) AS tt
+  FROM zc
+),
+scored AS (
+  SELECT event_type, n_days, s_stat, ROUND(z, 6) AS z_stat,
+         ROUND(LEAST(
+           2.0 * (EXP(-0.5 * az * az) / 2.5066282746310002)
+               * (0.319381530 * tt
+                  - 0.356563782 * POW(tt, 2.0)
+                  + 1.781477937 * POW(tt, 3.0)
+                  - 1.821255978 * POW(tt, 4.0)
+                  + 1.330274429 * POW(tt, 5.0)),
+           1.0), 6) AS p_value
+  FROM qc
+),
+ranked AS (
+  SELECT *,
+         CAST(ROW_NUMBER() OVER (ORDER BY p_value, event_type)
+              AS BIGINT) AS bh_rank,
+         COUNT(*) OVER () AS m
+  FROM scored
+),
+crit AS (
+  SELECT *,
+         ROUND(bh_rank * {BH_Q} / m, 6) AS bh_critical
+  FROM ranked
+),
+kk AS (
+  SELECT *,
+         MAX(CASE WHEN p_value <= bh_critical THEN bh_rank END)
+           OVER () AS k
+  FROM crit
+)
+SELECT event_type, n_days, s_stat, z_stat, p_value, bh_rank,
+       bh_critical,
+       CAST(COALESCE(bh_rank <= k, FALSE) AS INTEGER) AS rejected
+FROM kk
+"""
+
+
+@query("stats_bh_fdr_trend_screen", oracle=BH_ORACLE)
 def stats_bh_fdr_trend_screen(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1858,99 +1957,6 @@ def stats_bh_fdr_trend_screen(
     ).orderBy("event_type")
 
 
-BH_ORACLE = f"""
-WITH ev AS (
-  SELECT event_type, CAST(ts AS DATE) AS day FROM events
-  WHERE event_type IS NOT NULL
-),
-span AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM ev),
-spine AS (
-  SELECT CAST(UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))
-              AS DATE) AS day
-  FROM span
-),
-series AS (
-  SELECT ty.event_type,
-         CAST(sp.day - (SELECT d0 FROM span) AS DOUBLE) AS t,
-         CAST(COALESCE(c.cnt, 0) AS DOUBLE) AS y
-  FROM (SELECT DISTINCT event_type FROM ev) ty
-  CROSS JOIN spine sp
-  LEFT JOIN (SELECT event_type, day, COUNT(*) AS cnt
-             FROM ev GROUP BY 1, 2) c
-    ON c.event_type = ty.event_type AND c.day = sp.day
-),
-pair_stats AS (
-  SELECT a.event_type,
-         CAST(SUM(SIGN(b.y - a.y)) AS BIGINT) AS s_stat
-  FROM series a JOIN series b
-    ON a.event_type = b.event_type AND a.t < b.t
-  GROUP BY a.event_type
-),
-ties AS (
-  SELECT event_type,
-         SUM(tc * (tc - 1) * (2 * tc + 5)) AS tie_corr,
-         CAST(SUM(tc) AS BIGINT) AS n_days
-  FROM (SELECT event_type, COUNT(*) AS tc
-        FROM series GROUP BY event_type, y)
-  GROUP BY event_type
-),
-stats AS (
-  SELECT p.event_type, t.n_days, p.s_stat,
-         (t.n_days * (t.n_days - 1) * (2 * t.n_days + 5) - t.tie_corr)
-           / 18.0 AS var_s
-  FROM pair_stats p JOIN ties t ON p.event_type = t.event_type
-),
-zc AS (
-  SELECT *,
-         CASE WHEN var_s > 0 THEN
-           (CASE WHEN s_stat > 0 THEN s_stat - 1
-                 WHEN s_stat < 0 THEN s_stat + 1
-                 ELSE 0.0 END) / SQRT(var_s)
-         ELSE 0.0 END AS z
-  FROM stats
-),
-qc AS (
-  SELECT *, ABS(z) AS az,
-         1.0 / (1.0 + 0.2316419 * ABS(z)) AS tt
-  FROM zc
-),
-scored AS (
-  SELECT event_type, n_days, s_stat, ROUND(z, 6) AS z_stat,
-         ROUND(LEAST(
-           2.0 * (EXP(-0.5 * az * az) / 2.5066282746310002)
-               * (0.319381530 * tt
-                  - 0.356563782 * POW(tt, 2.0)
-                  + 1.781477937 * POW(tt, 3.0)
-                  - 1.821255978 * POW(tt, 4.0)
-                  + 1.330274429 * POW(tt, 5.0)),
-           1.0), 6) AS p_value
-  FROM qc
-),
-ranked AS (
-  SELECT *,
-         CAST(ROW_NUMBER() OVER (ORDER BY p_value, event_type)
-              AS BIGINT) AS bh_rank,
-         COUNT(*) OVER () AS m
-  FROM scored
-),
-crit AS (
-  SELECT *,
-         ROUND(bh_rank * {BH_Q} / m, 6) AS bh_critical
-  FROM ranked
-),
-kk AS (
-  SELECT *,
-         MAX(CASE WHEN p_value <= bh_critical THEN bh_rank END)
-           OVER () AS k
-  FROM crit
-)
-SELECT event_type, n_days, s_stat, z_stat, p_value, bh_rank,
-       bh_critical,
-       CAST(COALESCE(bh_rank <= k, FALSE) AS INTEGER) AS rejected
-FROM kk
-"""
-
-
 # ---------------------------------------------------------------------------
 # Isotonic calibration (PAV) of the quality score, bounded-bin minimax
 # ---------------------------------------------------------------------------
@@ -1958,6 +1964,46 @@ FROM kk
 ISO_BINS = 10
 
 
+ISO_ORACLE = f"""
+WITH scored AS (
+  SELECT (n_chars % {SCORE_MOD}) / {SCORE_MOD}.0 AS score,
+         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
+  FROM documents
+  WHERE n_chars IS NOT NULL AND lang IS NOT NULL
+),
+bins AS (
+  SELECT CAST(LEAST(FLOOR(score * {ISO_BINS}), {ISO_BINS - 1})
+              AS INTEGER) AS bin,
+         CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(label) AS BIGINT) AS s
+  FROM scored GROUP BY 1
+),
+pooled AS (
+  SELECT j.bin AS j, k.bin AS k,
+         SUM(m.s) / CAST(SUM(m.n) AS DOUBLE) AS rate
+  FROM bins j
+  JOIN bins k ON j.bin <= k.bin
+  JOIN bins m ON m.bin >= j.bin AND m.bin <= k.bin
+  GROUP BY 1, 2
+),
+minstep AS (
+  SELECT b.bin AS b, p.j, MIN(p.rate) AS mr
+  FROM pooled p JOIN bins b ON p.j <= b.bin AND p.k >= b.bin
+  GROUP BY 1, 2
+),
+iso AS (
+  SELECT b, MAX(mr) AS iso FROM minstep GROUP BY b
+)
+SELECT bins.bin, bins.n,
+       ROUND(bins.s / CAST(bins.n AS DOUBLE), 6) AS raw_rate,
+       ROUND(iso.iso, 6) AS iso_rate,
+       ROUND(ABS(bins.s / CAST(bins.n AS DOUBLE) - iso.iso), 6)
+         AS gap
+FROM bins JOIN iso ON bins.bin = iso.b
+"""
+
+
+@query("eval_isotonic_calibration", oracle=ISO_ORACLE)
 def eval_isotonic_calibration(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2044,50 +2090,78 @@ def eval_isotonic_calibration(
     )
 
 
-ISO_ORACLE = f"""
-WITH scored AS (
-  SELECT (n_chars % {SCORE_MOD}) / {SCORE_MOD}.0 AS score,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
-  FROM documents
-  WHERE n_chars IS NOT NULL AND lang IS NOT NULL
-),
-bins AS (
-  SELECT CAST(LEAST(FLOOR(score * {ISO_BINS}), {ISO_BINS - 1})
-              AS INTEGER) AS bin,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(label) AS BIGINT) AS s
-  FROM scored GROUP BY 1
-),
-pooled AS (
-  SELECT j.bin AS j, k.bin AS k,
-         SUM(m.s) / CAST(SUM(m.n) AS DOUBLE) AS rate
-  FROM bins j
-  JOIN bins k ON j.bin <= k.bin
-  JOIN bins m ON m.bin >= j.bin AND m.bin <= k.bin
-  GROUP BY 1, 2
-),
-minstep AS (
-  SELECT b.bin AS b, p.j, MIN(p.rate) AS mr
-  FROM pooled p JOIN bins b ON p.j <= b.bin AND p.k >= b.bin
-  GROUP BY 1, 2
-),
-iso AS (
-  SELECT b, MAX(mr) AS iso FROM minstep GROUP BY b
-)
-SELECT bins.bin, bins.n,
-       ROUND(bins.s / CAST(bins.n AS DOUBLE), 6) AS raw_rate,
-       ROUND(iso.iso, 6) AS iso_rate,
-       ROUND(ABS(bins.s / CAST(bins.n AS DOUBLE) - iso.iso), 6)
-         AS gap
-FROM bins JOIN iso ON bins.bin = iso.b
-"""
-
-
 # ---------------------------------------------------------------------------
 # Fano factor / burstiness / memory of event arrivals per type
 # ---------------------------------------------------------------------------
 
 
+FANO_ORACLE = """
+WITH ev AS (
+  SELECT event_type, ts, event_id, CAST(ts AS DATE) AS day
+  FROM events
+  WHERE event_type IS NOT NULL
+),
+span AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM ev),
+spine AS (
+  SELECT CAST(UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))
+              AS DATE) AS day
+  FROM span
+),
+fano AS (
+  SELECT z.event_type,
+         CAST(SUM(y) AS BIGINT) AS n_events,
+         CAST(COUNT(*) AS BIGINT) AS n_days,
+         ROUND(VAR_SAMP(y) / AVG(y), 4) AS fano_daily
+  FROM (
+    SELECT ty.event_type, sp.day,
+           CAST(COALESCE(c.cnt, 0) AS DOUBLE) AS y
+    FROM (SELECT DISTINCT event_type FROM ev) ty
+    CROSS JOIN spine sp
+    LEFT JOIN (SELECT event_type, day, COUNT(*) AS cnt
+               FROM ev GROUP BY 1, 2) c
+      ON c.event_type = ty.event_type AND c.day = sp.day
+  ) z
+  GROUP BY z.event_type
+),
+deltas AS (
+  SELECT event_type,
+         sec - prev_sec AS delta,
+         LAG(sec - prev_sec) OVER (
+           PARTITION BY event_type, day
+           ORDER BY ts, event_id) AS prev_delta
+  FROM (
+    SELECT event_type, day, ts, event_id,
+           epoch_us(ts) / 1000000.0 AS sec,
+           LAG(epoch_us(ts) / 1000000.0) OVER (
+             PARTITION BY event_type, day
+             ORDER BY ts, event_id) AS prev_sec
+    FROM ev
+  )
+  WHERE prev_sec IS NOT NULL
+),
+burst AS (
+  SELECT event_type,
+         CAST(COUNT(*) AS BIGINT) AS n_deltas,
+         ROUND((STDDEV_SAMP(delta) - AVG(delta))
+               / NULLIF(STDDEV_SAMP(delta) + AVG(delta), 0.0), 4)
+           AS burstiness,
+         ROUND(COVAR_SAMP(prev_delta, delta)
+               / NULLIF(
+                   STDDEV_SAMP(CASE WHEN prev_delta IS NOT NULL
+                                    THEN prev_delta END)
+                   * STDDEV_SAMP(CASE WHEN prev_delta IS NOT NULL
+                                      THEN delta END), 0.0), 4)
+           AS memory_coeff
+  FROM deltas
+  GROUP BY event_type
+)
+SELECT f.event_type, f.n_events, f.n_days, f.fano_daily,
+       b.n_deltas, b.burstiness, b.memory_coeff
+FROM fano f LEFT JOIN burst b ON f.event_type = b.event_type
+"""
+
+
+@query("stats_fano_burstiness", oracle=FANO_ORACLE)
 def stats_fano_burstiness(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2202,77 +2276,55 @@ def stats_fano_burstiness(
     )
 
 
-FANO_ORACLE = """
-WITH ev AS (
-  SELECT event_type, ts, event_id, CAST(ts AS DATE) AS day
-  FROM events
-  WHERE event_type IS NOT NULL
-),
-span AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM ev),
-spine AS (
-  SELECT CAST(UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))
-              AS DATE) AS day
-  FROM span
-),
-fano AS (
-  SELECT z.event_type,
-         CAST(SUM(y) AS BIGINT) AS n_events,
-         CAST(COUNT(*) AS BIGINT) AS n_days,
-         ROUND(VAR_SAMP(y) / AVG(y), 4) AS fano_daily
-  FROM (
-    SELECT ty.event_type, sp.day,
-           CAST(COALESCE(c.cnt, 0) AS DOUBLE) AS y
-    FROM (SELECT DISTINCT event_type FROM ev) ty
-    CROSS JOIN spine sp
-    LEFT JOIN (SELECT event_type, day, COUNT(*) AS cnt
-               FROM ev GROUP BY 1, 2) c
-      ON c.event_type = ty.event_type AND c.day = sp.day
-  ) z
-  GROUP BY z.event_type
-),
-deltas AS (
-  SELECT event_type,
-         sec - prev_sec AS delta,
-         LAG(sec - prev_sec) OVER (
-           PARTITION BY event_type, day
-           ORDER BY ts, event_id) AS prev_delta
-  FROM (
-    SELECT event_type, day, ts, event_id,
-           epoch_us(ts) / 1000000.0 AS sec,
-           LAG(epoch_us(ts) / 1000000.0) OVER (
-             PARTITION BY event_type, day
-             ORDER BY ts, event_id) AS prev_sec
-    FROM ev
-  )
-  WHERE prev_sec IS NOT NULL
-),
-burst AS (
-  SELECT event_type,
-         CAST(COUNT(*) AS BIGINT) AS n_deltas,
-         ROUND((STDDEV_SAMP(delta) - AVG(delta))
-               / NULLIF(STDDEV_SAMP(delta) + AVG(delta), 0.0), 4)
-           AS burstiness,
-         ROUND(COVAR_SAMP(prev_delta, delta)
-               / NULLIF(
-                   STDDEV_SAMP(CASE WHEN prev_delta IS NOT NULL
-                                    THEN prev_delta END)
-                   * STDDEV_SAMP(CASE WHEN prev_delta IS NOT NULL
-                                      THEN delta END), 0.0), 4)
-           AS memory_coeff
-  FROM deltas
-  GROUP BY event_type
-)
-SELECT f.event_type, f.n_events, f.n_days, f.fano_daily,
-       b.n_deltas, b.burstiness, b.memory_coeff
-FROM fano f LEFT JOIN burst b ON f.event_type = b.event_type
-"""
-
-
 # ---------------------------------------------------------------------------
 # Theil index decomposition: between- vs within-nation spend inequality
 # ---------------------------------------------------------------------------
 
 
+THEIL_ORACLE = """
+WITH spend AS (
+  SELECT o_custkey, ROUND(SUM(o_totalprice), 4) AS x
+  FROM orders GROUP BY o_custkey
+),
+per_cust AS (
+  SELECT n.n_name, COALESCE(s.x, 0.0) AS x
+  FROM customer c
+  LEFT JOIN spend s ON c.c_custkey = s.o_custkey
+  JOIN nation n ON c.c_nationkey = n.n_nationkey
+),
+gtot AS (
+  SELECT SUM(x) AS gsum, COUNT(*) AS gn FROM per_cust WHERE x > 0
+),
+per_nat AS (
+  SELECT n_name, COUNT(*) AS ng, SUM(x) AS sg,
+         SUM(x * LN(x)) AS xlx
+  FROM per_cust WHERE x > 0 GROUP BY n_name
+),
+zero AS (
+  SELECT n_name,
+         CAST(SUM(CASE WHEN x = 0.0 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_zero
+  FROM per_cust GROUP BY n_name
+)
+SELECT p.n_name,
+       CAST(p.ng AS BIGINT) AS n_customers,
+       z.n_zero AS n_zero_excluded,
+       ROUND(p.sg / g.gsum, 6) AS spend_share,
+       ROUND(p.sg / p.ng, 4) AS mean_spend,
+       ROUND(p.xlx / p.sg - LN(p.sg / p.ng), 6)
+         AS theil_within_group,
+       ROUND((p.sg / g.gsum)
+             * LN((p.sg / p.ng) / (g.gsum / g.gn)), 6)
+         AS between_contrib,
+       ROUND((p.sg / g.gsum)
+             * (p.xlx / p.sg - LN(p.sg / p.ng)), 6)
+         AS within_contrib
+FROM per_nat p CROSS JOIN gtot g
+JOIN zero z ON p.n_name = z.n_name
+"""
+
+
+@query("stats_theil_decomposition", oracle=THEIL_ORACLE)
 def stats_theil_decomposition(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2352,49 +2404,6 @@ def stats_theil_decomposition(
     )
 
 
-THEIL_ORACLE = """
-WITH spend AS (
-  SELECT o_custkey, ROUND(SUM(o_totalprice), 4) AS x
-  FROM orders GROUP BY o_custkey
-),
-per_cust AS (
-  SELECT n.n_name, COALESCE(s.x, 0.0) AS x
-  FROM customer c
-  LEFT JOIN spend s ON c.c_custkey = s.o_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-),
-gtot AS (
-  SELECT SUM(x) AS gsum, COUNT(*) AS gn FROM per_cust WHERE x > 0
-),
-per_nat AS (
-  SELECT n_name, COUNT(*) AS ng, SUM(x) AS sg,
-         SUM(x * LN(x)) AS xlx
-  FROM per_cust WHERE x > 0 GROUP BY n_name
-),
-zero AS (
-  SELECT n_name,
-         CAST(SUM(CASE WHEN x = 0.0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_zero
-  FROM per_cust GROUP BY n_name
-)
-SELECT p.n_name,
-       CAST(p.ng AS BIGINT) AS n_customers,
-       z.n_zero AS n_zero_excluded,
-       ROUND(p.sg / g.gsum, 6) AS spend_share,
-       ROUND(p.sg / p.ng, 4) AS mean_spend,
-       ROUND(p.xlx / p.sg - LN(p.sg / p.ng), 6)
-         AS theil_within_group,
-       ROUND((p.sg / g.gsum)
-             * LN((p.sg / p.ng) / (g.gsum / g.gn)), 6)
-         AS between_contrib,
-       ROUND((p.sg / g.gsum)
-             * (p.xlx / p.sg - LN(p.sg / p.ng)), 6)
-         AS within_contrib
-FROM per_nat p CROSS JOIN gtot g
-JOIN zero z ON p.n_name = z.n_name
-"""
-
-
 # ---------------------------------------------------------------------------
 # Spearman rank correlation with exact tie midranks, per segment
 # ---------------------------------------------------------------------------
@@ -2406,6 +2415,26 @@ JOIN zero z ON p.n_name = z.n_name
 SPEARMAN_BUCKETS = 1024
 
 
+SPEARMAN_ORACLE = """
+WITH ranked AS (
+  SELECT l_returnflag,
+         RANK() OVER (PARTITION BY l_returnflag
+                      ORDER BY l_extendedprice)
+           + (COUNT(*) OVER (PARTITION BY l_returnflag,
+                             l_extendedprice) - 1) / 2.0 AS rx,
+         RANK() OVER (PARTITION BY l_returnflag ORDER BY l_quantity)
+           + (COUNT(*) OVER (PARTITION BY l_returnflag,
+                             l_quantity) - 1) / 2.0 AS ry
+  FROM lineitem
+)
+SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
+       ROUND(CORR(rx, ry), 4) AS spearman_rho
+FROM ranked
+GROUP BY l_returnflag
+"""
+
+
+@query("stats_spearman_price_quantity", oracle=SPEARMAN_ORACLE)
 def stats_spearman_price_quantity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2565,30 +2594,87 @@ def _spearman_exact_window_form(
     )
 
 
-SPEARMAN_ORACLE = """
-WITH ranked AS (
-  SELECT l_returnflag,
-         RANK() OVER (PARTITION BY l_returnflag
-                      ORDER BY l_extendedprice)
-           + (COUNT(*) OVER (PARTITION BY l_returnflag,
-                             l_extendedprice) - 1) / 2.0 AS rx,
-         RANK() OVER (PARTITION BY l_returnflag ORDER BY l_quantity)
-           + (COUNT(*) OVER (PARTITION BY l_returnflag,
-                             l_quantity) - 1) / 2.0 AS ry
-  FROM lineitem
-)
-SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
-       ROUND(CORR(rx, ry), 4) AS spearman_rho
-FROM ranked
-GROUP BY l_returnflag
-"""
-
-
 # ---------------------------------------------------------------------------
 # Kruskal-Wallis k-sample rank test across market segments
 # ---------------------------------------------------------------------------
 
 
+KW_ORACLE = """
+WITH j AS (
+  SELECT c.c_mktsegment, o.o_totalprice AS v
+  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+),
+ranked AS (
+  SELECT c_mktsegment, v,
+         RANK() OVER (ORDER BY v)
+           + (COUNT(*) OVER (PARTITION BY v) - 1) / 2.0 AS r
+  FROM j
+),
+groups AS (
+  SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS ng,
+         AVG(r) AS rbar
+  FROM ranked GROUP BY c_mktsegment
+),
+ties AS (
+  SELECT SUM(t * t * t - t) AS tie_sum
+  FROM (SELECT COUNT(*) AS t FROM ranked GROUP BY v)
+),
+groups2 AS (
+  SELECT ng, rbar,
+         SUM(ng) OVER () AS n,
+         COUNT(*) OVER () AS k
+  FROM groups
+),
+hstat AS (
+  SELECT MAX(n) AS n, MAX(k) AS k,
+         SUM(ng * POW(rbar - (n + 1) / 2.0, 2.0)) AS ssq
+  FROM groups2
+),
+hs AS (
+  SELECT h.n, h.k,
+         (12.0 / (h.n * (h.n + 1)) * h.ssq)
+           / (1.0 - t.tie_sum / (CAST(h.n AS DOUBLE) * h.n * h.n
+                                 - h.n)) AS h_corr,
+         1.0 - t.tie_sum / (CAST(h.n AS DOUBLE) * h.n * h.n - h.n)
+           AS corr
+  FROM hstat h CROSS JOIN ties t
+),
+zc AS (
+  SELECT *,
+         (POW(h_corr / (k - 1.0), 1.0 / 3.0)
+          - (1.0 - 2.0 / (9.0 * (k - 1.0))))
+           / SQRT(2.0 / (9.0 * (k - 1.0))) AS z
+  FROM hs
+),
+qc AS (
+  SELECT *, ABS(z) AS az,
+         1.0 / (1.0 + 0.2316419 * ABS(z)) AS tt
+  FROM zc
+)
+SELECT CAST(n AS BIGINT) AS n_orders,
+       CAST(k AS BIGINT) AS n_groups,
+       ROUND(h_corr, 4) AS h_stat,
+       CAST(k - 1 AS BIGINT) AS dof,
+       ROUND(corr, 6) AS tie_correction,
+       ROUND(CASE WHEN z >= 0
+             THEN (EXP(-0.5 * az * az) / 2.5066282746310002)
+                  * (0.319381530 * tt
+                     - 0.356563782 * POW(tt, 2.0)
+                     + 1.781477937 * POW(tt, 3.0)
+                     - 1.821255978 * POW(tt, 4.0)
+                     + 1.330274429 * POW(tt, 5.0))
+             ELSE 1.0 - (EXP(-0.5 * az * az) / 2.5066282746310002)
+                  * (0.319381530 * tt
+                     - 0.356563782 * POW(tt, 2.0)
+                     + 1.781477937 * POW(tt, 3.0)
+                     - 1.821255978 * POW(tt, 4.0)
+                     + 1.330274429 * POW(tt, 5.0)) END, 6)
+         AS p_value
+FROM qc
+"""
+
+
+@query("stats_kruskal_wallis_segments", oracle=KW_ORACLE)
 def stats_kruskal_wallis_segments(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2697,86 +2783,30 @@ def stats_kruskal_wallis_segments(
     )
 
 
-KW_ORACLE = """
-WITH j AS (
-  SELECT c.c_mktsegment, o.o_totalprice AS v
-  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-),
-ranked AS (
-  SELECT c_mktsegment, v,
-         RANK() OVER (ORDER BY v)
-           + (COUNT(*) OVER (PARTITION BY v) - 1) / 2.0 AS r
-  FROM j
-),
-groups AS (
-  SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS ng,
-         AVG(r) AS rbar
-  FROM ranked GROUP BY c_mktsegment
-),
-ties AS (
-  SELECT SUM(t * t * t - t) AS tie_sum
-  FROM (SELECT COUNT(*) AS t FROM ranked GROUP BY v)
-),
-groups2 AS (
-  SELECT ng, rbar,
-         SUM(ng) OVER () AS n,
-         COUNT(*) OVER () AS k
-  FROM groups
-),
-hstat AS (
-  SELECT MAX(n) AS n, MAX(k) AS k,
-         SUM(ng * POW(rbar - (n + 1) / 2.0, 2.0)) AS ssq
-  FROM groups2
-),
-hs AS (
-  SELECT h.n, h.k,
-         (12.0 / (h.n * (h.n + 1)) * h.ssq)
-           / (1.0 - t.tie_sum / (CAST(h.n AS DOUBLE) * h.n * h.n
-                                 - h.n)) AS h_corr,
-         1.0 - t.tie_sum / (CAST(h.n AS DOUBLE) * h.n * h.n - h.n)
-           AS corr
-  FROM hstat h CROSS JOIN ties t
-),
-zc AS (
-  SELECT *,
-         (POW(h_corr / (k - 1.0), 1.0 / 3.0)
-          - (1.0 - 2.0 / (9.0 * (k - 1.0))))
-           / SQRT(2.0 / (9.0 * (k - 1.0))) AS z
-  FROM hs
-),
-qc AS (
-  SELECT *, ABS(z) AS az,
-         1.0 / (1.0 + 0.2316419 * ABS(z)) AS tt
-  FROM zc
-)
-SELECT CAST(n AS BIGINT) AS n_orders,
-       CAST(k AS BIGINT) AS n_groups,
-       ROUND(h_corr, 4) AS h_stat,
-       CAST(k - 1 AS BIGINT) AS dof,
-       ROUND(corr, 6) AS tie_correction,
-       ROUND(CASE WHEN z >= 0
-             THEN (EXP(-0.5 * az * az) / 2.5066282746310002)
-                  * (0.319381530 * tt
-                     - 0.356563782 * POW(tt, 2.0)
-                     + 1.781477937 * POW(tt, 3.0)
-                     - 1.821255978 * POW(tt, 4.0)
-                     + 1.330274429 * POW(tt, 5.0))
-             ELSE 1.0 - (EXP(-0.5 * az * az) / 2.5066282746310002)
-                  * (0.319381530 * tt
-                     - 0.356563782 * POW(tt, 2.0)
-                     + 1.781477937 * POW(tt, 3.0)
-                     - 1.821255978 * POW(tt, 4.0)
-                     + 1.330274429 * POW(tt, 5.0)) END, 6)
-         AS p_value
-FROM qc
-"""
-
-
 # ---------------------------------------------------------------------------
 # Incremental view maintenance: delta-refreshed event stats
 # ---------------------------------------------------------------------------
 
 
+IVM_ORACLE = """
+WITH surviving AS (
+  SELECT event_type, value FROM events
+  WHERE value IS NOT NULL AND event_id % 5 <> 0
+  UNION ALL
+  SELECT event_type, value + 1 AS value FROM events
+  WHERE value IS NOT NULL AND event_id % 10 = 0
+)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n,
+       ROUND(SUM(value), 4) AS total,
+       ROUND(AVG(value), 4) AS mean,
+       ROUND(STDDEV_SAMP(value), 4) AS stddev
+FROM surviving
+GROUP BY event_type
+"""
+
+
+@query("ivm_incremental_event_stats", oracle=IVM_ORACLE)
 def ivm_incremental_event_stats(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2834,24 +2864,6 @@ def ivm_incremental_event_stats(
     ).orderBy("event_type")
 
 
-IVM_ORACLE = """
-WITH surviving AS (
-  SELECT event_type, value FROM events
-  WHERE value IS NOT NULL AND event_id % 5 <> 0
-  UNION ALL
-  SELECT event_type, value + 1 AS value FROM events
-  WHERE value IS NOT NULL AND event_id % 10 = 0
-)
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       ROUND(SUM(value), 4) AS total,
-       ROUND(AVG(value), 4) AS mean,
-       ROUND(STDDEV_SAMP(value), 4) AS stddev
-FROM surviving
-GROUP BY event_type
-"""
-
-
 # ---------------------------------------------------------------------------
 # Split-conformal prediction-interval calibration audit
 # ---------------------------------------------------------------------------
@@ -2859,6 +2871,51 @@ GROUP BY event_type
 CONFORMAL_ALPHA = 0.1
 
 
+CONFORMAL_ORACLE = f"""
+WITH daily AS (
+  SELECT event_type, CAST(ts AS DATE) AS day,
+         CAST(COUNT(*) AS BIGINT) AS x
+  FROM events
+  WHERE event_type IS NOT NULL
+  GROUP BY 1, 2
+),
+resid AS (
+  SELECT c.event_type, c.day, ABS(c.x - a.x) AS r,
+         ((c.day - DATE '1970-01-05') % 2 + 2) % 2 AS half
+  FROM daily c
+  JOIN daily a ON a.event_type = c.event_type
+             AND c.day = a.day + 7
+),
+ranked AS (
+  SELECT event_type, r,
+         CAST(ROW_NUMBER() OVER (PARTITION BY event_type
+              ORDER BY r, day) AS BIGINT) AS rk,
+         COUNT(*) OVER (PARTITION BY event_type) AS n_cal
+  FROM resid WHERE half = 0
+),
+qhat AS (
+  SELECT event_type,
+         CAST(MAX(n_cal) AS BIGINT) AS n_cal,
+         MAX(CASE WHEN rk = CEIL((n_cal + 1)
+                                 * {1.0 - CONFORMAL_ALPHA})
+                  THEN r END) AS q_hat
+  FROM ranked
+  GROUP BY event_type
+)
+SELECT t.event_type,
+       CAST(MAX(q.n_cal) AS BIGINT) AS n_cal,
+       CAST(COUNT(*) AS BIGINT) AS n_test,
+       CAST(MAX(q.q_hat) AS BIGINT) AS q_hat,
+       ROUND(AVG(CASE WHEN q.q_hat IS NULL THEN 1.0
+                      WHEN t.r <= q.q_hat
+                      THEN 1.0 ELSE 0.0 END), 4) AS coverage
+FROM (SELECT event_type, r FROM resid WHERE half = 1) t
+JOIN qhat q ON t.event_type = q.event_type
+GROUP BY t.event_type
+"""
+
+
+@query("forecast_conformal_interval_audit", oracle=CONFORMAL_ORACLE)
 def forecast_conformal_interval_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2952,153 +3009,3 @@ def forecast_conformal_interval_audit(
         )
     )
     return cov.orderBy("event_type")
-
-
-CONFORMAL_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(COUNT(*) AS BIGINT) AS x
-  FROM events
-  WHERE event_type IS NOT NULL
-  GROUP BY 1, 2
-),
-resid AS (
-  SELECT c.event_type, c.day, ABS(c.x - a.x) AS r,
-         ((c.day - DATE '1970-01-05') % 2 + 2) % 2 AS half
-  FROM daily c
-  JOIN daily a ON a.event_type = c.event_type
-             AND c.day = a.day + 7
-),
-ranked AS (
-  SELECT event_type, r,
-         CAST(ROW_NUMBER() OVER (PARTITION BY event_type
-              ORDER BY r, day) AS BIGINT) AS rk,
-         COUNT(*) OVER (PARTITION BY event_type) AS n_cal
-  FROM resid WHERE half = 0
-),
-qhat AS (
-  SELECT event_type,
-         CAST(MAX(n_cal) AS BIGINT) AS n_cal,
-         MAX(CASE WHEN rk = CEIL((n_cal + 1)
-                                 * {1.0 - CONFORMAL_ALPHA})
-                  THEN r END) AS q_hat
-  FROM ranked
-  GROUP BY event_type
-)
-SELECT t.event_type,
-       CAST(MAX(q.n_cal) AS BIGINT) AS n_cal,
-       CAST(COUNT(*) AS BIGINT) AS n_test,
-       CAST(MAX(q.q_hat) AS BIGINT) AS q_hat,
-       ROUND(AVG(CASE WHEN q.q_hat IS NULL THEN 1.0
-                      WHEN t.r <= q.q_hat
-                      THEN 1.0 ELSE 0.0 END), 4) AS coverage
-FROM (SELECT event_type, r FROM resid WHERE half = 1) t
-JOIN qhat q ON t.event_type = q.event_type
-GROUP BY t.event_type
-"""
-
-
-# ---------------------------------------------------------------------------
-# Registration hook for round 12
-# ---------------------------------------------------------------------------
-
-PENDING_ORDER = [
-    "events_ewma_anomaly",
-    "events_stl_residual_outliers",
-    "events_binseg_changepoints",
-    "graph_label_propagation_communities",
-    "embed_jl_distortion_audit",
-    "stats_runs_test_daily_revenue",
-    "forecast_seasonal_naive_backtest",
-    "stats_bootstrap_ci_mean",
-    "survival_km_reorder",
-    "stats_gini_customer_spend",
-    "stats_chi2_type_dow",
-    "graph_kcore_trade_network",
-    "stats_bh_fdr_trend_screen",
-    "eval_isotonic_calibration",
-    "stats_fano_burstiness",
-    "stats_theil_decomposition",
-    "stats_spearman_price_quantity",
-    "stats_kruskal_wallis_segments",
-    "ivm_incremental_event_stats",
-    "forecast_conformal_interval_audit",
-]
-
-_PENDING = {
-    "events_ewma_anomaly": (events_ewma_anomaly, EWMA_ORACLE),
-    "events_stl_residual_outliers": (
-        events_stl_residual_outliers,
-        STL_ORACLE,
-    ),
-    "events_binseg_changepoints": (
-        events_binseg_changepoints,
-        BINSEG_ORACLE,
-    ),
-    "graph_label_propagation_communities": (
-        graph_label_propagation_communities,
-        _lp_oracle(),
-    ),
-    "embed_jl_distortion_audit": (embed_jl_distortion_audit, JL_ORACLE),
-    "stats_runs_test_daily_revenue": (
-        stats_runs_test_daily_revenue,
-        RUNS_ORACLE,
-    ),
-    "forecast_seasonal_naive_backtest": (
-        forecast_seasonal_naive_backtest,
-        SEASONAL_NAIVE_ORACLE,
-    ),
-    "stats_bootstrap_ci_mean": (
-        stats_bootstrap_ci_mean,
-        _bootstrap_oracle(),
-    ),
-    "survival_km_reorder": (survival_km_reorder, KM_ORACLE),
-    "stats_gini_customer_spend": (
-        stats_gini_customer_spend,
-        GINI_ORACLE,
-    ),
-    "stats_chi2_type_dow": (stats_chi2_type_dow, CHI2_ORACLE),
-    "graph_kcore_trade_network": (
-        graph_kcore_trade_network,
-        _kcore_oracle(),
-    ),
-    "stats_bh_fdr_trend_screen": (
-        stats_bh_fdr_trend_screen,
-        BH_ORACLE,
-    ),
-    "eval_isotonic_calibration": (
-        eval_isotonic_calibration,
-        ISO_ORACLE,
-    ),
-    "stats_fano_burstiness": (stats_fano_burstiness, FANO_ORACLE),
-    "stats_theil_decomposition": (
-        stats_theil_decomposition,
-        THEIL_ORACLE,
-    ),
-    "stats_spearman_price_quantity": (
-        stats_spearman_price_quantity,
-        SPEARMAN_ORACLE,
-    ),
-    "stats_kruskal_wallis_segments": (
-        stats_kruskal_wallis_segments,
-        KW_ORACLE,
-    ),
-    "ivm_incremental_event_stats": (
-        ivm_incremental_event_stats,
-        IVM_ORACLE,
-    ),
-    "forecast_conformal_interval_audit": (
-        forecast_conformal_interval_audit,
-        CONFORMAL_ORACLE,
-    ),
-}
-
-
-def register_all() -> None:
-    """Register every pending query (round-12 hook). One-shot: the
-    registry's duplicate check fires on a second call."""
-    from cdc_2025_spark.queries.registry import query
-
-    for name in PENDING_ORDER:
-        fn, oracle = _PENDING[name]
-        query(name, oracle=oracle)(fn)

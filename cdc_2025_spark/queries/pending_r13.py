@@ -1,4 +1,4 @@
-"""Round-13 registration queue: the EVALUATION DEPTH & ROBUST
+"""Round-13 queries: the EVALUATION DEPTH & ROBUST
 STATISTICS family — the layer a data-curation pipeline needs once
 round 10's AUC/sweep and round 12's isotonic/conformal rungs exist:
 average precision with the exact tie-group convention (the
@@ -28,12 +28,8 @@ round 10's k-anonymity, per-source Simpson lexical diversity
 (integer-exact sufficient statistics), and sentence-length profiles
 through an engine-portable splitter.
 
-Registered by queries/__init__.py as the round-13 window's lead
-block (after the never-green survival_km_reorder re-lead), the
-pending_r10/r11/r12 posture: staged with full oracles + both-SF
-parity tests one round, registered the next.
-tests/test_pending_r13.py runs each query against its oracle with
-the same normalization the driver applies, at sf0.001 + sf0.01.
+Each query registers through ``@query``; tests/test_pending_r13.py
+runs each one against its oracle with the driver's comparison.
 
 The r13 close also added ``versioned_diff_audit`` — the lakehouse
 layer's driver surface (cdc_2025_spark/versioned.py through
@@ -65,6 +61,7 @@ from pyspark.sql import functions as F
 
 from cdc_2025_spark.io import read_table
 from cdc_2025_spark.queries.pending_r10 import SCORE_MOD
+from cdc_2025_spark.queries.registry import query
 
 # ---------------------------------------------------------------------------
 # Average precision (tie-group step convention) for the quality score
@@ -86,6 +83,34 @@ def _scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+AP_ORACLE = f"""
+WITH s AS (
+  SELECT (n_chars % {SCORE_MOD}) / {SCORE_MOD}.0 AS score,
+         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
+  FROM documents
+  WHERE n_chars IS NOT NULL AND lang IS NOT NULL
+),
+g AS (
+  SELECT score, SUM(label) AS np, SUM(1 - label) AS nn
+  FROM s GROUP BY score
+),
+cum AS (
+  SELECT np,
+         SUM(np) OVER (ORDER BY score DESC
+                       ROWS UNBOUNDED PRECEDING) AS tp,
+         SUM(np + nn) OVER (ORDER BY score DESC
+                            ROWS UNBOUNDED PRECEDING) AS n_cut
+  FROM g
+)
+SELECT CAST(MAX(n_cut) AS BIGINT) AS n_docs,
+       CAST(SUM(np) AS BIGINT) AS n_pos,
+       ROUND(SUM(np * (tp * 1.0 / n_cut)) / SUM(np), 6)
+         AS average_precision
+FROM cum
+"""
+
+
+@query("eval_average_precision", oracle=AP_ORACLE)
 def eval_average_precision(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -139,33 +164,6 @@ def eval_average_precision(
     )
 
 
-AP_ORACLE = f"""
-WITH s AS (
-  SELECT (n_chars % {SCORE_MOD}) / {SCORE_MOD}.0 AS score,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
-  FROM documents
-  WHERE n_chars IS NOT NULL AND lang IS NOT NULL
-),
-g AS (
-  SELECT score, SUM(label) AS np, SUM(1 - label) AS nn
-  FROM s GROUP BY score
-),
-cum AS (
-  SELECT np,
-         SUM(np) OVER (ORDER BY score DESC
-                       ROWS UNBOUNDED PRECEDING) AS tp,
-         SUM(np + nn) OVER (ORDER BY score DESC
-                            ROWS UNBOUNDED PRECEDING) AS n_cut
-  FROM g
-)
-SELECT CAST(MAX(n_cut) AS BIGINT) AS n_docs,
-       CAST(SUM(np) AS BIGINT) AS n_pos,
-       ROUND(SUM(np * (tp * 1.0 / n_cut)) / SUM(np), 6)
-         AS average_precision
-FROM cum
-"""
-
-
 # ---------------------------------------------------------------------------
 # Murphy decomposition of the Brier score (10 fixed probability bins)
 # ---------------------------------------------------------------------------
@@ -173,6 +171,46 @@ FROM cum
 BRIER_BINS = 10
 
 
+BRIER_ORACLE = f"""
+WITH s AS (
+  SELECT (n_chars % {SCORE_MOD}) / {SCORE_MOD}.0 AS score,
+         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
+  FROM documents
+  WHERE n_chars IS NOT NULL AND lang IS NOT NULL
+),
+b AS (
+  SELECT LEAST(FLOOR(score * {BRIER_BINS}), {BRIER_BINS - 1}) AS bin,
+         COUNT(*) AS n, SUM(score) AS sp,
+         SUM(score * score) AS spp, SUM(label) AS so,
+         SUM(score * label) AS spo
+  FROM s GROUP BY 1
+),
+tot AS (
+  SELECT CAST(SUM(n) AS BIGINT) AS n_docs,
+         CAST(SUM(so) AS BIGINT) AS n_pos,
+         SUM(sp) AS tsp, SUM(spp) AS tspp, SUM(spo) AS tspo,
+         SUM((sp / n - so * 1.0 / n) * (sp / n - so * 1.0 / n) * n)
+           AS rel_num,
+         SUM((so * 1.0 / n) * (so * 1.0 / n) * n) AS res_sq,
+         SUM(spp - sp * sp / n) AS wbv_num,
+         SUM(spo - sp * so / n) AS wbc_num
+  FROM b
+)
+SELECT n_docs, n_pos,
+       ROUND((tspp - 2 * tspo + n_pos) / n_docs, 6) AS brier,
+       ROUND(rel_num / n_docs, 6) AS reliability,
+       ROUND(res_sq / n_docs
+             - (n_pos * 1.0 / n_docs) * (n_pos * 1.0 / n_docs), 6)
+         AS resolution,
+       ROUND((n_pos * 1.0 / n_docs)
+             * (1 - n_pos * 1.0 / n_docs), 6) AS uncertainty,
+       ROUND(wbv_num / n_docs, 6) AS within_bin_var,
+       ROUND(wbc_num / n_docs, 6) AS within_bin_cov
+FROM tot
+"""
+
+
+@query("eval_brier_decomposition", oracle=BRIER_ORACLE)
 def eval_brier_decomposition(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -263,45 +301,6 @@ def eval_brier_decomposition(
     )
 
 
-BRIER_ORACLE = f"""
-WITH s AS (
-  SELECT (n_chars % {SCORE_MOD}) / {SCORE_MOD}.0 AS score,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
-  FROM documents
-  WHERE n_chars IS NOT NULL AND lang IS NOT NULL
-),
-b AS (
-  SELECT LEAST(FLOOR(score * {BRIER_BINS}), {BRIER_BINS - 1}) AS bin,
-         COUNT(*) AS n, SUM(score) AS sp,
-         SUM(score * score) AS spp, SUM(label) AS so,
-         SUM(score * label) AS spo
-  FROM s GROUP BY 1
-),
-tot AS (
-  SELECT CAST(SUM(n) AS BIGINT) AS n_docs,
-         CAST(SUM(so) AS BIGINT) AS n_pos,
-         SUM(sp) AS tsp, SUM(spp) AS tspp, SUM(spo) AS tspo,
-         SUM((sp / n - so * 1.0 / n) * (sp / n - so * 1.0 / n) * n)
-           AS rel_num,
-         SUM((so * 1.0 / n) * (so * 1.0 / n) * n) AS res_sq,
-         SUM(spp - sp * sp / n) AS wbv_num,
-         SUM(spo - sp * so / n) AS wbc_num
-  FROM b
-)
-SELECT n_docs, n_pos,
-       ROUND((tspp - 2 * tspo + n_pos) / n_docs, 6) AS brier,
-       ROUND(rel_num / n_docs, 6) AS reliability,
-       ROUND(res_sq / n_docs
-             - (n_pos * 1.0 / n_docs) * (n_pos * 1.0 / n_docs), 6)
-         AS resolution,
-       ROUND((n_pos * 1.0 / n_docs)
-             * (1 - n_pos * 1.0 / n_docs), 6) AS uncertainty,
-       ROUND(wbv_num / n_docs, 6) AS within_bin_var,
-       ROUND(wbc_num / n_docs, 6) AS within_bin_cov
-FROM tot
-"""
-
-
 # ---------------------------------------------------------------------------
 # Cumulative gains & lift deciles (pro-rata tie splitting)
 # ---------------------------------------------------------------------------
@@ -309,6 +308,46 @@ FROM tot
 GAINS_DECILES = 10
 
 
+GAINS_ORACLE = f"""
+WITH s AS (
+  SELECT (n_chars % {SCORE_MOD}) / {SCORE_MOD}.0 AS score,
+         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
+  FROM documents
+  WHERE n_chars IS NOT NULL AND lang IS NOT NULL
+),
+g AS (
+  SELECT score, COUNT(*) AS cnt, SUM(label) AS np
+  FROM s GROUP BY score
+),
+cum AS (
+  SELECT cnt, np,
+         SUM(cnt) OVER (ORDER BY score DESC
+                        ROWS UNBOUNDED PRECEDING) - cnt AS cum_start
+  FROM g
+),
+tot AS (
+  SELECT CAST(SUM(cnt) AS BIGINT) AS n_docs,
+         CAST(SUM(np) AS BIGINT) AS n_pos
+  FROM cum
+),
+fr AS (
+  SELECT i / {GAINS_DECILES}.0 AS frac
+  FROM generate_series(1, {GAINS_DECILES}) t(i)
+)
+SELECT ROUND(frac, 2) AS frac,
+       ROUND(SUM(GREATEST(0.0, LEAST(1.0,
+               (frac * n_docs - cum_start) / cnt)) * np)
+             / MAX(n_pos), 6) AS gains,
+       ROUND(SUM(GREATEST(0.0, LEAST(1.0,
+               (frac * n_docs - cum_start) / cnt)) * np)
+             / MAX(n_pos) / frac, 6) AS lift
+FROM cum CROSS JOIN tot CROSS JOIN fr
+GROUP BY frac
+ORDER BY frac
+"""
+
+
+@query("eval_lift_gains_deciles", oracle=GAINS_ORACLE)
 def eval_lift_gains_deciles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -375,50 +414,45 @@ def eval_lift_gains_deciles(
         ).alias("lift"),
     ).orderBy("frac")
 
-
-GAINS_ORACLE = f"""
-WITH s AS (
-  SELECT (n_chars % {SCORE_MOD}) / {SCORE_MOD}.0 AS score,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
-  FROM documents
-  WHERE n_chars IS NOT NULL AND lang IS NOT NULL
-),
-g AS (
-  SELECT score, COUNT(*) AS cnt, SUM(label) AS np
-  FROM s GROUP BY score
-),
-cum AS (
-  SELECT cnt, np,
-         SUM(cnt) OVER (ORDER BY score DESC
-                        ROWS UNBOUNDED PRECEDING) - cnt AS cum_start
-  FROM g
-),
-tot AS (
-  SELECT CAST(SUM(cnt) AS BIGINT) AS n_docs,
-         CAST(SUM(np) AS BIGINT) AS n_pos
-  FROM cum
-),
-fr AS (
-  SELECT i / {GAINS_DECILES}.0 AS frac
-  FROM generate_series(1, {GAINS_DECILES}) t(i)
-)
-SELECT ROUND(frac, 2) AS frac,
-       ROUND(SUM(GREATEST(0.0, LEAST(1.0,
-               (frac * n_docs - cum_start) / cnt)) * np)
-             / MAX(n_pos), 6) AS gains,
-       ROUND(SUM(GREATEST(0.0, LEAST(1.0,
-               (frac * n_docs - cum_start) / cnt)) * np)
-             / MAX(n_pos) / frac, 6) AS lift
-FROM cum CROSS JOIN tot CROSS JOIN fr
-GROUP BY frac
-ORDER BY frac
-"""
-
 # ---------------------------------------------------------------------------
 # Theil-Sen robust slope of daily revenue (median of pairwise slopes)
 # ---------------------------------------------------------------------------
 
 
+THEIL_SEN_ORACLE = """
+WITH daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS day,
+         ROUND(SUM(o_totalprice), 4) AS y
+  FROM orders GROUP BY 1
+),
+t AS (
+  SELECT (day - (SELECT MIN(day) FROM daily)) * 1.0 AS t,
+         CAST(y AS DOUBLE) AS y
+  FROM daily
+),
+slopes AS (
+  SELECT (b.y - a.y) / (b.t - a.t) AS slope
+  FROM t a JOIN t b ON a.t < b.t
+),
+med AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
+         quantile_disc(slope, 0.5) AS ts
+  FROM slopes
+),
+ols AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
+         (AVG(t * y) - AVG(t) * AVG(y))
+           / (AVG(t * t) - AVG(t) * AVG(t)) AS ols_slope
+  FROM t
+)
+SELECT n_days, n_pairs,
+       ROUND(ts, 6) AS theil_sen_slope,
+       ROUND(ols_slope, 6) AS ols_slope
+FROM med CROSS JOIN ols
+"""
+
+
+@query("stats_theil_sen_daily_revenue", oracle=THEIL_SEN_ORACLE)
 def stats_theil_sen_daily_revenue(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -481,44 +515,31 @@ def stats_theil_sen_daily_revenue(
     )
 
 
-THEIL_SEN_ORACLE = """
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         ROUND(SUM(o_totalprice), 4) AS y
-  FROM orders GROUP BY 1
-),
-t AS (
-  SELECT (day - (SELECT MIN(day) FROM daily)) * 1.0 AS t,
-         CAST(y AS DOUBLE) AS y
-  FROM daily
-),
-slopes AS (
-  SELECT (b.y - a.y) / (b.t - a.t) AS slope
-  FROM t a JOIN t b ON a.t < b.t
-),
-med AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
-         quantile_disc(slope, 0.5) AS ts
-  FROM slopes
-),
-ols AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-         (AVG(t * y) - AVG(t) * AVG(y))
-           / (AVG(t * t) - AVG(t) * AVG(t)) AS ols_slope
-  FROM t
-)
-SELECT n_days, n_pairs,
-       ROUND(ts, 6) AS theil_sen_slope,
-       ROUND(ols_slope, 6) AS ols_slope
-FROM med CROSS JOIN ols
-"""
-
-
 # ---------------------------------------------------------------------------
 # Partial correlation: price ~ quantity controlling for discount
 # ---------------------------------------------------------------------------
 
 
+PARTIAL_CORR_ORACLE = """
+WITH agg AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         CORR(l_extendedprice, l_quantity) AS rxy,
+         CORR(l_extendedprice, l_discount) AS rxz,
+         CORR(l_quantity, l_discount) AS ryz
+  FROM lineitem
+)
+SELECT n,
+       ROUND(rxy, 6) AS r_price_qty,
+       ROUND(rxz, 6) AS r_price_discount,
+       ROUND(ryz, 6) AS r_qty_discount,
+       ROUND((rxy - rxz * ryz)
+             / SQRT((1 - rxz * rxz) * (1 - ryz * ryz)), 6)
+         AS partial_r
+FROM agg
+"""
+
+
+@query("stats_partial_corr_price_qty", oracle=PARTIAL_CORR_ORACLE)
 def stats_partial_corr_price_qty(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -562,25 +583,6 @@ def stats_partial_corr_price_qty(
     )
 
 
-PARTIAL_CORR_ORACLE = """
-WITH agg AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CORR(l_extendedprice, l_quantity) AS rxy,
-         CORR(l_extendedprice, l_discount) AS rxz,
-         CORR(l_quantity, l_discount) AS ryz
-  FROM lineitem
-)
-SELECT n,
-       ROUND(rxy, 6) AS r_price_qty,
-       ROUND(rxz, 6) AS r_price_discount,
-       ROUND(ryz, 6) AS r_qty_discount,
-       ROUND((rxy - rxz * ryz)
-             / SQRT((1 - rxz * rxz) * (1 - ryz * ryz)), 6)
-         AS partial_r
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # Welch's unequal-variance t-test between two event types' values
 # ---------------------------------------------------------------------------
@@ -589,6 +591,57 @@ WELCH_TYPE_A = "click"
 WELCH_TYPE_B = "purchase"
 
 
+WELCH_ORACLE = f"""
+WITH agg AS (
+  SELECT
+    CAST(SUM(CASE WHEN event_type = '{WELCH_TYPE_A}' THEN 1
+                  ELSE 0 END) AS BIGINT) AS na,
+    CAST(SUM(CASE WHEN event_type = '{WELCH_TYPE_B}' THEN 1
+                  ELSE 0 END) AS BIGINT) AS nb,
+    SUM(CASE WHEN event_type = '{WELCH_TYPE_A}' THEN value
+             ELSE 0 END) AS sa,
+    SUM(CASE WHEN event_type = '{WELCH_TYPE_B}' THEN value
+             ELSE 0 END) AS sb,
+    SUM(CASE WHEN event_type = '{WELCH_TYPE_A}' THEN value * value
+             ELSE 0 END) AS ssa,
+    SUM(CASE WHEN event_type = '{WELCH_TYPE_B}' THEN value * value
+             ELSE 0 END) AS ssb
+  FROM events
+  WHERE value IS NOT NULL
+    AND event_type IN ('{WELCH_TYPE_A}', '{WELCH_TYPE_B}')
+),
+c AS (
+  SELECT na, nb,
+         sa / na AS ma, sb / nb AS mb,
+         (ssa - sa * sa / na) / (na - 1) AS va,
+         (ssb - sb * sb / nb) / (nb - 1) AS vb
+  FROM agg
+),
+s AS (
+  SELECT na, nb, ma, mb, va, vb,
+         (ma - mb) / SQRT(va / na + vb / nb) AS tstat,
+         (va / na + vb / nb) * (va / na + vb / nb)
+           / ((va / na) * (va / na) / (na - 1)
+              + (vb / nb) * (vb / nb) / (nb - 1)) AS dfw
+  FROM c
+)
+SELECT na AS n_a, nb AS n_b,
+       ROUND(ma - mb, 6) AS mean_diff,
+       ROUND(tstat, 6) AS t_stat,
+       ROUND(dfw, 2) AS df_welch,
+       ROUND(LEAST(2.0 * (EXP(-0.5 * ABS(tstat) * ABS(tstat))
+                          / 2.5066282746310002)
+         * (0.319381530 * (1.0 / (1.0 + 0.2316419 * ABS(tstat)))
+            - 0.356563782 * POW(1.0 / (1.0 + 0.2316419 * ABS(tstat)), 2)
+            + 1.781477937 * POW(1.0 / (1.0 + 0.2316419 * ABS(tstat)), 3)
+            - 1.821255978 * POW(1.0 / (1.0 + 0.2316419 * ABS(tstat)), 4)
+            + 1.330274429 * POW(1.0 / (1.0 + 0.2316419 * ABS(tstat)), 5)),
+         1.0), 6) AS p_value
+FROM s
+"""
+
+
+@query("stats_welch_ttest_types", oracle=WELCH_ORACLE)
 def stats_welch_ttest_types(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -649,56 +702,6 @@ def stats_welch_ttest_types(
         F.round(p, 6).alias("p_value"),
     )
 
-
-WELCH_ORACLE = f"""
-WITH agg AS (
-  SELECT
-    CAST(SUM(CASE WHEN event_type = '{WELCH_TYPE_A}' THEN 1
-                  ELSE 0 END) AS BIGINT) AS na,
-    CAST(SUM(CASE WHEN event_type = '{WELCH_TYPE_B}' THEN 1
-                  ELSE 0 END) AS BIGINT) AS nb,
-    SUM(CASE WHEN event_type = '{WELCH_TYPE_A}' THEN value
-             ELSE 0 END) AS sa,
-    SUM(CASE WHEN event_type = '{WELCH_TYPE_B}' THEN value
-             ELSE 0 END) AS sb,
-    SUM(CASE WHEN event_type = '{WELCH_TYPE_A}' THEN value * value
-             ELSE 0 END) AS ssa,
-    SUM(CASE WHEN event_type = '{WELCH_TYPE_B}' THEN value * value
-             ELSE 0 END) AS ssb
-  FROM events
-  WHERE value IS NOT NULL
-    AND event_type IN ('{WELCH_TYPE_A}', '{WELCH_TYPE_B}')
-),
-c AS (
-  SELECT na, nb,
-         sa / na AS ma, sb / nb AS mb,
-         (ssa - sa * sa / na) / (na - 1) AS va,
-         (ssb - sb * sb / nb) / (nb - 1) AS vb
-  FROM agg
-),
-s AS (
-  SELECT na, nb, ma, mb, va, vb,
-         (ma - mb) / SQRT(va / na + vb / nb) AS tstat,
-         (va / na + vb / nb) * (va / na + vb / nb)
-           / ((va / na) * (va / na) / (na - 1)
-              + (vb / nb) * (vb / nb) / (nb - 1)) AS dfw
-  FROM c
-)
-SELECT na AS n_a, nb AS n_b,
-       ROUND(ma - mb, 6) AS mean_diff,
-       ROUND(tstat, 6) AS t_stat,
-       ROUND(dfw, 2) AS df_welch,
-       ROUND(LEAST(2.0 * (EXP(-0.5 * ABS(tstat) * ABS(tstat))
-                          / 2.5066282746310002)
-         * (0.319381530 * (1.0 / (1.0 + 0.2316419 * ABS(tstat)))
-            - 0.356563782 * POW(1.0 / (1.0 + 0.2316419 * ABS(tstat)), 2)
-            + 1.781477937 * POW(1.0 / (1.0 + 0.2316419 * ABS(tstat)), 3)
-            - 1.821255978 * POW(1.0 / (1.0 + 0.2316419 * ABS(tstat)), 4)
-            + 1.330274429 * POW(1.0 / (1.0 + 0.2316419 * ABS(tstat)), 5)),
-         1.0), 6) AS p_value
-FROM s
-"""
-
 # ---------------------------------------------------------------------------
 # Winsorized + trimmed means of order value per market segment
 # ---------------------------------------------------------------------------
@@ -706,6 +709,32 @@ FROM s
 TRIM_P = 0.10
 
 
+WINSOR_ORACLE = f"""
+WITH o AS (
+  SELECT c_mktsegment, ROUND(o_totalprice, 4) AS v
+  FROM orders JOIN customer ON o_custkey = c_custkey
+),
+cuts AS (
+  SELECT c_mktsegment,
+         quantile_disc(v, {TRIM_P}) AS lo,
+         quantile_disc(v, {1 - TRIM_P}) AS hi
+  FROM o GROUP BY c_mktsegment
+)
+SELECT o.c_mktsegment,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       ROUND(AVG(v), 4) AS raw_mean,
+       ROUND(AVG(LEAST(GREATEST(v, lo), hi)), 4) AS winsorized_mean,
+       ROUND(AVG(CASE WHEN v BETWEEN lo AND hi THEN v END), 4)
+         AS trimmed_mean,
+       CAST(SUM(CASE WHEN v BETWEEN lo AND hi THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_kept
+FROM o JOIN cuts USING (c_mktsegment)
+GROUP BY o.c_mktsegment
+ORDER BY o.c_mktsegment
+"""
+
+
+@query("stats_winsorized_trimmed_spend", oracle=WINSOR_ORACLE)
 def stats_winsorized_trimmed_spend(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -758,36 +787,48 @@ def stats_winsorized_trimmed_spend(
     )
 
 
-WINSOR_ORACLE = f"""
-WITH o AS (
-  SELECT c_mktsegment, ROUND(o_totalprice, 4) AS v
-  FROM orders JOIN customer ON o_custkey = c_custkey
-),
-cuts AS (
-  SELECT c_mktsegment,
-         quantile_disc(v, {TRIM_P}) AS lo,
-         quantile_disc(v, {1 - TRIM_P}) AS hi
-  FROM o GROUP BY c_mktsegment
-)
-SELECT o.c_mktsegment,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       ROUND(AVG(v), 4) AS raw_mean,
-       ROUND(AVG(LEAST(GREATEST(v, lo), hi)), 4) AS winsorized_mean,
-       ROUND(AVG(CASE WHEN v BETWEEN lo AND hi THEN v END), 4)
-         AS trimmed_mean,
-       CAST(SUM(CASE WHEN v BETWEEN lo AND hi THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_kept
-FROM o JOIN cuts USING (c_mktsegment)
-GROUP BY o.c_mktsegment
-ORDER BY o.c_mktsegment
-"""
-
-
 # ---------------------------------------------------------------------------
 # One-way ANOVA F + Brown-Forsythe robust companion across segments
 # ---------------------------------------------------------------------------
 
 
+ANOVA_ORACLE = """
+WITH o AS (
+  SELECT c_mktsegment, ROUND(o_totalprice, 4) AS v
+  FROM orders JOIN customer ON o_custkey = c_custkey
+),
+med AS (
+  SELECT c_mktsegment, quantile_disc(v, 0.5) AS gmed
+  FROM o GROUP BY c_mktsegment
+),
+g AS (
+  SELECT o.c_mktsegment, COUNT(*) AS n, SUM(v) AS sv,
+         SUM(v * v) AS svv,
+         SUM(ABS(v - gmed)) AS sz,
+         SUM(ABS(v - gmed) * ABS(v - gmed)) AS szz
+  FROM o JOIN med USING (c_mktsegment)
+  GROUP BY o.c_mktsegment
+),
+tot AS (
+  SELECT CAST(SUM(n) AS BIGINT) AS n_total,
+         CAST(COUNT(*) AS BIGINT) AS k,
+         SUM(sv) AS tsv, SUM(svv) AS tsvv,
+         SUM(sz) AS tsz, SUM(szz) AS tszz,
+         SUM(sv * sv / n) AS bg_v,
+         SUM(sz * sz / n) AS bg_z
+  FROM g
+)
+SELECT n_total, k,
+       ROUND(((bg_v - tsv * tsv / n_total) / (k - 1))
+             / ((tsvv - bg_v) / (n_total - k)), 6) AS anova_f,
+       ROUND(((bg_z - tsz * tsz / n_total) / (k - 1))
+             / ((tszz - bg_z) / (n_total - k)), 6)
+         AS brown_forsythe_f
+FROM tot
+"""
+
+
+@query("stats_anova_brownforsythe_segments", oracle=ANOVA_ORACLE)
 def stats_anova_brownforsythe_segments(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -853,42 +894,6 @@ def stats_anova_brownforsythe_segments(
     )
 
 
-ANOVA_ORACLE = """
-WITH o AS (
-  SELECT c_mktsegment, ROUND(o_totalprice, 4) AS v
-  FROM orders JOIN customer ON o_custkey = c_custkey
-),
-med AS (
-  SELECT c_mktsegment, quantile_disc(v, 0.5) AS gmed
-  FROM o GROUP BY c_mktsegment
-),
-g AS (
-  SELECT o.c_mktsegment, COUNT(*) AS n, SUM(v) AS sv,
-         SUM(v * v) AS svv,
-         SUM(ABS(v - gmed)) AS sz,
-         SUM(ABS(v - gmed) * ABS(v - gmed)) AS szz
-  FROM o JOIN med USING (c_mktsegment)
-  GROUP BY o.c_mktsegment
-),
-tot AS (
-  SELECT CAST(SUM(n) AS BIGINT) AS n_total,
-         CAST(COUNT(*) AS BIGINT) AS k,
-         SUM(sv) AS tsv, SUM(svv) AS tsvv,
-         SUM(sz) AS tsz, SUM(szz) AS tszz,
-         SUM(sv * sv / n) AS bg_v,
-         SUM(sz * sz / n) AS bg_z
-  FROM g
-)
-SELECT n_total, k,
-       ROUND(((bg_v - tsv * tsv / n_total) / (k - 1))
-             / ((tsvv - bg_v) / (n_total - k)), 6) AS anova_f,
-       ROUND(((bg_z - tsz * tsz / n_total) / (k - 1))
-             / ((tszz - bg_z) / (n_total - k)), 6)
-         AS brown_forsythe_f
-FROM tot
-"""
-
-
 # ---------------------------------------------------------------------------
 # Periodogram of daily event counts (explicit DFT power, periods 2-14)
 # ---------------------------------------------------------------------------
@@ -896,6 +901,38 @@ FROM tot
 PERIODOGRAM_MAX_P = 14
 
 
+PERIODOGRAM_ORACLE = f"""
+WITH daily AS (
+  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS DOUBLE) AS c
+  FROM events GROUP BY 1
+),
+t AS (
+  SELECT (day - (SELECT MIN(day) FROM daily)) * 1.0 AS t, c
+  FROM daily
+),
+stats AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_days, AVG(c) AS mu,
+         VAR_POP(c) AS sigma2
+  FROM t
+),
+periods AS (
+  SELECT i * 1.0 AS p FROM generate_series(2, {PERIODOGRAM_MAX_P}) g(i)
+)
+SELECT CAST(p AS INTEGER) AS period_days,
+       MAX(n_days) AS n_days,
+       ROUND((SUM((c - mu) * COS(2 * PI() * t / p))
+              * SUM((c - mu) * COS(2 * PI() * t / p))
+              + SUM((c - mu) * SIN(2 * PI() * t / p))
+              * SUM((c - mu) * SIN(2 * PI() * t / p)))
+             / (MAX(n_days) * MAX(n_days) * MAX(sigma2)), 6)
+         AS norm_power
+FROM t CROSS JOIN stats CROSS JOIN periods
+GROUP BY p
+ORDER BY period_days
+"""
+
+
+@query("events_periodogram_daily", oracle=PERIODOGRAM_ORACLE)
 def events_periodogram_daily(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -955,37 +992,6 @@ def events_periodogram_daily(
         F.round(power, 6).alias("norm_power"),
     ).orderBy("period_days")
 
-
-PERIODOGRAM_ORACLE = f"""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS DOUBLE) AS c
-  FROM events GROUP BY 1
-),
-t AS (
-  SELECT (day - (SELECT MIN(day) FROM daily)) * 1.0 AS t, c
-  FROM daily
-),
-stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_days, AVG(c) AS mu,
-         VAR_POP(c) AS sigma2
-  FROM t
-),
-periods AS (
-  SELECT i * 1.0 AS p FROM generate_series(2, {PERIODOGRAM_MAX_P}) g(i)
-)
-SELECT CAST(p AS INTEGER) AS period_days,
-       MAX(n_days) AS n_days,
-       ROUND((SUM((c - mu) * COS(2 * PI() * t / p))
-              * SUM((c - mu) * COS(2 * PI() * t / p))
-              + SUM((c - mu) * SIN(2 * PI() * t / p))
-              * SUM((c - mu) * SIN(2 * PI() * t / p)))
-             / (MAX(n_days) * MAX(n_days) * MAX(sigma2)), 6)
-         AS norm_power
-FROM t CROSS JOIN stats CROSS JOIN periods
-GROUP BY p
-ORDER BY period_days
-"""
-
 # ---------------------------------------------------------------------------
 # Brown's double-exponential-smoothing 1-step backtest vs naive floor
 # ---------------------------------------------------------------------------
@@ -994,6 +1000,51 @@ DES_ALPHA = 0.3
 DES_BURN_IN = 7
 
 
+DES_ORACLE = f"""
+WITH daily AS (
+  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS DOUBLE) AS x
+  FROM events GROUP BY 1
+),
+t AS (
+  SELECT CAST(day - (SELECT MIN(day) FROM daily) AS BIGINT) AS t, x
+  FROM daily
+),
+sm AS (
+  SELECT a.t AS ti, MAX(a.x) AS x,
+         SUM(CASE WHEN b.t = 0 THEN POW({1 - DES_ALPHA}, a.t)
+                  ELSE {DES_ALPHA} * POW({1 - DES_ALPHA}, a.t - b.t)
+             END * b.x) AS s1,
+         SUM(CASE WHEN b.t = 0
+                  THEN ({DES_ALPHA} * a.t + 1)
+                       * POW({1 - DES_ALPHA}, a.t)
+                  ELSE {DES_ALPHA} * {DES_ALPHA} * (a.t - b.t + 1)
+                       * POW({1 - DES_ALPHA}, a.t - b.t)
+             END * b.x) AS s2
+  FROM t a JOIN t b ON b.t <= a.t
+  GROUP BY a.t
+),
+fc AS (
+  SELECT ti, x,
+         2 * s1 - s2 + ({DES_ALPHA} / {1 - DES_ALPHA}) * (s1 - s2)
+           AS f_next
+  FROM sm
+),
+bt AS (
+  SELECT f.ti, n.x AS x_next, f.f_next, f.x AS x_prev
+  FROM fc f
+  JOIN fc n ON n.ti = f.ti + 1
+  WHERE f.ti >= {DES_BURN_IN}
+)
+SELECT CAST(COUNT(*) AS BIGINT) AS n_forecasts,
+       ROUND(AVG(ABS(x_next - f_next)), 6) AS mae_des,
+       ROUND(SQRT(AVG((x_next - f_next) * (x_next - f_next))), 6)
+         AS rmse_des,
+       ROUND(AVG(ABS(x_next - x_prev)), 6) AS mae_naive
+FROM bt
+"""
+
+
+@query("forecast_des_brown_backtest", oracle=DES_ORACLE)
 def forecast_des_brown_backtest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1085,50 +1136,6 @@ def forecast_des_brown_backtest(
             F.avg(F.abs(F.col("x_next") - F.col("x"))), 6
         ).alias("mae_naive"),
     )
-
-
-DES_ORACLE = f"""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS DOUBLE) AS x
-  FROM events GROUP BY 1
-),
-t AS (
-  SELECT CAST(day - (SELECT MIN(day) FROM daily) AS BIGINT) AS t, x
-  FROM daily
-),
-sm AS (
-  SELECT a.t AS ti, MAX(a.x) AS x,
-         SUM(CASE WHEN b.t = 0 THEN POW({1 - DES_ALPHA}, a.t)
-                  ELSE {DES_ALPHA} * POW({1 - DES_ALPHA}, a.t - b.t)
-             END * b.x) AS s1,
-         SUM(CASE WHEN b.t = 0
-                  THEN ({DES_ALPHA} * a.t + 1)
-                       * POW({1 - DES_ALPHA}, a.t)
-                  ELSE {DES_ALPHA} * {DES_ALPHA} * (a.t - b.t + 1)
-                       * POW({1 - DES_ALPHA}, a.t - b.t)
-             END * b.x) AS s2
-  FROM t a JOIN t b ON b.t <= a.t
-  GROUP BY a.t
-),
-fc AS (
-  SELECT ti, x,
-         2 * s1 - s2 + ({DES_ALPHA} / {1 - DES_ALPHA}) * (s1 - s2)
-           AS f_next
-  FROM sm
-),
-bt AS (
-  SELECT f.ti, n.x AS x_next, f.f_next, f.x AS x_prev
-  FROM fc f
-  JOIN fc n ON n.ti = f.ti + 1
-  WHERE f.ti >= {DES_BURN_IN}
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_forecasts,
-       ROUND(AVG(ABS(x_next - f_next)), 6) AS mae_des,
-       ROUND(SQRT(AVG((x_next - f_next) * (x_next - f_next))), 6)
-         AS rmse_des,
-       ROUND(AVG(ABS(x_next - x_prev)), 6) AS mae_naive
-FROM bt
-"""
 
 # ---------------------------------------------------------------------------
 # Graph structure: shared undirected trade-graph oracle CTE
@@ -1235,6 +1242,32 @@ def _backbone_und_edges(
     )
 
 
+CLUSTERING_ORACLE = f"""
+WITH {_UND_EDGES_SQL},
+deg AS (
+  SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS degree
+  FROM und GROUP BY src
+),
+tri AS (
+  SELECT a.v AS node, CAST(COUNT(*) AS BIGINT) AS n_tri
+  FROM (SELECT src AS v, dst AS na FROM und) a
+  JOIN (SELECT src AS v, dst AS nb FROM und) b USING (v)
+  JOIN und e ON e.src = a.na AND e.dst = b.nb
+  WHERE a.na < b.nb
+  GROUP BY a.v
+)
+SELECT d.node, d.degree,
+       CAST(COALESCE(t.n_tri, 0) AS BIGINT) AS n_tri,
+       CASE WHEN d.degree >= 2
+            THEN ROUND(2.0 * COALESCE(t.n_tri, 0)
+                       / (d.degree * (d.degree - 1)), 6)
+       END AS clustering
+FROM deg d LEFT JOIN tri t ON d.node = t.node
+ORDER BY d.node
+"""
+
+
+@query("graph_local_clustering", oracle=CLUSTERING_ORACLE)
 def graph_local_clustering(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1287,31 +1320,41 @@ def graph_local_clustering(
     return out.orderBy("node")
 
 
-CLUSTERING_ORACLE = f"""
-WITH {_UND_EDGES_SQL},
+LINKPRED_ORACLE = f"""
+WITH {_BACKBONE_SQL},
 deg AS (
   SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS degree
   FROM und GROUP BY src
 ),
-tri AS (
-  SELECT a.v AS node, CAST(COUNT(*) AS BIGINT) AS n_tri
-  FROM (SELECT src AS v, dst AS na FROM und) a
-  JOIN (SELECT src AS v, dst AS nb FROM und) b USING (v)
-  JOIN und e ON e.src = a.na AND e.dst = b.nb
-  WHERE a.na < b.nb
-  GROUP BY a.v
+cand AS (
+  SELECT a.u, b.v, d.degree
+  FROM (SELECT dst AS u, src AS w FROM und) a
+  JOIN (SELECT src AS w, dst AS v FROM und) b USING (w)
+  JOIN deg d ON d.node = a.w
+  WHERE a.u < b.v
+),
+scores AS (
+  SELECT u, v, CAST(COUNT(*) AS BIGINT) AS common_neighbors,
+         SUM(1.0 / LN(degree)) AS aa_raw
+  FROM cand GROUP BY u, v
+),
+non_edges AS (
+  SELECT s.* FROM scores s
+  ANTI JOIN und e ON e.src = s.u AND e.dst = s.v
 )
-SELECT d.node, d.degree,
-       CAST(COALESCE(t.n_tri, 0) AS BIGINT) AS n_tri,
-       CASE WHEN d.degree >= 2
-            THEN ROUND(2.0 * COALESCE(t.n_tri, 0)
-                       / (d.degree * (d.degree - 1)), 6)
-       END AS clustering
-FROM deg d LEFT JOIN tri t ON d.node = t.node
-ORDER BY d.node
+SELECT n.u AS src, n.v AS dst, n.common_neighbors,
+       ROUND(n.common_neighbors * 1.0
+             / (du.degree + dv.degree - n.common_neighbors), 6)
+         AS jaccard,
+       ROUND(n.aa_raw, 6) AS adamic_adar
+FROM non_edges n
+JOIN deg du ON du.node = n.u
+JOIN deg dv ON dv.node = n.v
+ORDER BY src, dst
 """
 
 
+@query("graph_link_prediction_scores", oracle=LINKPRED_ORACLE)
 def graph_link_prediction_scores(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1378,40 +1421,37 @@ def graph_link_prediction_scores(
     return out.orderBy("src", "dst")
 
 
-LINKPRED_ORACLE = f"""
-WITH {_BACKBONE_SQL},
+ASSORT_ORACLE = f"""
+WITH {_UND_EDGES_SQL},
 deg AS (
   SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS degree
   FROM und GROUP BY src
-),
-cand AS (
-  SELECT a.u, b.v, d.degree
-  FROM (SELECT dst AS u, src AS w FROM und) a
-  JOIN (SELECT src AS w, dst AS v FROM und) b USING (w)
-  JOIN deg d ON d.node = a.w
-  WHERE a.u < b.v
-),
-scores AS (
-  SELECT u, v, CAST(COUNT(*) AS BIGINT) AS common_neighbors,
-         SUM(1.0 / LN(degree)) AS aa_raw
-  FROM cand GROUP BY u, v
-),
-non_edges AS (
-  SELECT s.* FROM scores s
-  ANTI JOIN und e ON e.src = s.u AND e.dst = s.v
 )
-SELECT n.u AS src, n.v AS dst, n.common_neighbors,
-       ROUND(n.common_neighbors * 1.0
-             / (du.degree + dv.degree - n.common_neighbors), 6)
-         AS jaccard,
-       ROUND(n.aa_raw, 6) AS adamic_adar
-FROM non_edges n
-JOIN deg du ON du.node = n.u
-JOIN deg dv ON dv.node = n.v
-ORDER BY src, dst
+,
+e AS (
+  SELECT ds.degree AS x, dd.degree AS y
+  FROM und u
+  JOIN deg ds ON ds.node = u.src
+  JOIN deg dd ON dd.node = u.dst
+),
+agg AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         SUM(CAST(x AS DOUBLE)) AS sx, SUM(CAST(y AS DOUBLE)) AS sy,
+         SUM(CAST(x * y AS DOUBLE)) AS sxy,
+         SUM(CAST(x * x AS DOUBLE)) AS sxx,
+         SUM(CAST(y * y AS DOUBLE)) AS syy
+  FROM e
+)
+SELECT n AS n_directed_edges,
+       ROUND((n * sxy - sx * sy)
+             / NULLIF(SQRT((n * sxx - sx * sx)
+                           * (n * syy - sy * sy)), 0.0), 6)
+         AS assortativity
+FROM agg
 """
 
 
+@query("graph_degree_assortativity", oracle=ASSORT_ORACLE)
 def graph_degree_assortativity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1474,41 +1514,57 @@ def graph_degree_assortativity(
         ),
     )
 
-
-ASSORT_ORACLE = f"""
-WITH {_UND_EDGES_SQL},
-deg AS (
-  SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS degree
-  FROM und GROUP BY src
-)
-,
-e AS (
-  SELECT ds.degree AS x, dd.degree AS y
-  FROM und u
-  JOIN deg ds ON ds.node = u.src
-  JOIN deg dd ON dd.node = u.dst
-),
-agg AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         SUM(CAST(x AS DOUBLE)) AS sx, SUM(CAST(y AS DOUBLE)) AS sy,
-         SUM(CAST(x * y AS DOUBLE)) AS sxy,
-         SUM(CAST(x * x AS DOUBLE)) AS sxx,
-         SUM(CAST(y * y AS DOUBLE)) AS syy
-  FROM e
-)
-SELECT n AS n_directed_edges,
-       ROUND((n * sxy - sx * sy)
-             / NULLIF(SQRT((n * sxx - sx * sx)
-                           * (n * syy - sy * sy)), 0.0), 6)
-         AS assortativity
-FROM agg
-"""
-
 # ---------------------------------------------------------------------------
 # Nelson-Aalen cumulative hazard over customer reorder delays
 # ---------------------------------------------------------------------------
 
 
+NELSON_AALEN_ORACLE = """
+WITH o AS (
+  SELECT o_custkey, CAST(o_orderdate AS DATE) AS day FROM orders
+),
+base AS (
+  SELECT o_custkey, day,
+         LEAD(day) OVER (PARTITION BY o_custkey ORDER BY day) AS nxt
+  FROM o
+),
+obs AS (
+  SELECT CAST(nxt - day AS BIGINT) AS dur, 1 AS event
+  FROM base WHERE nxt IS NOT NULL
+  UNION ALL
+  SELECT CAST((SELECT MAX(day) FROM o) - day AS BIGINT) AS dur,
+         0 AS event
+  FROM base WHERE nxt IS NULL
+),
+g AS (
+  SELECT dur, CAST(SUM(event) AS BIGINT) AS d,
+         CAST(COUNT(*) AS BIGINT) AS tot
+  FROM obs GROUP BY dur
+),
+risked AS (
+  SELECT dur, d,
+         SUM(tot) OVER () - SUM(tot) OVER (ORDER BY dur
+             ROWS UNBOUNDED PRECEDING) + tot AS n_risk
+  FROM g
+),
+na AS (
+  SELECT dur, d, n_risk,
+         SUM(d * 1.0 / n_risk)
+           OVER (ORDER BY dur ROWS UNBOUNDED PRECEDING) AS cum_hazard
+  FROM risked
+)
+SELECT dur AS duration_days, CAST(n_risk AS BIGINT) AS n_risk,
+       d AS n_events,
+       ROUND(d * 1.0 / n_risk, 6) AS hazard_increment,
+       ROUND(cum_hazard, 6) AS cum_hazard,
+       ROUND(EXP(-cum_hazard), 6) AS survival_fh
+FROM na
+WHERE d > 0
+ORDER BY duration_days
+"""
+
+
+@query("survival_nelson_aalen_reorder", oracle=NELSON_AALEN_ORACLE)
 def survival_nelson_aalen_reorder(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1585,51 +1641,6 @@ def survival_nelson_aalen_reorder(
     )
 
 
-NELSON_AALEN_ORACLE = """
-WITH o AS (
-  SELECT o_custkey, CAST(o_orderdate AS DATE) AS day FROM orders
-),
-base AS (
-  SELECT o_custkey, day,
-         LEAD(day) OVER (PARTITION BY o_custkey ORDER BY day) AS nxt
-  FROM o
-),
-obs AS (
-  SELECT CAST(nxt - day AS BIGINT) AS dur, 1 AS event
-  FROM base WHERE nxt IS NOT NULL
-  UNION ALL
-  SELECT CAST((SELECT MAX(day) FROM o) - day AS BIGINT) AS dur,
-         0 AS event
-  FROM base WHERE nxt IS NULL
-),
-g AS (
-  SELECT dur, CAST(SUM(event) AS BIGINT) AS d,
-         CAST(COUNT(*) AS BIGINT) AS tot
-  FROM obs GROUP BY dur
-),
-risked AS (
-  SELECT dur, d,
-         SUM(tot) OVER () - SUM(tot) OVER (ORDER BY dur
-             ROWS UNBOUNDED PRECEDING) + tot AS n_risk
-  FROM g
-),
-na AS (
-  SELECT dur, d, n_risk,
-         SUM(d * 1.0 / n_risk)
-           OVER (ORDER BY dur ROWS UNBOUNDED PRECEDING) AS cum_hazard
-  FROM risked
-)
-SELECT dur AS duration_days, CAST(n_risk AS BIGINT) AS n_risk,
-       d AS n_events,
-       ROUND(d * 1.0 / n_risk, 6) AS hazard_increment,
-       ROUND(cum_hazard, 6) AS cum_hazard,
-       ROUND(EXP(-cum_hazard), 6) AS survival_fh
-FROM na
-WHERE d > 0
-ORDER BY duration_days
-"""
-
-
 # ---------------------------------------------------------------------------
 # Entropy l-diversity audit (the rung above k-anonymity)
 # ---------------------------------------------------------------------------
@@ -1638,6 +1649,41 @@ LDIV_L = 2
 LDIV_LN_L = 0.6931471805599453  # ln(2), the entropy bar
 
 
+LDIV_ORACLE = f"""
+WITH ev AS (
+  SELECT event_type, CAST(ts AS DATE) AS day,
+         CAST(FLOOR(value / 100) AS INTEGER) AS sens
+  FROM events WHERE value IS NOT NULL
+),
+cell AS (
+  SELECT event_type, day, sens, COUNT(*) AS c
+  FROM ev GROUP BY 1, 2, 3
+),
+withp AS (
+  SELECT event_type, day,
+         c * 1.0 / SUM(c) OVER (PARTITION BY event_type, day) AS p
+  FROM cell
+),
+per_group AS (
+  SELECT event_type, day,
+         CAST(COUNT(*) AS BIGINT) AS n_distinct,
+         -SUM(p * LN(p)) AS entropy
+  FROM withp
+  GROUP BY event_type, day
+)
+SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
+       CAST(SUM(CASE WHEN n_distinct < {LDIV_L} THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_fail_distinct,
+       CAST(SUM(CASE WHEN entropy < {LDIV_LN_L}
+                THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_fail_entropy,
+       CAST(MIN(n_distinct) AS BIGINT) AS min_distinct,
+       ROUND(MIN(entropy), 6) AS min_entropy
+FROM per_group
+"""
+
+
+@query("privacy_ldiversity_audit", oracle=LDIV_ORACLE)
 def privacy_ldiversity_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1691,45 +1737,43 @@ def privacy_ldiversity_audit(
         F.round(F.min("entropy"), 6).alias("min_entropy"),
     )
 
-
-LDIV_ORACLE = f"""
-WITH ev AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(FLOOR(value / 100) AS INTEGER) AS sens
-  FROM events WHERE value IS NOT NULL
-),
-cell AS (
-  SELECT event_type, day, sens, COUNT(*) AS c
-  FROM ev GROUP BY 1, 2, 3
-),
-withp AS (
-  SELECT event_type, day,
-         c * 1.0 / SUM(c) OVER (PARTITION BY event_type, day) AS p
-  FROM cell
-),
-per_group AS (
-  SELECT event_type, day,
-         CAST(COUNT(*) AS BIGINT) AS n_distinct,
-         -SUM(p * LN(p)) AS entropy
-  FROM withp
-  GROUP BY event_type, day
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
-       CAST(SUM(CASE WHEN n_distinct < {LDIV_L} THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_fail_distinct,
-       CAST(SUM(CASE WHEN entropy < {LDIV_LN_L}
-                THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_fail_entropy,
-       CAST(MIN(n_distinct) AS BIGINT) AS min_distinct,
-       ROUND(MIN(entropy), 6) AS min_entropy
-FROM per_group
-"""
-
 # ---------------------------------------------------------------------------
 # Simpson lexical diversity per source (integer-exact)
 # ---------------------------------------------------------------------------
 
 
+SIMPSON_ORACLE = """
+WITH toks AS (
+  SELECT source,
+         UNNEST(string_split_regex(trim(lower(text)), '\\s+')) AS tok
+  FROM documents
+  WHERE source IS NOT NULL AND text IS NOT NULL
+),
+tf AS (
+  SELECT source, tok, COUNT(*) AS n
+  FROM toks WHERE tok <> ''
+  GROUP BY source, tok
+),
+agg AS (
+  SELECT source,
+         CAST(SUM(n) AS BIGINT) AS n_tokens,
+         CAST(COUNT(*) AS BIGINT) AS n_types,
+         CAST(SUM(n * (n - 1)) AS BIGINT) AS same_pairs
+  FROM tf GROUP BY source
+)
+SELECT source, n_tokens, n_types,
+       ROUND(same_pairs * 1.0 / (n_tokens * (n_tokens - 1.0)), 6)
+         AS simpson_l,
+       ROUND(1 - same_pairs * 1.0 / (n_tokens * (n_tokens - 1.0)), 6)
+         AS gini_simpson,
+       ROUND((n_tokens * (n_tokens - 1.0)) / same_pairs, 4)
+         AS inv_simpson
+FROM agg
+ORDER BY source
+"""
+
+
+@query("text_simpson_diversity_sources", oracle=SIMPSON_ORACLE)
 def text_simpson_diversity_sources(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1781,42 +1825,42 @@ def text_simpson_diversity_sources(
     ).orderBy("source")
 
 
-SIMPSON_ORACLE = """
-WITH toks AS (
-  SELECT source,
-         UNNEST(string_split_regex(trim(lower(text)), '\\s+')) AS tok
-  FROM documents
-  WHERE source IS NOT NULL AND text IS NOT NULL
-),
-tf AS (
-  SELECT source, tok, COUNT(*) AS n
-  FROM toks WHERE tok <> ''
-  GROUP BY source, tok
-),
-agg AS (
-  SELECT source,
-         CAST(SUM(n) AS BIGINT) AS n_tokens,
-         CAST(COUNT(*) AS BIGINT) AS n_types,
-         CAST(SUM(n * (n - 1)) AS BIGINT) AS same_pairs
-  FROM tf GROUP BY source
-)
-SELECT source, n_tokens, n_types,
-       ROUND(same_pairs * 1.0 / (n_tokens * (n_tokens - 1.0)), 6)
-         AS simpson_l,
-       ROUND(1 - same_pairs * 1.0 / (n_tokens * (n_tokens - 1.0)), 6)
-         AS gini_simpson,
-       ROUND((n_tokens * (n_tokens - 1.0)) / same_pairs, 4)
-         AS inv_simpson
-FROM agg
-ORDER BY source
-"""
-
-
 # ---------------------------------------------------------------------------
 # Sentence-length profile per source (engine-portable splitter)
 # ---------------------------------------------------------------------------
 
 
+SENTENCE_ORACLE = """
+WITH sent AS (
+  SELECT doc_id, source, trim(s) AS seg
+  FROM (
+    SELECT doc_id, source, UNNEST(string_split(text, '.')) AS s
+    FROM documents
+    WHERE source IS NOT NULL AND text IS NOT NULL
+  )
+  WHERE trim(s) <> ''
+),
+lens AS (
+  SELECT doc_id, source,
+         CAST(len(string_split_regex(seg, '\\s+')) AS BIGINT)
+           AS n_tok
+  FROM sent
+)
+SELECT source,
+       CAST(COUNT(*) AS BIGINT) AS n_sentences,
+       CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
+       ROUND(COUNT(*) * 1.0 / COUNT(DISTINCT doc_id), 4)
+         AS sentences_per_doc,
+       ROUND(AVG(n_tok), 4) AS mean_tokens,
+       CAST(quantile_disc(n_tok, 0.5) AS BIGINT) AS p50_tokens,
+       CAST(quantile_disc(n_tok, 0.9) AS BIGINT) AS p90_tokens
+FROM lens
+GROUP BY source
+ORDER BY source
+"""
+
+
+@query("text_sentence_stats_sources", oracle=SENTENCE_ORACLE)
 def text_sentence_stats_sources(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1874,41 +1918,34 @@ def text_sentence_stats_sources(
     )
 
 
-SENTENCE_ORACLE = """
-WITH sent AS (
-  SELECT doc_id, source, trim(s) AS seg
-  FROM (
-    SELECT doc_id, source, UNNEST(string_split(text, '.')) AS s
-    FROM documents
-    WHERE source IS NOT NULL AND text IS NOT NULL
-  )
-  WHERE trim(s) <> ''
-),
-lens AS (
-  SELECT doc_id, source,
-         CAST(len(string_split_regex(seg, '\\s+')) AS BIGINT)
-           AS n_tok
-  FROM sent
-)
-SELECT source,
-       CAST(COUNT(*) AS BIGINT) AS n_sentences,
-       CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-       ROUND(COUNT(*) * 1.0 / COUNT(DISTINCT doc_id), 4)
-         AS sentences_per_doc,
-       ROUND(AVG(n_tok), 4) AS mean_tokens,
-       CAST(quantile_disc(n_tok, 0.5) AS BIGINT) AS p50_tokens,
-       CAST(quantile_disc(n_tok, 0.9) AS BIGINT) AS p90_tokens
-FROM lens
-GROUP BY source
-ORDER BY source
-"""
-
-
 # ---------------------------------------------------------------------------
 # Pairwise effect sizes (Cohen's d / Hedges' g) between segments
 # ---------------------------------------------------------------------------
 
 
+EFFECT_ORACLE = """
+WITH o AS (
+  SELECT c_mktsegment, o_totalprice AS v
+  FROM orders JOIN customer ON o_custkey = c_custkey
+),
+g AS (
+  SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n,
+         AVG(v) AS m, VAR_SAMP(v) AS s2
+  FROM o GROUP BY c_mktsegment
+)
+SELECT a.c_mktsegment AS seg_a, b.c_mktsegment AS seg_b,
+       a.n + b.n AS n_total,
+       ROUND((a.m - b.m) / SQRT(((a.n - 1) * a.s2 + (b.n - 1) * b.s2)
+             / (a.n + b.n - 2)), 6) AS cohens_d,
+       ROUND((a.m - b.m) / SQRT(((a.n - 1) * a.s2 + (b.n - 1) * b.s2)
+             / (a.n + b.n - 2))
+             * (1 - 3.0 / (4 * (a.n + b.n - 2) - 1)), 6) AS hedges_g
+FROM g a JOIN g b ON a.c_mktsegment < b.c_mktsegment
+ORDER BY seg_a, seg_b
+"""
+
+
+@query("stats_effect_sizes_segments", oracle=EFFECT_ORACLE)
 def stats_effect_sizes_segments(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1964,28 +2001,6 @@ def stats_effect_sizes_segments(
     ).orderBy("seg_a", "seg_b")
 
 
-EFFECT_ORACLE = """
-WITH o AS (
-  SELECT c_mktsegment, o_totalprice AS v
-  FROM orders JOIN customer ON o_custkey = c_custkey
-),
-g AS (
-  SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n,
-         AVG(v) AS m, VAR_SAMP(v) AS s2
-  FROM o GROUP BY c_mktsegment
-)
-SELECT a.c_mktsegment AS seg_a, b.c_mktsegment AS seg_b,
-       a.n + b.n AS n_total,
-       ROUND((a.m - b.m) / SQRT(((a.n - 1) * a.s2 + (b.n - 1) * b.s2)
-             / (a.n + b.n - 2)), 6) AS cohens_d,
-       ROUND((a.m - b.m) / SQRT(((a.n - 1) * a.s2 + (b.n - 1) * b.s2)
-             / (a.n + b.n - 2))
-             * (1 - 3.0 / (4 * (a.n + b.n - 2) - 1)), 6) AS hedges_g
-FROM g a JOIN g b ON a.c_mktsegment < b.c_mktsegment
-ORDER BY seg_a, seg_b
-"""
-
-
 # ---------------------------------------------------------------------------
 # PPS systematic sampling (probability proportional to size)
 # ---------------------------------------------------------------------------
@@ -1994,6 +2009,30 @@ PPS_K = 200
 PPS_BUCKETS = 256
 
 
+PPS_ORACLE = f"""
+WITH docs AS (
+  SELECT doc_id, CAST(n_chars AS BIGINT) AS w
+  FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0
+),
+tot AS (SELECT SUM(w) AS t FROM docs),
+lined AS (
+  SELECT doc_id, w,
+         SUM(w) OVER (ORDER BY doc_id
+                      ROWS UNBOUNDED PRECEDING) - w AS lo,
+         SUM(w) OVER (ORDER BY doc_id
+                      ROWS UNBOUNDED PRECEDING) AS hi
+  FROM docs
+),
+ks AS (SELECT i AS k FROM generate_series(0, {PPS_K - 1}) g(i))
+SELECT CAST(k AS BIGINT) AS slot, doc_id, w AS n_chars
+FROM lined CROSS JOIN tot CROSS JOIN ks
+WHERE (2 * k + 1) * t >= 2 * {PPS_K} * lo
+  AND (2 * k + 1) * t <  2 * {PPS_K} * hi
+ORDER BY slot
+"""
+
+
+@query("sample_pps_systematic_docs", oracle=PPS_ORACLE)
 def sample_pps_systematic_docs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2092,34 +2131,49 @@ def sample_pps_systematic_docs(
     ).orderBy("slot")
 
 
-PPS_ORACLE = f"""
-WITH docs AS (
-  SELECT doc_id, CAST(n_chars AS BIGINT) AS w
-  FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0
-),
-tot AS (SELECT SUM(w) AS t FROM docs),
-lined AS (
-  SELECT doc_id, w,
-         SUM(w) OVER (ORDER BY doc_id
-                      ROWS UNBOUNDED PRECEDING) - w AS lo,
-         SUM(w) OVER (ORDER BY doc_id
-                      ROWS UNBOUNDED PRECEDING) AS hi
-  FROM docs
-),
-ks AS (SELECT i AS k FROM generate_series(0, {PPS_K - 1}) g(i))
-SELECT CAST(k AS BIGINT) AS slot, doc_id, w AS n_chars
-FROM lined CROSS JOIN tot CROSS JOIN ks
-WHERE (2 * k + 1) * t >= 2 * {PPS_K} * lo
-  AND (2 * k + 1) * t <  2 * {PPS_K} * hi
-ORDER BY slot
-"""
-
-
 # ---------------------------------------------------------------------------
 # MCC + Cohen's kappa at the median-score decision threshold
 # ---------------------------------------------------------------------------
 
 
+MCC_ORACLE = f"""
+WITH s AS (
+  SELECT (n_chars % {SCORE_MOD}) / {SCORE_MOD}.0 AS score,
+         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
+  FROM documents
+  WHERE n_chars IS NOT NULL AND lang IS NOT NULL
+),
+thr AS (SELECT quantile_disc(score, 0.5) AS thr FROM s),
+c AS (
+  SELECT
+    CAST(SUM(CASE WHEN score >= thr AND label = 1 THEN 1 ELSE 0 END)
+         AS BIGINT) AS tp,
+    CAST(SUM(CASE WHEN score >= thr AND label = 0 THEN 1 ELSE 0 END)
+         AS BIGINT) AS fp,
+    CAST(SUM(CASE WHEN score < thr AND label = 1 THEN 1 ELSE 0 END)
+         AS BIGINT) AS fn,
+    CAST(SUM(CASE WHEN score < thr AND label = 0 THEN 1 ELSE 0 END)
+         AS BIGINT) AS tn
+  FROM s CROSS JOIN thr
+)
+SELECT tp, fp, fn, tn,
+       ROUND((tp * tn - fp * fn * 1.0)
+             / NULLIF(SQRT((tp + fp * 1.0) * (tp + fn) * (tn + fp)
+                           * (tn + fn)), 0.0), 6) AS mcc,
+       ROUND(((tp + tn * 1.0) / (tp + fp + fn + tn)
+              - ((tp + fp * 1.0) * (tp + fn)
+                 + (fn + tn * 1.0) * (fp + tn))
+                / ((tp + fp + fn + tn * 1.0)
+                   * (tp + fp + fn + tn)))
+             / NULLIF(1 - ((tp + fp * 1.0) * (tp + fn)
+                           + (fn + tn * 1.0) * (fp + tn))
+                      / ((tp + fp + fn + tn * 1.0)
+                         * (tp + fp + fn + tn)), 0.0), 6) AS kappa
+FROM c
+"""
+
+
+@query("eval_mcc_kappa", oracle=MCC_ORACLE)
 def eval_mcc_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matthews correlation coefficient and Cohen's kappa for the
     quality score thresholded at its median (predict positive when
@@ -2171,43 +2225,6 @@ def eval_mcc_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MCC_ORACLE = f"""
-WITH s AS (
-  SELECT (n_chars % {SCORE_MOD}) / {SCORE_MOD}.0 AS score,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
-  FROM documents
-  WHERE n_chars IS NOT NULL AND lang IS NOT NULL
-),
-thr AS (SELECT quantile_disc(score, 0.5) AS thr FROM s),
-c AS (
-  SELECT
-    CAST(SUM(CASE WHEN score >= thr AND label = 1 THEN 1 ELSE 0 END)
-         AS BIGINT) AS tp,
-    CAST(SUM(CASE WHEN score >= thr AND label = 0 THEN 1 ELSE 0 END)
-         AS BIGINT) AS fp,
-    CAST(SUM(CASE WHEN score < thr AND label = 1 THEN 1 ELSE 0 END)
-         AS BIGINT) AS fn,
-    CAST(SUM(CASE WHEN score < thr AND label = 0 THEN 1 ELSE 0 END)
-         AS BIGINT) AS tn
-  FROM s CROSS JOIN thr
-)
-SELECT tp, fp, fn, tn,
-       ROUND((tp * tn - fp * fn * 1.0)
-             / NULLIF(SQRT((tp + fp * 1.0) * (tp + fn) * (tn + fp)
-                           * (tn + fn)), 0.0), 6) AS mcc,
-       ROUND(((tp + tn * 1.0) / (tp + fp + fn + tn)
-              - ((tp + fp * 1.0) * (tp + fn)
-                 + (fn + tn * 1.0) * (fp + tn))
-                / ((tp + fp + fn + tn * 1.0)
-                   * (tp + fp + fn + tn)))
-             / NULLIF(1 - ((tp + fp * 1.0) * (tp + fn)
-                           + (fn + tn * 1.0) * (fp + tn))
-                      / ((tp + fp + fn + tn * 1.0)
-                         * (tp + fp + fn + tn)), 0.0), 6) AS kappa
-FROM c
-"""
-
-
 # ---------------------------------------------------------------------------
 # Versioned-table semantic diff: the lakehouse layer's driver surface
 # ---------------------------------------------------------------------------
@@ -2241,6 +2258,26 @@ def memo_versioned_table(spark, sf_dir, kind, builder):
     return path
 
 
+VERSIONED_DIFF_ORACLE = """
+SELECT 'added' AS change,
+       CAST(COUNT(*) AS BIGINT) AS n_keys,
+       CAST(SUM(-c_custkey) AS BIGINT) AS key_sum
+FROM customer WHERE c_custkey % 11 = 0 AND c_custkey <> 0
+UNION ALL
+SELECT 'changed',
+       CAST(COUNT(*) AS BIGINT),
+       CAST(SUM(c_custkey) AS BIGINT)
+FROM customer WHERE c_custkey % 7 <> 0 AND c_custkey % 5 = 0
+UNION ALL
+SELECT 'removed',
+       CAST(COUNT(*) AS BIGINT),
+       CAST(SUM(c_custkey) AS BIGINT)
+FROM customer WHERE c_custkey % 7 = 0
+ORDER BY change
+"""
+
+
+@query("versioned_diff_audit", oracle=VERSIONED_DIFF_ORACLE)
 def versioned_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver surface for the versioned parquet table layer
     (cdc_2025_spark/versioned.py): commit the customer dim as
@@ -2308,130 +2345,3 @@ def versioned_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("change")
     )
-
-
-VERSIONED_DIFF_ORACLE = """
-SELECT 'added' AS change,
-       CAST(COUNT(*) AS BIGINT) AS n_keys,
-       CAST(SUM(-c_custkey) AS BIGINT) AS key_sum
-FROM customer WHERE c_custkey % 11 = 0 AND c_custkey <> 0
-UNION ALL
-SELECT 'changed',
-       CAST(COUNT(*) AS BIGINT),
-       CAST(SUM(c_custkey) AS BIGINT)
-FROM customer WHERE c_custkey % 7 <> 0 AND c_custkey % 5 = 0
-UNION ALL
-SELECT 'removed',
-       CAST(COUNT(*) AS BIGINT),
-       CAST(SUM(c_custkey) AS BIGINT)
-FROM customer WHERE c_custkey % 7 = 0
-ORDER BY change
-"""
-
-
-# ---------------------------------------------------------------------------
-# Registration hook for round 13
-# ---------------------------------------------------------------------------
-
-PENDING_ORDER = [
-    "eval_average_precision",
-    "eval_brier_decomposition",
-    "eval_lift_gains_deciles",
-    "stats_theil_sen_daily_revenue",
-    "stats_partial_corr_price_qty",
-    "stats_welch_ttest_types",
-    "stats_winsorized_trimmed_spend",
-    "stats_anova_brownforsythe_segments",
-    "events_periodogram_daily",
-    "forecast_des_brown_backtest",
-    "graph_local_clustering",
-    "graph_link_prediction_scores",
-    "graph_degree_assortativity",
-    "survival_nelson_aalen_reorder",
-    "privacy_ldiversity_audit",
-    "text_simpson_diversity_sources",
-    "text_sentence_stats_sources",
-    "stats_effect_sizes_segments",
-    "sample_pps_systematic_docs",
-    "eval_mcc_kappa",
-    "versioned_diff_audit",
-]
-
-_PENDING = {
-    "eval_average_precision": (eval_average_precision, AP_ORACLE),
-    "eval_brier_decomposition": (
-        eval_brier_decomposition,
-        BRIER_ORACLE,
-    ),
-    "eval_lift_gains_deciles": (eval_lift_gains_deciles, GAINS_ORACLE),
-    "stats_theil_sen_daily_revenue": (
-        stats_theil_sen_daily_revenue,
-        THEIL_SEN_ORACLE,
-    ),
-    "stats_partial_corr_price_qty": (
-        stats_partial_corr_price_qty,
-        PARTIAL_CORR_ORACLE,
-    ),
-    "stats_welch_ttest_types": (stats_welch_ttest_types, WELCH_ORACLE),
-    "stats_winsorized_trimmed_spend": (
-        stats_winsorized_trimmed_spend,
-        WINSOR_ORACLE,
-    ),
-    "stats_anova_brownforsythe_segments": (
-        stats_anova_brownforsythe_segments,
-        ANOVA_ORACLE,
-    ),
-    "events_periodogram_daily": (
-        events_periodogram_daily,
-        PERIODOGRAM_ORACLE,
-    ),
-    "forecast_des_brown_backtest": (
-        forecast_des_brown_backtest,
-        DES_ORACLE,
-    ),
-    "graph_local_clustering": (graph_local_clustering, CLUSTERING_ORACLE),
-    "graph_link_prediction_scores": (
-        graph_link_prediction_scores,
-        LINKPRED_ORACLE,
-    ),
-    "graph_degree_assortativity": (
-        graph_degree_assortativity,
-        ASSORT_ORACLE,
-    ),
-    "survival_nelson_aalen_reorder": (
-        survival_nelson_aalen_reorder,
-        NELSON_AALEN_ORACLE,
-    ),
-    "privacy_ldiversity_audit": (privacy_ldiversity_audit, LDIV_ORACLE),
-    "text_simpson_diversity_sources": (
-        text_simpson_diversity_sources,
-        SIMPSON_ORACLE,
-    ),
-    "text_sentence_stats_sources": (
-        text_sentence_stats_sources,
-        SENTENCE_ORACLE,
-    ),
-    "stats_effect_sizes_segments": (
-        stats_effect_sizes_segments,
-        EFFECT_ORACLE,
-    ),
-    "sample_pps_systematic_docs": (
-        sample_pps_systematic_docs,
-        PPS_ORACLE,
-    ),
-    "eval_mcc_kappa": (eval_mcc_kappa, MCC_ORACLE),
-    "versioned_diff_audit": (
-        versioned_diff_audit,
-        VERSIONED_DIFF_ORACLE,
-    ),
-}
-
-
-def register_all() -> None:
-    """Register every pending query (round-13 hook). One-shot: the
-    registry's duplicate check fires on a second call."""
-    from cdc_2025_spark.queries.registry import query
-
-    for name in PENDING_ORDER:
-        fn, oracle = _PENDING[name]
-        query(name, oracle=oracle)(fn)

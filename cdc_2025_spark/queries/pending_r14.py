@@ -1,4 +1,4 @@
-"""Round-14 registration queue: the RANKING-METRIC & DIAGNOSTIC
+"""Round-14 queries: the RANKING-METRIC & DIAGNOSTIC
 DEPTH family — the layer above round 13's eval/robust-stats rung:
 NDCG@k (graded ranking quality, the retrieval companion to average
 precision), ECE/MCE scalars over the calibration bins, the KS
@@ -40,16 +40,8 @@ before any scan, the answer oracle-recomputed from the base table —
 the r13 lakehouse rung driver-verified like the diff audit before
 it).
 
-NOT imported by queries/__init__.py on purpose (the
-pending_r10-r13 posture): the freshness guard requires
-never-checked queries to LEAD a verification window, and the
-round-13 window is already composed. Registering is one call — add
-``pending_r14`` to the import list, call :func:`register_all`, and
-front-load :data:`PENDING_ORDER` in the round-14 ``_VERIFY_FIRST``.
-
-Until then tests/test_pending_r14.py runs each query against its
-oracle with the same normalization the driver applies, at
-sf0.001 + sf0.01.
+Each query registers through ``@query``; tests/test_pending_r14.py
+runs each one against its oracle with the driver's comparison.
 
 Pre-registration sf0.1 wall times (min-of-2, warm idle local[32],
 for the round-14 bench.py HEADLINE additions): NDCG 0.45 s, ECE/MCE
@@ -83,6 +75,8 @@ from pyspark.sql import functions as F
 
 from cdc_2025_spark.io import read_table
 from cdc_2025_spark.queries.pending_r10 import SCORE_MOD
+from cdc_2025_spark.queries.pending_r13 import _UND_EDGES_SQL
+from cdc_2025_spark.queries.registry import query
 
 # ---------------------------------------------------------------------------
 # shared: the deterministic score/label frame + the A&S normal tail
@@ -155,6 +149,29 @@ scored AS (
 NDCG_K = 100
 
 
+NDCG_ORACLE = f"""
+WITH {_SCORED_SQL},
+topk AS (
+  SELECT label,
+         ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rn
+  FROM scored
+  QUALIFY rn <= {NDCG_K}
+),
+np AS (SELECT CAST(SUM(label) AS BIGINT) AS n_pos FROM scored),
+d AS (SELECT SUM(label / log2(rn + 1.0)) AS dcg FROM topk),
+ideal AS (
+  SELECT n_pos, SUM(1.0 / log2(i + 1.0)) AS idcg
+  FROM np, unnest(generate_series(1, LEAST(n_pos, {NDCG_K}))) AS r(i)
+  GROUP BY n_pos
+)
+SELECT CAST({NDCG_K} AS INTEGER) AS k, n_pos,
+       ROUND(dcg, 6) AS dcg, ROUND(idcg, 6) AS idcg,
+       ROUND(dcg / idcg, 6) AS ndcg
+FROM d, ideal
+"""
+
+
+@query("eval_ndcg_at_k", oracle=NDCG_ORACLE)
 def eval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NDCG@k (Jarvelin & Kekalainen TOIS 2002) of the deterministic
     quality score against the is-English label: DCG over the top-k
@@ -211,28 +228,6 @@ def eval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-NDCG_ORACLE = f"""
-WITH {_SCORED_SQL},
-topk AS (
-  SELECT label,
-         ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rn
-  FROM scored
-  QUALIFY rn <= {NDCG_K}
-),
-np AS (SELECT CAST(SUM(label) AS BIGINT) AS n_pos FROM scored),
-d AS (SELECT SUM(label / log2(rn + 1.0)) AS dcg FROM topk),
-ideal AS (
-  SELECT n_pos, SUM(1.0 / log2(i + 1.0)) AS idcg
-  FROM np, unnest(generate_series(1, LEAST(n_pos, {NDCG_K}))) AS r(i)
-  GROUP BY n_pos
-)
-SELECT CAST({NDCG_K} AS INTEGER) AS k, n_pos,
-       ROUND(dcg, 6) AS dcg, ROUND(idcg, 6) AS idcg,
-       ROUND(dcg / idcg, 6) AS ndcg
-FROM d, ideal
-"""
-
-
 # ---------------------------------------------------------------------------
 # ECE / MCE calibration scalars
 # ---------------------------------------------------------------------------
@@ -240,6 +235,25 @@ FROM d, ideal
 ECE_BINS = 10
 
 
+ECE_ORACLE = f"""
+WITH {_SCORED_SQL},
+bins AS (
+  SELECT LEAST(FLOOR(score * {ECE_BINS}), {ECE_BINS} - 1) AS bin,
+         CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(label) AS BIGINT) AS n_pos,
+         SUM(score) AS s_conf
+  FROM scored GROUP BY 1
+)
+SELECT CAST(SUM(n) AS BIGINT) AS n_total,
+       CAST(COUNT(*) AS BIGINT) AS n_bins_used,
+       ROUND(SUM(n * ABS(n_pos * 1.0 / n - s_conf / n))
+             / SUM(n), 6) AS ece,
+       ROUND(MAX(ABS(n_pos * 1.0 / n - s_conf / n)), 6) AS mce
+FROM bins
+"""
+
+
+@query("eval_ece_mce", oracle=ECE_ORACLE)
 def eval_ece_mce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expected and Maximum Calibration Error (Naeini et al. AAAI
     2015) of the quality score against the is-English label over
@@ -289,29 +303,43 @@ def eval_ece_mce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ECE_ORACLE = f"""
-WITH {_SCORED_SQL},
-bins AS (
-  SELECT LEAST(FLOOR(score * {ECE_BINS}), {ECE_BINS} - 1) AS bin,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(label) AS BIGINT) AS n_pos,
-         SUM(score) AS s_conf
-  FROM scored GROUP BY 1
-)
-SELECT CAST(SUM(n) AS BIGINT) AS n_total,
-       CAST(COUNT(*) AS BIGINT) AS n_bins_used,
-       ROUND(SUM(n * ABS(n_pos * 1.0 / n - s_conf / n))
-             / SUM(n), 6) AS ece,
-       ROUND(MAX(ABS(n_pos * 1.0 / n - s_conf / n)), 6) AS mce
-FROM bins
-"""
-
-
 # ---------------------------------------------------------------------------
 # KS separation between the two classes' score distributions
 # ---------------------------------------------------------------------------
 
 
+KS_SEP_ORACLE = f"""
+WITH {_SCORED_SQL},
+per_v AS (
+  SELECT score AS v, SUM(label) AS ca, SUM(1 - label) AS cb
+  FROM scored GROUP BY score
+),
+ecdf AS (
+  SELECT v,
+         SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
+         SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b
+  FROM per_v
+),
+tot AS (
+  SELECT CAST(SUM(ca) AS BIGINT) AS n_pos,
+         CAST(SUM(cb) AS BIGINT) AS n_neg
+  FROM per_v
+),
+diffs AS (
+  SELECT v,
+         ABS(cum_a * 1.0 / n_pos - cum_b * 1.0 / n_neg) AS diff
+  FROM ecdf, tot
+),
+dm AS (SELECT MAX(diff) AS d FROM diffs)
+SELECT n_pos, n_neg,
+       ROUND(d, 6) AS ks_separation,
+       ROUND((SELECT MIN(v) FROM diffs, dm WHERE diff = d), 6)
+         AS best_threshold
+FROM tot, dm
+"""
+
+
+@query("eval_score_ks_separation", oracle=KS_SEP_ORACLE)
 def eval_score_ks_separation(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -375,37 +403,6 @@ def eval_score_ks_separation(
     )
 
 
-KS_SEP_ORACLE = f"""
-WITH {_SCORED_SQL},
-per_v AS (
-  SELECT score AS v, SUM(label) AS ca, SUM(1 - label) AS cb
-  FROM scored GROUP BY score
-),
-ecdf AS (
-  SELECT v,
-         SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
-         SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b
-  FROM per_v
-),
-tot AS (
-  SELECT CAST(SUM(ca) AS BIGINT) AS n_pos,
-         CAST(SUM(cb) AS BIGINT) AS n_neg
-  FROM per_v
-),
-diffs AS (
-  SELECT v,
-         ABS(cum_a * 1.0 / n_pos - cum_b * 1.0 / n_neg) AS diff
-  FROM ecdf, tot
-),
-dm AS (SELECT MAX(diff) AS d FROM diffs)
-SELECT n_pos, n_neg,
-       ROUND(d, 6) AS ks_separation,
-       ROUND((SELECT MIN(v) FROM diffs, dm WHERE diff = d), 6)
-         AS best_threshold
-FROM tot, dm
-"""
-
-
 # ---------------------------------------------------------------------------
 # Mann-Whitney U between two event-type value samples
 # ---------------------------------------------------------------------------
@@ -414,6 +411,51 @@ MW_TYPE_A = "click"
 MW_TYPE_B = "view"
 
 
+MW_ORACLE = f"""
+WITH ev AS (
+  SELECT ROUND(value, 4) AS v,
+         CASE WHEN event_type = '{MW_TYPE_A}' THEN 1 ELSE 0 END
+           AS is_a
+  FROM events
+  WHERE value IS NOT NULL
+    AND event_type IN ('{MW_TYPE_A}', '{MW_TYPE_B}')
+),
+marg AS (
+  SELECT v, SUM(is_a) AS ca, SUM(1 - is_a) AS cb,
+         COUNT(*) AS tot
+  FROM ev GROUP BY v
+),
+ranked AS (
+  SELECT ca, cb, tot,
+         COALESCE(SUM(tot) OVER (ORDER BY v
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+           + (tot + 1) / 2.0 AS r
+  FROM marg
+),
+agg AS (
+  SELECT CAST(SUM(ca) AS DOUBLE) AS na,
+         CAST(SUM(cb) AS DOUBLE) AS nb,
+         SUM(ca * r) AS ra,
+         CAST(SUM(tot * tot * tot - tot) AS DOUBLE) AS ties
+  FROM ranked
+),
+stat AS (
+  SELECT na, nb, ra - na * (na + 1) / 2.0 AS u,
+         (ra - na * (na + 1) / 2.0 - na * nb / 2.0)
+           / SQRT(na * nb / 12.0
+                  * ((na + nb + 1)
+                     - ties / ((na + nb) * (na + nb - 1)))) AS z
+  FROM agg
+),
+zz AS (SELECT na, nb, u, z, ABS(z) AS za FROM stat)
+SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
+       ROUND(u, 4) AS u_stat, ROUND(z, 6) AS z_score,
+       ROUND({_ans_sql('za')}, 6) AS p_value
+FROM zz
+"""
+
+
+@query("stats_mann_whitney_u", oracle=MW_ORACLE)
 def stats_mann_whitney_u(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -489,55 +531,43 @@ def stats_mann_whitney_u(
     )
 
 
-MW_ORACLE = f"""
-WITH ev AS (
-  SELECT ROUND(value, 4) AS v,
-         CASE WHEN event_type = '{MW_TYPE_A}' THEN 1 ELSE 0 END
-           AS is_a
-  FROM events
-  WHERE value IS NOT NULL
-    AND event_type IN ('{MW_TYPE_A}', '{MW_TYPE_B}')
-),
-marg AS (
-  SELECT v, SUM(is_a) AS ca, SUM(1 - is_a) AS cb,
-         COUNT(*) AS tot
-  FROM ev GROUP BY v
-),
-ranked AS (
-  SELECT ca, cb, tot,
-         COALESCE(SUM(tot) OVER (ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           + (tot + 1) / 2.0 AS r
-  FROM marg
-),
-agg AS (
-  SELECT CAST(SUM(ca) AS DOUBLE) AS na,
-         CAST(SUM(cb) AS DOUBLE) AS nb,
-         SUM(ca * r) AS ra,
-         CAST(SUM(tot * tot * tot - tot) AS DOUBLE) AS ties
-  FROM ranked
-),
-stat AS (
-  SELECT na, nb, ra - na * (na + 1) / 2.0 AS u,
-         (ra - na * (na + 1) / 2.0 - na * nb / 2.0)
-           / SQRT(na * nb / 12.0
-                  * ((na + nb + 1)
-                     - ties / ((na + nb) * (na + nb - 1)))) AS z
-  FROM agg
-),
-zz AS (SELECT na, nb, u, z, ABS(z) AS za FROM stat)
-SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-       ROUND(u, 4) AS u_stat, ROUND(z, 6) AS z_score,
-       ROUND({_ans_sql('za')}, 6) AS p_value
-FROM zz
-"""
-
-
 # ---------------------------------------------------------------------------
 # Kendall tau-b between daily order count and daily revenue
 # ---------------------------------------------------------------------------
 
 
+KENDALL_ORACLE = """
+WITH daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS day,
+         CAST(COUNT(*) AS BIGINT) AS x,
+         ROUND(SUM(o_totalprice), 4) AS y
+  FROM orders GROUP BY 1
+),
+pairs AS (
+  SELECT SIGN(b.x - a.x) AS sx, SIGN(b.y - a.y) AS sy
+  FROM daily a JOIN daily b ON a.day < b.day
+),
+agg AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n0,
+         CAST(SUM(CASE WHEN sx * sy > 0 THEN 1 ELSE 0 END)
+              AS BIGINT) AS concordant,
+         CAST(SUM(CASE WHEN sx * sy < 0 THEN 1 ELSE 0 END)
+              AS BIGINT) AS discordant,
+         CAST(SUM(CASE WHEN sx = 0 THEN 1 ELSE 0 END)
+              AS BIGINT) AS tx,
+         CAST(SUM(CASE WHEN sy = 0 THEN 1 ELSE 0 END)
+              AS BIGINT) AS ty
+  FROM pairs
+)
+SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM daily) AS n_days,
+       concordant, discordant,
+       ROUND((concordant - discordant)
+             / SQRT((n0 - tx) * 1.0 * (n0 - ty)), 6) AS tau_b
+FROM agg
+"""
+
+
+@query("stats_kendall_tau_daily", oracle=KENDALL_ORACLE)
 def stats_kendall_tau_daily(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -604,42 +634,54 @@ def stats_kendall_tau_daily(
     )
 
 
-KENDALL_ORACLE = """
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(COUNT(*) AS BIGINT) AS x,
-         ROUND(SUM(o_totalprice), 4) AS y
-  FROM orders GROUP BY 1
-),
-pairs AS (
-  SELECT SIGN(b.x - a.x) AS sx, SIGN(b.y - a.y) AS sy
-  FROM daily a JOIN daily b ON a.day < b.day
-),
-agg AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n0,
-         CAST(SUM(CASE WHEN sx * sy > 0 THEN 1 ELSE 0 END)
-              AS BIGINT) AS concordant,
-         CAST(SUM(CASE WHEN sx * sy < 0 THEN 1 ELSE 0 END)
-              AS BIGINT) AS discordant,
-         CAST(SUM(CASE WHEN sx = 0 THEN 1 ELSE 0 END)
-              AS BIGINT) AS tx,
-         CAST(SUM(CASE WHEN sy = 0 THEN 1 ELSE 0 END)
-              AS BIGINT) AS ty
-  FROM pairs
-)
-SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM daily) AS n_days,
-       concordant, discordant,
-       ROUND((concordant - discordant)
-             / SQRT((n0 - tx) * 1.0 * (n0 - ty)), 6) AS tau_b
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # OLS daily revenue trend: slope, R^2, slope t-test
 # ---------------------------------------------------------------------------
 
 
+OLS_ORACLE = f"""
+WITH daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS day,
+         ROUND(SUM(o_totalprice), 4) AS y
+  FROM orders GROUP BY 1
+),
+pts AS (
+  SELECT CAST(day - (SELECT MIN(day) FROM daily) AS DOUBLE) AS t, y
+  FROM daily
+),
+m AS (
+  SELECT CAST(COUNT(*) AS DOUBLE) AS n, SUM(t) AS st, SUM(y) AS sy,
+         SUM(t * t) AS stt, SUM(t * y) AS sty, SUM(y * y) AS syy
+  FROM pts
+),
+c AS (
+  SELECT n,
+         stt - st * st / n AS sxx,
+         sty - st * sy / n AS sxy,
+         syy - sy * sy / n AS syy_c,
+         st, sy
+  FROM m
+),
+fit AS (
+  SELECT n, sxy / sxx AS slope,
+         sy / n - (sxy / sxx) * st / n AS intercept,
+         sxy * sxy / (sxx * syy_c) AS r2,
+         (sxy / sxx)
+           / SQRT((syy_c - sxy * sxy / sxx) / (n - 2) / sxx) AS t_stat
+  FROM c
+),
+zz AS (SELECT *, ABS(t_stat) AS za FROM fit)
+SELECT CAST(n AS BIGINT) AS n_days,
+       ROUND(slope, 4) AS slope,
+       ROUND(intercept, 4) AS intercept,
+       ROUND(r2, 6) AS r2,
+       ROUND(t_stat, 6) AS t_stat,
+       ROUND({_ans_sql('za')}, 6) AS p_value
+FROM zz
+"""
+
+
+@query("stats_ols_daily_trend", oracle=OLS_ORACLE)
 def stats_ols_daily_trend(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -695,53 +737,48 @@ def stats_ols_daily_trend(
     )
 
 
-OLS_ORACLE = f"""
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         ROUND(SUM(o_totalprice), 4) AS y
-  FROM orders GROUP BY 1
-),
-pts AS (
-  SELECT CAST(day - (SELECT MIN(day) FROM daily) AS DOUBLE) AS t, y
-  FROM daily
-),
-m AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS n, SUM(t) AS st, SUM(y) AS sy,
-         SUM(t * t) AS stt, SUM(t * y) AS sty, SUM(y * y) AS syy
-  FROM pts
-),
-c AS (
-  SELECT n,
-         stt - st * st / n AS sxx,
-         sty - st * sy / n AS sxy,
-         syy - sy * sy / n AS syy_c,
-         st, sy
-  FROM m
-),
-fit AS (
-  SELECT n, sxy / sxx AS slope,
-         sy / n - (sxy / sxx) * st / n AS intercept,
-         sxy * sxy / (sxx * syy_c) AS r2,
-         (sxy / sxx)
-           / SQRT((syy_c - sxy * sxy / sxx) / (n - 2) / sxx) AS t_stat
-  FROM c
-),
-zz AS (SELECT *, ABS(t_stat) AS za FROM fit)
-SELECT CAST(n AS BIGINT) AS n_days,
-       ROUND(slope, 4) AS slope,
-       ROUND(intercept, 4) AS intercept,
-       ROUND(r2, 6) AS r2,
-       ROUND(t_stat, 6) AS t_stat,
-       ROUND({_ans_sql('za')}, 6) AS p_value
-FROM zz
-"""
-
-
 # ---------------------------------------------------------------------------
 # Jarque-Bera normality of order values
 # ---------------------------------------------------------------------------
 
 
+JB_ORACLE = """
+WITH m AS (
+  SELECT CAST(COUNT(*) AS DOUBLE) AS n,
+         SUM(o_totalprice) AS s1,
+         SUM(o_totalprice * o_totalprice) AS s2,
+         SUM(o_totalprice * o_totalprice * o_totalprice) AS s3,
+         SUM(o_totalprice * o_totalprice * o_totalprice
+             * o_totalprice) AS s4
+  FROM orders
+),
+c AS (
+  SELECT n, s1 / n AS mu,
+         s2 / n - (s1 / n) * (s1 / n) AS m2,
+         s3 / n - 3 * (s1 / n) * s2 / n
+           + 2 * (s1 / n) * (s1 / n) * (s1 / n) AS m3,
+         s4 / n - 4 * (s1 / n) * s3 / n
+           + 6 * (s1 / n) * (s1 / n) * s2 / n
+           - 3 * (s1 / n) * (s1 / n) * (s1 / n) * (s1 / n) AS m4
+  FROM m
+),
+s AS (
+  SELECT n, m3 / POW(m2, 1.5) AS skew,
+         m4 / (m2 * m2) - 3.0 AS exk
+  FROM c
+)
+SELECT CAST(n AS BIGINT) AS n,
+       ROUND(skew, 6) AS skewness,
+       ROUND(exk, 6) AS excess_kurtosis,
+       ROUND(n / 6.0 * (skew * skew + exk * exk / 4.0), 4)
+         AS jb_stat,
+       ROUND(EXP(-(n / 6.0 * (skew * skew + exk * exk / 4.0))
+                 / 2.0), 6) AS p_value
+FROM s
+"""
+
+
+@query("stats_jarque_bera_normality", oracle=JB_ORACLE)
 def stats_jarque_bera_normality(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -793,47 +830,42 @@ def stats_jarque_bera_normality(
     )
 
 
-JB_ORACLE = """
-WITH m AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         SUM(o_totalprice) AS s1,
-         SUM(o_totalprice * o_totalprice) AS s2,
-         SUM(o_totalprice * o_totalprice * o_totalprice) AS s3,
-         SUM(o_totalprice * o_totalprice * o_totalprice
-             * o_totalprice) AS s4
-  FROM orders
-),
-c AS (
-  SELECT n, s1 / n AS mu,
-         s2 / n - (s1 / n) * (s1 / n) AS m2,
-         s3 / n - 3 * (s1 / n) * s2 / n
-           + 2 * (s1 / n) * (s1 / n) * (s1 / n) AS m3,
-         s4 / n - 4 * (s1 / n) * s3 / n
-           + 6 * (s1 / n) * (s1 / n) * s2 / n
-           - 3 * (s1 / n) * (s1 / n) * (s1 / n) * (s1 / n) AS m4
-  FROM m
-),
-s AS (
-  SELECT n, m3 / POW(m2, 1.5) AS skew,
-         m4 / (m2 * m2) - 3.0 AS exk
-  FROM c
-)
-SELECT CAST(n AS BIGINT) AS n,
-       ROUND(skew, 6) AS skewness,
-       ROUND(exk, 6) AS excess_kurtosis,
-       ROUND(n / 6.0 * (skew * skew + exk * exk / 4.0), 4)
-         AS jb_stat,
-       ROUND(EXP(-(n / 6.0 * (skew * skew + exk * exk / 4.0))
-                 / 2.0), 6) AS p_value
-FROM s
-"""
-
-
 # ---------------------------------------------------------------------------
 # Grubbs extreme studentized deviate on daily revenue
 # ---------------------------------------------------------------------------
 
 
+GRUBBS_ORACLE = f"""
+WITH daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS day,
+         ROUND(SUM(o_totalprice), 4) AS y
+  FROM orders GROUP BY 1
+),
+m AS (
+  SELECT CAST(COUNT(*) AS DOUBLE) AS n, SUM(y) AS sy,
+         SUM(y * y) AS syy
+  FROM daily
+),
+dev AS (
+  SELECT day, n,
+         ABS(y - sy / n)
+           / SQRT((syy - sy * sy / n) / (n - 1)) AS g
+  FROM daily, m
+),
+gm AS (SELECT MAX(g) AS gmax FROM dev),
+best AS (
+  SELECT MAX(n) AS n, MIN(day) AS day, MAX(gmax) AS g
+  FROM dev, gm WHERE g = gmax
+),
+zz AS (SELECT n, day, g, g AS za FROM best)
+SELECT CAST(n AS BIGINT) AS n_days, day,
+       ROUND(g, 6) AS grubbs_g,
+       ROUND(LEAST(n * {_ans_sql('za')}, 1.0), 6) AS bonferroni_p
+FROM zz
+"""
+
+
+@query("stats_grubbs_extreme_outlier", oracle=GRUBBS_ORACLE)
 def stats_grubbs_extreme_outlier(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -900,36 +932,6 @@ def stats_grubbs_extreme_outlier(
     )
 
 
-GRUBBS_ORACLE = f"""
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         ROUND(SUM(o_totalprice), 4) AS y
-  FROM orders GROUP BY 1
-),
-m AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS n, SUM(y) AS sy,
-         SUM(y * y) AS syy
-  FROM daily
-),
-dev AS (
-  SELECT day, n,
-         ABS(y - sy / n)
-           / SQRT((syy - sy * sy / n) / (n - 1)) AS g
-  FROM daily, m
-),
-gm AS (SELECT MAX(g) AS gmax FROM dev),
-best AS (
-  SELECT MAX(n) AS n, MIN(day) AS day, MAX(gmax) AS g
-  FROM dev, gm WHERE g = gmax
-),
-zz AS (SELECT n, day, g, g AS za FROM best)
-SELECT CAST(n AS BIGINT) AS n_days, day,
-       ROUND(g, 6) AS grubbs_g,
-       ROUND(LEAST(n * {_ans_sql('za')}, 1.0), 6) AS bonferroni_p
-FROM zz
-"""
-
-
 # ---------------------------------------------------------------------------
 # Ljung-Box portmanteau over daily event counts
 # ---------------------------------------------------------------------------
@@ -937,6 +939,51 @@ FROM zz
 LJUNG_LAGS = 7
 
 
+LJUNG_ORACLE = f"""
+WITH daily AS (
+  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS DOUBLE) AS x
+  FROM events GROUP BY 1
+),
+idx AS (
+  SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, x FROM daily
+),
+m AS (
+  SELECT CAST(COUNT(*) AS DOUBLE) AS n, AVG(x) AS mu FROM idx
+),
+cent AS (SELECT i, x - mu AS e FROM idx, m),
+den AS (SELECT SUM(e * e) AS ss FROM cent),
+cross_k AS (
+  SELECT k.k, SUM(a.e * b.e) AS num
+  FROM unnest(generate_series(1, {LJUNG_LAGS})) AS k(k)
+  JOIN cent a ON TRUE
+  JOIN cent b ON b.i = a.i + k.k
+  GROUP BY k.k
+),
+q AS (
+  SELECT n, n * (n + 2)
+           * SUM((num / ss) * (num / ss) / (n - k)) AS q
+  FROM cross_k, den, m
+  GROUP BY n
+),
+wh AS (
+  SELECT n, q,
+         (POW(q / {LJUNG_LAGS}.0, 1.0 / 3.0)
+          - (1.0 - 2.0 / (9.0 * {LJUNG_LAGS}.0)))
+           / SQRT(2.0 / (9.0 * {LJUNG_LAGS}.0)) AS z
+  FROM q
+),
+zz AS (SELECT n, q, z, ABS(z) AS za FROM wh)
+SELECT CAST(n AS BIGINT) AS n_days,
+       CAST({LJUNG_LAGS} AS INTEGER) AS n_lags,
+       ROUND(q, 4) AS q_stat,
+       ROUND(CASE WHEN z > 0 THEN {_ans_sql('za')} / 2.0
+                  ELSE 1.0 - {_ans_sql('za')} / 2.0 END, 6)
+         AS p_value
+FROM zz
+"""
+
+
+@query("stats_ljung_box_daily", oracle=LJUNG_ORACLE)
 def stats_ljung_box_daily(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1031,50 +1078,6 @@ def stats_ljung_box_daily(
     )
 
 
-LJUNG_ORACLE = f"""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS DOUBLE) AS x
-  FROM events GROUP BY 1
-),
-idx AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, x FROM daily
-),
-m AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS n, AVG(x) AS mu FROM idx
-),
-cent AS (SELECT i, x - mu AS e FROM idx, m),
-den AS (SELECT SUM(e * e) AS ss FROM cent),
-cross_k AS (
-  SELECT k.k, SUM(a.e * b.e) AS num
-  FROM unnest(generate_series(1, {LJUNG_LAGS})) AS k(k)
-  JOIN cent a ON TRUE
-  JOIN cent b ON b.i = a.i + k.k
-  GROUP BY k.k
-),
-q AS (
-  SELECT n, n * (n + 2)
-           * SUM((num / ss) * (num / ss) / (n - k)) AS q
-  FROM cross_k, den, m
-  GROUP BY n
-),
-wh AS (
-  SELECT n, q,
-         (POW(q / {LJUNG_LAGS}.0, 1.0 / 3.0)
-          - (1.0 - 2.0 / (9.0 * {LJUNG_LAGS}.0)))
-           / SQRT(2.0 / (9.0 * {LJUNG_LAGS}.0)) AS z
-  FROM q
-),
-zz AS (SELECT n, q, z, ABS(z) AS za FROM wh)
-SELECT CAST(n AS BIGINT) AS n_days,
-       CAST({LJUNG_LAGS} AS INTEGER) AS n_lags,
-       ROUND(q, 4) AS q_stat,
-       ROUND(CASE WHEN z > 0 THEN {_ans_sql('za')} / 2.0
-                  ELSE 1.0 - {_ans_sql('za')} / 2.0 END, 6)
-         AS p_value
-FROM zz
-"""
-
-
 # ---------------------------------------------------------------------------
 # Pooled two-proportion z-test between user cohorts
 # ---------------------------------------------------------------------------
@@ -1082,6 +1085,42 @@ FROM zz
 PROP_EVENT = "error"
 
 
+PROP_ORACLE = f"""
+WITH agg AS (
+  SELECT
+    CAST(SUM(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
+         AS DOUBLE) AS n1,
+    CAST(SUM(CASE WHEN user_id % 2 = 0 THEN 0 ELSE 1 END)
+         AS DOUBLE) AS n2,
+    CAST(SUM(CASE WHEN user_id % 2 = 0
+                   AND event_type = '{PROP_EVENT}'
+              THEN 1 ELSE 0 END) AS DOUBLE) AS h1,
+    CAST(SUM(CASE WHEN user_id % 2 <> 0
+                   AND event_type = '{PROP_EVENT}'
+              THEN 1 ELSE 0 END) AS DOUBLE) AS h2
+  FROM events
+),
+s AS (
+  SELECT n1, n2, h1 / n1 AS p1, h2 / n2 AS p2,
+         (h1 + h2) / (n1 + n2) AS pp
+  FROM agg
+),
+zz AS (
+  SELECT n1, n2, p1, p2,
+         (p1 - p2)
+           / SQRT(pp * (1 - pp) * (1 / n1 + 1 / n2)) AS z
+  FROM s
+),
+za AS (SELECT *, ABS(z) AS zab FROM zz)
+SELECT CAST(n1 AS BIGINT) AS n_even, CAST(n2 AS BIGINT) AS n_odd,
+       ROUND(p1, 6) AS rate_even, ROUND(p2, 6) AS rate_odd,
+       ROUND(z, 6) AS z_score,
+       ROUND({_ans_sql('zab')}, 6) AS p_value
+FROM za
+"""
+
+
+@query("stats_two_proportion_ztest", oracle=PROP_ORACLE)
 def stats_two_proportion_ztest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1124,41 +1163,6 @@ def stats_two_proportion_ztest(
     )
 
 
-PROP_ORACLE = f"""
-WITH agg AS (
-  SELECT
-    CAST(SUM(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
-         AS DOUBLE) AS n1,
-    CAST(SUM(CASE WHEN user_id % 2 = 0 THEN 0 ELSE 1 END)
-         AS DOUBLE) AS n2,
-    CAST(SUM(CASE WHEN user_id % 2 = 0
-                   AND event_type = '{PROP_EVENT}'
-              THEN 1 ELSE 0 END) AS DOUBLE) AS h1,
-    CAST(SUM(CASE WHEN user_id % 2 <> 0
-                   AND event_type = '{PROP_EVENT}'
-              THEN 1 ELSE 0 END) AS DOUBLE) AS h2
-  FROM events
-),
-s AS (
-  SELECT n1, n2, h1 / n1 AS p1, h2 / n2 AS p2,
-         (h1 + h2) / (n1 + n2) AS pp
-  FROM agg
-),
-zz AS (
-  SELECT n1, n2, p1, p2,
-         (p1 - p2)
-           / SQRT(pp * (1 - pp) * (1 / n1 + 1 / n2)) AS z
-  FROM s
-),
-za AS (SELECT *, ABS(z) AS zab FROM zz)
-SELECT CAST(n1 AS BIGINT) AS n_even, CAST(n2 AS BIGINT) AS n_odd,
-       ROUND(p1, 6) AS rate_even, ROUND(p2, 6) AS rate_odd,
-       ROUND(z, 6) AS z_score,
-       ROUND({_ans_sql('zab')}, 6) AS p_value
-FROM za
-"""
-
-
 # ---------------------------------------------------------------------------
 # Neyman optimal allocation across customer segments
 # ---------------------------------------------------------------------------
@@ -1166,6 +1170,35 @@ FROM za
 NEYMAN_BUDGET = 1000
 
 
+NEYMAN_ORACLE = f"""
+WITH m AS (
+  SELECT c_mktsegment,
+         CAST(COUNT(*) AS DOUBLE) AS nh,
+         SUM(c_acctbal) AS sy,
+         SUM(c_acctbal * c_acctbal) AS syy
+  FROM customer GROUP BY 1
+),
+s AS (
+  SELECT c_mktsegment, nh,
+         SQRT((syy - sy * sy / nh) / (nh - 1)) AS sh
+  FROM m
+),
+t AS (
+  SELECT *, SUM(nh * sh) OVER () AS den, SUM(nh) OVER () AS ntot
+  FROM s
+)
+SELECT c_mktsegment AS segment,
+       CAST(nh AS BIGINT) AS n_stratum,
+       ROUND(sh, 6) AS stddev_bal,
+       CAST(ROUND({NEYMAN_BUDGET}.0 * nh * sh / den)
+            AS BIGINT) AS neyman_n,
+       CAST(ROUND({NEYMAN_BUDGET}.0 * nh / ntot)
+            AS BIGINT) AS proportional_n
+FROM t
+"""
+
+
+@query("sample_neyman_allocation", oracle=NEYMAN_ORACLE)
 def sample_neyman_allocation(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1230,34 +1263,6 @@ def sample_neyman_allocation(
     )
 
 
-NEYMAN_ORACLE = f"""
-WITH m AS (
-  SELECT c_mktsegment,
-         CAST(COUNT(*) AS DOUBLE) AS nh,
-         SUM(c_acctbal) AS sy,
-         SUM(c_acctbal * c_acctbal) AS syy
-  FROM customer GROUP BY 1
-),
-s AS (
-  SELECT c_mktsegment, nh,
-         SQRT((syy - sy * sy / nh) / (nh - 1)) AS sh
-  FROM m
-),
-t AS (
-  SELECT *, SUM(nh * sh) OVER () AS den, SUM(nh) OVER () AS ntot
-  FROM s
-)
-SELECT c_mktsegment AS segment,
-       CAST(nh AS BIGINT) AS n_stratum,
-       ROUND(sh, 6) AS stddev_bal,
-       CAST(ROUND({NEYMAN_BUDGET}.0 * nh * sh / den)
-            AS BIGINT) AS neyman_n,
-       CAST(ROUND({NEYMAN_BUDGET}.0 * nh / ntot)
-            AS BIGINT) AS proportional_n
-FROM t
-"""
-
-
 # ---------------------------------------------------------------------------
 # t-closeness audit (ordered EMD) above the l-diversity rung
 # ---------------------------------------------------------------------------
@@ -1265,6 +1270,62 @@ FROM t
 TCLOSE_T = 0.2
 
 
+TCLOSE_ORACLE = f"""
+WITH ev AS (
+  SELECT event_type, CAST(ts AS DATE) AS day,
+         CAST(FLOOR(value / 100) AS INTEGER) AS sens
+  FROM events WHERE value IS NOT NULL
+),
+cell AS (
+  SELECT event_type, day, sens, COUNT(*) AS c
+  FROM ev GROUP BY 1, 2, 3
+),
+groups AS (
+  SELECT event_type, day, SUM(c) AS gn FROM cell GROUP BY 1, 2
+),
+gall AS (SELECT sens, SUM(c) AS gc FROM cell GROUP BY 1),
+gtot AS (
+  SELECT SUM(gc) AS nt, CAST(COUNT(*) AS BIGINT) AS m FROM gall
+),
+gdist AS (SELECT sens, gc * 1.0 / nt AS p, m FROM gall, gtot),
+dense AS (
+  SELECT g.event_type, g.day, d.sens, d.m,
+         COALESCE(c.c, 0) * 1.0 / g.gn - d.p AS diff
+  FROM groups g CROSS JOIN gdist d
+  LEFT JOIN cell c ON c.event_type = g.event_type
+    AND c.day = g.day AND c.sens = d.sens
+),
+cums AS (
+  SELECT event_type, day, m,
+         SUM(diff) OVER (PARTITION BY event_type, day ORDER BY sens
+                         ROWS UNBOUNDED PRECEDING) AS cum
+  FROM dense
+),
+per_group AS (
+  SELECT event_type, day, SUM(ABS(cum)) / (MAX(m) - 1) AS t,
+         MAX(m) AS m
+  FROM cums GROUP BY 1, 2
+),
+tm AS (SELECT MAX(t) AS tmax FROM per_group),
+worst AS (
+  SELECT event_type AS worst_event_type, day AS worst_day, t
+  FROM per_group, tm WHERE t = tmax
+  ORDER BY event_type, day LIMIT 1
+),
+audit AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
+         CAST(MAX(m) AS BIGINT) AS m_sens_values,
+         CAST(SUM(CASE WHEN t > {TCLOSE_T} THEN 1 ELSE 0 END)
+              AS BIGINT) AS n_violations
+  FROM per_group
+)
+SELECT n_groups, m_sens_values, n_violations,
+       worst_event_type, worst_day, ROUND(t, 6) AS worst_t
+FROM audit, worst
+"""
+
+
+@query("privacy_t_closeness_audit", oracle=TCLOSE_ORACLE)
 def privacy_t_closeness_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1370,66 +1431,33 @@ def privacy_t_closeness_audit(
     )
 
 
-TCLOSE_ORACLE = f"""
-WITH ev AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(FLOOR(value / 100) AS INTEGER) AS sens
-  FROM events WHERE value IS NOT NULL
-),
-cell AS (
-  SELECT event_type, day, sens, COUNT(*) AS c
-  FROM ev GROUP BY 1, 2, 3
-),
-groups AS (
-  SELECT event_type, day, SUM(c) AS gn FROM cell GROUP BY 1, 2
-),
-gall AS (SELECT sens, SUM(c) AS gc FROM cell GROUP BY 1),
-gtot AS (
-  SELECT SUM(gc) AS nt, CAST(COUNT(*) AS BIGINT) AS m FROM gall
-),
-gdist AS (SELECT sens, gc * 1.0 / nt AS p, m FROM gall, gtot),
-dense AS (
-  SELECT g.event_type, g.day, d.sens, d.m,
-         COALESCE(c.c, 0) * 1.0 / g.gn - d.p AS diff
-  FROM groups g CROSS JOIN gdist d
-  LEFT JOIN cell c ON c.event_type = g.event_type
-    AND c.day = g.day AND c.sens = d.sens
-),
-cums AS (
-  SELECT event_type, day, m,
-         SUM(diff) OVER (PARTITION BY event_type, day ORDER BY sens
-                         ROWS UNBOUNDED PRECEDING) AS cum
-  FROM dense
-),
-per_group AS (
-  SELECT event_type, day, SUM(ABS(cum)) / (MAX(m) - 1) AS t,
-         MAX(m) AS m
-  FROM cums GROUP BY 1, 2
-),
-tm AS (SELECT MAX(t) AS tmax FROM per_group),
-worst AS (
-  SELECT event_type AS worst_event_type, day AS worst_day, t
-  FROM per_group, tm WHERE t = tmax
-  ORDER BY event_type, day LIMIT 1
-),
-audit AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
-         CAST(MAX(m) AS BIGINT) AS m_sens_values,
-         CAST(SUM(CASE WHEN t > {TCLOSE_T} THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_violations
-  FROM per_group
-)
-SELECT n_groups, m_sens_values, n_violations,
-       worst_event_type, worst_day, ROUND(t, 6) AS worst_t
-FROM audit, worst
-"""
-
-
 # ---------------------------------------------------------------------------
 # Yule's K lexical richness per source
 # ---------------------------------------------------------------------------
 
 
+YULE_ORACLE = """
+WITH toks AS (
+  SELECT source, tok
+  FROM (SELECT source,
+               unnest(string_split_regex(trim(lower(text)), '\\s+'))
+                 AS tok
+        FROM documents)
+  WHERE tok <> ''
+),
+tf AS (
+  SELECT source, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2
+)
+SELECT source,
+       CAST(SUM(c) AS BIGINT) AS n_tokens,
+       CAST(COUNT(*) AS BIGINT) AS n_types,
+       ROUND(10000.0 * (SUM(c * c) - SUM(c))
+             / (SUM(c) * SUM(c)), 4) AS yule_k
+FROM tf GROUP BY source
+"""
+
+
+@query("text_yule_k_richness", oracle=YULE_ORACLE)
 def text_yule_k_richness(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1471,27 +1499,6 @@ def text_yule_k_richness(
     )
 
 
-YULE_ORACLE = """
-WITH toks AS (
-  SELECT source, tok
-  FROM (SELECT source,
-               unnest(string_split_regex(trim(lower(text)), '\\s+'))
-                 AS tok
-        FROM documents)
-  WHERE tok <> ''
-),
-tf AS (
-  SELECT source, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2
-)
-SELECT source,
-       CAST(SUM(c) AS BIGINT) AS n_tokens,
-       CAST(COUNT(*) AS BIGINT) AS n_types,
-       ROUND(10000.0 * (SUM(c * c) - SUM(c))
-             / (SUM(c) * SUM(c)), 4) AS yule_k
-FROM tf GROUP BY source
-"""
-
-
 # ---------------------------------------------------------------------------
 # Top JS-divergence-driving terms between two sources
 # ---------------------------------------------------------------------------
@@ -1501,6 +1508,51 @@ JS_SHIFT_B = "src1"
 JS_SHIFT_TOPK = 20
 
 
+JS_SHIFT_ORACLE = f"""
+WITH toks AS (
+  SELECT source, tok
+  FROM (SELECT source,
+               unnest(string_split_regex(trim(lower(text)), '\\s+'))
+                 AS tok
+        FROM documents
+        WHERE source IN ('{JS_SHIFT_A}', '{JS_SHIFT_B}'))
+  WHERE tok <> ''
+),
+tf AS (
+  SELECT source, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2
+),
+tot AS (SELECT source, SUM(c) AS n FROM tf GROUP BY 1),
+probs AS (
+  SELECT tf.source, tok, c * 1.0 / n AS p
+  FROM tf JOIN tot ON tf.source = tot.source
+),
+j AS (
+  SELECT COALESCE(a.tok, b.tok) AS term,
+         COALESCE(a.p, 0.0) AS pa, COALESCE(b.p, 0.0) AS pb
+  FROM (SELECT tok, p FROM probs WHERE source = '{JS_SHIFT_A}') a
+  FULL OUTER JOIN
+       (SELECT tok, p FROM probs WHERE source = '{JS_SHIFT_B}') b
+    ON a.tok = b.tok
+),
+scored AS (
+  SELECT term, pa, pb,
+         0.5 * (CASE WHEN pa > 0
+                     THEN pa * LN(2.0 * pa / (pa + pb))
+                     ELSE 0.0 END
+                + CASE WHEN pb > 0
+                       THEN pb * LN(2.0 * pb / (pa + pb))
+                       ELSE 0.0 END) AS raw
+  FROM j
+)
+SELECT term, ROUND(pa, 6) AS p_a, ROUND(pb, 6) AS p_b,
+       ROUND(raw, 8) AS js_contrib
+FROM scored
+ORDER BY raw DESC, term
+LIMIT {JS_SHIFT_TOPK}
+"""
+
+
+@query("text_js_shift_terms", oracle=JS_SHIFT_ORACLE)
 def text_js_shift_terms(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1577,55 +1629,42 @@ def text_js_shift_terms(
     )
 
 
-JS_SHIFT_ORACLE = f"""
-WITH toks AS (
-  SELECT source, tok
-  FROM (SELECT source,
-               unnest(string_split_regex(trim(lower(text)), '\\s+'))
-                 AS tok
-        FROM documents
-        WHERE source IN ('{JS_SHIFT_A}', '{JS_SHIFT_B}'))
-  WHERE tok <> ''
-),
-tf AS (
-  SELECT source, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2
-),
-tot AS (SELECT source, SUM(c) AS n FROM tf GROUP BY 1),
-probs AS (
-  SELECT tf.source, tok, c * 1.0 / n AS p
-  FROM tf JOIN tot ON tf.source = tot.source
-),
-j AS (
-  SELECT COALESCE(a.tok, b.tok) AS term,
-         COALESCE(a.p, 0.0) AS pa, COALESCE(b.p, 0.0) AS pb
-  FROM (SELECT tok, p FROM probs WHERE source = '{JS_SHIFT_A}') a
-  FULL OUTER JOIN
-       (SELECT tok, p FROM probs WHERE source = '{JS_SHIFT_B}') b
-    ON a.tok = b.tok
-),
-scored AS (
-  SELECT term, pa, pb,
-         0.5 * (CASE WHEN pa > 0
-                     THEN pa * LN(2.0 * pa / (pa + pb))
-                     ELSE 0.0 END
-                + CASE WHEN pb > 0
-                       THEN pb * LN(2.0 * pb / (pa + pb))
-                       ELSE 0.0 END) AS raw
-  FROM j
-)
-SELECT term, ROUND(pa, 6) AS p_a, ROUND(pb, 6) AS p_b,
-       ROUND(raw, 8) AS js_contrib
-FROM scored
-ORDER BY raw DESC, term
-LIMIT {JS_SHIFT_TOPK}
-"""
-
-
 # ---------------------------------------------------------------------------
 # Conditional entropy of the event-type Markov chain
 # ---------------------------------------------------------------------------
 
 
+COND_ENTROPY_ORACLE = """
+WITH seq AS (
+  SELECT event_type AS cur,
+         LEAD(event_type) OVER (PARTITION BY user_id
+                                ORDER BY ts, event_id) AS nxt
+  FROM events
+),
+tr AS (
+  SELECT cur, nxt, COUNT(*) AS c
+  FROM seq WHERE nxt IS NOT NULL GROUP BY 1, 2
+),
+scored AS (
+  SELECT c,
+         SUM(c) OVER (PARTITION BY cur) AS c_cur,
+         SUM(c) OVER (PARTITION BY nxt) AS c_nxt,
+         SUM(c) OVER () AS n
+  FROM tr
+)
+SELECT CAST(MAX(n) AS BIGINT) AS n_transitions,
+       ROUND(-SUM(c * 1.0 / n * log2(c_nxt * 1.0 / n)), 6)
+         AS h_next,
+       ROUND(-SUM(c * 1.0 / n * log2(c * 1.0 / c_cur)), 6)
+         AS h_next_given_cur,
+       ROUND(-SUM(c * 1.0 / n * log2(c_nxt * 1.0 / n))
+             - (-SUM(c * 1.0 / n * log2(c * 1.0 / c_cur))), 6)
+         AS info_gain
+FROM scored
+"""
+
+
+@query("events_conditional_entropy", oracle=COND_ENTROPY_ORACLE)
 def events_conditional_entropy(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1685,41 +1724,45 @@ def events_conditional_entropy(
     )
 
 
-COND_ENTROPY_ORACLE = """
-WITH seq AS (
-  SELECT event_type AS cur,
-         LEAD(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS nxt
-  FROM events
-),
-tr AS (
-  SELECT cur, nxt, COUNT(*) AS c
-  FROM seq WHERE nxt IS NOT NULL GROUP BY 1, 2
-),
-scored AS (
-  SELECT c,
-         SUM(c) OVER (PARTITION BY cur) AS c_cur,
-         SUM(c) OVER (PARTITION BY nxt) AS c_nxt,
-         SUM(c) OVER () AS n
-  FROM tr
-)
-SELECT CAST(MAX(n) AS BIGINT) AS n_transitions,
-       ROUND(-SUM(c * 1.0 / n * log2(c_nxt * 1.0 / n)), 6)
-         AS h_next,
-       ROUND(-SUM(c * 1.0 / n * log2(c * 1.0 / c_cur)), 6)
-         AS h_next_given_cur,
-       ROUND(-SUM(c * 1.0 / n * log2(c_nxt * 1.0 / n))
-             - (-SUM(c * 1.0 / n * log2(c * 1.0 / c_cur))), 6)
-         AS info_gain
-FROM scored
-"""
-
-
 # ---------------------------------------------------------------------------
 # Rich-club coefficient curve of the trade graph
 # ---------------------------------------------------------------------------
 
+RICH_CLUB_ORACLE = f"""
+WITH {_UND_EDGES_SQL},
+deg AS (
+  SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS degree
+  FROM und GROUP BY src
+),
+ks AS (
+  SELECT CAST(k AS INTEGER) AS k
+  FROM (SELECT MAX(degree) AS md FROM deg),
+       unnest(generate_series(0, md - 1)) AS r(k)
+),
+nk AS (
+  SELECT k, CAST(COUNT(*) AS BIGINT) AS n_nodes
+  FROM ks JOIN deg ON degree > k GROUP BY k
+),
+e2 AS (
+  SELECT du.degree AS ds, dv.degree AS dd
+  FROM und e
+  JOIN deg du ON du.node = e.src
+  JOIN deg dv ON dv.node = e.dst
+),
+ek AS (
+  SELECT k, CAST(COUNT(*) AS BIGINT) AS dir_e
+  FROM ks JOIN e2 ON ds > k AND dd > k GROUP BY k
+)
+SELECT nk.k, nk.n_nodes,
+       CAST(COALESCE(ek.dir_e, 0) / 2 AS BIGINT) AS n_club_edges,
+       ROUND(COALESCE(ek.dir_e, 0) * 1.0
+             / (nk.n_nodes * (nk.n_nodes - 1)), 6) AS phi
+FROM nk LEFT JOIN ek ON nk.k = ek.k
+WHERE nk.n_nodes >= 2
+"""
 
+
+@query("graph_rich_club_coefficients", oracle=RICH_CLUB_ORACLE)
 def graph_rich_club_coefficients(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1800,44 +1843,6 @@ def graph_rich_club_coefficients(
     return out
 
 
-from cdc_2025_spark.queries.pending_r13 import (  # noqa: E402
-    _UND_EDGES_SQL,
-)
-
-RICH_CLUB_ORACLE = f"""
-WITH {_UND_EDGES_SQL},
-deg AS (
-  SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS degree
-  FROM und GROUP BY src
-),
-ks AS (
-  SELECT CAST(k AS INTEGER) AS k
-  FROM (SELECT MAX(degree) AS md FROM deg),
-       unnest(generate_series(0, md - 1)) AS r(k)
-),
-nk AS (
-  SELECT k, CAST(COUNT(*) AS BIGINT) AS n_nodes
-  FROM ks JOIN deg ON degree > k GROUP BY k
-),
-e2 AS (
-  SELECT du.degree AS ds, dv.degree AS dd
-  FROM und e
-  JOIN deg du ON du.node = e.src
-  JOIN deg dv ON dv.node = e.dst
-),
-ek AS (
-  SELECT k, CAST(COUNT(*) AS BIGINT) AS dir_e
-  FROM ks JOIN e2 ON ds > k AND dd > k GROUP BY k
-)
-SELECT nk.k, nk.n_nodes,
-       CAST(COALESCE(ek.dir_e, 0) / 2 AS BIGINT) AS n_club_edges,
-       ROUND(COALESCE(ek.dir_e, 0) * 1.0
-             / (nk.n_nodes * (nk.n_nodes - 1)), 6) AS phi
-FROM nk LEFT JOIN ek ON nk.k = ek.k
-WHERE nk.n_nodes >= 2
-"""
-
-
 # ---------------------------------------------------------------------------
 # Cronbach's alpha over the leading embedding dimensions
 # ---------------------------------------------------------------------------
@@ -1845,6 +1850,47 @@ WHERE nk.n_nodes >= 2
 ALPHA_K = 8
 
 
+def _cronbach_oracle() -> str:
+    cols = ", ".join(
+        f"CAST(embedding[{i}] AS DOUBLE) AS x{i}"
+        for i in range(1, ALPHA_K + 1)
+    )
+    tot = " + ".join(f"x{i}" for i in range(1, ALPHA_K + 1))
+    sums = ", ".join(
+        f"SUM(x{i}) AS s{i}, SUM(x{i} * x{i}) AS ss{i}"
+        for i in range(1, ALPHA_K + 1)
+    )
+    item_var = " + ".join(
+        f"(ss{i} - s{i} * s{i} / n) / (n - 1)"
+        for i in range(1, ALPHA_K + 1)
+    )
+    return f"""
+WITH rows0 AS (SELECT {cols} FROM embeddings),
+rows1 AS (SELECT *, {tot} AS tot FROM rows0),
+m AS (
+  SELECT CAST(COUNT(*) AS DOUBLE) AS n, {sums},
+         SUM(tot) AS st, SUM(tot * tot) AS stt
+  FROM rows1
+),
+v AS (
+  SELECT n, {item_var} AS item_var,
+         (stt - st * st / n) / (n - 1) AS tot_var
+  FROM m
+)
+SELECT CAST({ALPHA_K} AS INTEGER) AS k_items,
+       CAST(n AS BIGINT) AS n_rows,
+       ROUND(item_var, 6) AS item_var_sum,
+       ROUND(tot_var, 6) AS total_var,
+       ROUND({ALPHA_K}.0 / ({ALPHA_K} - 1)
+             * (1.0 - item_var / tot_var), 6) AS cronbach_alpha
+FROM v
+"""
+
+
+CRONBACH_ORACLE = _cronbach_oracle()
+
+
+@query("stats_cronbach_alpha_embeddings", oracle=CRONBACH_ORACLE)
 def stats_cronbach_alpha_embeddings(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1902,46 +1948,6 @@ def stats_cronbach_alpha_embeddings(
     )
 
 
-def _cronbach_oracle() -> str:
-    cols = ", ".join(
-        f"CAST(embedding[{i}] AS DOUBLE) AS x{i}"
-        for i in range(1, ALPHA_K + 1)
-    )
-    tot = " + ".join(f"x{i}" for i in range(1, ALPHA_K + 1))
-    sums = ", ".join(
-        f"SUM(x{i}) AS s{i}, SUM(x{i} * x{i}) AS ss{i}"
-        for i in range(1, ALPHA_K + 1)
-    )
-    item_var = " + ".join(
-        f"(ss{i} - s{i} * s{i} / n) / (n - 1)"
-        for i in range(1, ALPHA_K + 1)
-    )
-    return f"""
-WITH rows0 AS (SELECT {cols} FROM embeddings),
-rows1 AS (SELECT *, {tot} AS tot FROM rows0),
-m AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS n, {sums},
-         SUM(tot) AS st, SUM(tot * tot) AS stt
-  FROM rows1
-),
-v AS (
-  SELECT n, {item_var} AS item_var,
-         (stt - st * st / n) / (n - 1) AS tot_var
-  FROM m
-)
-SELECT CAST({ALPHA_K} AS INTEGER) AS k_items,
-       CAST(n AS BIGINT) AS n_rows,
-       ROUND(item_var, 6) AS item_var_sum,
-       ROUND(tot_var, 6) AS total_var,
-       ROUND({ALPHA_K}.0 / ({ALPHA_K} - 1)
-             * (1.0 - item_var / tot_var), 6) AS cronbach_alpha
-FROM v
-"""
-
-
-CRONBACH_ORACLE = _cronbach_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Hurst exponent via rescaled-range analysis of daily order counts
 # ---------------------------------------------------------------------------
@@ -1949,6 +1955,64 @@ CRONBACH_ORACLE = _cronbach_oracle()
 HURST_WINDOWS = (16, 32, 64, 128)
 
 
+HURST_ORACLE = f"""
+WITH daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS day,
+         CAST(COUNT(*) AS DOUBLE) AS x
+  FROM orders GROUP BY 1
+),
+idx AS (
+  SELECT ROW_NUMBER() OVER (ORDER BY day) - 1 AS i, x FROM daily
+),
+blocked AS (
+  SELECT n.n, CAST(FLOOR(i / n.n) AS BIGINT) AS b, i, x
+  FROM idx, unnest([{", ".join(str(n) for n in HURST_WINDOWS)}])
+    AS n(n)
+),
+counts AS (
+  SELECT n, b, COUNT(*) AS cnt, AVG(x) AS m
+  FROM blocked GROUP BY 1, 2
+),
+dev AS (
+  SELECT bl.n, bl.b, bl.x, c.m,
+         SUM(bl.x - c.m) OVER (PARTITION BY bl.n, bl.b ORDER BY bl.i
+                               ROWS UNBOUNDED PRECEDING) AS cum
+  FROM blocked bl JOIN counts c ON bl.n = c.n AND bl.b = c.b
+  WHERE c.cnt = bl.n
+),
+per_block AS (
+  SELECT n, b,
+         (MAX(cum) - MIN(cum))
+           / NULLIF(SQRT(AVG((x - m) * (x - m))), 0.0)
+           AS rs
+  FROM dev GROUP BY 1, 2
+),
+per_size AS (
+  SELECT n, CAST(COUNT(rs) AS BIGINT) AS n_blocks,
+         AVG(rs) AS avg_rs
+  FROM per_block GROUP BY 1
+),
+pts AS (
+  SELECT n, n_blocks, avg_rs,
+         LN(CAST(n AS DOUBLE)) AS lx, LN(avg_rs) AS ly
+  FROM per_size
+),
+fit AS (
+  SELECT n, n_blocks, avg_rs,
+         (COUNT(*) OVER () * SUM(lx * ly) OVER ()
+          - SUM(lx) OVER () * SUM(ly) OVER ())
+         / (COUNT(*) OVER () * SUM(lx * lx) OVER ()
+            - SUM(lx) OVER () * SUM(lx) OVER ()) AS h
+  FROM pts
+)
+SELECT CAST(n AS INTEGER) AS window_n, n_blocks,
+       ROUND(avg_rs, 6) AS avg_rs, ROUND(h, 6) AS hurst
+FROM fit
+ORDER BY window_n
+"""
+
+
+@query("stats_hurst_rs_daily", oracle=HURST_ORACLE)
 def stats_hurst_rs_daily(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2053,68 +2117,36 @@ def stats_hurst_rs_daily(
     ).orderBy("window_n")
 
 
-HURST_ORACLE = f"""
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(COUNT(*) AS DOUBLE) AS x
-  FROM orders GROUP BY 1
-),
-idx AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY day) - 1 AS i, x FROM daily
-),
-blocked AS (
-  SELECT n.n, CAST(FLOOR(i / n.n) AS BIGINT) AS b, i, x
-  FROM idx, unnest([{", ".join(str(n) for n in HURST_WINDOWS)}])
-    AS n(n)
-),
-counts AS (
-  SELECT n, b, COUNT(*) AS cnt, AVG(x) AS m
-  FROM blocked GROUP BY 1, 2
-),
-dev AS (
-  SELECT bl.n, bl.b, bl.x, c.m,
-         SUM(bl.x - c.m) OVER (PARTITION BY bl.n, bl.b ORDER BY bl.i
-                               ROWS UNBOUNDED PRECEDING) AS cum
-  FROM blocked bl JOIN counts c ON bl.n = c.n AND bl.b = c.b
-  WHERE c.cnt = bl.n
-),
-per_block AS (
-  SELECT n, b,
-         (MAX(cum) - MIN(cum))
-           / NULLIF(SQRT(AVG((x - m) * (x - m))), 0.0)
-           AS rs
-  FROM dev GROUP BY 1, 2
-),
-per_size AS (
-  SELECT n, CAST(COUNT(rs) AS BIGINT) AS n_blocks,
-         AVG(rs) AS avg_rs
-  FROM per_block GROUP BY 1
-),
-pts AS (
-  SELECT n, n_blocks, avg_rs,
-         LN(CAST(n AS DOUBLE)) AS lx, LN(avg_rs) AS ly
-  FROM per_size
-),
-fit AS (
-  SELECT n, n_blocks, avg_rs,
-         (COUNT(*) OVER () * SUM(lx * ly) OVER ()
-          - SUM(lx) OVER () * SUM(ly) OVER ())
-         / (COUNT(*) OVER () * SUM(lx * lx) OVER ()
-            - SUM(lx) OVER () * SUM(lx) OVER ()) AS h
-  FROM pts
-)
-SELECT CAST(n AS INTEGER) AS window_n, n_blocks,
-       ROUND(avg_rs, 6) AS avg_rs, ROUND(h, 6) AS hurst
-FROM fit
-ORDER BY window_n
-"""
-
-
 # ---------------------------------------------------------------------------
 # Deterministic class-balanced downsample of documents by language
 # ---------------------------------------------------------------------------
 
 
+BALANCED_ORACLE = """
+WITH ranked AS (
+  SELECT lang, doc_id,
+         ROW_NUMBER() OVER (PARTITION BY lang
+                            ORDER BY md5(CAST(doc_id AS VARCHAR)),
+                                     doc_id) AS rn
+  FROM documents
+),
+nm AS (
+  SELECT MIN(c) AS n_min
+  FROM (SELECT COUNT(*) AS c FROM documents GROUP BY lang)
+)
+SELECT lang,
+       CAST(COUNT(*) AS BIGINT) AS n_before,
+       CAST(SUM(CASE WHEN rn <= n_min THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_after,
+       CAST(SUM(CASE WHEN rn <= n_min THEN doc_id END)
+            AS BIGINT) AS kept_key_sum
+FROM ranked, nm
+GROUP BY lang
+ORDER BY lang
+"""
+
+
+@query("sample_balanced_downsample", oracle=BALANCED_ORACLE)
 def sample_balanced_downsample(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2164,30 +2196,6 @@ def sample_balanced_downsample(
     )
 
 
-BALANCED_ORACLE = """
-WITH ranked AS (
-  SELECT lang, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY lang
-                            ORDER BY md5(CAST(doc_id AS VARCHAR)),
-                                     doc_id) AS rn
-  FROM documents
-),
-nm AS (
-  SELECT MIN(c) AS n_min
-  FROM (SELECT COUNT(*) AS c FROM documents GROUP BY lang)
-)
-SELECT lang,
-       CAST(COUNT(*) AS BIGINT) AS n_before,
-       CAST(SUM(CASE WHEN rn <= n_min THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_after,
-       CAST(SUM(CASE WHEN rn <= n_min THEN doc_id END)
-            AS BIGINT) AS kept_key_sum
-FROM ranked, nm
-GROUP BY lang
-ORDER BY lang
-"""
-
-
 # ---------------------------------------------------------------------------
 # Versioned-table data-skipping audit
 # ---------------------------------------------------------------------------
@@ -2195,6 +2203,17 @@ ORDER BY lang
 SKIP_LO, SKIP_HI = 2200.0, 2800.0
 
 
+VERSIONED_SKIP_ORACLE = f"""
+SELECT CAST(3 AS BIGINT) AS n_dirs,
+       CAST(2 AS BIGINT) AS n_dirs_pruned,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(c_custkey) AS BIGINT) AS key_sum
+FROM customer
+WHERE c_acctbal >= {SKIP_LO} AND c_acctbal < {SKIP_HI}
+"""
+
+
+@query("versioned_skipping_audit", oracle=VERSIONED_SKIP_ORACLE)
 def versioned_skipping_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2266,110 +2285,3 @@ def versioned_skipping_audit(
         F.count("*").cast("long").alias("n_rows"),
         F.sum("c_custkey").cast("long").alias("key_sum"),
     )
-
-
-VERSIONED_SKIP_ORACLE = f"""
-SELECT CAST(3 AS BIGINT) AS n_dirs,
-       CAST(2 AS BIGINT) AS n_dirs_pruned,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(c_custkey) AS BIGINT) AS key_sum
-FROM customer
-WHERE c_acctbal >= {SKIP_LO} AND c_acctbal < {SKIP_HI}
-"""
-
-
-# ---------------------------------------------------------------------------
-# Registration hook for round 14
-# ---------------------------------------------------------------------------
-
-PENDING_ORDER = [
-    "eval_ndcg_at_k",
-    "eval_ece_mce",
-    "eval_score_ks_separation",
-    "stats_mann_whitney_u",
-    "stats_kendall_tau_daily",
-    "stats_ols_daily_trend",
-    "stats_jarque_bera_normality",
-    "stats_grubbs_extreme_outlier",
-    "stats_ljung_box_daily",
-    "stats_two_proportion_ztest",
-    "sample_neyman_allocation",
-    "privacy_t_closeness_audit",
-    "text_yule_k_richness",
-    "text_js_shift_terms",
-    "events_conditional_entropy",
-    "graph_rich_club_coefficients",
-    "stats_cronbach_alpha_embeddings",
-    "stats_hurst_rs_daily",
-    "sample_balanced_downsample",
-    "versioned_skipping_audit",
-]
-
-_PENDING = {
-    "eval_ndcg_at_k": (eval_ndcg_at_k, NDCG_ORACLE),
-    "eval_ece_mce": (eval_ece_mce, ECE_ORACLE),
-    "eval_score_ks_separation": (
-        eval_score_ks_separation,
-        KS_SEP_ORACLE,
-    ),
-    "stats_mann_whitney_u": (stats_mann_whitney_u, MW_ORACLE),
-    "stats_kendall_tau_daily": (
-        stats_kendall_tau_daily,
-        KENDALL_ORACLE,
-    ),
-    "stats_ols_daily_trend": (stats_ols_daily_trend, OLS_ORACLE),
-    "stats_jarque_bera_normality": (
-        stats_jarque_bera_normality,
-        JB_ORACLE,
-    ),
-    "stats_grubbs_extreme_outlier": (
-        stats_grubbs_extreme_outlier,
-        GRUBBS_ORACLE,
-    ),
-    "stats_ljung_box_daily": (stats_ljung_box_daily, LJUNG_ORACLE),
-    "stats_two_proportion_ztest": (
-        stats_two_proportion_ztest,
-        PROP_ORACLE,
-    ),
-    "sample_neyman_allocation": (
-        sample_neyman_allocation,
-        NEYMAN_ORACLE,
-    ),
-    "privacy_t_closeness_audit": (
-        privacy_t_closeness_audit,
-        TCLOSE_ORACLE,
-    ),
-    "text_yule_k_richness": (text_yule_k_richness, YULE_ORACLE),
-    "text_js_shift_terms": (text_js_shift_terms, JS_SHIFT_ORACLE),
-    "events_conditional_entropy": (
-        events_conditional_entropy,
-        COND_ENTROPY_ORACLE,
-    ),
-    "graph_rich_club_coefficients": (
-        graph_rich_club_coefficients,
-        RICH_CLUB_ORACLE,
-    ),
-    "stats_cronbach_alpha_embeddings": (
-        stats_cronbach_alpha_embeddings,
-        CRONBACH_ORACLE,
-    ),
-    "stats_hurst_rs_daily": (stats_hurst_rs_daily, HURST_ORACLE),
-    "sample_balanced_downsample": (
-        sample_balanced_downsample,
-        BALANCED_ORACLE,
-    ),
-    "versioned_skipping_audit": (
-        versioned_skipping_audit,
-        VERSIONED_SKIP_ORACLE,
-    ),
-}
-
-
-def register_all() -> None:
-    """Register every pending query (round-14 hook). One-shot: the
-    registry's duplicate check fires on a second call."""
-    from cdc_2025_spark.queries.registry import query
-
-    for name in PENDING_ORDER:
-        fn, oracle = _PENDING[name]
-        query(name, oracle=oracle)(fn)

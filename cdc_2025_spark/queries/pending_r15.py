@@ -1,4 +1,4 @@
-"""Round-15 registration queue: the REGRESSION-DIAGNOSTIC &
+"""Round-15 queries: the REGRESSION-DIAGNOSTIC &
 RANK-AGREEMENT family — the inferential layer above round 14's
 trend/normality rung, plus the lexical-estimation and link-analysis
 gaps the corpus/graph audits still had:
@@ -64,17 +64,10 @@ with key-bounding-box dir pruning), and the CHECK-constraint audit
 the r14 skipping-audit posture for the compaction, DML/MERGE and
 constraint layers.
 
-NOT imported by queries/__init__.py on purpose (the
-pending_r10-r14 posture): the freshness guard requires
-never-checked queries to LEAD a verification window, and the
-round-14 window is already composed. Registering is one call — add
-``pending_r15`` to the import list, call :func:`register_all`, and
-front-load :data:`PENDING_ORDER` in the round-15 ``_VERIFY_FIRST``.
-
-Until then tests/test_pending_r15.py runs each query against its
-oracle at DRIVER STRENGTH (exact values, type-family match, and the
-oracle-type safety sweep) at sf0.001 + sf0.01, plus an independent
-python/numpy model pin per statistic.
+Each query registers through ``@query``; tests/test_pending_r15.py
+runs each one against its oracle at DRIVER STRENGTH (exact values,
+type-family match, and the oracle-type safety sweep), plus an
+independent python/numpy model pin per statistic.
 
 Pre-registration sf0.1 wall times (min-of-2, warm idle local[32],
 for the round-15 bench.py HEADLINE additions): Durbin-Watson
@@ -122,6 +115,7 @@ from cdc_2025_spark.queries.pending_r14 import (
     _scored_docs_with_id,
     _SCORED_SQL,
 )
+from cdc_2025_spark.queries.registry import query
 
 # ---------------------------------------------------------------------------
 # shared: the day-indexed daily-revenue frame + its OLS residuals
@@ -247,6 +241,26 @@ def _wh_upper(q: F.Column, df: float) -> F.Column:
 # ---------------------------------------------------------------------------
 
 
+DW_ORACLE = f"""
+WITH {_RESID_SQL},
+lagged AS (
+  SELECT e, LAG(e) OVER (ORDER BY i) AS e_prev FROM resid
+),
+agg AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
+         SUM(CASE WHEN e_prev IS NOT NULL
+                  THEN (e - e_prev) * (e - e_prev) END) AS num,
+         SUM(e * e) AS den
+  FROM lagged
+)
+SELECT n_days,
+       ROUND(num / den, 6) AS dw_stat,
+       ROUND(1.0 - (num / den) / 2.0, 6) AS rho_hat
+FROM agg
+"""
+
+
+@query("stats_durbin_watson_residuals", oracle=DW_ORACLE)
 def stats_durbin_watson_residuals(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -290,30 +304,34 @@ def stats_durbin_watson_residuals(
     )
 
 
-DW_ORACLE = f"""
-WITH {_RESID_SQL},
-lagged AS (
-  SELECT e, LAG(e) OVER (ORDER BY i) AS e_prev FROM resid
-),
-agg AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-         SUM(CASE WHEN e_prev IS NOT NULL
-                  THEN (e - e_prev) * (e - e_prev) END) AS num,
-         SUM(e * e) AS den
-  FROM lagged
-)
-SELECT n_days,
-       ROUND(num / den, 6) AS dw_stat,
-       ROUND(1.0 - (num / den) / 2.0, 6) AS rho_hat
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # Breusch-Pagan heteroskedasticity LM test
 # ---------------------------------------------------------------------------
 
 
+BP_ORACLE = f"""
+WITH {_RESID_SQL},
+aux AS (SELECT t, e * e AS u FROM resid),
+m2 AS (
+  SELECT CAST(COUNT(*) AS DOUBLE) AS n, SUM(t) AS st, SUM(u) AS su,
+         SUM(t * t) AS stt, SUM(t * u) AS stu, SUM(u * u) AS suu
+  FROM aux
+),
+lm AS (
+  SELECT n,
+         n * (((stu - st * su / n) * (stu - st * su / n))
+              / ((stt - st * st / n) * (suu - su * su / n))) AS lm
+  FROM m2
+),
+zz AS (SELECT n, lm, SQRT(lm) AS za FROM lm)
+SELECT CAST(n AS BIGINT) AS n_days,
+       ROUND(lm, 6) AS lm_stat,
+       ROUND({_ans_sql('za')}, 6) AS p_value
+FROM zz
+"""
+
+
+@query("stats_breusch_pagan_hetero", oracle=BP_ORACLE)
 def stats_breusch_pagan_hetero(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -355,33 +373,59 @@ def stats_breusch_pagan_hetero(
     )
 
 
-BP_ORACLE = f"""
-WITH {_RESID_SQL},
-aux AS (SELECT t, e * e AS u FROM resid),
-m2 AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS n, SUM(t) AS st, SUM(u) AS su,
-         SUM(t * t) AS stt, SUM(t * u) AS stu, SUM(u * u) AS suu
-  FROM aux
-),
-lm AS (
-  SELECT n,
-         n * (((stu - st * su / n) * (stu - st * su / n))
-              / ((stt - st * st / n) * (suu - su * su / n))) AS lm
-  FROM m2
-),
-zz AS (SELECT n, lm, SQRT(lm) AS za FROM lm)
-SELECT CAST(n AS BIGINT) AS n_days,
-       ROUND(lm, 6) AS lm_stat,
-       ROUND({_ans_sql('za')}, 6) AS p_value
-FROM zz
-"""
-
-
 # ---------------------------------------------------------------------------
 # Chow structural-break F at the series midpoint
 # ---------------------------------------------------------------------------
 
 
+CHOW_ORACLE = f"""
+WITH {_DAILY_IDX_SQL},
+halves AS (
+  SELECT CASE WHEN i <= (SELECT COUNT(*) FROM idx) / 2.0
+              THEN 1 ELSE 0 END AS h, t, y
+  FROM idx
+),
+mh AS (
+  SELECT h, CAST(COUNT(*) AS DOUBLE) AS n, SUM(t) AS st,
+         SUM(y) AS sy, SUM(t * t) AS stt, SUM(t * y) AS sty,
+         SUM(y * y) AS syy
+  FROM halves GROUP BY h
+),
+sh AS (
+  SELECT h, n,
+         (syy - sy * sy / n)
+           - ((sty - st * sy / n) * (sty - st * sy / n))
+             / (stt - st * st / n) AS ssr_h
+  FROM mh
+),
+agg AS (
+  SELECT SUM(CASE WHEN h = 1 THEN n END) AS n1,
+         SUM(CASE WHEN h = 0 THEN n END) AS n2,
+         SUM(ssr_h) AS ssr_sum
+  FROM sh
+),
+mp AS (
+  SELECT CAST(COUNT(*) AS DOUBLE) AS n, SUM(t) AS st, SUM(y) AS sy,
+         SUM(t * t) AS stt, SUM(t * y) AS sty, SUM(y * y) AS syy
+  FROM halves
+),
+sp AS (
+  SELECT (syy - sy * sy / n)
+           - ((sty - st * sy / n) * (sty - st * sy / n))
+             / (stt - st * st / n) AS ssr_pooled
+  FROM mp
+)
+SELECT CAST(n1 AS BIGINT) AS n_first,
+       CAST(n2 AS BIGINT) AS n_second,
+       ROUND(ssr_pooled, 4) AS ssr_pooled,
+       ROUND(ssr_sum, 4) AS ssr_split,
+       ROUND(((ssr_pooled - ssr_sum) / 2.0)
+             / (ssr_sum / (n1 + n2 - 4.0)), 6) AS f_stat
+FROM agg, sp
+"""
+
+
+@query("stats_chow_structural_break", oracle=CHOW_ORACLE)
 def stats_chow_structural_break(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -454,58 +498,42 @@ def stats_chow_structural_break(
     )
 
 
-CHOW_ORACLE = f"""
-WITH {_DAILY_IDX_SQL},
-halves AS (
-  SELECT CASE WHEN i <= (SELECT COUNT(*) FROM idx) / 2.0
-              THEN 1 ELSE 0 END AS h, t, y
-  FROM idx
-),
-mh AS (
-  SELECT h, CAST(COUNT(*) AS DOUBLE) AS n, SUM(t) AS st,
-         SUM(y) AS sy, SUM(t * t) AS stt, SUM(t * y) AS sty,
-         SUM(y * y) AS syy
-  FROM halves GROUP BY h
-),
-sh AS (
-  SELECT h, n,
-         (syy - sy * sy / n)
-           - ((sty - st * sy / n) * (sty - st * sy / n))
-             / (stt - st * st / n) AS ssr_h
-  FROM mh
-),
-agg AS (
-  SELECT SUM(CASE WHEN h = 1 THEN n END) AS n1,
-         SUM(CASE WHEN h = 0 THEN n END) AS n2,
-         SUM(ssr_h) AS ssr_sum
-  FROM sh
-),
-mp AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS n, SUM(t) AS st, SUM(y) AS sy,
-         SUM(t * t) AS stt, SUM(t * y) AS sty, SUM(y * y) AS syy
-  FROM halves
-),
-sp AS (
-  SELECT (syy - sy * sy / n)
-           - ((sty - st * sy / n) * (sty - st * sy / n))
-             / (stt - st * st / n) AS ssr_pooled
-  FROM mp
-)
-SELECT CAST(n1 AS BIGINT) AS n_first,
-       CAST(n2 AS BIGINT) AS n_second,
-       ROUND(ssr_pooled, 4) AS ssr_pooled,
-       ROUND(ssr_sum, 4) AS ssr_split,
-       ROUND(((ssr_pooled - ssr_sum) / 2.0)
-             / (ssr_sum / (n1 + n2 - 4.0)), 6) AS f_stat
-FROM agg, sp
-"""
-
-
 # ---------------------------------------------------------------------------
 # Cox-Stuart paired-halves trend sign test
 # ---------------------------------------------------------------------------
 
 
+COX_STUART_ORACLE = f"""
+WITH {_DAILY_IDX_SQL},
+pairs AS (
+  SELECT a.y AS y1, b.y AS y2
+  FROM idx a
+  JOIN idx b
+    ON b.i = a.i + CAST(CEIL((SELECT COUNT(*) FROM idx) / 2.0)
+                        AS BIGINT)
+),
+agg AS (
+  SELECT CAST(SUM(CASE WHEN y2 > y1 THEN 1 ELSE 0 END)
+              AS BIGINT) AS plus,
+         CAST(SUM(CASE WHEN y2 < y1 THEN 1 ELSE 0 END)
+              AS BIGINT) AS minus
+  FROM pairs
+),
+zz AS (
+  SELECT plus, minus,
+         (ABS(plus - (plus + minus) / 2.0) - 0.5)
+           / SQRT((plus + minus) / 4.0) AS za
+  FROM agg
+)
+SELECT CAST(plus + minus AS BIGINT) AS n_pairs,
+       plus AS n_up, minus AS n_down,
+       ROUND(za, 6) AS z_stat,
+       ROUND({_ans_sql('za')}, 6) AS p_value
+FROM zz
+"""
+
+
+@query("stats_cox_stuart_trend", oracle=COX_STUART_ORACLE)
 def stats_cox_stuart_trend(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -550,41 +578,49 @@ def stats_cox_stuart_trend(
     )
 
 
-COX_STUART_ORACLE = f"""
-WITH {_DAILY_IDX_SQL},
-pairs AS (
-  SELECT a.y AS y1, b.y AS y2
-  FROM idx a
-  JOIN idx b
-    ON b.i = a.i + CAST(CEIL((SELECT COUNT(*) FROM idx) / 2.0)
-                        AS BIGINT)
-),
-agg AS (
-  SELECT CAST(SUM(CASE WHEN y2 > y1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS plus,
-         CAST(SUM(CASE WHEN y2 < y1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS minus
-  FROM pairs
-),
-zz AS (
-  SELECT plus, minus,
-         (ABS(plus - (plus + minus) / 2.0) - 0.5)
-           / SQRT((plus + minus) / 4.0) AS za
-  FROM agg
-)
-SELECT CAST(plus + minus AS BIGINT) AS n_pairs,
-       plus AS n_up, minus AS n_down,
-       ROUND(za, 6) AS z_stat,
-       ROUND({_ans_sql('za')}, 6) AS p_value
-FROM zz
-"""
-
-
 # ---------------------------------------------------------------------------
 # Bartels rank von Neumann randomness ratio
 # ---------------------------------------------------------------------------
 
 
+BARTELS_ORACLE = f"""
+WITH {_DAILY_IDX_SQL},
+ranked AS (
+  SELECT i,
+         RANK() OVER (ORDER BY y)
+           + (COUNT(*) OVER (PARTITION BY y) - 1) / 2.0 AS r
+  FROM idx
+),
+lagged AS (
+  SELECT r, LEAD(r) OVER (ORDER BY i) AS r_next FROM ranked
+),
+agg AS (
+  SELECT CAST(COUNT(*) AS DOUBLE) AS n,
+         SUM(CASE WHEN r_next IS NOT NULL
+                  THEN (r - r_next) * (r - r_next) END) AS num
+  FROM lagged
+),
+den AS (
+  SELECT SUM((r - (n + 1) / 2.0) * (r - (n + 1) / 2.0)) AS den
+  FROM ranked, agg GROUP BY n
+),
+zz AS (
+  SELECT n, num / den AS rvn,
+         (num / den - 2.0)
+           / SQRT(4.0 * (n - 2) * (5.0 * n * n - 2.0 * n - 9.0)
+                  / (5.0 * n * (n + 1) * (n - 1) * (n - 1))) AS z
+  FROM agg, den
+),
+zf AS (SELECT n, rvn, z, ABS(z) AS za FROM zz)
+SELECT CAST(n AS BIGINT) AS n_days,
+       ROUND(rvn, 6) AS rvn_stat,
+       ROUND(z, 6) AS z_stat,
+       ROUND({_ans_sql('za')}, 6) AS p_value
+FROM zf
+"""
+
+
+@query("stats_bartels_vonneumann_rank", oracle=BARTELS_ORACLE)
 def stats_bartels_vonneumann_rank(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -658,48 +694,50 @@ def stats_bartels_vonneumann_rank(
     )
 
 
-BARTELS_ORACLE = f"""
-WITH {_DAILY_IDX_SQL},
-ranked AS (
-  SELECT i,
-         RANK() OVER (ORDER BY y)
-           + (COUNT(*) OVER (PARTITION BY y) - 1) / 2.0 AS r
-  FROM idx
-),
-lagged AS (
-  SELECT r, LEAD(r) OVER (ORDER BY i) AS r_next FROM ranked
-),
-agg AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         SUM(CASE WHEN r_next IS NOT NULL
-                  THEN (r - r_next) * (r - r_next) END) AS num
-  FROM lagged
-),
-den AS (
-  SELECT SUM((r - (n + 1) / 2.0) * (r - (n + 1) / 2.0)) AS den
-  FROM ranked, agg GROUP BY n
-),
-zz AS (
-  SELECT n, num / den AS rvn,
-         (num / den - 2.0)
-           / SQRT(4.0 * (n - 2) * (5.0 * n * n - 2.0 * n - 9.0)
-                  / (5.0 * n * (n + 1) * (n - 1) * (n - 1))) AS z
-  FROM agg, den
-),
-zf AS (SELECT n, rvn, z, ABS(z) AS za FROM zz)
-SELECT CAST(n AS BIGINT) AS n_days,
-       ROUND(rvn, 6) AS rvn_stat,
-       ROUND(z, 6) AS z_stat,
-       ROUND({_ans_sql('za')}, 6) AS p_value
-FROM zf
-"""
-
-
 # ---------------------------------------------------------------------------
 # Mood's median test of order values across segments
 # ---------------------------------------------------------------------------
 
 
+MOOD_ORACLE = f"""
+WITH ords AS (
+  SELECT c_mktsegment, o_totalprice
+  FROM orders JOIN customer ON o_custkey = c_custkey
+),
+med AS (SELECT quantile_disc(o_totalprice, 0.5) AS med FROM ords),
+cells AS (
+  SELECT c_mktsegment,
+         CAST(SUM(CASE WHEN o_totalprice > med THEN 1 ELSE 0 END)
+              AS BIGINT) AS above,
+         CAST(SUM(CASE WHEN o_totalprice <= med THEN 1 ELSE 0 END)
+              AS BIGINT) AS notabove
+  FROM ords, med GROUP BY c_mktsegment
+),
+tot AS (
+  SELECT CAST(SUM(above) AS DOUBLE) AS ta,
+         CAST(SUM(notabove) AS DOUBLE) AS tn,
+         CAST(COUNT(*) AS BIGINT) AS k
+  FROM cells
+),
+chi AS (
+  SELECT k, ta, tn,
+         SUM((above - (above + notabove) * ta / (ta + tn))
+             * (above - (above + notabove) * ta / (ta + tn))
+             / ((above + notabove) * ta / (ta + tn))
+           + (notabove - (above + notabove) * tn / (ta + tn))
+             * (notabove - (above + notabove) * tn / (ta + tn))
+             / ((above + notabove) * tn / (ta + tn))) AS chi2
+  FROM cells, tot GROUP BY k, ta, tn
+)
+SELECT CAST(k AS BIGINT) AS k_segments,
+       CAST(ta + tn AS BIGINT) AS n_orders,
+       ROUND(chi2, 6) AS chi2,
+       ROUND({_wh_upper_sql('chi2', 4.0)}, 6) AS p_value
+FROM chi
+"""
+
+
+@query("stats_mood_median_test", oracle=MOOD_ORACLE)
 def stats_mood_median_test(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -776,44 +814,6 @@ def stats_mood_median_test(
     )
 
 
-MOOD_ORACLE = f"""
-WITH ords AS (
-  SELECT c_mktsegment, o_totalprice
-  FROM orders JOIN customer ON o_custkey = c_custkey
-),
-med AS (SELECT quantile_disc(o_totalprice, 0.5) AS med FROM ords),
-cells AS (
-  SELECT c_mktsegment,
-         CAST(SUM(CASE WHEN o_totalprice > med THEN 1 ELSE 0 END)
-              AS BIGINT) AS above,
-         CAST(SUM(CASE WHEN o_totalprice <= med THEN 1 ELSE 0 END)
-              AS BIGINT) AS notabove
-  FROM ords, med GROUP BY c_mktsegment
-),
-tot AS (
-  SELECT CAST(SUM(above) AS DOUBLE) AS ta,
-         CAST(SUM(notabove) AS DOUBLE) AS tn,
-         CAST(COUNT(*) AS BIGINT) AS k
-  FROM cells
-),
-chi AS (
-  SELECT k, ta, tn,
-         SUM((above - (above + notabove) * ta / (ta + tn))
-             * (above - (above + notabove) * ta / (ta + tn))
-             / ((above + notabove) * ta / (ta + tn))
-           + (notabove - (above + notabove) * tn / (ta + tn))
-             * (notabove - (above + notabove) * tn / (ta + tn))
-             / ((above + notabove) * tn / (ta + tn))) AS chi2
-  FROM cells, tot GROUP BY k, ta, tn
-)
-SELECT CAST(k AS BIGINT) AS k_segments,
-       CAST(ta + tn AS BIGINT) AS n_orders,
-       ROUND(chi2, 6) AS chi2,
-       ROUND({_wh_upper_sql('chi2', 4.0)}, 6) AS p_value
-FROM chi
-"""
-
-
 # ---------------------------------------------------------------------------
 # Kendall's W concordance: segments ranking the order years
 # ---------------------------------------------------------------------------
@@ -869,6 +869,34 @@ ranks AS (
 )"""
 
 
+KENDALL_W_ORACLE = f"""
+WITH {_SEG_YEAR_RANKS_SQL},
+per_year AS (
+  SELECT yr, SUM(r) AS rsum, CAST(COUNT(*) AS DOUBLE) AS m
+  FROM ranks GROUP BY yr
+),
+agg AS (
+  SELECT CAST(COUNT(*) AS DOUBLE) AS n, MAX(m) AS m,
+         SUM(rsum) AS tot, SUM(rsum * rsum) AS tot2
+  FROM per_year
+),
+wstat AS (
+  SELECT n, m,
+         12.0 * (tot2 - tot * tot / n)
+           / (m * m * (n * n * n - n)) AS w
+  FROM agg
+),
+chi AS (SELECT n, m, w, m * (n - 1) * w AS chi2 FROM wstat)
+SELECT CAST(m AS BIGINT) AS m_judges,
+       CAST(n AS BIGINT) AS n_years,
+       ROUND(w, 6) AS kendalls_w,
+       ROUND(chi2, 6) AS chi2,
+       ROUND({_wh_upper_sql('chi2', 6.0)}, 6) AS p_value
+FROM chi
+"""
+
+
+@query("stats_kendalls_w_concordance", oracle=KENDALL_W_ORACLE)
 def stats_kendalls_w_concordance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -910,38 +938,48 @@ def stats_kendalls_w_concordance(
     )
 
 
-KENDALL_W_ORACLE = f"""
-WITH {_SEG_YEAR_RANKS_SQL},
-per_year AS (
-  SELECT yr, SUM(r) AS rsum, CAST(COUNT(*) AS DOUBLE) AS m
-  FROM ranks GROUP BY yr
-),
-agg AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS n, MAX(m) AS m,
-         SUM(rsum) AS tot, SUM(rsum * rsum) AS tot2
-  FROM per_year
-),
-wstat AS (
-  SELECT n, m,
-         12.0 * (tot2 - tot * tot / n)
-           / (m * m * (n * n * n - n)) AS w
-  FROM agg
-),
-chi AS (SELECT n, m, w, m * (n - 1) * w AS chi2 FROM wstat)
-SELECT CAST(m AS BIGINT) AS m_judges,
-       CAST(n AS BIGINT) AS n_years,
-       ROUND(w, 6) AS kendalls_w,
-       ROUND(chi2, 6) AS chi2,
-       ROUND({_wh_upper_sql('chi2', 6.0)}, 6) AS p_value
-FROM chi
-"""
-
-
 # ---------------------------------------------------------------------------
 # Friedman blocked rank test over the (year x segment) design
 # ---------------------------------------------------------------------------
 
 
+FRIEDMAN_ORACLE = f"""
+WITH cells AS (
+  SELECT CAST(year(o_orderdate) AS INTEGER) AS yr,
+         c_mktsegment AS seg,
+         ROUND(SUM(o_totalprice), 4) AS rev
+  FROM orders JOIN customer ON o_custkey = c_custkey
+  GROUP BY 1, 2
+),
+ranks AS (
+  SELECT yr, seg,
+         RANK() OVER (PARTITION BY yr ORDER BY rev)
+           + (COUNT(*) OVER (PARTITION BY yr, rev) - 1) / 2.0 AS r
+  FROM cells
+),
+per_seg AS (
+  SELECT seg, SUM(r) AS rsum, CAST(COUNT(*) AS DOUBLE) AS b
+  FROM ranks GROUP BY seg
+),
+agg AS (
+  SELECT CAST(COUNT(*) AS DOUBLE) AS k, MAX(b) AS b,
+         SUM(rsum * rsum) AS r2
+  FROM per_seg
+),
+chi AS (
+  SELECT b, k,
+         12.0 / (b * k * (k + 1)) * r2 - 3.0 * b * (k + 1) AS chi2
+  FROM agg
+)
+SELECT CAST(b AS BIGINT) AS n_blocks,
+       CAST(k AS BIGINT) AS k_treatments,
+       ROUND(chi2, 6) AS chi2,
+       ROUND({_wh_upper_sql('chi2', 4.0)}, 6) AS p_value
+FROM chi
+"""
+
+
+@query("stats_friedman_blocked_ranks", oracle=FRIEDMAN_ORACLE)
 def stats_friedman_blocked_ranks(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1006,47 +1044,47 @@ def stats_friedman_blocked_ranks(
     )
 
 
-FRIEDMAN_ORACLE = f"""
-WITH cells AS (
-  SELECT CAST(year(o_orderdate) AS INTEGER) AS yr,
-         c_mktsegment AS seg,
-         ROUND(SUM(o_totalprice), 4) AS rev
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  GROUP BY 1, 2
-),
-ranks AS (
-  SELECT yr, seg,
-         RANK() OVER (PARTITION BY yr ORDER BY rev)
-           + (COUNT(*) OVER (PARTITION BY yr, rev) - 1) / 2.0 AS r
-  FROM cells
-),
-per_seg AS (
-  SELECT seg, SUM(r) AS rsum, CAST(COUNT(*) AS DOUBLE) AS b
-  FROM ranks GROUP BY seg
-),
-agg AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS k, MAX(b) AS b,
-         SUM(rsum * rsum) AS r2
-  FROM per_seg
-),
-chi AS (
-  SELECT b, k,
-         12.0 / (b * k * (k + 1)) * r2 - 3.0 * b * (k + 1) AS chi2
-  FROM agg
-)
-SELECT CAST(b AS BIGINT) AS n_blocks,
-       CAST(k AS BIGINT) AS k_treatments,
-       ROUND(chi2, 6) AS chi2,
-       ROUND({_wh_upper_sql('chi2', 4.0)}, 6) AS p_value
-FROM chi
-"""
-
-
 # ---------------------------------------------------------------------------
 # Cochran's Q over per-(user, day) event-type indicators
 # ---------------------------------------------------------------------------
 
 
+COCHRAN_ORACLE = f"""
+WITH pres AS (
+  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day, event_type
+  FROM events
+),
+kf AS (
+  SELECT CAST(COUNT(DISTINCT event_type) AS DOUBLE) AS k FROM pres
+),
+rt AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_blocks,
+         CAST(SUM(ri) AS BIGINT) AS sr,
+         CAST(SUM(ri * ri) AS BIGINT) AS sr2
+  FROM (SELECT user_id, day, COUNT(*) AS ri
+        FROM pres GROUP BY 1, 2)
+),
+ct AS (
+  SELECT CAST(SUM(cj) AS BIGINT) AS sc,
+         CAST(SUM(cj * cj) AS BIGINT) AS sc2
+  FROM (SELECT event_type, COUNT(*) AS cj
+        FROM pres GROUP BY 1)
+),
+q AS (
+  SELECT n_blocks, k,
+         (k - 1) * (k * sc2 - sc * sc * 1.0)
+           / (k * sr - sr2) AS q
+  FROM rt, ct, kf
+)
+SELECT n_blocks,
+       CAST(k AS BIGINT) AS k_types,
+       ROUND(q, 6) AS q_stat,
+       ROUND({_wh_upper_sql('q', 4.0)}, 6) AS p_value
+FROM q
+"""
+
+
+@query("stats_cochran_q_event_types", oracle=COCHRAN_ORACLE)
 def stats_cochran_q_event_types(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1114,46 +1152,37 @@ def stats_cochran_q_event_types(
     )
 
 
-COCHRAN_ORACLE = f"""
-WITH pres AS (
-  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day, event_type
-  FROM events
-),
-kf AS (
-  SELECT CAST(COUNT(DISTINCT event_type) AS DOUBLE) AS k FROM pres
-),
-rt AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_blocks,
-         CAST(SUM(ri) AS BIGINT) AS sr,
-         CAST(SUM(ri * ri) AS BIGINT) AS sr2
-  FROM (SELECT user_id, day, COUNT(*) AS ri
-        FROM pres GROUP BY 1, 2)
-),
-ct AS (
-  SELECT CAST(SUM(cj) AS BIGINT) AS sc,
-         CAST(SUM(cj * cj) AS BIGINT) AS sc2
-  FROM (SELECT event_type, COUNT(*) AS cj
-        FROM pres GROUP BY 1)
-),
-q AS (
-  SELECT n_blocks, k,
-         (k - 1) * (k * sc2 - sc * sc * 1.0)
-           / (k * sr - sr2) AS q
-  FROM rt, ct, kf
-)
-SELECT n_blocks,
-       CAST(k AS BIGINT) AS k_types,
-       ROUND(q, 6) AS q_stat,
-       ROUND({_wh_upper_sql('q', 4.0)}, 6) AS p_value
-FROM q
-"""
-
-
 # ---------------------------------------------------------------------------
 # MRR of the first relevant document per source
 # ---------------------------------------------------------------------------
 
 
+MRR_ORACLE = f"""
+WITH {_SCORED_SQL},
+ranked AS (
+  SELECT d.source, s.label,
+         ROW_NUMBER() OVER (PARTITION BY d.source
+                            ORDER BY s.score DESC, s.doc_id) AS rn
+  FROM scored s JOIN documents d ON s.doc_id = d.doc_id
+),
+firsts AS (
+  SELECT source, MIN(rn) AS first_rel
+  FROM ranked WHERE label = 1 GROUP BY source
+),
+counts AS (
+  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
+  FROM ranked GROUP BY source
+)
+SELECT c.source, c.n_docs,
+       CAST(COALESCE(f.first_rel, 0) AS BIGINT) AS first_rel_rank,
+       ROUND(CASE WHEN f.first_rel IS NOT NULL
+                  THEN 1.0 / f.first_rel ELSE 0.0 END, 6)
+         AS reciprocal_rank
+FROM counts c LEFT JOIN firsts f ON c.source = f.source
+"""
+
+
+@query("eval_mrr_first_relevant", oracle=MRR_ORACLE)
 def eval_mrr_first_relevant(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1214,31 +1243,6 @@ def eval_mrr_first_relevant(
     )
 
 
-MRR_ORACLE = f"""
-WITH {_SCORED_SQL},
-ranked AS (
-  SELECT d.source, s.label,
-         ROW_NUMBER() OVER (PARTITION BY d.source
-                            ORDER BY s.score DESC, s.doc_id) AS rn
-  FROM scored s JOIN documents d ON s.doc_id = d.doc_id
-),
-firsts AS (
-  SELECT source, MIN(rn) AS first_rel
-  FROM ranked WHERE label = 1 GROUP BY source
-),
-counts AS (
-  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
-  FROM ranked GROUP BY source
-)
-SELECT c.source, c.n_docs,
-       CAST(COALESCE(f.first_rel, 0) AS BIGINT) AS first_rel_rank,
-       ROUND(CASE WHEN f.first_rel IS NOT NULL
-                  THEN 1.0 / f.first_rel ELSE 0.0 END, 6)
-         AS reciprocal_rank
-FROM counts c LEFT JOIN firsts f ON c.source = f.source
-"""
-
-
 # ---------------------------------------------------------------------------
 # Rank-biased overlap between the quality and length rankings
 # ---------------------------------------------------------------------------
@@ -1248,6 +1252,43 @@ RBO_P_NUM = 1  # p = 1/2: dyadic, so every p^(d-1) term is exact
 RBO_P_DEN = 2
 
 
+RBO_ORACLE = f"""
+WITH {_SCORED_SQL},
+top_a AS (
+  SELECT doc_id,
+         ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS ra
+  FROM scored QUALIFY ra <= {RBO_K}
+),
+top_b AS (
+  SELECT doc_id,
+         ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id) AS rb
+  FROM documents QUALIFY rb <= {RBO_K}
+),
+both_r AS (
+  SELECT GREATEST(a.ra, b.rb) AS mx
+  FROM top_a a JOIN top_b b ON a.doc_id = b.doc_id
+),
+agree AS (
+  SELECT d, CAST(SUM(CASE WHEN mx IS NOT NULL THEN 1 ELSE 0 END)
+                 AS BIGINT) AS a_d
+  FROM unnest(generate_series(1, {RBO_K})) AS g(d)
+  LEFT JOIN both_r ON mx <= d
+  GROUP BY d
+),
+rbo AS (
+  SELECT ROUND((1 - {RBO_P_NUM}.0 / {RBO_P_DEN})
+               * SUM(POW({RBO_P_NUM}.0 / {RBO_P_DEN}, d - 1)
+                     * a_d / d), 6) AS rbo
+  FROM agree
+)
+SELECT CAST({RBO_K} AS INTEGER) AS k,
+       (SELECT a_d FROM agree WHERE d = {RBO_K}) AS n_agree_at_k,
+       rbo
+FROM rbo
+"""
+
+
+@query("eval_rank_biased_overlap", oracle=RBO_ORACLE)
 def eval_rank_biased_overlap(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1336,42 +1377,6 @@ def eval_rank_biased_overlap(
     )
 
 
-RBO_ORACLE = f"""
-WITH {_SCORED_SQL},
-top_a AS (
-  SELECT doc_id,
-         ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS ra
-  FROM scored QUALIFY ra <= {RBO_K}
-),
-top_b AS (
-  SELECT doc_id,
-         ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id) AS rb
-  FROM documents QUALIFY rb <= {RBO_K}
-),
-both_r AS (
-  SELECT GREATEST(a.ra, b.rb) AS mx
-  FROM top_a a JOIN top_b b ON a.doc_id = b.doc_id
-),
-agree AS (
-  SELECT d, CAST(SUM(CASE WHEN mx IS NOT NULL THEN 1 ELSE 0 END)
-                 AS BIGINT) AS a_d
-  FROM unnest(generate_series(1, {RBO_K})) AS g(d)
-  LEFT JOIN both_r ON mx <= d
-  GROUP BY d
-),
-rbo AS (
-  SELECT ROUND((1 - {RBO_P_NUM}.0 / {RBO_P_DEN})
-               * SUM(POW({RBO_P_NUM}.0 / {RBO_P_DEN}, d - 1)
-                     * a_d / d), 6) AS rbo
-  FROM agree
-)
-SELECT CAST({RBO_K} AS INTEGER) AS k,
-       (SELECT a_d FROM agree WHERE d = {RBO_K}) AS n_agree_at_k,
-       rbo
-FROM rbo
-"""
-
-
 # ---------------------------------------------------------------------------
 # shared: the (source, token, count) term-frequency frame
 # ---------------------------------------------------------------------------
@@ -1414,6 +1419,29 @@ tf AS (
 # ---------------------------------------------------------------------------
 
 
+HONORE_ORACLE = f"""
+WITH {_SOURCE_TF_SQL},
+agg AS (
+  SELECT source,
+         CAST(SUM(c) AS BIGINT) AS n_tokens,
+         CAST(COUNT(*) AS BIGINT) AS n_types,
+         CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)
+              AS BIGINT) AS v1,
+         CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END)
+              AS BIGINT) AS v2
+  FROM tf GROUP BY source
+)
+SELECT source, n_tokens, n_types,
+       v1 AS v1_hapax, v2 AS v2_dis,
+       ROUND(100.0 * LN(CAST(n_tokens AS DOUBLE))
+             / (1.0 - v1 / CAST(n_types AS DOUBLE)), 4)
+         AS honore_r,
+       ROUND(v2 / CAST(n_types AS DOUBLE), 6) AS sichel_s
+FROM agg
+"""
+
+
+@query("text_honore_sichel_hapax", oracle=HONORE_ORACLE)
 def text_honore_sichel_hapax(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1457,33 +1485,46 @@ def text_honore_sichel_hapax(
     )
 
 
-HONORE_ORACLE = f"""
-WITH {_SOURCE_TF_SQL},
+# ---------------------------------------------------------------------------
+# Good-Turing unseen mass + Chao1 vocabulary estimate per language
+# ---------------------------------------------------------------------------
+
+
+GOOD_TURING_ORACLE = """
+WITH toks AS (
+  SELECT lang, tok
+  FROM (SELECT lang,
+               unnest(string_split_regex(trim(lower(text)), '\\s+'))
+                 AS tok
+        FROM documents WHERE lang IS NOT NULL)
+  WHERE tok <> ''
+),
+tf AS (
+  SELECT lang, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2
+),
 agg AS (
-  SELECT source,
+  SELECT lang,
          CAST(SUM(c) AS BIGINT) AS n_tokens,
          CAST(COUNT(*) AS BIGINT) AS n_types,
          CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)
               AS BIGINT) AS v1,
          CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END)
               AS BIGINT) AS v2
-  FROM tf GROUP BY source
+  FROM tf GROUP BY lang
 )
-SELECT source, n_tokens, n_types,
+SELECT lang, n_tokens, n_types,
        v1 AS v1_hapax, v2 AS v2_dis,
-       ROUND(100.0 * LN(CAST(n_tokens AS DOUBLE))
-             / (1.0 - v1 / CAST(n_types AS DOUBLE)), 4)
-         AS honore_r,
-       ROUND(v2 / CAST(n_types AS DOUBLE), 6) AS sichel_s
+       ROUND(v1 / CAST(n_tokens AS DOUBLE), 6) AS unseen_mass,
+       ROUND(1.0 - v1 / CAST(n_tokens AS DOUBLE), 6) AS coverage,
+       ROUND(CASE WHEN v2 > 0
+                  THEN n_types + CAST(v1 AS DOUBLE) * v1 / (2.0 * v2)
+                  ELSE n_types + CAST(v1 AS DOUBLE) * (v1 - 1) / 2.0
+             END, 4) AS chao1_vocab
 FROM agg
 """
 
 
-# ---------------------------------------------------------------------------
-# Good-Turing unseen mass + Chao1 vocabulary estimate per language
-# ---------------------------------------------------------------------------
-
-
+@query("text_good_turing_chao1", oracle=GOOD_TURING_ORACLE)
 def text_good_turing_chao1(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1542,45 +1583,44 @@ def text_good_turing_chao1(
     )
 
 
-GOOD_TURING_ORACLE = """
-WITH toks AS (
-  SELECT lang, tok
-  FROM (SELECT lang,
-               unnest(string_split_regex(trim(lower(text)), '\\s+'))
-                 AS tok
-        FROM documents WHERE lang IS NOT NULL)
-  WHERE tok <> ''
-),
-tf AS (
-  SELECT lang, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2
-),
-agg AS (
-  SELECT lang,
-         CAST(SUM(c) AS BIGINT) AS n_tokens,
-         CAST(COUNT(*) AS BIGINT) AS n_types,
-         CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS v1,
-         CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END)
-              AS BIGINT) AS v2
-  FROM tf GROUP BY lang
-)
-SELECT lang, n_tokens, n_types,
-       v1 AS v1_hapax, v2 AS v2_dis,
-       ROUND(v1 / CAST(n_tokens AS DOUBLE), 6) AS unseen_mass,
-       ROUND(1.0 - v1 / CAST(n_tokens AS DOUBLE), 6) AS coverage,
-       ROUND(CASE WHEN v2 > 0
-                  THEN n_types + CAST(v1 AS DOUBLE) * v1 / (2.0 * v2)
-                  ELSE n_types + CAST(v1 AS DOUBLE) * (v1 - 1) / 2.0
-             END, 4) AS chao1_vocab
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # ARI / Coleman-Liau readability per source
 # ---------------------------------------------------------------------------
 
 
+READABILITY_ORACLE = """
+WITH per_doc AS (
+  SELECT source,
+         CAST(len(list_filter(
+           string_split_regex(trim(lower(text)), '\\s+'),
+           t -> t <> '')) AS BIGINT) AS words,
+         CAST(length(replace(trim(text), ' ', '')) AS BIGINT)
+           AS chars,
+         CAST(GREATEST(length(text)
+                       - length(replace(text, '.', '')), 1)
+              AS BIGINT) AS sents
+  FROM documents
+),
+agg AS (
+  SELECT source,
+         CAST(COUNT(*) AS BIGINT) AS n_docs,
+         CAST(SUM(words) AS BIGINT) AS n_words,
+         CAST(SUM(chars) AS BIGINT) AS n_chars_in_words,
+         CAST(SUM(sents) AS BIGINT) AS n_sentences
+  FROM per_doc GROUP BY source
+)
+SELECT source, n_docs, n_words, n_sentences,
+       ROUND(4.71 * (n_chars_in_words * 1.0 / n_words)
+             + 0.5 * (n_words * 1.0 / n_sentences) - 21.43, 4)
+         AS ari,
+       ROUND(0.0588 * (100.0 * n_chars_in_words / n_words)
+             - 0.296 * (100.0 * n_sentences / n_words) - 15.8, 4)
+         AS coleman_liau
+FROM agg
+"""
+
+
+@query("text_readability_indices", oracle=READABILITY_ORACLE)
 def text_readability_indices(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1649,38 +1689,6 @@ def text_readability_indices(
     )
 
 
-READABILITY_ORACLE = """
-WITH per_doc AS (
-  SELECT source,
-         CAST(len(list_filter(
-           string_split_regex(trim(lower(text)), '\\s+'),
-           t -> t <> '')) AS BIGINT) AS words,
-         CAST(length(replace(trim(text), ' ', '')) AS BIGINT)
-           AS chars,
-         CAST(GREATEST(length(text)
-                       - length(replace(text, '.', '')), 1)
-              AS BIGINT) AS sents
-  FROM documents
-),
-agg AS (
-  SELECT source,
-         CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(words) AS BIGINT) AS n_words,
-         CAST(SUM(chars) AS BIGINT) AS n_chars_in_words,
-         CAST(SUM(sents) AS BIGINT) AS n_sentences
-  FROM per_doc GROUP BY source
-)
-SELECT source, n_docs, n_words, n_sentences,
-       ROUND(4.71 * (n_chars_in_words * 1.0 / n_words)
-             + 0.5 * (n_words * 1.0 / n_sentences) - 21.43, 4)
-         AS ari,
-       ROUND(0.0588 * (100.0 * n_chars_in_words / n_words)
-             - 0.296 * (100.0 * n_sentences / n_words) - 15.8, 4)
-         AS coleman_liau
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # Dunning G2 keyness of the focus source vs the rest of the corpus
 # ---------------------------------------------------------------------------
@@ -1690,6 +1698,48 @@ KEYNESS_TOP = 20
 KEYNESS_MIN_FOCUS = 2
 
 
+KEYNESS_ORACLE = f"""
+WITH toks AS (
+  SELECT source = '{KEYNESS_FOCUS}' AS focus, tok
+  FROM (SELECT source,
+               unnest(string_split_regex(trim(lower(text)), '\\s+'))
+                 AS tok
+        FROM documents)
+  WHERE tok <> ''
+),
+tf AS (
+  SELECT tok,
+         CAST(SUM(CASE WHEN focus THEN 1 ELSE 0 END)
+              AS BIGINT) AS a,
+         CAST(SUM(CASE WHEN focus THEN 0 ELSE 1 END)
+              AS BIGINT) AS b
+  FROM toks GROUP BY tok
+),
+tot AS (
+  SELECT CAST(SUM(a) AS DOUBLE) AS ta,
+         CAST(SUM(b) AS DOUBLE) AS tb
+  FROM tf
+),
+g AS (
+  SELECT tok, a, b,
+         2.0 * (CASE WHEN a > 0
+                     THEN a * LN(a / (ta * (a + b) / (ta + tb)))
+                     ELSE 0.0 END
+              + CASE WHEN b > 0
+                     THEN b * LN(b / (tb * (a + b) / (ta + tb)))
+                     ELSE 0.0 END) AS g2
+  FROM tf, tot
+  WHERE a >= {KEYNESS_MIN_FOCUS} AND a / ta > b / tb
+)
+SELECT tok AS term, a AS focus_count, b AS rest_count,
+       ROUND(g2, 6) AS g2
+FROM g
+ORDER BY g2 DESC, term
+LIMIT {KEYNESS_TOP}
+"""
+
+
+@query("text_g2_keyness_sources", oracle=KEYNESS_ORACLE)
 def text_g2_keyness_sources(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1754,52 +1804,28 @@ def text_g2_keyness_sources(
     )
 
 
-KEYNESS_ORACLE = f"""
-WITH toks AS (
-  SELECT source = '{KEYNESS_FOCUS}' AS focus, tok
-  FROM (SELECT source,
-               unnest(string_split_regex(trim(lower(text)), '\\s+'))
-                 AS tok
-        FROM documents)
-  WHERE tok <> ''
-),
-tf AS (
-  SELECT tok,
-         CAST(SUM(CASE WHEN focus THEN 1 ELSE 0 END)
-              AS BIGINT) AS a,
-         CAST(SUM(CASE WHEN focus THEN 0 ELSE 1 END)
-              AS BIGINT) AS b
-  FROM toks GROUP BY tok
-),
-tot AS (
-  SELECT CAST(SUM(a) AS DOUBLE) AS ta,
-         CAST(SUM(b) AS DOUBLE) AS tb
-  FROM tf
-),
-g AS (
-  SELECT tok, a, b,
-         2.0 * (CASE WHEN a > 0
-                     THEN a * LN(a / (ta * (a + b) / (ta + tb)))
-                     ELSE 0.0 END
-              + CASE WHEN b > 0
-                     THEN b * LN(b / (tb * (a + b) / (ta + tb)))
-                     ELSE 0.0 END) AS g2
-  FROM tf, tot
-  WHERE a >= {KEYNESS_MIN_FOCUS} AND a / ta > b / tb
-)
-SELECT tok AS term, a AS focus_count, b AS rest_count,
-       ROUND(g2, 6) AS g2
-FROM g
-ORDER BY g2 DESC, term
-LIMIT {KEYNESS_TOP}
-"""
-
-
 # ---------------------------------------------------------------------------
 # Kish design effect of order-value weights per segment
 # ---------------------------------------------------------------------------
 
 
+KISH_ORACLE = """
+WITH agg AS (
+  SELECT c_mktsegment AS segment,
+         CAST(COUNT(*) AS BIGINT) AS n_orders,
+         SUM(o_totalprice) AS sw,
+         SUM(o_totalprice * o_totalprice) AS sw2
+  FROM orders JOIN customer ON o_custkey = c_custkey
+  GROUP BY 1
+)
+SELECT segment, n_orders,
+       ROUND(n_orders * sw2 / (sw * sw), 6) AS deff,
+       ROUND(n_orders / (n_orders * sw2 / (sw * sw)), 4) AS n_eff
+FROM agg
+"""
+
+
+@query("sample_kish_design_effect", oracle=KISH_ORACLE)
 def sample_kish_design_effect(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1844,22 +1870,6 @@ def sample_kish_design_effect(
     )
 
 
-KISH_ORACLE = """
-WITH agg AS (
-  SELECT c_mktsegment AS segment,
-         CAST(COUNT(*) AS BIGINT) AS n_orders,
-         SUM(o_totalprice) AS sw,
-         SUM(o_totalprice * o_totalprice) AS sw2
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  GROUP BY 1
-)
-SELECT segment, n_orders,
-       ROUND(n_orders * sw2 / (sw * sw), 6) AS deff,
-       ROUND(n_orders / (n_orders * sw2 / (sw * sw)), 4) AS n_eff
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # shared: the directed trade backbone
 # ---------------------------------------------------------------------------
@@ -1901,6 +1911,36 @@ dir_e AS (SELECT src, dst FROM strong WHERE src <> dst)"""
 # ---------------------------------------------------------------------------
 
 
+KATZ_ORACLE = f"""
+WITH {_BACKBONE_SQL},
+p1 AS (
+  SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS p
+  FROM und GROUP BY src
+),
+p2 AS (
+  SELECT e.src AS node, CAST(SUM(p1.p) AS BIGINT) AS p
+  FROM und e JOIN p1 ON p1.node = e.dst GROUP BY e.src
+),
+p3 AS (
+  SELECT e.src AS node, CAST(SUM(p2.p) AS BIGINT) AS p
+  FROM und e JOIN p2 ON p2.node = e.dst GROUP BY e.src
+),
+p4 AS (
+  SELECT e.src AS node, CAST(SUM(p3.p) AS BIGINT) AS p
+  FROM und e JOIN p3 ON p3.node = e.dst GROUP BY e.src
+)
+SELECT p1.node, p1.p AS degree,
+       CAST(512 * p1.p + 64 * p2.p + 8 * p3.p + p4.p AS BIGINT)
+         AS katz_scaled,
+       ROUND((512 * p1.p + 64 * p2.p + 8 * p3.p + p4.p)
+             / 4096.0, 6) AS katz
+FROM p1 JOIN p2 ON p1.node = p2.node
+JOIN p3 ON p1.node = p3.node
+JOIN p4 ON p1.node = p4.node
+"""
+
+
+@query("graph_katz_centrality", oracle=KATZ_ORACLE)
 def graph_katz_centrality(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1957,40 +1997,56 @@ def graph_katz_centrality(
     )
 
 
-KATZ_ORACLE = f"""
-WITH {_BACKBONE_SQL},
-p1 AS (
-  SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS p
-  FROM und GROUP BY src
-),
-p2 AS (
-  SELECT e.src AS node, CAST(SUM(p1.p) AS BIGINT) AS p
-  FROM und e JOIN p1 ON p1.node = e.dst GROUP BY e.src
-),
-p3 AS (
-  SELECT e.src AS node, CAST(SUM(p2.p) AS BIGINT) AS p
-  FROM und e JOIN p2 ON p2.node = e.dst GROUP BY e.src
-),
-p4 AS (
-  SELECT e.src AS node, CAST(SUM(p3.p) AS BIGINT) AS p
-  FROM und e JOIN p3 ON p3.node = e.dst GROUP BY e.src
-)
-SELECT p1.node, p1.p AS degree,
-       CAST(512 * p1.p + 64 * p2.p + 8 * p3.p + p4.p AS BIGINT)
-         AS katz_scaled,
-       ROUND((512 * p1.p + 64 * p2.p + 8 * p3.p + p4.p)
-             / 4096.0, 6) AS katz
-FROM p1 JOIN p2 ON p1.node = p2.node
-JOIN p3 ON p1.node = p3.node
-JOIN p4 ON p1.node = p4.node
-"""
-
-
 # ---------------------------------------------------------------------------
 # HITS hubs & authorities: 2 unrolled integer power iterations
 # ---------------------------------------------------------------------------
 
 
+HITS_ORACLE = f"""
+WITH {_DIR_SQL},
+nodes AS (
+  SELECT DISTINCT node FROM (
+    SELECT src AS node FROM dir_e
+    UNION ALL SELECT dst FROM dir_e
+  )
+),
+a1 AS (
+  SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS a1
+  FROM dir_e GROUP BY dst
+),
+h1 AS (
+  SELECT e.src AS node, CAST(SUM(a1.a1) AS BIGINT) AS h1
+  FROM dir_e e JOIN a1 ON a1.node = e.dst GROUP BY e.src
+),
+a2 AS (
+  SELECT e.dst AS node, CAST(SUM(h1.h1) AS BIGINT) AS a2
+  FROM dir_e e JOIN h1 ON h1.node = e.src GROUP BY e.dst
+),
+h2 AS (
+  SELECT e.src AS node, CAST(SUM(a2.a2) AS BIGINT) AS h2
+  FROM dir_e e JOIN a2 ON a2.node = e.dst GROUP BY e.src
+),
+scores AS (
+  SELECT n.node,
+         CAST(COALESCE(a2.a2, 0) AS BIGINT) AS auth_raw,
+         CAST(COALESCE(h2.h2, 0) AS BIGINT) AS hub_raw
+  FROM nodes n
+  LEFT JOIN a2 ON a2.node = n.node
+  LEFT JOIN h2 ON h2.node = n.node
+),
+mx AS (
+  SELECT CAST(MAX(auth_raw) AS DOUBLE) AS ma,
+         CAST(MAX(hub_raw) AS DOUBLE) AS mh
+  FROM scores
+)
+SELECT node, auth_raw, hub_raw,
+       ROUND(auth_raw / ma, 6) AS authority,
+       ROUND(hub_raw / mh, 6) AS hub
+FROM scores, mx
+"""
+
+
+@query("graph_hits_hubs_authorities", oracle=HITS_ORACLE)
 def graph_hits_hubs_authorities(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2058,55 +2114,35 @@ def graph_hits_hubs_authorities(
     )
 
 
-HITS_ORACLE = f"""
-WITH {_DIR_SQL},
-nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT src AS node FROM dir_e
-    UNION ALL SELECT dst FROM dir_e
-  )
-),
-a1 AS (
-  SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS a1
-  FROM dir_e GROUP BY dst
-),
-h1 AS (
-  SELECT e.src AS node, CAST(SUM(a1.a1) AS BIGINT) AS h1
-  FROM dir_e e JOIN a1 ON a1.node = e.dst GROUP BY e.src
-),
-a2 AS (
-  SELECT e.dst AS node, CAST(SUM(h1.h1) AS BIGINT) AS a2
-  FROM dir_e e JOIN h1 ON h1.node = e.src GROUP BY e.dst
-),
-h2 AS (
-  SELECT e.src AS node, CAST(SUM(a2.a2) AS BIGINT) AS h2
-  FROM dir_e e JOIN a2 ON a2.node = e.dst GROUP BY e.src
-),
-scores AS (
-  SELECT n.node,
-         CAST(COALESCE(a2.a2, 0) AS BIGINT) AS auth_raw,
-         CAST(COALESCE(h2.h2, 0) AS BIGINT) AS hub_raw
-  FROM nodes n
-  LEFT JOIN a2 ON a2.node = n.node
-  LEFT JOIN h2 ON h2.node = n.node
-),
-mx AS (
-  SELECT CAST(MAX(auth_raw) AS DOUBLE) AS ma,
-         CAST(MAX(hub_raw) AS DOUBLE) AS mh
-  FROM scores
-)
-SELECT node, auth_raw, hub_raw,
-       ROUND(auth_raw / ma, 6) AS authority,
-       ROUND(hub_raw / mh, 6) AS hub
-FROM scores, mx
-"""
-
-
 # ---------------------------------------------------------------------------
 # Reciprocity & density of the directed trade backbone
 # ---------------------------------------------------------------------------
 
 
+RECIPROCITY_ORACLE = f"""
+WITH {_DIR_SQL},
+mutual AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_mutual
+  FROM (SELECT src, dst FROM dir_e
+        INTERSECT
+        SELECT dst AS src, src AS dst FROM dir_e)
+),
+nodes AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes
+  FROM (SELECT DISTINCT node FROM (
+          SELECT src AS node FROM dir_e
+          UNION ALL SELECT dst FROM dir_e))
+),
+edges AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_edges FROM dir_e)
+SELECT n_nodes, n_edges, n_mutual,
+       ROUND(n_mutual * 1.0 / n_edges, 6) AS reciprocity,
+       ROUND(n_edges * 1.0 / (n_nodes * (n_nodes - 1)), 6)
+         AS density
+FROM edges, mutual, nodes
+"""
+
+
+@query("graph_reciprocity_density", oracle=RECIPROCITY_ORACLE)
 def graph_reciprocity_density(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2160,34 +2196,23 @@ def graph_reciprocity_density(
     )
 
 
-RECIPROCITY_ORACLE = f"""
-WITH {_DIR_SQL},
-mutual AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_mutual
-  FROM (SELECT src, dst FROM dir_e
-        INTERSECT
-        SELECT dst AS src, src AS dst FROM dir_e)
-),
-nodes AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes
-  FROM (SELECT DISTINCT node FROM (
-          SELECT src AS node FROM dir_e
-          UNION ALL SELECT dst FROM dir_e))
-),
-edges AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_edges FROM dir_e)
-SELECT n_nodes, n_edges, n_mutual,
-       ROUND(n_mutual * 1.0 / n_edges, 6) AS reciprocity,
-       ROUND(n_edges * 1.0 / (n_nodes * (n_nodes - 1)), 6)
-         AS density
-FROM edges, mutual, nodes
-"""
-
-
 # ---------------------------------------------------------------------------
 # Versioned-table OPTIMIZE audit
 # ---------------------------------------------------------------------------
 
 
+VERSIONED_OPT_ORACLE = """
+SELECT CAST(4 AS BIGINT) AS final_version,
+       CAST(3 AS BIGINT) AS n_dirs_before,
+       CAST(1 AS BIGINT) AS n_dirs_after,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(c_custkey) AS BIGINT) AS key_sum,
+       ROUND(SUM(c_acctbal), 4) AS bal_sum
+FROM customer
+"""
+
+
+@query("versioned_optimize_audit", oracle=VERSIONED_OPT_ORACLE)
 def versioned_optimize_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2250,17 +2275,6 @@ def versioned_optimize_audit(
     )
 
 
-VERSIONED_OPT_ORACLE = """
-SELECT CAST(4 AS BIGINT) AS final_version,
-       CAST(3 AS BIGINT) AS n_dirs_before,
-       CAST(1 AS BIGINT) AS n_dirs_after,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(c_custkey) AS BIGINT) AS key_sum,
-       ROUND(SUM(c_acctbal), 4) AS bal_sum
-FROM customer
-"""
-
-
 # ---------------------------------------------------------------------------
 # Versioned-table DELETE/UPDATE (dir-level copy-on-write) audit
 # ---------------------------------------------------------------------------
@@ -2268,6 +2282,21 @@ FROM customer
 DML_LO, DML_HI = 2200.0, 2800.0
 
 
+VERSIONED_DML_ORACLE = f"""
+SELECT CAST(5 AS BIGINT) AS final_version,
+       CAST(2 AS BIGINT) AS dirs_after_delete,
+       CAST(2 AS BIGINT) AS dirs_after_update,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(c_custkey) AS BIGINT) AS key_sum,
+       ROUND(SUM(CASE WHEN c_acctbal < {DML_LO}
+                      THEN c_acctbal + 500
+                      ELSE c_acctbal END), 4) AS bal_sum
+FROM customer
+WHERE c_acctbal < {DML_HI}
+"""
+
+
+@query("versioned_dml_audit", oracle=VERSIONED_DML_ORACLE)
 def versioned_dml_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2358,20 +2387,6 @@ def versioned_dml_audit(
     )
 
 
-VERSIONED_DML_ORACLE = f"""
-SELECT CAST(5 AS BIGINT) AS final_version,
-       CAST(2 AS BIGINT) AS dirs_after_delete,
-       CAST(2 AS BIGINT) AS dirs_after_update,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(c_custkey) AS BIGINT) AS key_sum,
-       ROUND(SUM(CASE WHEN c_acctbal < {DML_LO}
-                      THEN c_acctbal + 500
-                      ELSE c_acctbal END), 4) AS bal_sum
-FROM customer
-WHERE c_acctbal < {DML_HI}
-"""
-
-
 # ---------------------------------------------------------------------------
 # Versioned-table MERGE (upsert) audit
 # ---------------------------------------------------------------------------
@@ -2379,6 +2394,28 @@ WHERE c_acctbal < {DML_HI}
 MERGE_INSERTS = 5
 
 
+VERSIONED_MERGE_ORACLE = f"""
+WITH nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
+merged AS (
+  SELECT c_custkey,
+         CASE WHEN c_custkey >= FLOOR(2 * n / 3.0)
+                   AND c_custkey % 10 = 0
+              THEN c_acctbal + 1000.0 ELSE c_acctbal END AS bal
+  FROM customer, nn
+  UNION ALL
+  SELECT n + i AS c_custkey, 123.45 AS bal
+  FROM nn, unnest(generate_series(1, {MERGE_INSERTS})) AS g(i)
+)
+SELECT CAST(4 AS BIGINT) AS final_version,
+       CAST(3 AS BIGINT) AS n_dirs_final,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(c_custkey) AS BIGINT) AS key_sum,
+       ROUND(SUM(bal), 4) AS bal_sum
+FROM merged
+"""
+
+
+@query("versioned_merge_audit", oracle=VERSIONED_MERGE_ORACLE)
 def versioned_merge_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2461,27 +2498,6 @@ def versioned_merge_audit(
     )
 
 
-VERSIONED_MERGE_ORACLE = f"""
-WITH nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
-merged AS (
-  SELECT c_custkey,
-         CASE WHEN c_custkey >= FLOOR(2 * n / 3.0)
-                   AND c_custkey % 10 = 0
-              THEN c_acctbal + 1000.0 ELSE c_acctbal END AS bal
-  FROM customer, nn
-  UNION ALL
-  SELECT n + i AS c_custkey, 123.45 AS bal
-  FROM nn, unnest(generate_series(1, {MERGE_INSERTS})) AS g(i)
-)
-SELECT CAST(4 AS BIGINT) AS final_version,
-       CAST(3 AS BIGINT) AS n_dirs_final,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(c_custkey) AS BIGINT) AS key_sum,
-       ROUND(SUM(bal), 4) AS bal_sum
-FROM merged
-"""
-
-
 # ---------------------------------------------------------------------------
 # Versioned-table CHECK-constraint audit
 # ---------------------------------------------------------------------------
@@ -2489,6 +2505,27 @@ FROM merged
 CHECK_FLOOR = -1000.0
 
 
+VERSIONED_CHECK_ORACLE = f"""
+WITH added AS (
+  SELECT -c_custkey AS c_custkey,
+         CAST({CHECK_FLOOR} AS DOUBLE) AS c_acctbal
+  FROM customer WHERE c_custkey % 13 = 0 AND c_custkey <> 0
+),
+allr AS (
+  SELECT c_custkey, c_acctbal FROM customer
+  UNION ALL SELECT c_custkey, c_acctbal FROM added
+)
+SELECT CAST(3 AS BIGINT) AS final_version,
+       CAST(1 AS BIGINT) AS n_constraints,
+       CAST(1 AS BIGINT) AS n_refused_commits,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(c_custkey) AS BIGINT) AS key_sum,
+       ROUND(SUM(c_acctbal), 4) AS bal_sum
+FROM allr
+"""
+
+
+@query("versioned_constraint_audit", oracle=VERSIONED_CHECK_ORACLE)
 def versioned_constraint_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2571,31 +2608,59 @@ def versioned_constraint_audit(
     )
 
 
-VERSIONED_CHECK_ORACLE = f"""
-WITH added AS (
-  SELECT -c_custkey AS c_custkey,
-         CAST({CHECK_FLOOR} AS DOUBLE) AS c_acctbal
-  FROM customer WHERE c_custkey % 13 = 0 AND c_custkey <> 0
-),
-allr AS (
-  SELECT c_custkey, c_acctbal FROM customer
-  UNION ALL SELECT c_custkey, c_acctbal FROM added
-)
-SELECT CAST(3 AS BIGINT) AS final_version,
-       CAST(1 AS BIGINT) AS n_constraints,
-       CAST(1 AS BIGINT) AS n_refused_commits,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(c_custkey) AS BIGINT) AS key_sum,
-       ROUND(SUM(c_acctbal), 4) AS bal_sum
-FROM allr
-"""
-
-
 # ---------------------------------------------------------------------------
 # PACF of daily event counts (Durbin-Levinson, closed forms to lag 3)
 # ---------------------------------------------------------------------------
 
 
+PACF_ORACLE = f"""
+WITH daily AS (
+  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS DOUBLE) AS x
+  FROM events GROUP BY 1
+),
+idx AS (
+  SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, x FROM daily
+),
+m AS (
+  SELECT CAST(COUNT(*) AS DOUBLE) AS n, AVG(x) AS mu FROM idx
+),
+cent AS (SELECT i, x - mu AS e FROM idx, m),
+den AS (SELECT SUM(e * e) AS ss FROM cent),
+rho_k AS (
+  SELECT k.k, SUM(a.e * b.e) / (SELECT ss FROM den) AS rho
+  FROM unnest(generate_series(1, 3)) AS k(k)
+  JOIN cent a ON TRUE
+  JOIN cent b ON b.i = a.i + k.k
+  GROUP BY k.k
+),
+wide AS (
+  SELECT MAX(CASE WHEN k = 1 THEN rho END) AS rho1,
+         MAX(CASE WHEN k = 2 THEN rho END) AS rho2,
+         MAX(CASE WHEN k = 3 THEN rho END) AS rho3
+  FROM rho_k
+),
+dl AS (
+  SELECT rho1, rho2, rho3,
+         (rho2 - rho1 * rho1) / (1.0 - rho1 * rho1) AS phi22
+  FROM wide
+),
+dl2 AS (
+  SELECT rho1, rho2, rho3, phi22,
+         rho1 - phi22 * rho1 AS phi21
+  FROM dl
+)
+SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM idx) AS n_days,
+       ROUND(rho1, 6) AS rho1, ROUND(rho2, 6) AS rho2,
+       ROUND(rho3, 6) AS rho3,
+       ROUND(rho1, 6) AS pacf1,
+       ROUND(phi22, 6) AS pacf2,
+       ROUND((rho3 - phi21 * rho2 - phi22 * rho1)
+             / (1.0 - phi21 * rho1 - phi22 * rho2), 6) AS pacf3
+FROM dl2
+"""
+
+
+@query("stats_pacf_daily", oracle=PACF_ORACLE)
 def stats_pacf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partial autocorrelations of the daily event-count series at
     lags 1-3 via the closed Durbin-Levinson forms: phi11 = rho1,
@@ -2664,58 +2729,41 @@ def stats_pacf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PACF_ORACLE = f"""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS DOUBLE) AS x
-  FROM events GROUP BY 1
-),
-idx AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, x FROM daily
-),
-m AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS n, AVG(x) AS mu FROM idx
-),
-cent AS (SELECT i, x - mu AS e FROM idx, m),
-den AS (SELECT SUM(e * e) AS ss FROM cent),
-rho_k AS (
-  SELECT k.k, SUM(a.e * b.e) / (SELECT ss FROM den) AS rho
-  FROM unnest(generate_series(1, 3)) AS k(k)
-  JOIN cent a ON TRUE
-  JOIN cent b ON b.i = a.i + k.k
-  GROUP BY k.k
-),
-wide AS (
-  SELECT MAX(CASE WHEN k = 1 THEN rho END) AS rho1,
-         MAX(CASE WHEN k = 2 THEN rho END) AS rho2,
-         MAX(CASE WHEN k = 3 THEN rho END) AS rho3
-  FROM rho_k
-),
-dl AS (
-  SELECT rho1, rho2, rho3,
-         (rho2 - rho1 * rho1) / (1.0 - rho1 * rho1) AS phi22
-  FROM wide
-),
-dl2 AS (
-  SELECT rho1, rho2, rho3, phi22,
-         rho1 - phi22 * rho1 AS phi21
-  FROM dl
-)
-SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM idx) AS n_days,
-       ROUND(rho1, 6) AS rho1, ROUND(rho2, 6) AS rho2,
-       ROUND(rho3, 6) AS rho3,
-       ROUND(rho1, 6) AS pacf1,
-       ROUND(phi22, 6) AS pacf2,
-       ROUND((rho3 - phi21 * rho2 - phi22 * rho1)
-             / (1.0 - phi21 * rho1 - phi22 * rho2), 6) AS pacf3
-FROM dl2
-"""
-
-
 # ---------------------------------------------------------------------------
 # Theil's U2: seasonal-naive vs naive forecast quality
 # ---------------------------------------------------------------------------
 
 
+THEILS_U_ORACLE = """
+WITH daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS day,
+         ROUND(SUM(o_totalprice), 4) AS y
+  FROM orders GROUP BY 1
+),
+lagged AS (
+  SELECT y,
+         LAG(y, 1) OVER (ORDER BY day) AS naive,
+         LAG(y, 7) OVER (ORDER BY day) AS snaive
+  FROM daily
+),
+agg AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
+         AVG((y - snaive) * (y - snaive)) AS mse_s,
+         AVG((y - naive) * (y - naive)) AS mse_n,
+         AVG(y * y) AS msy,
+         AVG(snaive * snaive) AS msf
+  FROM lagged WHERE naive IS NOT NULL AND snaive IS NOT NULL
+)
+SELECT n_days,
+       ROUND(SQRT(mse_s), 4) AS rmse_snaive,
+       ROUND(SQRT(mse_n), 4) AS rmse_naive,
+       ROUND(SQRT(mse_s) / SQRT(mse_n), 6) AS theils_u2,
+       ROUND(SQRT(mse_s) / (SQRT(msy) + SQRT(msf)), 6) AS theils_u1
+FROM agg
+"""
+
+
+@query("forecast_theils_u", oracle=THEILS_U_ORACLE)
 def forecast_theils_u(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2772,40 +2820,40 @@ def forecast_theils_u(
     )
 
 
-THEILS_U_ORACLE = """
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         ROUND(SUM(o_totalprice), 4) AS y
-  FROM orders GROUP BY 1
-),
-lagged AS (
-  SELECT y,
-         LAG(y, 1) OVER (ORDER BY day) AS naive,
-         LAG(y, 7) OVER (ORDER BY day) AS snaive
-  FROM daily
-),
-agg AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-         AVG((y - snaive) * (y - snaive)) AS mse_s,
-         AVG((y - naive) * (y - naive)) AS mse_n,
-         AVG(y * y) AS msy,
-         AVG(snaive * snaive) AS msf
-  FROM lagged WHERE naive IS NOT NULL AND snaive IS NOT NULL
-)
-SELECT n_days,
-       ROUND(SQRT(mse_s), 4) AS rmse_snaive,
-       ROUND(SQRT(mse_n), 4) AS rmse_naive,
-       ROUND(SQRT(mse_s) / SQRT(mse_n), 6) AS theils_u2,
-       ROUND(SQRT(mse_s) / (SQRT(msy) + SQRT(msf)), 6) AS theils_u1
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # Page-Hinkley drift statistic over daily event counts
 # ---------------------------------------------------------------------------
 
 
+PAGE_HINKLEY_ORACLE = """
+WITH daily AS (
+  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS DOUBLE) AS x
+  FROM events GROUP BY 1
+),
+mu AS (SELECT AVG(x) AS mu FROM daily),
+cum AS (
+  SELECT day,
+         SUM(x - mu) OVER (ORDER BY day
+           ROWS UNBOUNDED PRECEDING) AS cum
+  FROM daily, mu
+),
+dd AS (
+  SELECT day,
+         MAX(cum) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
+           - cum AS drawdown
+  FROM cum
+),
+mx AS (SELECT MAX(drawdown) AS ph FROM dd)
+SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM daily) AS n_days,
+       ROUND(ph, 6) AS ph_stat,
+       CAST(MIN(day) AS VARCHAR) AS alarm_day
+FROM dd, mx
+WHERE drawdown = ph
+GROUP BY ph
+"""
+
+
+@query("events_page_hinkley", oracle=PAGE_HINKLEY_ORACLE)
 def events_page_hinkley(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2860,39 +2908,49 @@ def events_page_hinkley(
     )
 
 
-PAGE_HINKLEY_ORACLE = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS DOUBLE) AS x
-  FROM events GROUP BY 1
-),
-mu AS (SELECT AVG(x) AS mu FROM daily),
-cum AS (
-  SELECT day,
-         SUM(x - mu) OVER (ORDER BY day
-           ROWS UNBOUNDED PRECEDING) AS cum
-  FROM daily, mu
-),
-dd AS (
-  SELECT day,
-         MAX(cum) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-           - cum AS drawdown
-  FROM cum
-),
-mx AS (SELECT MAX(drawdown) AS ph FROM dd)
-SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM daily) AS n_days,
-       ROUND(ph, 6) AS ph_stat,
-       CAST(MIN(day) AS VARCHAR) AS alarm_day
-FROM dd, mx
-WHERE drawdown = ph
-GROUP BY ph
-"""
-
-
 # ---------------------------------------------------------------------------
 # Runs-up-and-down randomness test on daily revenue
 # ---------------------------------------------------------------------------
 
 
+RUNS_UPDOWN_ORACLE = f"""
+WITH daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS day,
+         ROUND(SUM(o_totalprice), 4) AS y
+  FROM orders GROUP BY 1
+),
+signs AS (
+  SELECT day, s FROM (
+    SELECT day, SIGN(y - LAG(y) OVER (ORDER BY day)) AS s
+    FROM daily
+  ) WHERE s IS NOT NULL AND s <> 0
+),
+runs AS (
+  SELECT CASE WHEN s <> COALESCE(LAG(s) OVER (ORDER BY day), -s)
+              THEN 1 ELSE 0 END AS new_run
+  FROM signs
+),
+agg AS (
+  SELECT CAST(COUNT(*) AS DOUBLE) AS n,
+         CAST(SUM(new_run) AS DOUBLE) AS r
+  FROM runs
+),
+zz AS (
+  SELECT n, r, (2.0 * n - 1) / 3.0 AS er,
+         (ABS(r - (2.0 * n - 1) / 3.0) - 0.5)
+           / SQRT((16.0 * n - 29) / 90.0) AS za
+  FROM agg
+)
+SELECT CAST(n AS BIGINT) AS n_moves,
+       CAST(r AS BIGINT) AS n_runs,
+       ROUND(er, 6) AS expected_runs,
+       ROUND(za, 6) AS z_stat,
+       ROUND({_ans_sql('za')}, 6) AS p_value
+FROM zz
+"""
+
+
+@query("stats_runs_updown_daily", oracle=RUNS_UPDOWN_ORACLE)
 def stats_runs_updown_daily(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2947,43 +3005,6 @@ def stats_runs_updown_daily(
     )
 
 
-RUNS_UPDOWN_ORACLE = f"""
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         ROUND(SUM(o_totalprice), 4) AS y
-  FROM orders GROUP BY 1
-),
-signs AS (
-  SELECT day, s FROM (
-    SELECT day, SIGN(y - LAG(y) OVER (ORDER BY day)) AS s
-    FROM daily
-  ) WHERE s IS NOT NULL AND s <> 0
-),
-runs AS (
-  SELECT CASE WHEN s <> COALESCE(LAG(s) OVER (ORDER BY day), -s)
-              THEN 1 ELSE 0 END AS new_run
-  FROM signs
-),
-agg AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(SUM(new_run) AS DOUBLE) AS r
-  FROM runs
-),
-zz AS (
-  SELECT n, r, (2.0 * n - 1) / 3.0 AS er,
-         (ABS(r - (2.0 * n - 1) / 3.0) - 0.5)
-           / SQRT((16.0 * n - 29) / 90.0) AS za
-  FROM agg
-)
-SELECT CAST(n AS BIGINT) AS n_moves,
-       CAST(r AS BIGINT) AS n_runs,
-       ROUND(er, 6) AS expected_runs,
-       ROUND(za, 6) AS z_stat,
-       ROUND({_ans_sql('za')}, 6) AS p_value
-FROM zz
-"""
-
-
 # ---------------------------------------------------------------------------
 # Stationary distribution of the event-type Markov chain
 # ---------------------------------------------------------------------------
@@ -2991,6 +3012,53 @@ FROM zz
 MARKOV_ITERS = 8
 
 
+_MARKOV_IT_SQL = "\n".join(
+    f"""it{k + 1} AS (
+  SELECT t.to_type AS event_type, SUM(i.pi * t.p) AS pi
+  FROM trans t JOIN it{k} i ON i.event_type = t.from_type
+  GROUP BY t.to_type
+),"""
+    for k in range(MARKOV_ITERS)
+)
+
+MARKOV_STATIONARY_ORACLE = f"""
+WITH seq AS (
+  SELECT event_type AS from_type,
+         LEAD(event_type) OVER (
+           PARTITION BY user_id ORDER BY ts, event_id
+         ) AS to_type
+  FROM events
+),
+tr AS (
+  SELECT from_type, to_type, CAST(COUNT(*) AS DOUBLE) AS c
+  FROM seq WHERE to_type IS NOT NULL GROUP BY 1, 2
+),
+trans AS MATERIALIZED (
+  SELECT from_type, to_type,
+         c / SUM(c) OVER (PARTITION BY from_type) AS p, c
+  FROM tr
+),
+types AS (SELECT DISTINCT from_type AS event_type FROM trans),
+it0 AS (
+  SELECT event_type,
+         1.0 / (SELECT COUNT(*) FROM types) AS pi
+  FROM types
+),
+{_MARKOV_IT_SQL}
+emp AS (
+  SELECT to_type AS event_type, SUM(c) AS cin FROM trans GROUP BY 1
+),
+tot AS (SELECT SUM(c) AS ctot FROM trans)
+SELECT p.event_type,
+       ROUND(p.pi, 6) AS p_stationary,
+       ROUND(e.cin / t.ctot, 6) AS p_empirical,
+       CAST(e.cin AS BIGINT) AS n_incoming
+FROM it{MARKOV_ITERS} p
+JOIN emp e ON e.event_type = p.event_type, tot t
+"""
+
+
+@query("events_markov_stationary", oracle=MARKOV_STATIONARY_ORACLE)
 def events_markov_stationary(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3060,180 +3128,3 @@ def events_markov_stationary(
             F.col("cin").cast("long").alias("n_incoming"),
         )
     )
-
-
-_MARKOV_IT_SQL = "\n".join(
-    f"""it{k + 1} AS (
-  SELECT t.to_type AS event_type, SUM(i.pi * t.p) AS pi
-  FROM trans t JOIN it{k} i ON i.event_type = t.from_type
-  GROUP BY t.to_type
-),"""
-    for k in range(MARKOV_ITERS)
-)
-
-MARKOV_STATIONARY_ORACLE = f"""
-WITH seq AS (
-  SELECT event_type AS from_type,
-         LEAD(event_type) OVER (
-           PARTITION BY user_id ORDER BY ts, event_id
-         ) AS to_type
-  FROM events
-),
-tr AS (
-  SELECT from_type, to_type, CAST(COUNT(*) AS DOUBLE) AS c
-  FROM seq WHERE to_type IS NOT NULL GROUP BY 1, 2
-),
-trans AS MATERIALIZED (
-  SELECT from_type, to_type,
-         c / SUM(c) OVER (PARTITION BY from_type) AS p, c
-  FROM tr
-),
-types AS (SELECT DISTINCT from_type AS event_type FROM trans),
-it0 AS (
-  SELECT event_type,
-         1.0 / (SELECT COUNT(*) FROM types) AS pi
-  FROM types
-),
-{_MARKOV_IT_SQL}
-emp AS (
-  SELECT to_type AS event_type, SUM(c) AS cin FROM trans GROUP BY 1
-),
-tot AS (SELECT SUM(c) AS ctot FROM trans)
-SELECT p.event_type,
-       ROUND(p.pi, 6) AS p_stationary,
-       ROUND(e.cin / t.ctot, 6) AS p_empirical,
-       CAST(e.cin AS BIGINT) AS n_incoming
-FROM it{MARKOV_ITERS} p
-JOIN emp e ON e.event_type = p.event_type, tot t
-"""
-
-
-# ---------------------------------------------------------------------------
-# Registration hook for round 15
-# ---------------------------------------------------------------------------
-
-PENDING_ORDER = [
-    "stats_durbin_watson_residuals",
-    "stats_breusch_pagan_hetero",
-    "stats_chow_structural_break",
-    "stats_cox_stuart_trend",
-    "stats_bartels_vonneumann_rank",
-    "stats_mood_median_test",
-    "stats_kendalls_w_concordance",
-    "stats_friedman_blocked_ranks",
-    "stats_cochran_q_event_types",
-    "eval_mrr_first_relevant",
-    "eval_rank_biased_overlap",
-    "text_honore_sichel_hapax",
-    "text_good_turing_chao1",
-    "text_readability_indices",
-    "text_g2_keyness_sources",
-    "sample_kish_design_effect",
-    "graph_katz_centrality",
-    "graph_hits_hubs_authorities",
-    "graph_reciprocity_density",
-    "versioned_optimize_audit",
-    "versioned_dml_audit",
-    "versioned_merge_audit",
-    "versioned_constraint_audit",
-    "stats_pacf_daily",
-    "forecast_theils_u",
-    "events_page_hinkley",
-    "stats_runs_updown_daily",
-    "events_markov_stationary",
-]
-
-_PENDING = {
-    "stats_durbin_watson_residuals": (
-        stats_durbin_watson_residuals, DW_ORACLE,
-    ),
-    "stats_breusch_pagan_hetero": (
-        stats_breusch_pagan_hetero, BP_ORACLE,
-    ),
-    "stats_chow_structural_break": (
-        stats_chow_structural_break, CHOW_ORACLE,
-    ),
-    "stats_cox_stuart_trend": (
-        stats_cox_stuart_trend, COX_STUART_ORACLE,
-    ),
-    "stats_bartels_vonneumann_rank": (
-        stats_bartels_vonneumann_rank, BARTELS_ORACLE,
-    ),
-    "stats_mood_median_test": (
-        stats_mood_median_test, MOOD_ORACLE,
-    ),
-    "stats_kendalls_w_concordance": (
-        stats_kendalls_w_concordance, KENDALL_W_ORACLE,
-    ),
-    "stats_friedman_blocked_ranks": (
-        stats_friedman_blocked_ranks, FRIEDMAN_ORACLE,
-    ),
-    "stats_cochran_q_event_types": (
-        stats_cochran_q_event_types, COCHRAN_ORACLE,
-    ),
-    "eval_mrr_first_relevant": (
-        eval_mrr_first_relevant, MRR_ORACLE,
-    ),
-    "eval_rank_biased_overlap": (
-        eval_rank_biased_overlap, RBO_ORACLE,
-    ),
-    "text_honore_sichel_hapax": (
-        text_honore_sichel_hapax, HONORE_ORACLE,
-    ),
-    "text_good_turing_chao1": (
-        text_good_turing_chao1, GOOD_TURING_ORACLE,
-    ),
-    "text_readability_indices": (
-        text_readability_indices, READABILITY_ORACLE,
-    ),
-    "text_g2_keyness_sources": (
-        text_g2_keyness_sources, KEYNESS_ORACLE,
-    ),
-    "sample_kish_design_effect": (
-        sample_kish_design_effect, KISH_ORACLE,
-    ),
-    "graph_katz_centrality": (
-        graph_katz_centrality, KATZ_ORACLE,
-    ),
-    "graph_hits_hubs_authorities": (
-        graph_hits_hubs_authorities, HITS_ORACLE,
-    ),
-    "graph_reciprocity_density": (
-        graph_reciprocity_density, RECIPROCITY_ORACLE,
-    ),
-    "versioned_optimize_audit": (
-        versioned_optimize_audit, VERSIONED_OPT_ORACLE,
-    ),
-    "versioned_dml_audit": (
-        versioned_dml_audit, VERSIONED_DML_ORACLE,
-    ),
-    "versioned_merge_audit": (
-        versioned_merge_audit, VERSIONED_MERGE_ORACLE,
-    ),
-    "versioned_constraint_audit": (
-        versioned_constraint_audit, VERSIONED_CHECK_ORACLE,
-    ),
-    "stats_pacf_daily": (stats_pacf_daily, PACF_ORACLE),
-    "forecast_theils_u": (forecast_theils_u, THEILS_U_ORACLE),
-    "events_page_hinkley": (events_page_hinkley, PAGE_HINKLEY_ORACLE),
-    "stats_runs_updown_daily": (
-        stats_runs_updown_daily, RUNS_UPDOWN_ORACLE,
-    ),
-    "events_markov_stationary": (
-        events_markov_stationary, MARKOV_STATIONARY_ORACLE,
-    ),
-}
-
-
-def register_all() -> None:
-    """Register every round-15 staged query + oracle in the live
-    registry (call from queries/__init__.py when the round-15
-    window opens)."""
-    from cdc_2025_spark.queries.registry import ORACLES, QUERIES
-
-    for name in PENDING_ORDER:
-        fn, oracle = _PENDING[name]
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            if oracle is not None:
-                ORACLES[name] = " ".join(oracle.split())

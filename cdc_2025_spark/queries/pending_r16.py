@@ -1,6 +1,4 @@
-"""Round-16 registration seeds: the ORDERED-ALTERNATIVES &
-INEQUALITY family started during round 14 so the round-15 session
-opens with a ready queue (the pending_r13->r15 staging posture).
+"""Round-16 queries: the ORDERED-ALTERNATIVES & INEQUALITY family.
 
 - Jonckheere-Terpstra ordered-trend test of order value across the
   five priority levels — the k-sample member of the rank family
@@ -64,11 +62,10 @@ user hits" directive):
   surviving snapshot exact) and additive schema evolution (old rows
   read NULL, manifest records the merge).
 
-NOT imported by queries/__init__.py (the staging posture); each
-query carries a full DuckDB oracle and is exercised at driver
-strength by tests/test_pending_r16.py at sf0.001 + sf0.01, with a
-python model pin per statistic (the JT pin is the literal O(n^2)
-pairwise fold — the construction identity the kernel shape
+Each query registers through ``@query`` with a full DuckDB oracle
+and is exercised at driver strength by tests/test_pending_r16.py,
+with a python model pin per statistic (the JT pin is the literal
+O(n^2) pairwise fold — the construction identity the kernel shape
 replaces).
 
 Pre-registration wall times (min-of-2, warm idle local[32]), after
@@ -109,12 +106,73 @@ from cdc_2025_spark.queries.pending_r14 import (
     _scored_docs_with_id,
     _SCORED_SQL,
 )
+from cdc_2025_spark.queries.registry import query
 
 # ---------------------------------------------------------------------------
 # Jonckheere-Terpstra ordered trend across order priorities
 # ---------------------------------------------------------------------------
 
 
+JT_ORACLE = f"""
+WITH marg AS (
+  SELECT ROUND(o_totalprice, 4) AS v,
+         SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS c1,
+         SUM(CASE WHEN o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END) AS c2,
+         SUM(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 ELSE 0 END) AS c3,
+         SUM(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 1 ELSE 0 END) AS c4,
+         SUM(CASE WHEN o_orderpriority = '5-LOW' THEN 1 ELSE 0 END) AS c5
+  FROM orders GROUP BY 1
+),
+cum AS (
+  SELECT v, c1, c2, c3, c4, c5,
+         SUM(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum1,
+         SUM(c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum2,
+         SUM(c3) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum3,
+         SUM(c4) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum4
+  FROM marg
+),
+agg AS (
+  SELECT SUM(  c2 * (cum1 - c1) + c1 * c2 / 2.0
+             + c3 * (cum1 - c1) + c1 * c3 / 2.0
+             + c4 * (cum1 - c1) + c1 * c4 / 2.0
+             + c5 * (cum1 - c1) + c1 * c5 / 2.0
+             + c3 * (cum2 - c2) + c2 * c3 / 2.0
+             + c4 * (cum2 - c2) + c2 * c4 / 2.0
+             + c5 * (cum2 - c2) + c2 * c5 / 2.0
+             + c4 * (cum3 - c3) + c3 * c4 / 2.0
+             + c5 * (cum3 - c3) + c3 * c5 / 2.0
+             + c5 * (cum4 - c4) + c4 * c5 / 2.0) AS jt,
+         CAST(SUM(c1) AS DOUBLE) AS n1,
+         CAST(SUM(c2) AS DOUBLE) AS n2,
+         CAST(SUM(c3) AS DOUBLE) AS n3,
+         CAST(SUM(c4) AS DOUBLE) AS n4,
+         CAST(SUM(c5) AS DOUBLE) AS n5
+  FROM cum
+),
+st AS (
+  SELECT jt, n1 + n2 + n3 + n4 + n5 AS n,
+         n1*n1 + n2*n2 + n3*n3 + n4*n4 + n5*n5 AS ss,
+         n1*n1*(2*n1+3) + n2*n2*(2*n2+3) + n3*n3*(2*n3+3)
+           + n4*n4*(2*n4+3) + n5*n5*(2*n5+3) AS sc
+  FROM agg
+),
+zz AS (
+  SELECT n, jt, (n * n - ss) / 4.0 AS mean,
+         (jt - (n * n - ss) / 4.0)
+           / SQRT((n * n * (2 * n + 3) - sc) / 72.0) AS z
+  FROM st
+),
+zf AS (SELECT n, jt, mean, z, ABS(z) AS za FROM zz)
+SELECT CAST(n AS BIGINT) AS n_orders,
+       ROUND(jt, 2) AS jt_stat,
+       ROUND(mean, 2) AS jt_mean,
+       ROUND(z, 6) AS z_stat,
+       ROUND({_ans_sql('za')}, 6) AS p_value
+FROM zf
+"""
+
+
+@query("stats_jonckheere_terpstra", oracle=JT_ORACLE)
 def stats_jonckheere_terpstra(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -224,70 +282,52 @@ def stats_jonckheere_terpstra(
     )
 
 
-JT_ORACLE = f"""
-WITH marg AS (
-  SELECT ROUND(o_totalprice, 4) AS v,
-         SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS c1,
-         SUM(CASE WHEN o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END) AS c2,
-         SUM(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 ELSE 0 END) AS c3,
-         SUM(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 1 ELSE 0 END) AS c4,
-         SUM(CASE WHEN o_orderpriority = '5-LOW' THEN 1 ELSE 0 END) AS c5
-  FROM orders GROUP BY 1
-),
-cum AS (
-  SELECT v, c1, c2, c3, c4, c5,
-         SUM(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum1,
-         SUM(c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum2,
-         SUM(c3) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum3,
-         SUM(c4) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum4
-  FROM marg
-),
-agg AS (
-  SELECT SUM(  c2 * (cum1 - c1) + c1 * c2 / 2.0
-             + c3 * (cum1 - c1) + c1 * c3 / 2.0
-             + c4 * (cum1 - c1) + c1 * c4 / 2.0
-             + c5 * (cum1 - c1) + c1 * c5 / 2.0
-             + c3 * (cum2 - c2) + c2 * c3 / 2.0
-             + c4 * (cum2 - c2) + c2 * c4 / 2.0
-             + c5 * (cum2 - c2) + c2 * c5 / 2.0
-             + c4 * (cum3 - c3) + c3 * c4 / 2.0
-             + c5 * (cum3 - c3) + c3 * c5 / 2.0
-             + c5 * (cum4 - c4) + c4 * c5 / 2.0) AS jt,
-         CAST(SUM(c1) AS DOUBLE) AS n1,
-         CAST(SUM(c2) AS DOUBLE) AS n2,
-         CAST(SUM(c3) AS DOUBLE) AS n3,
-         CAST(SUM(c4) AS DOUBLE) AS n4,
-         CAST(SUM(c5) AS DOUBLE) AS n5
-  FROM cum
-),
-st AS (
-  SELECT jt, n1 + n2 + n3 + n4 + n5 AS n,
-         n1*n1 + n2*n2 + n3*n3 + n4*n4 + n5*n5 AS ss,
-         n1*n1*(2*n1+3) + n2*n2*(2*n2+3) + n3*n3*(2*n3+3)
-           + n4*n4*(2*n4+3) + n5*n5*(2*n5+3) AS sc
-  FROM agg
-),
-zz AS (
-  SELECT n, jt, (n * n - ss) / 4.0 AS mean,
-         (jt - (n * n - ss) / 4.0)
-           / SQRT((n * n * (2 * n + 3) - sc) / 72.0) AS z
-  FROM st
-),
-zf AS (SELECT n, jt, mean, z, ABS(z) AS za FROM zz)
-SELECT CAST(n AS BIGINT) AS n_orders,
-       ROUND(jt, 2) AS jt_stat,
-       ROUND(mean, 2) AS jt_mean,
-       ROUND(z, 6) AS z_stat,
-       ROUND({_ans_sql('za')}, 6) AS p_value
-FROM zf
-"""
-
-
 # ---------------------------------------------------------------------------
 # McNemar paired test: per-user error incidence, half-month halves
 # ---------------------------------------------------------------------------
 
 
+MCNEMAR_ORACLE = f"""
+WITH flags AS (
+  SELECT user_id, day,
+         MAX(CASE WHEN am THEN 1 ELSE 0 END) AS e,
+         MAX(CASE WHEN am THEN 0 ELSE 1 END) AS l
+  FROM (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day,
+               hour(ts) < 12 AS am
+        FROM events WHERE event_type = 'error')
+  GROUP BY 1, 2
+),
+blocks AS (
+  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
+),
+cells AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_blocks,
+         CAST(SUM(CASE WHEN e = 1 AND l = 0 THEN 1 ELSE 0 END)
+              AS BIGINT) AS b,
+         CAST(SUM(CASE WHEN e = 0 AND l = 1 THEN 1 ELSE 0 END)
+              AS BIGINT) AS c,
+         CAST(SUM(CASE WHEN e = 1 AND l = 1 THEN 1 ELSE 0 END)
+              AS BIGINT) AS n_both
+  FROM blocks bl
+  LEFT JOIN flags f ON f.user_id = bl.user_id AND f.day = bl.day
+),
+zz AS (
+  SELECT n_blocks, b, c, n_both,
+         CASE WHEN b + c > 0
+              THEN (ABS(b - c * 1.0) - 1) * (ABS(b - c * 1.0) - 1)
+                   / (b + c) END AS chi2
+  FROM cells
+),
+zf AS (SELECT *, SQRT(chi2) AS za FROM zz)
+SELECT n_blocks, b AS only_am, c AS only_pm,
+       n_both AS both_halves,
+       ROUND(chi2, 6) AS chi2,
+       ROUND({_ans_sql('za')}, 6) AS p_value
+FROM zf
+"""
+
+
+@query("stats_mcnemar_paired", oracle=MCNEMAR_ORACLE)
 def stats_mcnemar_paired(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -355,51 +395,40 @@ def stats_mcnemar_paired(
     )
 
 
-MCNEMAR_ORACLE = f"""
-WITH flags AS (
-  SELECT user_id, day,
-         MAX(CASE WHEN am THEN 1 ELSE 0 END) AS e,
-         MAX(CASE WHEN am THEN 0 ELSE 1 END) AS l
-  FROM (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day,
-               hour(ts) < 12 AS am
-        FROM events WHERE event_type = 'error')
-  GROUP BY 1, 2
-),
-blocks AS (
-  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
-),
-cells AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_blocks,
-         CAST(SUM(CASE WHEN e = 1 AND l = 0 THEN 1 ELSE 0 END)
-              AS BIGINT) AS b,
-         CAST(SUM(CASE WHEN e = 0 AND l = 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS c,
-         CAST(SUM(CASE WHEN e = 1 AND l = 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_both
-  FROM blocks bl
-  LEFT JOIN flags f ON f.user_id = bl.user_id AND f.day = bl.day
-),
-zz AS (
-  SELECT n_blocks, b, c, n_both,
-         CASE WHEN b + c > 0
-              THEN (ABS(b - c * 1.0) - 1) * (ABS(b - c * 1.0) - 1)
-                   / (b + c) END AS chi2
-  FROM cells
-),
-zf AS (SELECT *, SQRT(chi2) AS za FROM zz)
-SELECT n_blocks, b AS only_am, c AS only_pm,
-       n_both AS both_halves,
-       ROUND(chi2, 6) AS chi2,
-       ROUND({_ans_sql('za')}, 6) AS p_value
-FROM zf
-"""
-
-
 # ---------------------------------------------------------------------------
 # One-sample KS: the quality score against U[0,1]
 # ---------------------------------------------------------------------------
 
 
+KS_UNIFORM_ORACLE = f"""
+WITH {_SCORED_SQL},
+marg AS (
+  SELECT score, CAST(COUNT(*) AS BIGINT) AS c
+  FROM scored GROUP BY score
+),
+n_f AS (SELECT CAST(SUM(c) AS DOUBLE) AS n FROM marg),
+ecdf AS (
+  SELECT score, n,
+         SUM(c) OVER (ORDER BY score ROWS UNBOUNDED PRECEDING)
+           / n AS ecdf,
+         (SUM(c) OVER (ORDER BY score ROWS UNBOUNDED PRECEDING)
+           - c) / n AS ecdf_before
+  FROM marg, n_f
+),
+agg AS (
+  SELECT CAST(MAX(n) AS BIGINT) AS n_docs,
+         MAX(GREATEST(ABS(ecdf - score),
+                      ABS(ecdf_before - score))) AS ks_d,
+         MAX(n) AS nd
+  FROM ecdf
+)
+SELECT n_docs, ROUND(ks_d, 6) AS ks_d,
+       ROUND(SQRT(nd) * ks_d, 6) AS sqrt_n_d
+FROM agg
+"""
+
+
+@query("eval_ks_uniformity", oracle=KS_UNIFORM_ORACLE)
 def eval_ks_uniformity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -453,39 +482,47 @@ def eval_ks_uniformity(
     )
 
 
-KS_UNIFORM_ORACLE = f"""
-WITH {_SCORED_SQL},
-marg AS (
-  SELECT score, CAST(COUNT(*) AS BIGINT) AS c
-  FROM scored GROUP BY score
-),
-n_f AS (SELECT CAST(SUM(c) AS DOUBLE) AS n FROM marg),
-ecdf AS (
-  SELECT score, n,
-         SUM(c) OVER (ORDER BY score ROWS UNBOUNDED PRECEDING)
-           / n AS ecdf,
-         (SUM(c) OVER (ORDER BY score ROWS UNBOUNDED PRECEDING)
-           - c) / n AS ecdf_before
-  FROM marg, n_f
-),
-agg AS (
-  SELECT CAST(MAX(n) AS BIGINT) AS n_docs,
-         MAX(GREATEST(ABS(ecdf - score),
-                      ABS(ecdf_before - score))) AS ks_d,
-         MAX(n) AS nd
-  FROM ecdf
-)
-SELECT n_docs, ROUND(ks_d, 6) AS ks_d,
-       ROUND(SQRT(nd) * ks_d, 6) AS sqrt_n_d
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # Cliff's delta: ordinal effect size of score by label
 # ---------------------------------------------------------------------------
 
 
+CLIFFS_ORACLE = f"""
+WITH {_SCORED_SQL},
+marg AS (
+  SELECT score,
+         CAST(SUM(label) AS BIGINT) AS c1,
+         CAST(SUM(1 - label) AS BIGINT) AS c0
+  FROM scored GROUP BY score
+),
+cum AS (
+  SELECT c1, c0,
+         SUM(c0) OVER (ORDER BY score ROWS UNBOUNDED PRECEDING)
+           AS cum0
+  FROM marg
+),
+agg AS (
+  SELECT SUM(c1 * (cum0 - c0) + c1 * c0 / 2.0) AS u,
+         CAST(SUM(c1) AS DOUBLE) AS n1,
+         CAST(SUM(c0) AS DOUBLE) AS n0
+  FROM cum
+),
+d AS (
+  SELECT n1, n0, u, 2.0 * u / (n1 * n0) - 1 AS delta FROM agg
+)
+SELECT CAST(n1 AS BIGINT) AS n_positive,
+       CAST(n0 AS BIGINT) AS n_negative,
+       ROUND(u / (n1 * n0), 6) AS auc_u,
+       ROUND(delta, 6) AS cliffs_delta,
+       CASE WHEN ABS(delta) < 0.147 THEN 'negligible'
+            WHEN ABS(delta) < 0.33 THEN 'small'
+            WHEN ABS(delta) < 0.474 THEN 'medium'
+            ELSE 'large' END AS magnitude
+FROM d
+"""
+
+
+@query("eval_cliffs_delta", oracle=CLIFFS_ORACLE)
 def eval_cliffs_delta(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -545,46 +582,34 @@ def eval_cliffs_delta(
     )
 
 
-CLIFFS_ORACLE = f"""
-WITH {_SCORED_SQL},
-marg AS (
-  SELECT score,
-         CAST(SUM(label) AS BIGINT) AS c1,
-         CAST(SUM(1 - label) AS BIGINT) AS c0
-  FROM scored GROUP BY score
-),
-cum AS (
-  SELECT c1, c0,
-         SUM(c0) OVER (ORDER BY score ROWS UNBOUNDED PRECEDING)
-           AS cum0
-  FROM marg
-),
-agg AS (
-  SELECT SUM(c1 * (cum0 - c0) + c1 * c0 / 2.0) AS u,
-         CAST(SUM(c1) AS DOUBLE) AS n1,
-         CAST(SUM(c0) AS DOUBLE) AS n0
-  FROM cum
-),
-d AS (
-  SELECT n1, n0, u, 2.0 * u / (n1 * n0) - 1 AS delta FROM agg
-)
-SELECT CAST(n1 AS BIGINT) AS n_positive,
-       CAST(n0 AS BIGINT) AS n_negative,
-       ROUND(u / (n1 * n0), 6) AS auc_u,
-       ROUND(delta, 6) AS cliffs_delta,
-       CASE WHEN ABS(delta) < 0.147 THEN 'negligible'
-            WHEN ABS(delta) < 0.33 THEN 'small'
-            WHEN ABS(delta) < 0.474 THEN 'medium'
-            ELSE 'large' END AS magnitude
-FROM d
-"""
-
-
 # ---------------------------------------------------------------------------
 # Atkinson + Hoover inequality of customer spend
 # ---------------------------------------------------------------------------
 
 
+ATKINSON_ORACLE = """
+WITH spend AS (
+  SELECT o_custkey, ROUND(SUM(o_totalprice), 4) AS y
+  FROM orders GROUP BY 1
+),
+m AS (
+  SELECT CAST(COUNT(*) AS DOUBLE) AS n, SUM(y) AS sy,
+         SUM(SQRT(y)) AS sr
+  FROM spend
+),
+dev AS (
+  SELECT SUM(ABS(y - sy / n)) AS sad
+  FROM spend, m GROUP BY n, sy
+)
+SELECT CAST(n AS BIGINT) AS n_customers,
+       ROUND(1.0 - ((sr / n) * (sr / n)) / (sy / n), 6)
+         AS atkinson_half,
+       ROUND(sad / (2.0 * sy), 6) AS hoover
+FROM m, dev
+"""
+
+
+@query("stats_atkinson_hoover", oracle=ATKINSON_ORACLE)
 def stats_atkinson_hoover(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -635,33 +660,59 @@ def stats_atkinson_hoover(
     return out.select("n_customers", "atkinson_half", "hoover")
 
 
-ATKINSON_ORACLE = """
-WITH spend AS (
-  SELECT o_custkey, ROUND(SUM(o_totalprice), 4) AS y
-  FROM orders GROUP BY 1
-),
-m AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS n, SUM(y) AS sy,
-         SUM(SQRT(y)) AS sr
-  FROM spend
-),
-dev AS (
-  SELECT SUM(ABS(y - sy / n)) AS sad
-  FROM spend, m GROUP BY n, sy
-)
-SELECT CAST(n AS BIGINT) AS n_customers,
-       ROUND(1.0 - ((sr / n) * (sr / n)) / (sy / n), 6)
-         AS atkinson_half,
-       ROUND(sad / (2.0 * sy), 6) AS hoover
-FROM m, dev
-"""
-
-
 # ---------------------------------------------------------------------------
 # Quintile spend shares + Palma-style ratio
 # ---------------------------------------------------------------------------
 
 
+QUINTILE_ORACLE = """
+WITH spend AS (
+  SELECT o_custkey, ROUND(SUM(o_totalprice), 4) AS y
+  FROM orders GROUP BY 1
+),
+marg AS (
+  SELECT y, CAST(COUNT(*) AS BIGINT) AS c FROM spend GROUP BY 1
+),
+cum AS (
+  SELECT y, c,
+         SUM(c) OVER (ORDER BY y ROWS UNBOUNDED PRECEDING) AS cc
+  FROM marg
+),
+nf AS (SELECT SUM(c) AS n FROM marg),
+edges AS (
+  SELECT MIN(CASE WHEN 5 * cc >= 1 * n THEN y END) AS e1,
+         MIN(CASE WHEN 5 * cc >= 2 * n THEN y END) AS e2,
+         MIN(CASE WHEN 5 * cc >= 3 * n THEN y END) AS e3,
+         MIN(CASE WHEN 5 * cc >= 4 * n THEN y END) AS e4
+  FROM cum, nf
+),
+q AS (
+  SELECT y, c,
+         1 + CAST(y > e1 AS INTEGER) + CAST(y > e2 AS INTEGER)
+           + CAST(y > e3 AS INTEGER) + CAST(y > e4 AS INTEGER)
+           AS quintile
+  FROM marg, edges
+),
+tot AS (SELECT SUM(y * c) AS ty FROM q),
+shares AS (
+  SELECT CAST(quintile AS INTEGER) AS quintile,
+         CAST(SUM(c) AS BIGINT) AS n_customers,
+         ROUND(SUM(y * c), 4) AS spend,
+         ROUND(SUM(y * c) / (SELECT ty FROM tot), 6) AS share
+  FROM q GROUP BY quintile
+),
+palma AS (
+  SELECT SUM(CASE WHEN quintile = 5 THEN share END)
+           / SUM(CASE WHEN quintile <= 2 THEN share END) AS p
+  FROM shares
+)
+SELECT quintile, n_customers, spend, share,
+       ROUND(p, 4) AS palma_ratio
+FROM shares, palma
+"""
+
+
+@query("stats_quintile_shares", oracle=QUINTILE_ORACLE)
 def stats_quintile_shares(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -756,53 +807,6 @@ def stats_quintile_shares(
         "share",
         F.round("p", 4).alias("palma_ratio"),
     )
-
-
-QUINTILE_ORACLE = """
-WITH spend AS (
-  SELECT o_custkey, ROUND(SUM(o_totalprice), 4) AS y
-  FROM orders GROUP BY 1
-),
-marg AS (
-  SELECT y, CAST(COUNT(*) AS BIGINT) AS c FROM spend GROUP BY 1
-),
-cum AS (
-  SELECT y, c,
-         SUM(c) OVER (ORDER BY y ROWS UNBOUNDED PRECEDING) AS cc
-  FROM marg
-),
-nf AS (SELECT SUM(c) AS n FROM marg),
-edges AS (
-  SELECT MIN(CASE WHEN 5 * cc >= 1 * n THEN y END) AS e1,
-         MIN(CASE WHEN 5 * cc >= 2 * n THEN y END) AS e2,
-         MIN(CASE WHEN 5 * cc >= 3 * n THEN y END) AS e3,
-         MIN(CASE WHEN 5 * cc >= 4 * n THEN y END) AS e4
-  FROM cum, nf
-),
-q AS (
-  SELECT y, c,
-         1 + CAST(y > e1 AS INTEGER) + CAST(y > e2 AS INTEGER)
-           + CAST(y > e3 AS INTEGER) + CAST(y > e4 AS INTEGER)
-           AS quintile
-  FROM marg, edges
-),
-tot AS (SELECT SUM(y * c) AS ty FROM q),
-shares AS (
-  SELECT CAST(quintile AS INTEGER) AS quintile,
-         CAST(SUM(c) AS BIGINT) AS n_customers,
-         ROUND(SUM(y * c), 4) AS spend,
-         ROUND(SUM(y * c) / (SELECT ty FROM tot), 6) AS share
-  FROM q GROUP BY quintile
-),
-palma AS (
-  SELECT SUM(CASE WHEN quintile = 5 THEN share END)
-           / SUM(CASE WHEN quintile <= 2 THEN share END) AS p
-  FROM shares
-)
-SELECT quintile, n_customers, spend, share,
-       ROUND(p, 4) AS palma_ratio
-FROM shares, palma
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -903,6 +907,30 @@ cells AS (
 )"""
 
 
+GAMMA_ORACLE = f"""
+WITH {_PQ_CELLS_SQL},
+pairs AS (
+  SELECT a.c AS ca, b.c AS cb, a.r AS r1, a.q AS q1,
+         b.r AS r2, b.q AS q2
+  FROM cells a, cells b
+),
+agg AS (
+  SELECT CAST(SUM(CASE WHEN r2 > r1 AND q2 > q1
+                       THEN ca * cb ELSE 0 END) AS BIGINT)
+           AS concordant,
+         CAST(SUM(CASE WHEN r2 > r1 AND q2 < q1
+                       THEN ca * cb ELSE 0 END) AS BIGINT)
+           AS discordant
+  FROM pairs
+)
+SELECT concordant, discordant,
+       ROUND((concordant - discordant) * 1.0
+             / (concordant + discordant), 6) AS gamma
+FROM agg
+"""
+
+
+@query("stats_goodman_kruskal_gamma", oracle=GAMMA_ORACLE)
 def stats_goodman_kruskal_gamma(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -967,7 +995,12 @@ def stats_goodman_kruskal_gamma(
     )
 
 
-GAMMA_ORACLE = f"""
+# ---------------------------------------------------------------------------
+# Somers' D: asymmetric ordinal association (beside gamma)
+# ---------------------------------------------------------------------------
+
+
+SOMERS_ORACLE = f"""
 WITH {_PQ_CELLS_SQL},
 pairs AS (
   SELECT a.c AS ca, b.c AS cb, a.r AS r1, a.q AS q1,
@@ -976,25 +1009,24 @@ pairs AS (
 ),
 agg AS (
   SELECT CAST(SUM(CASE WHEN r2 > r1 AND q2 > q1
-                       THEN ca * cb ELSE 0 END) AS BIGINT)
-           AS concordant,
+                       THEN ca * cb ELSE 0 END) AS BIGINT) AS c_,
          CAST(SUM(CASE WHEN r2 > r1 AND q2 < q1
-                       THEN ca * cb ELSE 0 END) AS BIGINT)
-           AS discordant
+                       THEN ca * cb ELSE 0 END) AS BIGINT) AS d_,
+         CAST(SUM(CASE WHEN r2 = r1 AND q2 > q1
+                       THEN ca * cb ELSE 0 END) AS BIGINT) AS tx,
+         CAST(SUM(CASE WHEN q2 = q1 AND r2 > r1
+                       THEN ca * cb ELSE 0 END) AS BIGINT) AS ty
   FROM pairs
 )
-SELECT concordant, discordant,
-       ROUND((concordant - discordant) * 1.0
-             / (concordant + discordant), 6) AS gamma
+SELECT c_ AS concordant, d_ AS discordant,
+       tx AS ties_x_only, ty AS ties_y_only,
+       ROUND((c_ - d_) * 1.0 / (c_ + d_ + ty), 6) AS somers_d_yx,
+       ROUND((c_ - d_) * 1.0 / (c_ + d_ + tx), 6) AS somers_d_xy
 FROM agg
 """
 
 
-# ---------------------------------------------------------------------------
-# Somers' D: asymmetric ordinal association (beside gamma)
-# ---------------------------------------------------------------------------
-
-
+@query("stats_somers_d", oracle=SOMERS_ORACLE)
 def stats_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Somers' D (Somers 1962) between order priority (X) and the
     order-value quartile (Y), both directions: d_yx =
@@ -1060,38 +1092,45 @@ def stats_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SOMERS_ORACLE = f"""
-WITH {_PQ_CELLS_SQL},
-pairs AS (
-  SELECT a.c AS ca, b.c AS cb, a.r AS r1, a.q AS q1,
-         b.r AS r2, b.q AS q2
-  FROM cells a, cells b
-),
-agg AS (
-  SELECT CAST(SUM(CASE WHEN r2 > r1 AND q2 > q1
-                       THEN ca * cb ELSE 0 END) AS BIGINT) AS c_,
-         CAST(SUM(CASE WHEN r2 > r1 AND q2 < q1
-                       THEN ca * cb ELSE 0 END) AS BIGINT) AS d_,
-         CAST(SUM(CASE WHEN r2 = r1 AND q2 > q1
-                       THEN ca * cb ELSE 0 END) AS BIGINT) AS tx,
-         CAST(SUM(CASE WHEN q2 = q1 AND r2 > r1
-                       THEN ca * cb ELSE 0 END) AS BIGINT) AS ty
-  FROM pairs
-)
-SELECT c_ AS concordant, d_ AS discordant,
-       tx AS ties_x_only, ty AS ties_y_only,
-       ROUND((c_ - d_) * 1.0 / (c_ + d_ + ty), 6) AS somers_d_yx,
-       ROUND((c_ - d_) * 1.0 / (c_ + d_ + tx), 6) AS somers_d_xy
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # Cochran-Armitage trend test: proportion of 'F' status across
 # ordered priorities
 # ---------------------------------------------------------------------------
 
 
+COCHRAN_ARMITAGE_ORACLE = f"""
+WITH lev AS (
+  SELECT CAST(string_split(o_orderpriority, '-')[1] AS INTEGER) AS s,
+         COUNT(*) AS n,
+         SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS r
+  FROM orders GROUP BY 1
+),
+agg AS (
+  SELECT CAST(SUM(n) AS DOUBLE) AS nn,
+         CAST(SUM(r) AS DOUBLE) AS rr,
+         CAST(SUM(s * r) AS DOUBLE) AS sr,
+         CAST(SUM(s * n) AS DOUBLE) AS sn,
+         CAST(SUM(s * s * n) AS DOUBLE) AS ssn
+  FROM lev
+),
+st AS (
+  SELECT nn, rr,
+         sr - (rr / nn) * sn AS t,
+         (rr / nn) * (1 - rr / nn) * (ssn - sn * sn / nn) AS var
+  FROM agg
+),
+zz AS (SELECT nn, rr, t, t / SQRT(var) AS z FROM st),
+zf AS (SELECT nn, rr, t, z, ABS(z) AS za FROM zz)
+SELECT CAST(nn AS BIGINT) AS n_orders,
+       CAST(rr AS BIGINT) AS n_fulfilled,
+       ROUND(t, 4) AS trend_stat,
+       ROUND(z, 6) AS z_stat,
+       ROUND({_ans_sql('za')}, 6) AS p_value
+FROM zf
+"""
+
+
+@query("stats_cochran_armitage", oracle=COCHRAN_ARMITAGE_ORACLE)
 def stats_cochran_armitage(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1146,43 +1185,53 @@ def stats_cochran_armitage(
     )
 
 
-COCHRAN_ARMITAGE_ORACLE = f"""
-WITH lev AS (
-  SELECT CAST(string_split(o_orderpriority, '-')[1] AS INTEGER) AS s,
-         COUNT(*) AS n,
-         SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS r
-  FROM orders GROUP BY 1
-),
-agg AS (
-  SELECT CAST(SUM(n) AS DOUBLE) AS nn,
-         CAST(SUM(r) AS DOUBLE) AS rr,
-         CAST(SUM(s * r) AS DOUBLE) AS sr,
-         CAST(SUM(s * n) AS DOUBLE) AS sn,
-         CAST(SUM(s * s * n) AS DOUBLE) AS ssn
-  FROM lev
-),
-st AS (
-  SELECT nn, rr,
-         sr - (rr / nn) * sn AS t,
-         (rr / nn) * (1 - rr / nn) * (ssn - sn * sn / nn) AS var
-  FROM agg
-),
-zz AS (SELECT nn, rr, t, t / SQRT(var) AS z FROM st),
-zf AS (SELECT nn, rr, t, z, ABS(z) AS za FROM zz)
-SELECT CAST(nn AS BIGINT) AS n_orders,
-       CAST(rr AS BIGINT) AS n_fulfilled,
-       ROUND(t, 4) AS trend_stat,
-       ROUND(z, 6) AS z_stat,
-       ROUND({_ans_sql('za')}, 6) AS p_value
-FROM zf
-"""
-
-
 # ---------------------------------------------------------------------------
 # Column-level data profiling: the quality-audit surface
 # ---------------------------------------------------------------------------
 
 
+COLUMN_PROFILE_ORACLE = """
+WITH one AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+         CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END)
+              AS BIGINT) AS null_o_orderkey,
+         CAST(COUNT(DISTINCT o_orderkey) AS BIGINT)
+           AS dist_o_orderkey,
+         CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
+              AS BIGINT) AS null_o_custkey,
+         CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS dist_o_custkey,
+         CAST(SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END)
+              AS BIGINT) AS null_o_orderstatus,
+         CAST(COUNT(DISTINCT o_orderstatus) AS BIGINT)
+           AS dist_o_orderstatus,
+         CAST(SUM(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END)
+              AS BIGINT) AS null_o_totalprice,
+         CAST(COUNT(DISTINCT o_totalprice) AS BIGINT)
+           AS dist_o_totalprice,
+         CAST(SUM(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END)
+              AS BIGINT) AS null_o_orderdate,
+         CAST(COUNT(DISTINCT o_orderdate) AS BIGINT)
+           AS dist_o_orderdate,
+         CAST(SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0
+                  END) AS BIGINT) AS null_o_orderpriority,
+         CAST(COUNT(DISTINCT o_orderpriority) AS BIGINT)
+           AS dist_o_orderpriority
+  FROM orders
+)
+SELECT t.column_name, one.n_rows, t.n_null, t.n_distinct
+FROM one, LATERAL (
+  VALUES ('o_orderkey', null_o_orderkey, dist_o_orderkey),
+         ('o_custkey', null_o_custkey, dist_o_custkey),
+         ('o_orderstatus', null_o_orderstatus, dist_o_orderstatus),
+         ('o_totalprice', null_o_totalprice, dist_o_totalprice),
+         ('o_orderdate', null_o_orderdate, dist_o_orderdate),
+         ('o_orderpriority', null_o_orderpriority,
+          dist_o_orderpriority)
+) AS t(column_name, n_null, n_distinct)
+"""
+
+
+@query("quality_column_profile", oracle=COLUMN_PROFILE_ORACLE)
 def quality_column_profile(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1233,52 +1282,45 @@ def quality_column_profile(
     ).select("column_name", "n_rows", "n_null", "n_distinct")
 
 
-COLUMN_PROFILE_ORACLE = """
-WITH one AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-         CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END)
-              AS BIGINT) AS null_o_orderkey,
-         CAST(COUNT(DISTINCT o_orderkey) AS BIGINT)
-           AS dist_o_orderkey,
-         CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
-              AS BIGINT) AS null_o_custkey,
-         CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS dist_o_custkey,
-         CAST(SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END)
-              AS BIGINT) AS null_o_orderstatus,
-         CAST(COUNT(DISTINCT o_orderstatus) AS BIGINT)
-           AS dist_o_orderstatus,
-         CAST(SUM(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END)
-              AS BIGINT) AS null_o_totalprice,
-         CAST(COUNT(DISTINCT o_totalprice) AS BIGINT)
-           AS dist_o_totalprice,
-         CAST(SUM(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END)
-              AS BIGINT) AS null_o_orderdate,
-         CAST(COUNT(DISTINCT o_orderdate) AS BIGINT)
-           AS dist_o_orderdate,
-         CAST(SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0
-                  END) AS BIGINT) AS null_o_orderpriority,
-         CAST(COUNT(DISTINCT o_orderpriority) AS BIGINT)
-           AS dist_o_orderpriority
-  FROM orders
-)
-SELECT t.column_name, one.n_rows, t.n_null, t.n_distinct
-FROM one, LATERAL (
-  VALUES ('o_orderkey', null_o_orderkey, dist_o_orderkey),
-         ('o_custkey', null_o_custkey, dist_o_custkey),
-         ('o_orderstatus', null_o_orderstatus, dist_o_orderstatus),
-         ('o_totalprice', null_o_totalprice, dist_o_totalprice),
-         ('o_orderdate', null_o_orderdate, dist_o_orderdate),
-         ('o_orderpriority', null_o_orderpriority,
-          dist_o_orderpriority)
-) AS t(column_name, n_null, n_distinct)
-"""
-
-
 # ---------------------------------------------------------------------------
 # Mean per-document type-token ratio per source
 # ---------------------------------------------------------------------------
 
 
+TTR_ORACLE = """
+WITH toks AS (
+  SELECT source, doc_id, tok
+  FROM (SELECT source, doc_id,
+               unnest(string_split_regex(trim(lower(text)), '\\s+'))
+                 AS tok
+        FROM documents)
+  WHERE tok <> ''
+),
+per_doc AS (
+  SELECT source, doc_id,
+         CAST(COUNT(*) AS DOUBLE) AS types,
+         CAST(SUM(c) AS DOUBLE) AS tokens
+  FROM (SELECT source, doc_id, tok, COUNT(*) AS c
+        FROM toks GROUP BY 1, 2, 3)
+  GROUP BY 1, 2
+),
+pooled AS (
+  SELECT source,
+         COUNT(*) * 1.0 / SUM(c) AS pooled_ttr
+  FROM (SELECT source, tok, COUNT(*) AS c
+        FROM toks GROUP BY 1, 2)
+  GROUP BY source
+)
+SELECT p.source,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       ROUND(AVG(types / tokens), 6) AS mean_doc_ttr,
+       ROUND(MAX(pl.pooled_ttr), 6) AS pooled_ttr
+FROM per_doc p JOIN pooled pl ON p.source = pl.source
+GROUP BY p.source
+"""
+
+
+@query("text_mean_doc_ttr", oracle=TTR_ORACLE)
 def text_mean_doc_ttr(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1337,39 +1379,6 @@ def text_mean_doc_ttr(
     )
 
 
-TTR_ORACLE = """
-WITH toks AS (
-  SELECT source, doc_id, tok
-  FROM (SELECT source, doc_id,
-               unnest(string_split_regex(trim(lower(text)), '\\s+'))
-                 AS tok
-        FROM documents)
-  WHERE tok <> ''
-),
-per_doc AS (
-  SELECT source, doc_id,
-         CAST(COUNT(*) AS DOUBLE) AS types,
-         CAST(SUM(c) AS DOUBLE) AS tokens
-  FROM (SELECT source, doc_id, tok, COUNT(*) AS c
-        FROM toks GROUP BY 1, 2, 3)
-  GROUP BY 1, 2
-),
-pooled AS (
-  SELECT source,
-         COUNT(*) * 1.0 / SUM(c) AS pooled_ttr
-  FROM (SELECT source, tok, COUNT(*) AS c
-        FROM toks GROUP BY 1, 2)
-  GROUP BY source
-)
-SELECT p.source,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       ROUND(AVG(types / tokens), 6) AS mean_doc_ttr,
-       ROUND(MAX(pl.pooled_ttr), 6) AS pooled_ttr
-FROM per_doc p JOIN pooled pl ON p.source = pl.source
-GROUP BY p.source
-"""
-
-
 # ---------------------------------------------------------------------------
 # Registration seeds for round 16
 # ---------------------------------------------------------------------------
@@ -1381,6 +1390,33 @@ GROUP BY p.source
 BURSTINESS_DF_PCT = 20  # keep terms present in >= 20% of documents
 
 
+BURSTINESS_ORACLE = f"""
+WITH nf AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs
+            FROM documents),
+per AS (
+  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS k
+  FROM (SELECT doc_id,
+               unnest(string_split_regex(trim(lower(text)), '\\s+'))
+                 AS term
+        FROM documents)
+  GROUP BY 1, 2
+),
+term AS (
+  SELECT term,
+         CAST(COUNT(*) AS BIGINT) AS df,
+         CAST(SUM(k) AS BIGINT) AS tf,
+         CAST(SUM(k * k) AS BIGINT) AS sq
+  FROM per GROUP BY 1
+)
+SELECT term, df, tf,
+       ROUND(CAST(n_docs * sq - tf * tf AS DOUBLE)
+             / CAST(n_docs * tf AS DOUBLE), 6) AS vmr
+FROM term, nf
+WHERE 100 * df >= {BURSTINESS_DF_PCT} * n_docs
+"""
+
+
+@query("text_term_burstiness", oracle=BURSTINESS_ORACLE)
 def text_term_burstiness(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1440,37 +1476,50 @@ def text_term_burstiness(
     return out
 
 
-BURSTINESS_ORACLE = f"""
-WITH nf AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs
-            FROM documents),
-per AS (
-  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS k
-  FROM (SELECT doc_id,
-               unnest(string_split_regex(trim(lower(text)), '\\s+'))
-                 AS term
-        FROM documents)
-  GROUP BY 1, 2
-),
-term AS (
-  SELECT term,
-         CAST(COUNT(*) AS BIGINT) AS df,
-         CAST(SUM(k) AS BIGINT) AS tf,
-         CAST(SUM(k * k) AS BIGINT) AS sq
-  FROM per GROUP BY 1
-)
-SELECT term, df, tf,
-       ROUND(CAST(n_docs * sq - tf * tf AS DOUBLE)
-             / CAST(n_docs * tf AS DOUBLE), 6) AS vmr
-FROM term, nf
-WHERE 100 * df >= {BURSTINESS_DF_PCT} * n_docs
-"""
-
-
 # ---------------------------------------------------------------------------
 # Spearman footrule distance between two attribute rankings
 # ---------------------------------------------------------------------------
 
 
+FOOTRULE_ORACLE = """
+WITH parts AS (
+  SELECT p_partkey, ROUND(p_retailprice, 4) AS vp,
+         CAST(p_size AS BIGINT) AS vs
+  FROM part
+),
+mp AS (SELECT vp, CAST(COUNT(*) AS BIGINT) AS c
+       FROM parts GROUP BY 1),
+ms AS (SELECT vs, CAST(COUNT(*) AS BIGINT) AS c
+       FROM parts GROUP BY 1),
+rp AS (
+  SELECT vp,
+         SUM(c) OVER (ORDER BY vp ROWS UNBOUNDED PRECEDING)
+           - (c - 1) / 2.0 AS r_price
+  FROM mp
+),
+rs AS (
+  SELECT vs,
+         SUM(c) OVER (ORDER BY vs ROWS UNBOUNDED PRECEDING)
+           - (c - 1) / 2.0 AS r_size
+  FROM ms
+),
+joined AS (
+  SELECT ABS(r_price - r_size) AS d
+  FROM parts JOIN rp USING (vp) JOIN rs USING (vs)
+),
+agg AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_parts,
+         SUM(d) AS footrule_sum
+  FROM joined
+)
+SELECT n_parts, footrule_sum,
+       ROUND(footrule_sum / (n_parts * n_parts / 2.0), 6)
+         AS footrule_norm
+FROM agg
+"""
+
+
+@query("eval_spearman_footrule", oracle=FOOTRULE_ORACLE)
 def eval_spearman_footrule(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1535,44 +1584,6 @@ def eval_spearman_footrule(
     )
 
 
-FOOTRULE_ORACLE = """
-WITH parts AS (
-  SELECT p_partkey, ROUND(p_retailprice, 4) AS vp,
-         CAST(p_size AS BIGINT) AS vs
-  FROM part
-),
-mp AS (SELECT vp, CAST(COUNT(*) AS BIGINT) AS c
-       FROM parts GROUP BY 1),
-ms AS (SELECT vs, CAST(COUNT(*) AS BIGINT) AS c
-       FROM parts GROUP BY 1),
-rp AS (
-  SELECT vp,
-         SUM(c) OVER (ORDER BY vp ROWS UNBOUNDED PRECEDING)
-           - (c - 1) / 2.0 AS r_price
-  FROM mp
-),
-rs AS (
-  SELECT vs,
-         SUM(c) OVER (ORDER BY vs ROWS UNBOUNDED PRECEDING)
-           - (c - 1) / 2.0 AS r_size
-  FROM ms
-),
-joined AS (
-  SELECT ABS(r_price - r_size) AS d
-  FROM parts JOIN rp USING (vp) JOIN rs USING (vs)
-),
-agg AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_parts,
-         SUM(d) AS footrule_sum
-  FROM joined
-)
-SELECT n_parts, footrule_sum,
-       ROUND(footrule_sum / (n_parts * n_parts / 2.0), 6)
-         AS footrule_norm
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # Blocked edit-distance entity resolution over part names
 # ---------------------------------------------------------------------------
@@ -1580,6 +1591,23 @@ FROM agg
 ER_EDIT_MAX_DIST = 4
 
 
+ER_EDIT_ORACLE = f"""
+WITH names AS (
+  SELECT p_name AS name,
+         CAST(COUNT(*) AS BIGINT) AS n_parts,
+         string_split(p_name, ' ')[-1] AS block
+  FROM part GROUP BY 1
+)
+SELECT a.name AS name_a, b.name AS name_b,
+       CAST(levenshtein(a.name, b.name) AS INTEGER) AS edit_dist,
+       a.n_parts AS n_parts_a, b.n_parts AS n_parts_b
+FROM names a JOIN names b
+  ON a.block = b.block AND a.name < b.name
+WHERE levenshtein(a.name, b.name) <= {ER_EDIT_MAX_DIST}
+"""
+
+
+@query("er_name_edit_blocking", oracle=ER_EDIT_ORACLE)
 def er_name_edit_blocking(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1636,27 +1664,67 @@ def er_name_edit_blocking(
     )
 
 
-ER_EDIT_ORACLE = f"""
-WITH names AS (
-  SELECT p_name AS name,
-         CAST(COUNT(*) AS BIGINT) AS n_parts,
-         string_split(p_name, ' ')[-1] AS block
-  FROM part GROUP BY 1
-)
-SELECT a.name AS name_a, b.name AS name_b,
-       CAST(levenshtein(a.name, b.name) AS INTEGER) AS edit_dist,
-       a.n_parts AS n_parts_a, b.n_parts AS n_parts_b
-FROM names a JOIN names b
-  ON a.block = b.block AND a.name < b.name
-WHERE levenshtein(a.name, b.name) <= {ER_EDIT_MAX_DIST}
-"""
-
-
 # ---------------------------------------------------------------------------
 # Wilcoxon signed-rank: paired AM/PM value shift per (user, day)
 # ---------------------------------------------------------------------------
 
 
+WILCOXON_ORACLE = f"""
+WITH blocks AS (
+  SELECT user_id, CAST(ts AS DATE) AS day,
+         ROUND(AVG(CASE WHEN hour(ts) < 12 THEN value END), 4)
+           AS am,
+         ROUND(AVG(CASE WHEN hour(ts) >= 12 THEN value END), 4)
+           AS pm
+  FROM events WHERE value IS NOT NULL
+  GROUP BY 1, 2
+),
+diffs AS (
+  SELECT pm - am AS d FROM blocks
+  WHERE am IS NOT NULL AND pm IS NOT NULL
+),
+zeros AS (
+  SELECT CAST(SUM(CASE WHEN d = 0 THEN 1 ELSE 0 END) AS BIGINT)
+    AS n_zero
+  FROM diffs
+),
+marg AS (
+  SELECT ABS(d) AS ad,
+         CAST(SUM(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT)
+           AS cpos,
+         CAST(COUNT(*) AS BIGINT) AS tot
+  FROM diffs WHERE d <> 0 GROUP BY 1
+),
+ranked AS (
+  SELECT ad, cpos, tot,
+         SUM(tot) OVER (ORDER BY ad ROWS UNBOUNDED PRECEDING)
+           - (tot - 1) / 2.0 AS r
+  FROM marg
+),
+agg AS (
+  SELECT CAST(SUM(tot) AS DOUBLE) AS n,
+         SUM(cpos * r) AS w_plus,
+         CAST(SUM(tot * tot * tot - tot) AS DOUBLE) AS ties
+  FROM ranked
+),
+st AS (
+  SELECT n, w_plus, ties,
+         (w_plus - n * (n + 1) / 4.0)
+           / SQRT(n * (n + 1) * (2 * n + 1) / 24.0 - ties / 48.0)
+           AS z
+  FROM agg
+),
+zf AS (SELECT n, w_plus, z, ABS(z) AS za FROM st)
+SELECT CAST(n AS BIGINT) AS n_blocks,
+       (SELECT n_zero FROM zeros) AS n_zero,
+       w_plus,
+       ROUND(z, 6) AS z_stat,
+       ROUND({_ans_sql('za')}, 6) AS p_value
+FROM zf
+"""
+
+
+@query("stats_wilcoxon_signed_rank", oracle=WILCOXON_ORACLE)
 def stats_wilcoxon_signed_rank(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1744,61 +1812,6 @@ def stats_wilcoxon_signed_rank(
     )
 
 
-WILCOXON_ORACLE = f"""
-WITH blocks AS (
-  SELECT user_id, CAST(ts AS DATE) AS day,
-         ROUND(AVG(CASE WHEN hour(ts) < 12 THEN value END), 4)
-           AS am,
-         ROUND(AVG(CASE WHEN hour(ts) >= 12 THEN value END), 4)
-           AS pm
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1, 2
-),
-diffs AS (
-  SELECT pm - am AS d FROM blocks
-  WHERE am IS NOT NULL AND pm IS NOT NULL
-),
-zeros AS (
-  SELECT CAST(SUM(CASE WHEN d = 0 THEN 1 ELSE 0 END) AS BIGINT)
-    AS n_zero
-  FROM diffs
-),
-marg AS (
-  SELECT ABS(d) AS ad,
-         CAST(SUM(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS cpos,
-         CAST(COUNT(*) AS BIGINT) AS tot
-  FROM diffs WHERE d <> 0 GROUP BY 1
-),
-ranked AS (
-  SELECT ad, cpos, tot,
-         SUM(tot) OVER (ORDER BY ad ROWS UNBOUNDED PRECEDING)
-           - (tot - 1) / 2.0 AS r
-  FROM marg
-),
-agg AS (
-  SELECT CAST(SUM(tot) AS DOUBLE) AS n,
-         SUM(cpos * r) AS w_plus,
-         CAST(SUM(tot * tot * tot - tot) AS DOUBLE) AS ties
-  FROM ranked
-),
-st AS (
-  SELECT n, w_plus, ties,
-         (w_plus - n * (n + 1) / 4.0)
-           / SQRT(n * (n + 1) * (2 * n + 1) / 24.0 - ties / 48.0)
-           AS z
-  FROM agg
-),
-zf AS (SELECT n, w_plus, z, ABS(z) AS za FROM st)
-SELECT CAST(n AS BIGINT) AS n_blocks,
-       (SELECT n_zero FROM zeros) AS n_zero,
-       w_plus,
-       ROUND(z, 6) AS z_stat,
-       ROUND({_ans_sql('za')}, 6) AS p_value
-FROM zf
-"""
-
-
 # ---------------------------------------------------------------------------
 # Log-rank test: reorder-delay survival, BUILDING vs MACHINERY
 # ---------------------------------------------------------------------------
@@ -1807,6 +1820,69 @@ LOGRANK_SEG_A = "BUILDING"
 LOGRANK_SEG_B = "MACHINERY"
 
 
+LOGRANK_ORACLE = f"""
+WITH o AS (
+  SELECT o_custkey, CAST(o_orderdate AS DATE) AS day,
+         CASE WHEN c_mktsegment = '{LOGRANK_SEG_A}' THEN 1 ELSE 0
+           END AS is_a
+  FROM orders JOIN customer ON o_custkey = c_custkey
+  WHERE c_mktsegment IN ('{LOGRANK_SEG_A}', '{LOGRANK_SEG_B}')
+),
+base AS (
+  SELECT day, is_a,
+         LEAD(day) OVER (PARTITION BY o_custkey ORDER BY day)
+           AS nxt
+  FROM o
+),
+gmax AS (SELECT MAX(day) AS gm FROM o),
+obs AS (
+  SELECT datediff('day', day, nxt) AS dur, is_a, 1 AS event
+  FROM base WHERE nxt IS NOT NULL
+  UNION ALL
+  SELECT datediff('day', day, gm) AS dur, is_a, 0 AS event
+  FROM base, gmax WHERE nxt IS NULL
+),
+g AS (
+  SELECT dur,
+         CAST(SUM(event * is_a) AS BIGINT) AS da,
+         CAST(SUM(event * (1 - is_a)) AS BIGINT) AS db,
+         CAST(SUM(is_a) AS BIGINT) AS ta,
+         CAST(SUM(1 - is_a) AS BIGINT) AS tb
+  FROM obs GROUP BY dur
+),
+risk AS (
+  SELECT dur, da, db,
+         SUM(ta) OVER () - SUM(ta) OVER (ORDER BY dur
+           ROWS UNBOUNDED PRECEDING) + ta AS na,
+         SUM(tb) OVER () - SUM(tb) OVER (ORDER BY dur
+           ROWS UNBOUNDED PRECEDING) + tb AS nb
+  FROM g
+),
+at_event AS (
+  SELECT CAST(da AS DOUBLE) AS da, CAST(db AS DOUBLE) AS db,
+         CAST(na AS DOUBLE) AS na, CAST(nb AS DOUBLE) AS nb
+  FROM risk WHERE da + db > 0
+),
+agg AS (
+  SELECT SUM(da) AS oa,
+         SUM((da + db) * na / (na + nb)) AS ea,
+         SUM(CASE WHEN na + nb > 1
+             THEN (da + db) * (na / (na + nb)) * (nb / (na + nb))
+                  * (na + nb - da - db) / (na + nb - 1)
+             ELSE 0.0 END) AS v
+  FROM at_event
+),
+zz AS (SELECT oa, ea, (oa - ea) / SQRT(v) AS z FROM agg),
+zf AS (SELECT oa, ea, z, ABS(z) AS za FROM zz)
+SELECT CAST(oa AS BIGINT) AS observed_a,
+       ROUND(ea, 4) AS expected_a,
+       ROUND(z * z, 6) AS chi2,
+       ROUND({_ans_sql('za')}, 6) AS p_value
+FROM zf
+"""
+
+
+@query("stats_logrank_segments", oracle=LOGRANK_ORACLE)
 def stats_logrank_segments(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1924,73 +2000,42 @@ def stats_logrank_segments(
     )
 
 
-LOGRANK_ORACLE = f"""
-WITH o AS (
-  SELECT o_custkey, CAST(o_orderdate AS DATE) AS day,
-         CASE WHEN c_mktsegment = '{LOGRANK_SEG_A}' THEN 1 ELSE 0
-           END AS is_a
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  WHERE c_mktsegment IN ('{LOGRANK_SEG_A}', '{LOGRANK_SEG_B}')
-),
-base AS (
-  SELECT day, is_a,
-         LEAD(day) OVER (PARTITION BY o_custkey ORDER BY day)
-           AS nxt
-  FROM o
-),
-gmax AS (SELECT MAX(day) AS gm FROM o),
-obs AS (
-  SELECT datediff('day', day, nxt) AS dur, is_a, 1 AS event
-  FROM base WHERE nxt IS NOT NULL
-  UNION ALL
-  SELECT datediff('day', day, gm) AS dur, is_a, 0 AS event
-  FROM base, gmax WHERE nxt IS NULL
-),
-g AS (
-  SELECT dur,
-         CAST(SUM(event * is_a) AS BIGINT) AS da,
-         CAST(SUM(event * (1 - is_a)) AS BIGINT) AS db,
-         CAST(SUM(is_a) AS BIGINT) AS ta,
-         CAST(SUM(1 - is_a) AS BIGINT) AS tb
-  FROM obs GROUP BY dur
-),
-risk AS (
-  SELECT dur, da, db,
-         SUM(ta) OVER () - SUM(ta) OVER (ORDER BY dur
-           ROWS UNBOUNDED PRECEDING) + ta AS na,
-         SUM(tb) OVER () - SUM(tb) OVER (ORDER BY dur
-           ROWS UNBOUNDED PRECEDING) + tb AS nb
-  FROM g
-),
-at_event AS (
-  SELECT CAST(da AS DOUBLE) AS da, CAST(db AS DOUBLE) AS db,
-         CAST(na AS DOUBLE) AS na, CAST(nb AS DOUBLE) AS nb
-  FROM risk WHERE da + db > 0
-),
-agg AS (
-  SELECT SUM(da) AS oa,
-         SUM((da + db) * na / (na + nb)) AS ea,
-         SUM(CASE WHEN na + nb > 1
-             THEN (da + db) * (na / (na + nb)) * (nb / (na + nb))
-                  * (na + nb - da - db) / (na + nb - 1)
-             ELSE 0.0 END) AS v
-  FROM at_event
-),
-zz AS (SELECT oa, ea, (oa - ea) / SQRT(v) AS z FROM agg),
-zf AS (SELECT oa, ea, z, ABS(z) AS za FROM zz)
-SELECT CAST(oa AS BIGINT) AS observed_a,
-       ROUND(ea, 4) AS expected_a,
-       ROUND(z * z, 6) AS chi2,
-       ROUND({_ans_sql('za')}, 6) AS p_value
-FROM zf
-"""
-
-
 # ---------------------------------------------------------------------------
 # Forward as-of: first error after each purchase, per user timeline
 # ---------------------------------------------------------------------------
 
 
+ASOF_FORWARD_ORACLE = """
+WITH ev AS (
+  SELECT user_id, event_id, event_type, epoch_us(ts) AS tsu
+  FROM events
+),
+marked AS (
+  SELECT user_id, event_id, event_type, tsu,
+         MIN(CASE WHEN event_type = 'error' THEN tsu END) OVER (
+           PARTITION BY user_id
+           ORDER BY tsu DESC, event_id DESC
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+         ) AS next_err
+  FROM ev
+),
+agg AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_purchases,
+         CAST(SUM(CASE WHEN next_err IS NOT NULL THEN 1 ELSE 0 END)
+              AS BIGINT) AS n_matched,
+         CAST(SUM(next_err - tsu) AS BIGINT) AS gap_us,
+         CAST(MIN(next_err - tsu) AS BIGINT) AS min_gap_us
+  FROM marked WHERE event_type = 'purchase'
+)
+SELECT n_purchases, n_matched,
+       ROUND(CAST(gap_us AS DOUBLE) / n_matched / 1e6, 4)
+         AS avg_gap_sec,
+       ROUND(CAST(min_gap_us AS DOUBLE) / 1e6, 6) AS min_gap_sec
+FROM agg
+"""
+
+
+@query("asof_forward_first_error", oracle=ASOF_FORWARD_ORACLE)
 def asof_forward_first_error(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2060,41 +2105,23 @@ def asof_forward_first_error(
     )
 
 
-ASOF_FORWARD_ORACLE = """
-WITH ev AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS tsu
-  FROM events
-),
-marked AS (
-  SELECT user_id, event_id, event_type, tsu,
-         MIN(CASE WHEN event_type = 'error' THEN tsu END) OVER (
-           PARTITION BY user_id
-           ORDER BY tsu DESC, event_id DESC
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ) AS next_err
-  FROM ev
-),
-agg AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_purchases,
-         CAST(SUM(CASE WHEN next_err IS NOT NULL THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_matched,
-         CAST(SUM(next_err - tsu) AS BIGINT) AS gap_us,
-         CAST(MIN(next_err - tsu) AS BIGINT) AS min_gap_us
-  FROM marked WHERE event_type = 'purchase'
-)
-SELECT n_purchases, n_matched,
-       ROUND(CAST(gap_us AS DOUBLE) / n_matched / 1e6, 4)
-         AS avg_gap_sec,
-       ROUND(CAST(min_gap_us AS DOUBLE) / 1e6, 6) AS min_gap_sec
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # Exactly-once streaming sink audit: the versioned_sink driver proof
 # ---------------------------------------------------------------------------
 
 
+SINK_AUDIT_ORACLE = """
+SELECT CAST(3 AS BIGINT) AS n_versions,
+       CAST(2 AS BIGINT) AS last_txn_version,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(o_orderkey) AS BIGINT) AS key_sum,
+       ROUND(SUM(o_totalprice), 4) AS price_sum
+FROM orders
+WHERE o_orderkey % 4 IN (0, 1, 2)
+"""
+
+
+@query("versioned_sink_audit", oracle=SINK_AUDIT_ORACLE)
 def versioned_sink_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2164,17 +2191,6 @@ def versioned_sink_audit(
     )
 
 
-SINK_AUDIT_ORACLE = """
-SELECT CAST(3 AS BIGINT) AS n_versions,
-       CAST(2 AS BIGINT) AS last_txn_version,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(o_orderkey) AS BIGINT) AS key_sum,
-       ROUND(SUM(o_totalprice), 4) AS price_sum
-FROM orders
-WHERE o_orderkey % 4 IN (0, 1, 2)
-"""
-
-
 # ---------------------------------------------------------------------------
 # Vacuum audit: retention-window space reclaim, reader-safe
 # ---------------------------------------------------------------------------
@@ -2182,6 +2198,18 @@ WHERE o_orderkey % 4 IN (0, 1, 2)
 VAC_HI = 5000.0
 
 
+VACUUM_AUDIT_ORACLE = f"""
+SELECT CAST(1 AS BIGINT) AS versions_left,
+       CAST(4 AS BIGINT) AS latest_version,
+       CAST(1 AS BIGINT) AS dirs_on_disk,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(c_custkey) AS BIGINT) AS key_sum,
+       ROUND(SUM(c_acctbal), 4) AS bal_sum
+FROM customer WHERE c_acctbal >= {VAC_HI}
+"""
+
+
+@query("versioned_vacuum_audit", oracle=VACUUM_AUDIT_ORACLE)
 def versioned_vacuum_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2258,22 +2286,26 @@ def versioned_vacuum_audit(
     )
 
 
-VACUUM_AUDIT_ORACLE = f"""
-SELECT CAST(1 AS BIGINT) AS versions_left,
-       CAST(4 AS BIGINT) AS latest_version,
-       CAST(1 AS BIGINT) AS dirs_on_disk,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(c_custkey) AS BIGINT) AS key_sum,
-       ROUND(SUM(c_acctbal), 4) AS bal_sum
-FROM customer WHERE c_acctbal >= {VAC_HI}
-"""
-
-
 # ---------------------------------------------------------------------------
 # Schema-evolution audit: additive append, old rows read NULL
 # ---------------------------------------------------------------------------
 
 
+EVOLUTION_AUDIT_ORACLE = """
+SELECT CAST(2 AS BIGINT) AS n_versions,
+       TRUE AS schema_evolved,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(CASE WHEN c_custkey % 2 = 0 THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_null_nation,
+       CAST(SUM(CASE WHEN c_custkey % 2 = 1 THEN c_nationkey END)
+            AS BIGINT) AS nation_sum,
+       CAST(SUM(c_custkey) AS BIGINT) AS key_sum,
+       ROUND(SUM(c_acctbal), 4) AS bal_sum
+FROM customer
+"""
+
+
+@query("versioned_evolution_audit", oracle=EVOLUTION_AUDIT_ORACLE)
 def versioned_evolution_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2336,108 +2368,3 @@ def versioned_evolution_audit(
         F.sum("c_custkey").cast("long").alias("key_sum"),
         F.round(F.sum("c_acctbal"), 4).alias("bal_sum"),
     )
-
-
-EVOLUTION_AUDIT_ORACLE = """
-SELECT CAST(2 AS BIGINT) AS n_versions,
-       TRUE AS schema_evolved,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CASE WHEN c_custkey % 2 = 0 THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_null_nation,
-       CAST(SUM(CASE WHEN c_custkey % 2 = 1 THEN c_nationkey END)
-            AS BIGINT) AS nation_sum,
-       CAST(SUM(c_custkey) AS BIGINT) AS key_sum,
-       ROUND(SUM(c_acctbal), 4) AS bal_sum
-FROM customer
-"""
-
-
-PENDING_ORDER = [
-    "stats_jonckheere_terpstra",
-    "stats_mcnemar_paired",
-    "eval_ks_uniformity",
-    "eval_cliffs_delta",
-    "stats_atkinson_hoover",
-    "stats_quintile_shares",
-    "stats_goodman_kruskal_gamma",
-    "text_mean_doc_ttr",
-    "versioned_sink_audit",
-    "stats_somers_d",
-    "stats_cochran_armitage",
-    "quality_column_profile",
-    "text_term_burstiness",
-    "eval_spearman_footrule",
-    "er_name_edit_blocking",
-    "stats_wilcoxon_signed_rank",
-    "stats_logrank_segments",
-    "asof_forward_first_error",
-    "versioned_vacuum_audit",
-    "versioned_evolution_audit",
-]
-
-_PENDING = {
-    "stats_jonckheere_terpstra": (
-        stats_jonckheere_terpstra, JT_ORACLE,
-    ),
-    "stats_mcnemar_paired": (stats_mcnemar_paired, MCNEMAR_ORACLE),
-    "eval_ks_uniformity": (eval_ks_uniformity, KS_UNIFORM_ORACLE),
-    "eval_cliffs_delta": (eval_cliffs_delta, CLIFFS_ORACLE),
-    "stats_atkinson_hoover": (
-        stats_atkinson_hoover, ATKINSON_ORACLE,
-    ),
-    "stats_quintile_shares": (
-        stats_quintile_shares, QUINTILE_ORACLE,
-    ),
-    "stats_goodman_kruskal_gamma": (
-        stats_goodman_kruskal_gamma, GAMMA_ORACLE,
-    ),
-    "text_mean_doc_ttr": (text_mean_doc_ttr, TTR_ORACLE),
-    "versioned_sink_audit": (
-        versioned_sink_audit, SINK_AUDIT_ORACLE,
-    ),
-    "stats_somers_d": (stats_somers_d, SOMERS_ORACLE),
-    "stats_cochran_armitage": (
-        stats_cochran_armitage, COCHRAN_ARMITAGE_ORACLE,
-    ),
-    "quality_column_profile": (
-        quality_column_profile, COLUMN_PROFILE_ORACLE,
-    ),
-    "text_term_burstiness": (
-        text_term_burstiness, BURSTINESS_ORACLE,
-    ),
-    "eval_spearman_footrule": (
-        eval_spearman_footrule, FOOTRULE_ORACLE,
-    ),
-    "er_name_edit_blocking": (
-        er_name_edit_blocking, ER_EDIT_ORACLE,
-    ),
-    "stats_wilcoxon_signed_rank": (
-        stats_wilcoxon_signed_rank, WILCOXON_ORACLE,
-    ),
-    "stats_logrank_segments": (
-        stats_logrank_segments, LOGRANK_ORACLE,
-    ),
-    "asof_forward_first_error": (
-        asof_forward_first_error, ASOF_FORWARD_ORACLE,
-    ),
-    "versioned_vacuum_audit": (
-        versioned_vacuum_audit, VACUUM_AUDIT_ORACLE,
-    ),
-    "versioned_evolution_audit": (
-        versioned_evolution_audit, EVOLUTION_AUDIT_ORACLE,
-    ),
-}
-
-
-def register_all() -> None:
-    """Register every round-16 seed query + oracle in the live
-    registry (call from queries/__init__.py when the round-16
-    window opens)."""
-    from cdc_2025_spark.queries.registry import ORACLES, QUERIES
-
-    for name in PENDING_ORDER:
-        fn, oracle = _PENDING[name]
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            if oracle is not None:
-                ORACLES[name] = " ".join(oracle.split())

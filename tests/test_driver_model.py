@@ -1,6 +1,6 @@
 """The shared driver-strength comparison model (r14 ADVICE findings
 #1/#2): one source of truth in queries/driver_model.py, imported by
-the rehearsal tool and every guard test, and a value comparator that
+the named-query checker and every guard test, and a value comparator that
 FAILS on types outside the known-safe set instead of string-coercing
 them (a Decimal('5.0') repr-matches 5.0 but the driver's
 type-sensitive hash mismatches it)."""
@@ -12,6 +12,7 @@ from decimal import Decimal
 
 from cdc_2025_spark.queries.driver_model import (
     DRIVER_SAFE_ORACLE_TYPES,
+    check_registered,
     compare_frames,
     normalize_rows,
     same_value,
@@ -20,22 +21,22 @@ from cdc_2025_spark.queries.driver_model import (
 
 
 def test_single_source_of_truth():
-    """The rehearsal tool and the guard tests must bind the SAME
+    """The oracle-check tool and the guard tests must bind the SAME
     objects — a future tightening cannot drift between them."""
     import importlib.util
     import os
 
     spec = importlib.util.spec_from_file_location(
-        "window_check",
+        "oracle_check",
         os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
             "tools",
-            "window_check.py",
+            "oracle_check.py",
         ),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    assert mod.compare_frames is compare_frames
+    assert mod.check_registered is check_registered
 
     import tests.test_oracle_parity as top
 
@@ -107,3 +108,18 @@ def test_compare_frames_end_to_end():
         ["a"], [(5.0,)], ["a"], ["DECIMAL(3,1)"], [(Decimal("5.0"),)]
     )
     assert typed is not None and "driver-unsafe" in typed
+
+
+def test_signed_zero_rows_pair_up():
+    # -0.0 and 0.0 are the same value; sorting must not split them
+    # from their rows (the engine emits 0.0 where DuckDB emits -0.0)
+    assert same_value(-0.0, 0.0)
+    ok = compare_frames(
+        ["b"], [(-0.0,), (-1.5,)], ["b"], ["DOUBLE"], [(0.0,), (-1.5,)]
+    )
+    assert ok is None
+    # value equality stays strict
+    bad = compare_frames(
+        ["b"], [(-0.0,), (-1.5,)], ["b"], ["DOUBLE"], [(0.0,), (-1.4,)]
+    )
+    assert bad is not None and "mismatch" in bad

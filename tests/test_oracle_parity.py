@@ -95,13 +95,14 @@ def test_oracle_match(spark, duck, name):
 
 
 # The driver-safe type set lives in queries/driver_model.py (single
-# source shared with tools/window_check.py and the pending-queue
+# source shared with tools/oracle_check.py and the per-module
 # tests — r14 ADVICE) — HUGEINT and DECIMAL are deliberately absent:
 # DuckDB types SUM(BIGINT) as HUGEINT (int128), which the driver
 # hashes differently from int64 even when every value is equal —
 # `survival_km_reorder` was hash-red for two rounds on exactly this.
 from cdc_2025_spark.queries.driver_model import (  # noqa: E402
     DRIVER_SAFE_ORACLE_TYPES,
+    container_columns,
 )
 
 
@@ -133,14 +134,7 @@ def test_driver_sortable_output_types(spark, name):
     killed two queries in round 1. Pin: no top-level container types
     in any driver-facing output; serialize arrays (array_join /
     element_at) at the query boundary instead."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    df = QUERIES[name](spark, SF_DIR)
-    bad = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
+    bad = container_columns(QUERIES[name](spark, SF_DIR))
     assert not bad, (
         f"{name}: driver-unsortable container columns {bad} — "
         "project to scalars (element_at / array_join) before returning"

@@ -1,20 +1,20 @@
-"""Round-10 registration queue: every pending query must already pass
-the exact driver-style oracle comparison (same normalization as
-tests/test_oracle_parity.py) so registration day is a rename, not a
-debug session. The module is intentionally NOT imported by
-queries/__init__.py — these tests import it directly, which leaves
-the live registry untouched (pending queries use plain functions, not
-the @query decorator)."""
+"""Round-10 queries (entity resolution, k-anonymity, weighted
+reservoir, classifier evaluation, late-data audit, graph ANN): each
+one passes the driver-strength oracle comparison, plus fixture and
+plan-shape pins."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
 import pytest
 
-from cdc_2025_spark.queries import pending_r10
+from cdc_2025_spark.queries import ORACLES, QUERIES, pending_r10
+from cdc_2025_spark.queries.driver_model import (
+    check_registered,
+    container_columns,
+)
 from cdc_2025_spark.schemas import TABLE_NAMES
 
 SF_DIR = os.environ.get(
@@ -33,93 +33,35 @@ def duck():
     con.close()
 
 
-def _normalize(rows, columns):
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = []
-    for row in rows:
-        vals = []
-        for i in order:
-            v = row[i]
-            if isinstance(v, float):
-                v = "NaN" if math.isnan(v) else round(v, 6)
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
-    return out
+NAMES = [
+    n for n, f in QUERIES.items() if f.__module__ == pending_r10.__name__
+]
 
 
-def _close(a, b):
-    if a == b:
-        return True
-    if isinstance(a, float) and isinstance(b, float):
-        return math.isclose(a, b, rel_tol=1e-7, abs_tol=1e-7)
-    if isinstance(a, (int, float)) and isinstance(b, (int, float)):
-        return float(a) == float(b)
-    return str(a) == str(b)
-
-
-@pytest.mark.parametrize("name", pending_r10.PENDING_ORDER)
+@pytest.mark.parametrize("name", NAMES)
 def test_pending_oracle_match(spark, duck, name):
-    fn, oracle = pending_r10._PENDING[name]
-    if oracle is None:
+    if name not in ORACLES:
         # rows-only by design (graph traversal): the query must still
         # RUN and produce its contracted row count; accuracy is
         # pinned in its dedicated test module
-        n = fn(spark, SF_DIR).count()
-        expected = {
-            "sim_graph_ann_topk": pending_r10.ANN_N_QUERIES
-            * pending_r10.ANN_TOPK,
-        }
-        assert n == expected.get(name, n) and n > 0
+        n = QUERIES[name](spark, SF_DIR).count()
+        assert n == pending_r10.ANN_N_QUERIES * pending_r10.ANN_TOPK
         return
-    sdf = fn(spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    res = duck.execute(oracle)
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{name}: column mismatch {spark_cols} vs {duck_cols}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-    )
-    s_norm = _normalize(spark_rows, spark_cols)
-    d_norm = _normalize(duck_rows, duck_cols)
-    mismatches = [
-        (i, sr, dr)
-        for i, (sr, dr) in enumerate(zip(s_norm, d_norm))
-        if not all(_close(a, b) for a, b in zip(sr, dr))
-    ][:3]
-    assert not mismatches, f"{name}: value mismatches {mismatches}"
+    failure = check_registered(spark, duck, name, SF_DIR)
+    assert failure is None, f"{name}: {failure}"
 
 
-@pytest.mark.parametrize("name", pending_r10.PENDING_ORDER)
+@pytest.mark.parametrize("name", NAMES)
 def test_pending_outputs_driver_sortable(spark, name):
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    fn, _ = pending_r10._PENDING[name]
-    df = fn(spark, SF_DIR)
-    bad = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
+    bad = container_columns(QUERIES[name](spark, SF_DIR))
     assert not bad, f"{name}: container columns {bad}"
 
 
 def test_pending_module_registered():
-    """Round 10 opened this registration window: every pending query
-    is live in the registry with its oracle where one exists. (They
-    LED the first-50 window in round 10; later rounds' windows lead
-    now — the freshness guard owns the ordering invariant, this test
-    owns registration.)"""
-    from cdc_2025_spark.queries import ORACLES, QUERIES
-
-    for name in pending_r10.PENDING_ORDER:
-        assert name in QUERIES
-        _fn, oracle = pending_r10._PENDING[name]
-        assert (name in ORACLES) == (oracle is not None)
+    """Every pending_r10 query is registered, with its oracle where
+    one exists (sim_graph_ann_topk is rows-only)."""
+    assert len(NAMES) == 7
+    assert [n for n in NAMES if n not in ORACLES] == ["sim_graph_ann_topk"]
 
 
 def test_pending_fixtures_are_nontrivial(spark, duck):

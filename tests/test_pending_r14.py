@@ -1,8 +1,6 @@
-"""Round-14 registration queue (ranking-metric & diagnostic depth
-family): every pending query must already pass the exact
-driver-style oracle comparison so registration day is a rename, not
-a debug session — the test_pending_r10-r13 posture. NOT imported by
-queries/__init__.py; pending queries are plain functions."""
+"""Round-14 queries (ranking-metric & diagnostic depth family): each
+one passes the driver-strength oracle comparison, plus python model
+pins per statistic."""
 
 from __future__ import annotations
 
@@ -12,7 +10,11 @@ import os
 import duckdb
 import pytest
 
-from cdc_2025_spark.queries import pending_r14
+from cdc_2025_spark.queries import ORACLES, QUERIES, pending_r14
+from cdc_2025_spark.queries.driver_model import (
+    check_registered,
+    container_columns,
+)
 from cdc_2025_spark.schemas import TABLE_NAMES
 
 SF_DIR = os.environ.get(
@@ -31,78 +33,27 @@ def duck():
     con.close()
 
 
-def _normalize(rows, columns):
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = []
-    for row in rows:
-        vals = []
-        for i in order:
-            v = row[i]
-            if isinstance(v, float):
-                v = "NaN" if math.isnan(v) else round(v, 6)
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
-    return out
+NAMES = [
+    n for n, f in QUERIES.items() if f.__module__ == pending_r14.__name__
+]
 
 
-def _close(a, b):
-    if a == b:
-        return True
-    if isinstance(a, float) and isinstance(b, float):
-        return math.isclose(a, b, rel_tol=1e-7, abs_tol=1e-7)
-    if isinstance(a, (int, float)) and isinstance(b, (int, float)):
-        return float(a) == float(b)
-    return str(a) == str(b)
-
-
-@pytest.mark.parametrize("name", pending_r14.PENDING_ORDER)
+@pytest.mark.parametrize("name", NAMES)
 def test_pending_oracle_match(spark, duck, name):
-    fn, oracle = pending_r14._PENDING[name]
-    sdf = fn(spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    res = duck.execute(oracle)
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{name}: column mismatch {spark_cols} vs {duck_cols}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-    )
-    s_norm = _normalize(spark_rows, spark_cols)
-    d_norm = _normalize(duck_rows, duck_cols)
-    mismatches = [
-        (i, sr, dr)
-        for i, (sr, dr) in enumerate(zip(s_norm, d_norm))
-        if not all(_close(a, b) for a, b in zip(sr, dr))
-    ][:3]
-    assert not mismatches, f"{name}: value mismatches {mismatches}"
+    failure = check_registered(spark, duck, name, SF_DIR)
+    assert failure is None, f"{name}: {failure}"
 
 
-@pytest.mark.parametrize("name", pending_r14.PENDING_ORDER)
+@pytest.mark.parametrize("name", NAMES)
 def test_pending_outputs_driver_sortable(spark, name):
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    fn, _ = pending_r14._PENDING[name]
-    df = fn(spark, SF_DIR)
-    bad = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
+    bad = container_columns(QUERIES[name](spark, SF_DIR))
     assert not bad, f"{name}: container columns {bad}"
 
 
 def test_pending_registered_and_oracle_backed():
-    """Round-14 opened its window (the leading-position requirement
-    has since been superseded by the round-15 window): every
-    pending_r14 query stays registered and oracle-backed."""
-    from cdc_2025_spark.queries import ORACLES, QUERIES
-
-    assert set(pending_r14.PENDING_ORDER) <= set(QUERIES)
-    assert all(n in ORACLES for n in pending_r14.PENDING_ORDER)
+    """Every pending_r14 query is registered and oracle-backed."""
+    assert len(NAMES) == 20
+    assert all(n in ORACLES for n in NAMES)
 
 
 def _scored_rows(spark):

@@ -1,10 +1,6 @@
-"""Round-15 registration queue (regression-diagnostic &
-rank-agreement family): every pending query must already pass the
-DRIVER-STRENGTH oracle comparison (exact values, numeric-type-family
-match, oracle-output-type safety — the tightened r14 window_check
-posture, stricter than the r10-r14 staging tests' 1e-7 tolerance) so
-registration day is a rename, not a debug session. NOT imported by
-queries/__init__.py; pending queries are plain functions.
+"""Round-15 queries (regression-diagnostic & rank-agreement family):
+each one passes the DRIVER-STRENGTH oracle comparison (exact values,
+numeric-type-family match, oracle-output-type safety).
 
 Each statistic also carries a plain-python/numpy model pin: the
 engine value must equal an independent fold over the same collected
@@ -20,8 +16,11 @@ from collections import Counter, defaultdict
 import duckdb
 import pytest
 
-from cdc_2025_spark.queries import pending_r15
-from cdc_2025_spark.queries.driver_model import compare_frames
+from cdc_2025_spark.queries import QUERIES, pending_r15
+from cdc_2025_spark.queries.driver_model import (
+    check_registered,
+    container_columns,
+)
 from cdc_2025_spark.schemas import TABLE_NAMES
 
 SF_DIR = os.environ.get(
@@ -39,47 +38,21 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", pending_r15.PENDING_ORDER)
+NAMES = [
+    n for n, f in QUERIES.items() if f.__module__ == pending_r15.__name__
+]
+
+
+@pytest.mark.parametrize("name", NAMES)
 def test_pending_oracle_match(spark, duck, name):
-    fn, oracle = pending_r15._PENDING[name]
-    sdf = fn(spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    rel = duck.sql(oracle)
-    failure = compare_frames(
-        spark_cols,
-        spark_rows,
-        list(rel.columns),
-        [str(t) for t in rel.types],
-        rel.fetchall(),
-    )
+    failure = check_registered(spark, duck, name, SF_DIR)
     assert failure is None, f"{name}: {failure}"
 
 
-@pytest.mark.parametrize("name", pending_r15.PENDING_ORDER)
+@pytest.mark.parametrize("name", NAMES)
 def test_pending_outputs_driver_sortable(spark, name):
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    fn, _ = pending_r15._PENDING[name]
-    df = fn(spark, SF_DIR)
-    bad = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
+    bad = container_columns(QUERIES[name](spark, SF_DIR))
     assert not bad, f"{name}: container columns {bad}"
-
-
-def test_pending_registered_and_leading_r15_window():
-    """The round-15 window is OPEN: register_all() ran, and the
-    freshness guard's requirement — never-checked registrations LEAD
-    the window — holds (all 28 are the first 28 registry entries;
-    no re-lead this round: CORRECTNESS_r14 was 50/50 green)."""
-    from cdc_2025_spark.queries import ORACLES, QUERIES
-
-    names = list(QUERIES)
-    assert set(pending_r15.PENDING_ORDER) == set(names[:28])
-    assert all(n in ORACLES for n in pending_r15.PENDING_ORDER)
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,6 @@
-"""Round-16 registration seeds (ordered-alternatives & inequality
-family): driver-strength oracle comparison (exact values,
-numeric-type-family match, oracle-output-type safety) plus python
-model pins, so the round-15 session opens with a pre-verified queue.
-NOT imported by queries/__init__.py; pending queries are plain
-functions."""
+"""Round-16 queries (ordered-alternatives & inequality family):
+driver-strength oracle comparison (exact values, numeric-type-family
+match, oracle-output-type safety) plus python model pins."""
 
 from __future__ import annotations
 
@@ -14,8 +11,11 @@ from collections import defaultdict
 import duckdb
 import pytest
 
-from cdc_2025_spark.queries import pending_r16
-from cdc_2025_spark.queries.driver_model import compare_frames
+from cdc_2025_spark.queries import QUERIES, pending_r16
+from cdc_2025_spark.queries.driver_model import (
+    check_registered,
+    container_columns,
+)
 from cdc_2025_spark.schemas import TABLE_NAMES
 
 SF_DIR = os.environ.get(
@@ -33,34 +33,20 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", pending_r16.PENDING_ORDER)
+NAMES = [
+    n for n, f in QUERIES.items() if f.__module__ == pending_r16.__name__
+]
+
+
+@pytest.mark.parametrize("name", NAMES)
 def test_pending_oracle_match(spark, duck, name):
-    fn, oracle = pending_r16._PENDING[name]
-    sdf = fn(spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    rel = duck.sql(oracle)
-    failure = compare_frames(
-        spark_cols,
-        spark_rows,
-        list(rel.columns),
-        [str(t) for t in rel.types],
-        rel.fetchall(),
-    )
+    failure = check_registered(spark, duck, name, SF_DIR)
     assert failure is None, f"{name}: {failure}"
 
 
-@pytest.mark.parametrize("name", pending_r16.PENDING_ORDER)
+@pytest.mark.parametrize("name", NAMES)
 def test_pending_outputs_driver_sortable(spark, name):
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    fn, _ = pending_r16._PENDING[name]
-    df = fn(spark, SF_DIR)
-    bad = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
+    bad = container_columns(QUERIES[name](spark, SF_DIR))
     assert not bad, f"{name}: container columns {bad}"
 
 
@@ -427,11 +413,6 @@ def test_evolution_audit_null_fill(spark):
     # old (even-key) rows read NULL for the evolved column
     assert row["n_null_nation"] * 2 == row["n_rows"]
 
-
-def test_pending_module_not_registered():
-    from cdc_2025_spark.queries import QUERIES
-
-    assert not (set(pending_r16.PENDING_ORDER) & set(QUERIES))
 
 
 def test_jonckheere_matches_pairwise_python_model(spark, duck):

@@ -1,136 +1,25 @@
-"""Mechanical guard for the per-round verification-window rotation.
-
-The driver oracle-checks only the FIRST 50 registry entries each
-round, so queries/__init__.py rotates a hand-composed window to the
-front every round. The comment arithmetic there has drifted once
-already (r5 ADVICE item 4) — this test replaces eyeballing with a
-checkable invariant:
-
-  after the UPCOMING round runs its window, no registered query's
-  newest green CORRECTNESS row may be older than 2 rounds.
-
-Equivalently, today: every registered query is either inside the
-first-50 window (it will get a fresh row this round) or already has
-a green row no older than (upcoming_round - 2).
-"""
+"""Mechanical guard for the OPERATORS.md query roster: it must list
+every registered query, in registry order, with its oracle flag."""
 
 from __future__ import annotations
 
-import json
 import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-WINDOW = 50
-
-
-def _newest_green() -> tuple[dict[str, int], int]:
-    """(newest green round per query, max recorded round) from the
-    union of all driver CORRECTNESS files. Green = hash-matched, or
-    an intentionally oracle-free rows-only row."""
-    newest: dict[str, int] = {}
-    max_round = 0
-    for path in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", path.name).group(1))
-        max_round = max(max_round, rnd)
-        for name, row in json.loads(path.read_text()).items():
-            green = row.get("hash_match") is True or (
-                row.get("err") == "no_oracle"
-            )
-            if green:
-                newest[name] = max(newest.get(name, 0), rnd)
-    return newest, max_round
-
-
-def test_rotation_typos_and_duplicates():
-    """Every hand-listed _VERIFY_FIRST name must be a registered
-    query (a typo silently shrinks the window), listed once."""
-    import cdc_2025_spark.queries as qmod
-    from cdc_2025_spark.queries import QUERIES
-
-    front = qmod._VERIFY_FIRST
-    assert len(front) == len(set(front)), "duplicate names in window"
-    missing = [n for n in front if n not in QUERIES]
-    assert not missing, f"window lists unregistered queries: {missing}"
-    assert len(front) >= WINDOW, (
-        f"window lists {len(front)} names; driver checks {WINDOW}"
-    )
-
-
-def test_every_query_fresh_within_two_rounds_after_this_window():
-    """The freshness invariant, mechanically: a registered query not
-    in this round's first-50 window must already hold a green row no
-    older than (upcoming_round - horizon). New queries (no green row
-    ever) must be inside the window.
-
-    The horizon is DERIVED from the registry size: a round-robin
-    rotation over n queries at 50/round re-checks each query every
-    ceil(n/50) rounds, so that is the tightest staleness bound any
-    rotation can satisfy in steady state (the original constant 2
-    was exact while n <= 100; at n > 100 it is arithmetically
-    infeasible — 2 rounds expose only 100 slots). The floor of 2
-    keeps the bound from loosening if the registry ever shrinks.
-
-    Rows-only-BY-DESIGN queries (registered without an oracle) are
-    exempt from the horizon once they hold their FIRST driver row: a
-    repeat driver check adds no signal beyond rows-ran-again (their
-    correctness lives in pinned accuracy/model-equality tests), and
-    under the horizon they would consume a window slot every cycle
-    forever (r9 verdict item 3). They must still enter the window
-    once — the never-checked rule below applies to every query."""
-    from cdc_2025_spark.queries import ORACLES, QUERIES
-
-    newest, max_round = _newest_green()
-    upcoming = max_round + 1
-    horizon = max(2, -(-len(QUERIES) // WINDOW))
-    window = list(QUERIES)[:WINDOW]
-    stale = [
-        name
-        for name in QUERIES
-        if name not in window
-        and name in ORACLES
-        and newest.get(name, 0) < upcoming - horizon
-    ]
-    assert not stale, (
-        f"queries neither in the r{upcoming} window nor green since "
-        f"r{upcoming - 2}: {stale}"
-    )
-    never_checked = [n for n in QUERIES if n not in newest]
-    assert all(n in window for n in never_checked), (
-        f"never-checked queries outside the window: "
-        f"{[n for n in never_checked if n not in window]}"
-    )
-    # The window's ORDER must front-load never-checked queries: if
-    # the driver's run is ever cut short, the entries that have no
-    # green row at all are the ones that must not miss their slot
-    # (membership alone lets them drift to the window's tail as the
-    # registry grows past 150).
-    if never_checked:
-        last_new = max(window.index(n) for n in never_checked)
-        greens_before = [
-            n for n in window[:last_new] if n in newest
-        ]
-        assert not greens_before, (
-            "window order buries never-checked queries behind "
-            f"already-green ones: {greens_before} precede "
-            f"{window[last_new]}"
-        )
 
 
 def test_operators_roster_matches_registry():
     """The OPERATORS.md appendix roster must list exactly the
     registered queries in registry order with correct oracle flags —
-    regenerate it when adding operators (same mechanical-guard ethos
-    as the window test above)."""
-    import re as _re
-
+    regenerate it (tools/regen_roster.py) when adding operators."""
     from cdc_2025_spark.queries import ORACLES, QUERIES
 
     text = (REPO / "OPERATORS.md").read_text()
-    rows = _re.findall(
+    rows = re.findall(
         r"^\| (\d+) \| `([a-z0-9_]+)` \| (yes|rows-only) \|$",
         text,
-        _re.MULTILINE,
+        re.MULTILINE,
     )
     listed = [(int(i), n, o) for i, n, o in rows]
     want = [

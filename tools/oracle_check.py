@@ -1,6 +1,6 @@
 """Oracle-check NAMED queries at a given SF dir, driver-strength
 (row count + column-name-sorted schema + exact value comparison via
-driver_model.compare_frames).
+driver_model.check_registered).
 
 Usage: python tools/oracle_check.py <query> [<query> ...] [--sf DIR]
 """
@@ -17,9 +17,9 @@ sys.path.insert(
 
 import duckdb  # noqa: E402
 
-from cdc_2025_spark.queries import ORACLES, QUERIES  # noqa: E402
+from cdc_2025_spark.queries import ORACLES  # noqa: E402
 from cdc_2025_spark.queries.driver_model import (  # noqa: E402
-    compare_frames,
+    check_registered,
 )
 from cdc_2025_spark.schemas import TABLE_NAMES  # noqa: E402
 from cdc_2025_spark.session import get_spark  # noqa: E402
@@ -42,21 +42,14 @@ def main() -> None:
         )
     n_fail = 0
     for name in names:
-        t0 = time.perf_counter()
-        sdf = QUERIES[name](spark, sf_dir)
-        cols = sdf.columns
-        srows = [tuple(r) for r in sdf.collect()]
         if name not in ORACLES:
             print(f"SKIP {name}: no oracle")
             continue
-        rel = con.sql(ORACLES[name])
-        ocols = list(rel.columns)
-        otypes = [str(t) for t in rel.types]
-        orows = rel.fetchall()
-        msg = compare_frames(cols, srows, ocols, otypes, orows)
+        t0 = time.perf_counter()
+        msg = check_registered(spark, con, name, sf_dir)
         dt = time.perf_counter() - t0
         if msg is None:
-            print(f"PASS {name} ({len(srows)} rows, {dt:.1f}s)")
+            print(f"PASS {name} ({dt:.1f}s)")
         else:
             print(f"FAIL {name}: {msg}")
             n_fail += 1

@@ -1,6 +1,6 @@
 """Regenerate the OPERATORS.md appendix roster from the registry.
 
-Run after ANY registration or window rotation:
+Run after ANY registration:
 
     python tools/regen_roster.py
 
